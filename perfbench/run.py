@@ -4,9 +4,10 @@
 
 Run from the repository root.  The run builds a Spark session on
 ``local[nproc]`` in this one driver process, generates the workload's
-inputs from ``--seed``, runs untimed warm passes, then runs whole passes
-over the workload's op sequence (at least one) while they fit in
-``--seconds``, checking every op's output.  Everything it writes stays
+inputs from ``--seed``, runs untimed warm passes, then a fixed number of
+timed passes over the workload's op sequence: ``--seconds`` divided by
+the workload's usual pass time, rounded, and at least one.  Every op's
+output is checked.  Everything it writes stays
 under ``.perfbench_work/`` and ``.perfbench_out/`` in the repository root.
 Without the engine package beside ``perfbench/`` it exits with code 2.
 
@@ -14,7 +15,7 @@ Standard output: one JSON report line (per-op medians, sample counts, the
 run-quality stamp, the figures that apply to one workload only), then, as
 the last line, the result: ``{"correct", "attempted", "failed",
 "metrics"}``.  ``--trace 0`` reports the end-to-end metrics of
-``BENCHMARK.json``; ``--trace 1`` alternates untraced and traced passes and
+``BENCHMARK.json``; ``--trace 1`` runs a traced pass before each untraced one,
 reports the per-layer metrics, and writes the spans to
 ``.perfbench_out/trace-<workload>-<seed>.json``.
 """
@@ -26,7 +27,6 @@ import time
 PROCESS_START = time.perf_counter()
 
 import argparse  # noqa: E402
-import itertools  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
@@ -35,11 +35,6 @@ import traceback  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-
-#: Set-ups per run; ``setup_s`` is their median.  The first counts from
-#: process start (JVM launch included), the others rebuild the session in
-#: the same JVM.
-SETUPS = 5
 
 END_TO_END_UNITS = {"setup_s": "s", "pass_s": "s", "key_geomean_s": "s",
                     "peak_rss_mb": "MB"}
@@ -72,9 +67,11 @@ def _spark_conf(work: str) -> dict[str, str]:
     }
 
 
-def _set_up(work: str, cores: int, t0: float):
+def _set_up(work: str, cores: int):
     """Build the session, register arrowipc and warm up with one small job
-    collected through Arrow.  The workload's warm pass does the rest."""
+    collected through Arrow.  The workload's warm pass does the rest.
+    Returns the session and the build, warm-up and set-up times, the last
+    from process start: interpreter and JVM launch included."""
     from bossarrowstorageengine_spark.session import build_session
     from bossarrowstorageengine_spark.sources import register_arrowipc
 
@@ -85,7 +82,7 @@ def _set_up(work: str, cores: int, t0: float):
     register_arrowipc(spark)
     spark.range(1000).selectExpr("id", "id * 2 AS x").toPandas()
     done = time.perf_counter()
-    return spark, built - t0, done - built, done - t0
+    return spark, built - PROCESS_START, done - built, done - PROCESS_START
 
 
 def _stop(spark) -> None:
@@ -163,12 +160,12 @@ class Loop:
         return total
 
 
-def _end_to_end(loop: Loop, passes: list[float], setups: list[float],
+def _end_to_end(loop: Loop, passes: list[float], setup_s: float,
                 rss: float) -> dict[str, float]:
     from stats import geomean, median
 
     return {
-        "setup_s": median(setups),
+        "setup_s": setup_s,
         "pass_s": median(passes),
         "key_geomean_s": geomean([median(v) for v in loop.samples.values()]),
         "peak_rss_mb": rss,
@@ -207,23 +204,14 @@ def main(argv: list[str] | None = None) -> int:
     stamp = RunStamp(ROOT, args.seed, cores)
     spark = None
     try:
-        setups, build_s, warmup_s = [], [], []
-        t0 = PROCESS_START
-        for _ in range(SETUPS):
-            if spark is not None:
-                spark.stop()
-                t0 = time.perf_counter()
-            spark, b, w, total = _set_up(work, cores, t0)
-            setups.append(total)
-            build_s.append(b)
-            warmup_s.append(w)
+        spark, build_s, warmup_s, setup_s = _set_up(work, cores)
 
         # Query keys that keep scratch tables write them under the run's
         # work directory instead of the engine's default /tmp location.
         from bossarrowstorageengine_spark.operators import scans
         scans._SCRATCH_ROOT = os.path.join(work, "engine-scratch")
 
-        phases = {"setup": time.perf_counter() - PROCESS_START}
+        phases = {"setup": setup_s}
         t_gen = time.perf_counter()
         workload = WORKLOADS[args.workload](spark, work, args.seed)
         workload.prepare()
@@ -241,22 +229,18 @@ def main(argv: list[str] | None = None) -> int:
             tracer = Tracer(spark, cores)
         passes: list[float] = []
         traced: list[float] = []
-        # A traced run alternates traced and untraced passes, traced first:
-        # the JVM still warms up, so the overhead errs on the high side.
-        modes = itertools.cycle((True, False) if tracer else (False,))
+        # A fixed amount of work, whatever the machine's speed at the time:
+        # with a time limit instead, a slow run fits fewer passes, and its
+        # median then falls on an earlier pass, still warming up.  Traced
+        # passes go first: the JVM still warms up, so the overhead errs on
+        # the high side.
         t_begin = time.perf_counter()
-        while True:
-            if next(modes):
+        for _ in range(max(1, round(args.seconds / workload.usual_pass_s))):
+            if tracer:
                 tracer.install()
                 traced.append(loop.run_pass(record=False, on_op=tracer.after_op))
                 tracer.uninstall()
-            else:
-                passes.append(loop.run_pass())
-            if not passes:
-                continue
-            elapsed = time.perf_counter() - t_begin
-            if elapsed + median(passes + traced) > args.seconds:
-                break
+            passes.append(loop.run_pass())
         phases["timed"] = time.perf_counter() - t_begin
         rss = _peak_rss_mb(spark)
     finally:
@@ -275,7 +259,6 @@ def main(argv: list[str] | None = None) -> int:
         "input_gen_s": gen_s,
         "stamp": stamp.finish(),
         "phases_s": phases,
-        "setups_s": setups,
         "passes_s": passes,
         "ops": {k: {"kind": loop.kinds[k], "n": len(v), "p50_s": median(v)}
                 for k, v in loop.samples.items()},
@@ -286,10 +269,10 @@ def main(argv: list[str] | None = None) -> int:
         "failed_ops_frac": loop.failed / loop.attempted,
         "counts": workload.layer_counts(),
     }
-    report["samples"] = {"setup_s": len(setups), "pass_s": len(passes),
+    report["samples"] = {"setup_s": 1, "pass_s": len(passes),
                          "key_geomean_s": len(all_ops), "peak_rss_mb": 1}
     if tracer is None:
-        values = _end_to_end(loop, passes, setups, rss)
+        values = _end_to_end(loop, passes, setup_s, rss)
         metrics = {k: {"value": v, "unit": END_TO_END_UNITS[k]}
                    for k, v in values.items()}
     else:

@@ -2,7 +2,7 @@
 
     python3 -m pytest perfbench -q
 
-The last test runs the storage_churn workload twice (about two minutes).
+The last test runs the storage_churn workload twice (about three minutes).
 """
 
 from __future__ import annotations
@@ -15,13 +15,13 @@ import sys
 import numpy as np
 import pandas as pd
 
-from fingerprint import fingerprint
-from run import END_TO_END_UNITS, Loop
-from stats import percentile
-from tracer import per_layer_names, per_layer_units
-from workloads import Queries
-
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from run import END_TO_END_UNITS, Loop  # noqa: E402
+from stats import percentile  # noqa: E402
+from tracer import per_layer_names, per_layer_units  # noqa: E402
+from workloads import Queries  # noqa: E402
 
 
 def _benchmark() -> dict:
@@ -41,26 +41,27 @@ def _fake_queries(results: dict[str, pd.DataFrame]) -> Queries:
     q = Queries.__new__(Queries)
     q.spark, q.sf_dir, q.keys = None, "", tuple(results)
     q.queries = {k: (lambda spark, sf, k=k: _Frame(results[k])) for k in results}
-    q.expected = {k: fingerprint(v) for k, v in results.items()}
+    q.expected = {k: v.copy() for k, v in results.items()}
     return q
 
 
-def test_fingerprint_matches_oracle_canonical_form():
+def test_check_takes_the_oracle_canonical_form():
     spark_side = pd.DataFrame({"b": np.array([2, 1], np.int32),
                                "a": [-0.0, np.nan]})
     duck_side = pd.DataFrame({"a": [None, 0.0],
                               "b": np.array([1, 2], np.int64)})
-    assert fingerprint(spark_side) == fingerprint(duck_side)
-    assert fingerprint(spark_side) != fingerprint(spark_side.head(1))
+    q = _fake_queries({"k": duck_side})
+    assert q.check("k", spark_side)
+    assert not q.check("k", spark_side.head(1))
 
 
-def test_corrupted_expected_fingerprint_is_a_failed_op():
+def test_corrupted_expected_result_is_a_failed_op():
     q = _fake_queries({"a": pd.DataFrame({"x": [1, 2]}),
                        "b": pd.DataFrame({"y": [1.5]})})
     clean = Loop(q)
     clean.run_pass()
     assert (clean.attempted, clean.failed) == (2, 0)
-    q.expected["b"] = "0" * 16
+    q.expected["b"].loc[0, "y"] = 2.5
     corrupt = Loop(q)
     corrupt.run_pass()
     assert (corrupt.attempted, corrupt.failed) == (2, 1)
@@ -101,7 +102,8 @@ def test_storage_churn_counts_repeat_and_every_metric_prints():
                  "arrowipc.delta_chain_len", "maintenance.files_rewritten"):
         assert rep1["counts"][name] == rep2["counts"][name], name
     # Compaction writes the rows in the order its scan tasks deliver them,
-    # which varies, so the compressed file differs by some dozens of bytes.
+    # which varies, so the compressed file differs by some dozens of bytes
+    # (of about 45 KB).
     stored1 = rep1["counts"]["bytes_stored_per_user_byte"]
     stored2 = rep2["counts"]["bytes_stored_per_user_byte"]
-    assert abs(stored1 - stored2) <= 1e-3 * stored1
+    assert abs(stored1 - stored2) <= 5e-3 * stored1

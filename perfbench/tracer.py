@@ -27,6 +27,9 @@ session      setup_s                                 both
 driver       pass_s, key_geomean_s                   both
 spark        pass_s, key_geomean_s                   queries / storage_churn
 engine       pass_s, key_geomean_s                   storage_churn / queries
+operators    pass_s, key_geomean_s                   queries / storage_churn
+sources      pass_s, key_geomean_s                   storage_churn / queries
+streaming    pass_s, key_geomean_s                   queries / storage_churn
 arrowipc     pass_s, key_geomean_s, peak_rss_mb      storage_churn / queries
 maintenance  pass_s, key_geomean_s                   storage_churn / queries
 ===========  ======================================  =======================
@@ -57,9 +60,9 @@ _SITE = re.compile(r"bossarrowstorageengine_spark/(?:(\w+)/)?\w+\.py$")
 
 
 def per_layer_names() -> list[str]:
-    """Every per-layer metric, in the order of BENCHMARK.json.  Each time
-    is taken on every workload; counts of a layer a workload bypasses read
-    0 there."""
+    """Every per-layer metric, in the order of BENCHMARK.json.  Each is
+    taken on every workload; those of a layer a workload bypasses (the
+    streaming module's actions on storage_churn, say) read 0 there."""
     names = ["session.build_s", "session.warmup_s"]
     names += ["driver.actions", "driver.jobs", "driver.job_busy_s",
               "driver.gap_s", "driver.concurrency"]
@@ -67,8 +70,10 @@ def per_layer_names() -> list[str]:
               "spark.input_bytes", "spark.shuffle_write_bytes",
               "spark.shuffle_read_bytes", "spark.spill_bytes"]
     names += ["driver.action_s", "driver.between_actions_s", "engine.actions"]
+    names += [f"{m}.{x}" for m in MODULES for x in ("actions", "action_s")]
     names += ["arrowipc.partitions", "arrowipc.prune_ratio",
-              "arrowipc.scan_f16_over_f1", "arrowipc.write_bytes_per_user_byte",
+              "arrowipc.scan_f16_over_f1", "arrowipc.scan_f64_over_f1",
+              "arrowipc.write_bytes_per_user_byte",
               "arrowipc.files_visible", "arrowipc.delta_chain_len",
               "arrowipc.bytes_stored_per_user_byte"]
     names += ["maintenance.files_rewritten", "maintenance.bytes_rewritten",
@@ -210,12 +215,16 @@ class Tracer:
         stages = {(s["stageId"], s["attemptId"]): s
                   for s in self._get("/stages")} if jobs else {}
         intervals, job_time = [], 0.0
+        # An action that calls another (``first`` calls ``take``, which
+        # calls ``collect``) is one action: only the outermost counts.
+        action_ids = {s["id"] for s in calls if s["layer"] == "action"}
+        actions = [s for s in calls if s["layer"] == "action"
+                   and s["parent"] not in action_ids]
         record = {"name": name, "wall_s": end - start, "jobs": len(jobs),
-                  "actions": sum(1 for s in calls if s["layer"] == "action"),
+                  "actions": len(actions),
                   "tasks": 0, "executor_run_s": 0.0, "input_bytes": 0,
                   "shuffle_write_bytes": 0, "shuffle_read_bytes": 0,
                   "spill_bytes": 0}
-        actions = [s for s in calls if s["layer"] == "action"]
         record["action_s"] = _union([(s["start"], s["end"]) for s in actions])
         for m in MODULES + ("engine",):
             mine = [s for s in actions
@@ -288,8 +297,8 @@ class Tracer:
 
         busy = total("job_busy_s")
         values: dict[str, float] = {
-            "session.build_s": median(build_s),
-            "session.warmup_s": median(warmup_s),
+            "session.build_s": build_s,
+            "session.warmup_s": warmup_s,
             "driver.actions": total("actions"),
             "driver.jobs": total("jobs"),
             "driver.job_busy_s": busy,
@@ -306,11 +315,15 @@ class Tracer:
             "driver.action_s": total("action_s"),
             "driver.between_actions_s": total("wall_s") - total("action_s"),
             "engine.actions": total("engine.actions"),
+            **{f"{m}.{x}": total(f"{m}.{x}")
+               for m in MODULES for x in ("actions", "action_s")},
             "trace.overhead_s": median(traced) - median(passes),
         }
-        f1, f16 = loop.samples.get("scan_f1"), loop.samples.get("scan_f16")
-        if f1 and f16:
-            values["arrowipc.scan_f16_over_f1"] = median(f16) / median(f1)
+        f1 = loop.samples.get("scan_f1")
+        for n in (16, 64):
+            fn = loop.samples.get(f"scan_f{n}")
+            if f1 and fn:
+                values[f"arrowipc.scan_f{n}_over_f1"] = median(fn) / median(f1)
         counts = workload.layer_counts()
         if "bytes_stored_per_user_byte" in counts:
             counts["arrowipc.bytes_stored_per_user_byte"] = counts.pop(
