@@ -60,46 +60,41 @@ for _m in _MODULES:
 #: policy there, not the list here.
 # BEGIN _DRIVER_WINDOW (generated)
 _DRIVER_WINDOW = [
-    "q_agg_salted",
-    "q_array_funcs",
-    "q_cogroup_apply",
-    "q_colloc_pmi",
-    "q_dedup_segment",
-    "q_embedding_quantize",
-    "q_explode",
-    "q_explode_outer",
-    "q_graph_degree",
-    "q_incremental_agg",
-    "q_join_bloom",
-    "q_join_shuffle_hash",
-    "q_json_funcs",
-    "q_length_deciles",
-    "q_map_funcs",
-    "q_map_in_arrow",
-    "q_math_funcs",
-    "q_minhash_accuracy",
-    "q_outlier_zscore",
-    "q_pack_chunks",
-    "q_pagerank",
-    "q_quality_gate",
-    "q_record_linkage",
-    "q_sample_weighted",
-    "q_sessionize",
-    "q_set_except",
-    "q_set_union_distinct",
-    "q_shard_assignment",
-    "q_sketch_rollup",
-    "q_skew_profile",
-    "q_split_contamination",
-    "q_str_funcs",
-    "q_str_regex",
-    "q_stream_session",
-    "q_subquery_exists",
-    "q_unpivot",
-    "q_win_frame_interval",
-    "q_win_frame_range",
-    "q_win_rank",
-    "q_win_topk_group",
+    "q_agg_approx_quantile",
+    "q_agg_mode",
+    "q_bpe_pairs",
+    "q_cdc_scd2",
+    "q_dataset_mixture",
+    "q_dedup_chunk_apply",
+    "q_dedup_chunk_incremental",
+    "q_dedup_incremental",
+    "q_doc_chunk_overlap",
+    "q_domain_cap",
+    "q_embedding_mrl",
+    "q_event_pattern",
+    "q_subquery_in",
+    "q_subquery_scalar",
+    "q_tpch_q10",
+    "q_tpch_q13",
+    "q_tpch_q14",
+    "q_tpch_q15",
+    "q_tpch_q17",
+    "q_tpch_q22",
+    "q_tpch_q5",
+    "q_tpch_q6",
+    "q_tpch_q7",
+    "q_train_test_split",
+    "q_udtf_apply",
+    "q_vocab_topk",
+    "q_win_session_gap",
+    "q_storage_changefeed",
+    "q_storage_timetravel_diff",
+    "q_storage_vacuum",
+    "q_arrowipc_snapshot",
+    "q_timetravel_asof",
+    "q_purge_derived",
+    "q_mv_fanout",
+    "q_feed_consumer_groups",
     "q_ann_ivf_maintained",
     "q_ann_generations_payload",
     "q_ann_ivfpq_maintained",
@@ -110,6 +105,11 @@ _DRIVER_WINDOW = [
     "q_feed_compact",
     "q_feed_vacuum",
     "q_purge_propagate",
+    "q_purge_restore_guard",
+    "q_positions_asof",
+    "q_agg_basic",
+    "q_scan_parquet",
+    "q_join_multiway",
 ]
 # END _DRIVER_WINDOW (generated)
 
@@ -139,6 +139,20 @@ _MODIFIED_UNATTESTED = [
     # tagged-union count fusions).  Outputs bit-identical; every key
     # below check.py-green on the new paths.  Ranked first: these carry
     # the round's heaviest diffs:
+    #
+    # sources/arrowipc.py: small files are packed into shared scan tasks
+    # and every input partition is one (path, batches, seek) item list,
+    # read by one loop (batch reads, groupByBucket and stream
+    # micro-batches alike).  Every arrowipc dependent reads through the
+    # new planner; these were not yet carried:
+    "q_storage_changefeed",
+    "q_storage_timetravel_diff",
+    "q_storage_vacuum",
+    "q_arrowipc_snapshot",
+    "q_timetravel_asof",
+    "q_purge_derived",
+    "q_mv_fanout",
+    "q_feed_consumer_groups",
     "q_ann_ivf_maintained",
     "q_ann_generations_payload",
     "q_ann_ivfpq_maintained",

@@ -159,7 +159,7 @@ SHARED_MODULE_HASHES: dict[str, str] = {
     "functions/zorder.py":
         "efcfa982491ac135131a4395882285af32bd8e00b5efa171053dcd38531ffb10",
     "sources/arrowipc.py":
-        "a0374873aad8cc3b24dcd8b911bfa0049e87ca6be71c675d690bd5d47959e656",
+        "92613edd466054909ea2abda049610689a7dbf0569c1ff65f890b33b9f3560e8",
     "sources/feed_consume.py":
         "70324fe69b9868287686818026ba5a3313d808165116027c446c95f6a3422400",
     "sources/feed_maintain.py":

@@ -16,12 +16,16 @@ Design:
   computed on the fly and embedded in the file footer's custom metadata.
   Tasks write to a hidden temp name and rename on success; ``abort``
   removes leftovers (commit protocol per SURVEY.md §7 Phase 3).
-- **Read path** (``DataSourceReader``): input partitions at record-batch
-  -range granularity — a big file-format IPC file splits into several
-  tasks (``batchesPerSplit``, default 8 batches ≈ 0.5-1 M rows per task),
-  so a directory of few huge files still fans out across a
-  1000-executor cluster; small files stay one task.  ``pushFilters``
-  accepts simple
+- **Read path** (``DataSourceReader``): every input partition is a list
+  of ``(path, batch indices, stream seek)`` items read by one loop.  A
+  big IPC file splits into several batch-range tasks (``batchesPerSplit``,
+  default 8 batches ≈ 0.5-1 M rows per task), so a directory of few huge
+  files still fans out across a 1000-executor cluster; the files that
+  plan as one task are packed into shared tasks by Spark's
+  ``FilePartition`` rule (each file costs its size plus a 4 MiB open
+  cost, target ``min(128 MiB, max(4 MiB, total / usable CPUs))``), so a
+  table of many small files costs a few tasks, not one per file.
+  ``pushFilters`` accepts simple
   comparisons and prunes (a) whole files via footer stats before tasks
   launch, and (b) record batches per task via batch stats.  Batches are
   yielded as Arrow RecordBatches (zero row-at-a-time Python).
@@ -30,7 +34,8 @@ Design:
   decompressed.
 - **Streaming read** (``DataSourceStreamReader``): micro-batch source over
   the same directory layout — lexicographic file-name high-water-mark
-  offsets, one partition per newly-arrived file.
+  offsets; a micro-batch's new files are packed into tasks like a batch
+  read's.
 - **Streaming write** (``DataSourceStreamArrowWriter``): each micro-batch
   appends timestamp-named compressed IPC files via the batch writer's
   atomic-rename commit, so the sink's output is itself streamable.
@@ -978,24 +983,121 @@ def _union_schema(files: Sequence[str]) -> pa.Schema:
 
 @dataclass
 class ArrowIPCPartition(InputPartition):
-    """One task's slice: a file plus the record-batch indices that survived
-    batch-level stat pruning (None = all batches); ``schema_ser`` carries
-    the serialized union target schema when mergeSchema is on."""
+    """One task's read list.  Each item is ``(path, batch_indices,
+    stream_seek)``: ``batch_indices`` are the record batches that survived
+    batch-level stat pruning (None = all); ``stream_seek`` is a
+    stream-encoding seek range ``(byte_offset, lo, hi)`` — seek to
+    ``byte_offset`` (the recorded start of message ``lo``) and read
+    messages ``lo..hi-1``, the footer-less analogue of the file format's
+    random-access batch splits (None = read from the head).  A batch-range
+    split is one item; a packed task lists several whole files; a
+    ``groupByBucket`` task lists one storage bucket's files.
+    ``schema_ser`` carries the serialized union target schema when
+    mergeSchema is on.  No items = the empty marker (everything pruned)."""
 
-    path: str
-    batch_indices: list[int] | None
+    items: tuple = ()
     schema_ser: bytes | None = None
-    #: Stream-encoding seek range ``(byte_offset, lo, hi)``: seek to
-    #: ``byte_offset`` (the recorded start of message ``lo``) and read
-    #: messages ``lo..hi-1`` — the footer-less analogue of the file
-    #: format's random-access batch splits.  Requires write-time recorded
-    #: offsets (``offsets`` in the stats sidecar); None = scan-from-head.
-    stream_seek: tuple | None = None
-    #: ``groupByBucket`` mode: ALL part files of one ``__sb`` storage
-    #: bucket (across every Hive partition / LSM segment), read whole by
-    #: one task — the co-location contract partition-local merge logic
-    #: (mapInPandas last-wins) relies on.  When set, ``path`` is unused.
-    group_paths: tuple | None = None
+
+    @property
+    def paths(self) -> tuple[str, ...]:
+        """The part files this task reads, in read order."""
+        return tuple(dict.fromkeys(item[0] for item in self.items))
+
+    @property
+    def stream_seek(self) -> tuple | None:
+        """The seek range of a one-item task (None for packed tasks)."""
+        return self.items[0][2] if len(self.items) == 1 else None
+
+
+#: Spark's ``FilePartition`` sizing (``spark.sql.files.openCostInBytes`` and
+#: ``maxPartitionBytes`` defaults): packing charges each file its size plus
+#: this open cost, and aims each task at ``min(_MAX_SPLIT_BYTES,
+#: max(_OPEN_COST_BYTES, total / usable CPUs))``.
+_OPEN_COST_BYTES = 4 * 1024 * 1024
+_MAX_SPLIT_BYTES = 128 * 1024 * 1024
+
+
+def _usable_cpus() -> int:
+    """CPUs this process may run on — the planner's view of ``local[N]``."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def _pack_whole_files(items: Sequence[tuple]) -> list[tuple]:
+    """Group whole-file read items into shared tasks: ``ceil(total cost /
+    split)`` tasks, each a contiguous run of ``items`` — an item joins the
+    task whose share of the total cost holds its cost's midpoint — so
+    read order is kept and a table of many small files plans about one
+    task per usable CPU instead of one per file."""
+    if not items:
+        return []
+    costs = [os.path.getsize(item[0]) + _OPEN_COST_BYTES for item in items]
+    total = sum(costs)
+    split = min(_MAX_SPLIT_BYTES,
+                max(_OPEN_COST_BYTES, -(-total // _usable_cpus())))
+    n = min(len(items), -(-total // split))
+    groups: list[list[tuple]] = [[] for _ in range(n)]
+    start = 0
+    for item, cost in zip(items, costs):
+        groups[(2 * start + cost) * n // (2 * total)].append(item)
+        start += cost
+    return [tuple(g) for g in groups if g]
+
+
+def _chunks(seq: list, size: int) -> list[list]:
+    return [seq[lo:lo + size] for lo in range(0, len(seq), size)]
+
+
+def _read_items(items: Sequence[tuple], declared: StructType,
+                columns: Sequence[str] | None,
+                target: pa.Schema | None = None,
+                fname_col: str | None = None) -> Iterator[pa.RecordBatch]:
+    """The one read loop of every ``arrowipc`` task, batch and streaming.
+
+    Per item: check the file against the declared schema, read its
+    batches (whole, a batch subset, or a seek range), and append the
+    ``fname_col`` attribution column when asked.  Batches from different
+    write jobs can disagree on Arrow field nullability/metadata (e.g. a
+    computed column vs a cast literal) even when the Spark types match,
+    and one task must emit ONE batch schema — so every batch is
+    normalized to the first batch's shape with every field nullable (the
+    declared Spark schema governs JVM-side nullability anyway)."""
+    uniform: pa.Schema | None = None
+    for path, batch_indices, stream_seek in items:
+        if target is None:
+            # Outside mergeSchema (whose union target alignment casts),
+            # batches reach the JVM in the FILE's schema, so a
+            # declared-schema type mismatch must fail here naming the
+            # column — not as an opaque vector-accessor error inside the
+            # scan.  The declared schema may carry the filenameColumn the
+            # reader itself appends; the validator skips columns the file
+            # lacks.
+            _validate_declared_schema(
+                declared, _file_arrow_schema(path), path, columns)
+        if stream_seek is not None:
+            off, lo, hi = stream_seek
+            batches = _read_stream_range(
+                path, off, lo, hi, batch_indices, columns, target)
+        else:
+            batches = _read_ipc_batches(path, batch_indices, columns, target)
+        for batch in batches:
+            if uniform is None:
+                uniform = pa.schema(
+                    [f.with_nullable(True) for f in batch.schema])
+            if batch.schema != uniform:
+                batch = pa.RecordBatch.from_arrays(
+                    [batch.column(f.name) for f in uniform], schema=uniform)
+            if fname_col is not None:
+                # File attribution: a constant string column carrying the
+                # part-file path — the hook row-level DELETE's
+                # copy-on-write planning hangs off (the arrowipc
+                # equivalent of input_file_name(), which Python data
+                # sources don't populate).
+                batch = batch.append_column(
+                    pa.field(fname_col, pa.string(), False),
+                    pa.array([path] * batch.num_rows, pa.string()))
+            yield batch
 
 
 class ArrowIPCReader(DataSourceReader):
@@ -1076,13 +1178,13 @@ class ArrowIPCReader(DataSourceReader):
 
     #: Max record batches per input partition.  A big IPC file splits into
     #: several tasks (batch-range granularity) instead of scanning as one —
-    #: the split level a many-executor cluster needs; small files stay one
-    #: task each.  At 64 k rows/batch this is ~0.5-1 M rows per task.
+    #: the split level a many-executor cluster needs; files that fit in one
+    #: task are packed several to a task (``_pack_whole_files``).  At 64 k
+    #: rows/batch this is ~0.5-1 M rows per task.
     BATCHES_PER_SPLIT = 8
 
     # -- planning -----------------------------------------------------------
     def partitions(self) -> Sequence[ArrowIPCPartition]:
-        parts: list[ArrowIPCPartition] = []
         split = max(1, int(self._options.get(
             "batchesPerSplit", self.BATCHES_PER_SPLIT)))
         entries = _visible_entries(self._path, self._version, self._snapshots)
@@ -1097,7 +1199,7 @@ class ArrowIPCReader(DataSourceReader):
             # unbucketed file fails the plan loudly.  Stat/batch pruning
             # is skipped (bucket-local logic must see all rows; Spark
             # still applies the filters post-scan).
-            groups: dict[int, list[str]] = {}
+            groups: dict[int, list[tuple]] = {}
             for path in files:
                 b = _sbucket_of(self._path, path)
                 if b is None:
@@ -1108,12 +1210,9 @@ class ArrowIPCReader(DataSourceReader):
                         "bucketed and unbucketed writes, so bucket-local "
                         "merges would miss rows; rewrite it with "
                         "bucketBy or read without groupByBucket")
-                groups.setdefault(b, []).append(path)
-            if not groups:
-                return [ArrowIPCPartition("", [])]
-            return [ArrowIPCPartition("", None,
-                                      group_paths=tuple(sorted(groups[b])))
-                    for b in sorted(groups)]
+                groups.setdefault(b, []).append((path, None, None))
+            return ([ArrowIPCPartition(tuple(groups[b]))
+                     for b in sorted(groups)] or [ArrowIPCPartition()])
         schema_ser = None
         if self._merge:
             target = _union_schema(files)
@@ -1145,6 +1244,8 @@ class ArrowIPCReader(DataSourceReader):
                     continue
                 fname_allow = (vals if fname_allow is None
                                else fname_allow & vals)
+        parts: list[ArrowIPCPartition] = []   # batch-range splits
+        whole: list[tuple] = []               # one-task files, packed below
         for path in files:
             if fname_allow is not None and path not in fname_allow:
                 continue
@@ -1206,101 +1307,44 @@ class ArrowIPCReader(DataSourceReader):
                     continue  # every batch stat-pruned
                 if offsets and idxs and len(idxs) > split \
                         and len(offsets) == (n_batches or 0):
-                    for lo in range(0, len(idxs), split):
-                        chunk = idxs[lo:lo + split]
-                        parts.append(ArrowIPCPartition(
-                            path, chunk, schema_ser,
-                            stream_seek=(offsets[chunk[0]], chunk[0],
-                                         chunk[-1] + 1)))
+                    items = [(path, chunk, (offsets[chunk[0]], chunk[0],
+                                            chunk[-1] + 1))
+                             for chunk in _chunks(idxs, split)]
                 else:
-                    parts.append(ArrowIPCPartition(path, keep, schema_ser))
-                continue
-            if keep is None:
-                if n_batches is None:
-                    # No sidecar (foreign file): read footer for the count
-                    # so the file can still split by batch range.
-                    with pa.OSFile(path, "rb") as f:
-                        n_batches = pa.ipc.open_file(f).num_record_batches
-                keep = list(range(n_batches))
-            for lo in range(0, len(keep), split):
-                parts.append(
-                    ArrowIPCPartition(path, keep[lo:lo + split], schema_ser))
+                    items = [(path, keep, None)]
+            else:
+                if keep is None:
+                    if n_batches is None:
+                        # No sidecar (foreign file): read footer for the
+                        # count so the file can still split by batch range.
+                        with pa.OSFile(path, "rb") as f:
+                            n_batches = pa.ipc.open_file(f).num_record_batches
+                    keep = list(range(n_batches))
+                items = [(path, chunk, None) for chunk in _chunks(keep, split)]
+            if len(items) == 1:
+                whole.append(items[0])
+            else:
+                parts.extend(ArrowIPCPartition((item,), schema_ser)
+                             for item in items)
+        parts.extend(ArrowIPCPartition(group, schema_ser)
+                     for group in _pack_whole_files(whole))
         if not parts:
             # Everything pruned. Spark still calls read() once when the
             # partition list is empty, so hand it an explicit empty marker.
-            return [ArrowIPCPartition("", [])]
+            return [ArrowIPCPartition()]
+        # Path order, so a scan delivers rows in the order it always has.
+        parts.sort(key=lambda p: (p.items[0][0], p.items[0][1] or [0]))
         return parts
 
     # -- execution ----------------------------------------------------------
     def read(self, partition: ArrowIPCPartition) -> Iterator[pa.RecordBatch]:
-        if partition is not None and partition.group_paths is not None:
-            # groupByBucket task: one storage bucket's files, whole.
-            # Batches from DIFFERENT write jobs can disagree on arrow
-            # field nullability/metadata (e.g. a computed column vs a
-            # cast literal) even when the Spark types match — and a
-            # mixed-file partition must emit ONE uniform batch schema.
-            # Normalize to the first batch's shape with every field
-            # nullable (the declared Spark schema governs JVM-side
-            # nullability anyway; types are already validated equal).
-            uniform: pa.Schema | None = None
-            for path in partition.group_paths:
-                _validate_declared_schema(
-                    self._schema, _file_arrow_schema(path), path,
-                    self._columns)
-                for batch in _read_ipc_batches(path, None, self._columns):
-                    if uniform is None:
-                        uniform = pa.schema(
-                            [f.with_nullable(True) for f in batch.schema])
-                    if batch.schema != uniform:
-                        batch = pa.RecordBatch.from_arrays(
-                            [batch.column(
-                                batch.schema.get_field_index(f.name))
-                             for f in uniform],
-                            schema=uniform)
-                    if self._fname_col is not None:
-                        fcol = pa.array([path] * batch.num_rows,
-                                        pa.string())
-                        batch = batch.append_column(
-                            pa.field(self._fname_col, pa.string(), False),
-                            fcol)
-                    yield batch
-            return
-        if partition is None or not partition.path:
-            return  # empty marker (all files stat-pruned)
+        if partition is None:
+            return iter(())
         target = None
         if partition.schema_ser is not None:
             target = pa.ipc.read_schema(pa.py_buffer(partition.schema_ser))
-        else:
-            # Same contract as the stream reader (round 13): outside
-            # mergeSchema (whose union target alignment casts), batches
-            # reach the JVM in the FILE's schema, so a declared-schema
-            # type mismatch must fail here naming the column — not as an
-            # opaque vector-accessor error inside the scan.  The declared
-            # schema may carry the filenameColumn the reader itself
-            # appends; the validator skips columns the file lacks.
-            _validate_declared_schema(
-                self._schema, _file_arrow_schema(partition.path),
-                partition.path, self._columns)
-        if partition.stream_seek is not None:
-            off, lo, hi = partition.stream_seek
-            batches = _read_stream_range(
-                partition.path, off, lo, hi, partition.batch_indices,
-                self._columns, target)
-        else:
-            batches = _read_ipc_batches(
-                partition.path, partition.batch_indices, self._columns, target)
-        if self._fname_col is None:
-            yield from batches
-            return
-        # File attribution (filenameColumn option): append a constant string
-        # column carrying the part-file path — the hook row-level DELETE's
-        # copy-on-write planning hangs off (and generally the arrowipc
-        # equivalent of input_file_name(), which Python data sources don't
-        # populate).
-        for batch in batches:
-            fcol = pa.array([partition.path] * batch.num_rows, pa.string())
-            yield batch.append_column(
-                pa.field(self._fname_col, pa.string(), False), fcol)
+        return _read_items(partition.items, self._schema, self._columns,
+                           target, self._fname_col)
 
 
 @dataclass
@@ -1775,8 +1819,9 @@ class ArrowIPCStreamReader(DataSourceStreamReader):
     use monotonically increasing names (the sink's ``part-{batch}-{seq}``
     convention).
 
-    One input partition per new file; the per-file read path is the batch
-    reader's (record batches straight to the JVM, no Python rows).
+    A micro-batch's new files are packed into tasks like a batch read's
+    whole files, and read by the batch reader's item loop (record batches
+    straight to the JVM, no Python rows).
     """
 
     def __init__(self, schema: StructType, options: dict):
@@ -1968,22 +2013,16 @@ class ArrowIPCStreamReader(DataSourceStreamReader):
         if "v" in start:
             files = self._added_files(
                 int(start.get("v", 0)), int(end.get("v", 0)))
-            parts = [ArrowIPCPartition(f, None) for f in files]
-            return parts or [ArrowIPCPartition("", [])]
-        lo, hi = start.get("last", ""), end.get("last", "")
-        parts = [
-            ArrowIPCPartition(os.path.join(self._path, n), None)
-            for n in self._names() if lo < n <= hi
-        ]
-        return parts or [ArrowIPCPartition("", [])]
+        else:
+            lo, hi = start.get("last", ""), end.get("last", "")
+            files = [os.path.join(self._path, n)
+                     for n in self._names() if lo < n <= hi]
+        groups = _pack_whole_files([(f, None, None) for f in files])
+        return ([ArrowIPCPartition(g) for g in groups]
+                or [ArrowIPCPartition()])
 
     def read(self, partition: ArrowIPCPartition) -> Iterator[pa.RecordBatch]:
-        if not partition.path:
-            return
-        _validate_declared_schema(
-            self._schema, _file_arrow_schema(partition.path),
-            partition.path, self._columns)
-        yield from _read_ipc_batches(partition.path, None, self._columns)
+        return _read_items(partition.items, self._schema, self._columns)
 
     def commit(self, end: dict) -> None:
         # Offsets are recoverable from the manifest log / directory
@@ -2007,10 +2046,11 @@ class ArrowIPCDataSource(DataSource):
     buckets>`` directories (innermost level, ``buckets`` values, default
     16) so every write job co-locates the same keys; the ``__sb`` value
     is derivable from the data and is NOT written as a column),
-    ``groupByBucket`` (read — plan ONE input partition per ``__sb``
-    storage bucket covering that bucket's files across all partitions/
-    segments, enabling partition-local merge logic without a shuffle;
-    fails loudly if any visible file is unbucketed), ``timestampAsOf``
+    ``groupByBucket`` (read — group the files by ``__sb`` storage bucket
+    instead of packing them by size: ONE input partition per bucket,
+    covering that bucket's files across all partitions/segments, enabling
+    partition-local merge logic without a shuffle; fails loudly if any
+    visible file is unbucketed), ``timestampAsOf``
     (read — batch time travel by wall-clock, epoch seconds or ISO-8601:
     resolves to the newest manifest version committed at-or-before the
     anchor with run-max-canonicalized commit times, then reads exactly

@@ -30,6 +30,12 @@ def _tmpdir() -> str:
     return yield_path
 
 
+def _planned_files(reader) -> list[str]:
+    """The part files a reader's plan touches (sorted), whatever the task
+    shape: a planned task may read several packed files."""
+    return sorted({f for p in reader.partitions() for f in p.paths})
+
+
 def _inject_uncommitted_part(spark, table_dir: str, df) -> list[str]:
     """Simulate a concurrent appender that renamed its part file(s) into the
     table but has not (yet) committed a manifest: write ``df`` to a scratch
@@ -363,10 +369,10 @@ def test_timestamp_filter_prunes_files_and_batches(spark):
     assert len(glob.glob(os.path.join(out, "*.arrows"))) == 4
 
     reader = ArrowIPCReader(None, {"path": out})
-    n_all = len(reader.partitions())
+    n_all = len(_planned_files(reader))
     late = ArrowIPCReader(None, {"path": out})
     late.pushFilters([GreaterThan(("ts",), base + dt.timedelta(hours=40))])
-    kept = [p for p in late.partitions() if p.path]
+    kept = _planned_files(late)
     assert 0 < len(kept) < n_all, (len(kept), n_all)
 
     back = spark.read.format("arrowipc").load(out)
@@ -418,7 +424,7 @@ def test_partitioned_write_and_directory_pruning(spark):
 
     reader = ArrowIPCReader(None, {"path": out})
     reader.pushFilters([EqualTo(("lang",), one)])
-    kept = [p.path for p in reader.partitions() if p.path]
+    kept = _planned_files(reader)
     assert kept and all(f"lang={one}" in p for p in kept)
     shutil.rmtree(out, ignore_errors=True)
 
@@ -1270,10 +1276,12 @@ def test_manifest_stats_drive_planning_without_sidecars(spark):
 
     reader = a.ArrowIPCReader(back.schema, {"path": out})
     reader.pushFilters([])  # no filters → both files planned
-    assert len({p.path for p in reader.partitions()}) == 2
+    assert len(_planned_files(reader)) == 2
     reader2 = a.ArrowIPCReader(back.schema, {"path": out})
-    reader2.pushFilters([GreaterThan(("o_orderkey",), 2000)])
-    assert len({p.path for p in reader2.partitions()}) == 1
+    # (orders keys stop at 1499 here, so the bound sits inside the
+    # high-key file's range: it must survive while the low one is pruned)
+    reader2.pushFilters([GreaterThan(("o_orderkey",), 1200)])
+    assert len(_planned_files(reader2)) == 1
     shutil.rmtree(out, ignore_errors=True)
 
 
@@ -1299,10 +1307,10 @@ def test_filename_filter_prunes_planning(spark):
     schema = spark.read.format("arrowipc").load(path).schema
     r = ArrowIPCReader(schema, {"path": path, "filenamecolumn": "_f"})
     r.pushFilters([In(("_f",), tuple(files[:2]))])
-    assert sorted(p.path for p in r.partitions()) == files[:2]
+    assert _planned_files(r) == files[:2]
     r2 = ArrowIPCReader(schema, {"path": path, "filenamecolumn": "_f"})
     r2.pushFilters([EqualTo(("_f",), files[0])])
-    assert [p.path for p in r2.partitions()] == [files[0]]
+    assert _planned_files(r2) == [files[0]]
 
     # End-to-end: poison every file except one; the pruned read must never
     # plan (or read) the poisoned files.
@@ -1366,13 +1374,13 @@ def test_in_filter_prunes_files_by_stats(spark):
 
     r = ArrowIPCReader(schema, {"path": path})
     r.pushFilters([In(("n_nationkey",), (0, 1))])
-    kept = [p.path for p in r.partitions() if p.path]
+    kept = _planned_files(r)
     assert 0 < len(kept) < len(files)
 
     # values outside every file's range → everything pruned (empty marker)
     r2 = ArrowIPCReader(schema, {"path": path})
     r2.pushFilters([In(("n_nationkey",), (10**9,))])
-    assert [p.path for p in r2.partitions() if p.path] == []
+    assert _planned_files(r2) == []
 
     # end-to-end correctness with pruning active
     df = spark.read.format("arrowipc").load(path)
@@ -1401,7 +1409,7 @@ def test_file_list_path_prunes_planning(spark):
         _json.dump(files[:2], f)
     schema = spark.read.format("arrowipc").load(path).schema
     r = ArrowIPCReader(schema, {"path": path, "filelistpath": lst})
-    assert sorted(p.path for p in r.partitions()) == files[:2]
+    assert _planned_files(r) == files[:2]
 
     # End-to-end: the allowlisted read returns exactly those files' rows.
     df = (spark.read.format("arrowipc")
@@ -1519,7 +1527,7 @@ def test_cow_delete_on_partitioned_table_preserves_layout(spark):
     # touches only grp=1 part files.
     reader = ArrowIPCReader(None, {"path": out, "snapshots": "true"})
     reader.pushFilters([EqualTo(("grp",), "1")])
-    kept = [p.path for p in reader.partitions() if p.path]
+    kept = _planned_files(reader)
     assert kept and all("grp=1" in p for p in kept)
     # Time travel to the pre-delete version still sees the full table.
     pre = spark.read.format("arrowipc").option("version", "1").load(out)
@@ -1594,7 +1602,7 @@ def test_compaction_preserves_partition_layout(spark):
     assert back.count() == 90
     reader = ArrowIPCReader(None, {"path": out, "snapshots": "true"})
     reader.pushFilters([EqualTo(("grp",), "2")])
-    kept = [p.path for p in reader.partitions() if p.path]
+    kept = _planned_files(reader)
     assert kept and all("grp=2" in p for p in kept)
     shutil.rmtree(out, ignore_errors=True)
 
@@ -2082,7 +2090,7 @@ def test_restore_on_partitioned_table(spark):
     assert back.filter(F.col("grp") == "0").count() == 10  # migration undone
     reader = ArrowIPCReader(None, {"path": out, "snapshots": "true"})
     reader.pushFilters([EqualTo(("grp",), "0")])
-    kept = [p.path for p in reader.partitions() if p.path]
+    kept = _planned_files(reader)
     assert kept and all("grp=0" in p for p in kept)
     shutil.rmtree(out, ignore_errors=True)
 
@@ -2163,7 +2171,7 @@ def test_dictionary_stream_file_stays_sequential(spark):
     assert len(side["batches"]) > 8
 
     reader = ArrowIPCReader(None, {"path": out, "batchesPerSplit": "8"})
-    parts = [p for p in reader.partitions() if p.path]
+    parts = [p for p in reader.partitions() if p.paths]
     assert len(parts) == 1 and parts[0].stream_seek is None
 
     back = spark.read.format("arrowipc").load(out)
