@@ -35,7 +35,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2.
+
+    Keys come oldest driver attestation first: by each key's newest
+    fully-green round in the committed ``CORRECTNESS_r*.json`` files (never
+    green = round 0), ties by key name (``operators.driver_order``)."""
 
     def _wrap(fn: Callable[[SparkSession, str], DataFrame]):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -38,10 +38,14 @@ def sf_dir() -> str:
 #     python -m pytest tests/ -m ""            # full suite
 #     python -m pytest tests/ -m slow          # only the slow set
 #
+# The list cannot go stale silently: an unmarked test whose call phase runs
+# longer than SLOW_CALL_LIMIT_S fails (pytest_runtest_makereport below), so
+# a new slow test must be added here or marked `slow`.
+#
 # Coverage note: the deselected set is dominated by the maintained-ANN /
-# streaming E2E twins and heavy oracle keys, all of which the driver's
-# own 50-key oracle window and tools/check.py (293/293) exercise
-# independently of pytest.
+# streaming E2E twins and heavy oracle keys, all of which tools/check.py
+# (293/293) exercises independently of pytest.
+SLOW_CALL_LIMIT_S = 30.0
 SLOW_TESTS = {
     "test_arrowipc.py::test_compaction_with_zorder_clusters_both_dimensions",
     "test_arrowipc.py::test_manifest_commits_are_delta_sized_with_checkpoints",
@@ -164,3 +168,16 @@ def pytest_collection_modifyitems(config, items):
         tail = item.nodeid.split("tests/")[-1]
         if tail in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+
+
+@pytest.hookimpl(hookwrapper=True)
+def pytest_runtest_makereport(item, call):
+    report = (yield).get_result()
+    if (call.when == "call" and report.passed
+            and item.get_closest_marker("slow") is None
+            and call.duration > SLOW_CALL_LIMIT_S):
+        report.outcome = "failed"
+        report.longrepr = (
+            f"{item.nodeid} ran {call.duration:.1f} s, over the "
+            f"{SLOW_CALL_LIMIT_S:.0f} s limit for tests not marked slow: "
+            "add it to SLOW_TESTS in tests/conftest.py or mark it slow")

@@ -1,203 +1,61 @@
-"""Driver-window hygiene (VERDICT r3 item 7).
+"""Driver-window order (SURVEY.md §5 item 7).
 
-The driver's correctness gate samples only the FIRST 50 keys of
-``__spark_entry__.queries()`` per round, so any key without a green
-(rows+schema+hash) row in a committed ``CORRECTNESS_r*.json`` must sit in the
-current window or it can never earn driver verification.  This test makes
-window curation impossible to forget: adding a query without placing it in
-``_DRIVER_WINDOW`` turns the suite red.
+The driver's correctness gate checks the FIRST 50 keys of
+``__spark_entry__.queries()``.  ``operators.driver_order`` computes that order
+at import from the committed ``CORRECTNESS_r*.json`` files: oldest
+fully-green round first (never green = round 0), ties by key name.  These
+tests check the order applied at import and the order one synthetic driver
+round later.
 """
 
 from __future__ import annotations
 
 import json
+import shutil
 from pathlib import Path
 
+from bossarrowstorageengine_spark.operators import ORACLES, QUERIES, driver_order
+
 REPO = Path(__file__).resolve().parents[1]
-WINDOW_SIZE = 50
-FRESHNESS_HORIZON = 7  # keep in sync with tools/curate_window.py
+WINDOW = 50
 
 
-def _next_round() -> int:
-    rounds = [int(p.stem.split("_r")[1])
-              for p in REPO.glob("CORRECTNESS_r*.json")]
-    return (max(rounds) + 1) if rounds else 1
-
-
-def _green_latest() -> dict[str, int]:
-    """Per key: the newest round with a fully-green row across committed
-    driver runs (absent = never green)."""
-    latest: dict[str, int] = {}
-    for path in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        rnd = int(path.stem.split("_r")[1])
-        rows = json.loads(path.read_text())
-        for key, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-                and not row.get("err")
-            ):
-                latest[key] = max(latest.get(key, 0), rnd)
-    return latest
-
-
-def _green_union() -> set[str]:
-    return set(_green_latest())
-
-
-def test_window_covers_unverified_keys():
-    from __spark_entry__ import queries
-
-    ordered = list(queries())
-    window = ordered[:WINDOW_SIZE]
-    needed = set(ordered) - _green_union()
-
-    if len(needed) <= WINDOW_SIZE:
-        missing = needed - set(window)
-        assert not missing, (
-            f"{len(missing)} keys lack a driver-green row but are outside the "
-            f"first {WINDOW_SIZE} queries() keys: {sorted(missing)}. "
-            "Re-curate _DRIVER_WINDOW in bossarrowstorageengine_spark/"
-            "operators/__init__.py."
-        )
-    else:
-        # Backlog exceeds one window: every slot must go to an unverified key.
-        wasted = [k for k in window if k not in needed]
-        assert not wasted, (
-            f"{len(needed)} keys need driver rows (> {WINDOW_SIZE}) but the "
-            f"window spends slots on already-green keys: {wasted}"
-        )
-
-
-def test_window_keys_are_registered():
-    from bossarrowstorageengine_spark.operators import (
-        _DRIVER_WINDOW,
-        ORACLES,
-        QUERIES,
-    )
-
-    assert len(_DRIVER_WINDOW) == WINDOW_SIZE
-    assert len(set(_DRIVER_WINDOW)) == WINDOW_SIZE, "duplicate window keys"
-    unknown = [k for k in _DRIVER_WINDOW if k not in QUERIES]
-    assert not unknown, f"window keys not registered: {unknown}"
-    # Window keys must carry EXACT oracles — a no-oracle key in the window
-    # burns a slot on the weaker rows-only check.
-    no_oracle = [k for k in _DRIVER_WINDOW if k not in ORACLES]
+def _assert_valid(order: dict[str, int]) -> None:
+    assert sorted(order) == sorted(QUERIES), "order is not a permutation"
+    assert list(order) == sorted(order, key=lambda k: (order[k], k)), (
+        "order is not by newest green round, then key name")
+    no_oracle = [k for k in list(order)[:WINDOW] if k not in ORACLES]
     assert not no_oracle, f"window keys without oracle SQL: {no_oracle}"
 
 
-def test_window_rotates_oldest_green_keys():
-    """Rotation policy (SURVEY.md §5): window = [never-green] +
-    [_MODIFIED_UNATTESTED] + oldest-green fill (by latest green round,
-    alphabetical within a round).  Enforcing the fill stops re-verification
-    from stalling: without it, a key could keep an r1-era green row forever
-    while the window re-samples recent favorites.
+def test_window_keys_are_registered():
+    from __spark_entry__ import queries
 
-    Overflow rule (r15, VERDICT r14 item 1): a green key older than
-    FRESHNESS_HORIZON rounds is rotation-DUE — when never-green + modified
-    + due exceed the window, due keys outrank modified re-attestation
-    (carried modified keys stay tripwired in _MODIFIED_UNATTESTED; an
-    aging green has nothing), and the modified slots go to the priority
-    PREFIX of the _MODIFIED_UNATTESTED list."""
-    from bossarrowstorageengine_spark.operators import (
-        _DRIVER_WINDOW,
-        _MODIFIED_UNATTESTED,
-        QUERIES,
-    )
-
-    latest = _green_latest()
-    ordered = list(QUERIES)
-    needed = [k for k in ordered if k not in latest]
-    modified = [k for k in _MODIFIED_UNATTESTED if k in latest]
-    mandatory = set(needed) | set(modified)
-
-    horizon = _next_round() - FRESHNESS_HORIZON - 1
-    due = sorted(
-        (k for k in ordered
-         if k in latest and latest[k] <= horizon and k not in set(modified)),
-        key=lambda k: (latest[k], k),
-    )
-    if len(needed) + len(modified) + len(due) > WINDOW_SIZE:
-        n_mod = WINDOW_SIZE - len(needed) - len(due)
-        if n_mod < 0:
-            expected = set((needed + due)[:WINDOW_SIZE])
-        else:
-            expected = set(needed) | set(due) | set(modified[:n_mod])
-        assert set(_DRIVER_WINDOW) == expected, (
-            "overflow window must be never-green + rotation-due + the "
-            "priority prefix of _MODIFIED_UNATTESTED; "
-            f"missing={sorted(expected - set(_DRIVER_WINDOW))} "
-            f"extra={sorted(set(_DRIVER_WINDOW) - expected)}"
-        )
-        return
-    if len(mandatory) >= WINDOW_SIZE:
-        return  # backlog fills the window; covered by the coverage test
-    n_fill = WINDOW_SIZE - len(mandatory)
-    expected_fill = sorted(
-        (k for k in ordered if k in latest and k not in mandatory),
-        key=lambda k: (latest[k], k),
-    )[:n_fill]
-    assert set(_DRIVER_WINDOW) == mandatory | set(expected_fill), (
-        "window must be mandatory keys + oldest-green rotation; "
-        f"missing={sorted((mandatory | set(expected_fill)) - set(_DRIVER_WINDOW))} "
-        f"extra={sorted(set(_DRIVER_WINDOW) - mandatory - set(expected_fill))}"
-    )
-    # Modified keys must not linger once a NEWER green row attests them:
-    # a stale entry would burn rotation slots every round.
-    restated = [k for k in _MODIFIED_UNATTESTED if k not in QUERIES]
-    assert not restated, f"_MODIFIED_UNATTESTED has unknown keys: {restated}"
+    order = driver_order(REPO)
+    assert list(queries()) == list(order)
+    _assert_valid(order)
 
 
-def test_shared_module_hashes_current():
-    """Shared-module staleness tripwire (VERDICT r5 item 2): a diff to the
-    arrowipc source, the CoW maintenance layer, the streaming pipeline
-    builders, or the zorder kernel must (a) promote every dependent key
-    into _MODIFIED_UNATTESTED and (b) re-record the module hash via
-    tools/curate_window.py — the tool refuses (b) until (a) holds, so this
-    single assertion enforces both."""
-    from bossarrowstorageengine_spark.operators._staleness import (
-        stale_modules,
-    )
-
-    stale = stale_modules()
-    assert not stale, (
-        f"shared modules changed without re-curation: {sorted(stale)}. "
-        "Add the dependent keys to _MODIFIED_UNATTESTED and run "
-        "tools/curate_window.py."
-    )
+def test_window_covers_unverified_keys():
+    order = driver_order(REPO)
+    never = [k for k, rnd in order.items() if rnd == 0]
+    assert list(order)[:len(never)] == never
 
 
-def test_shared_module_deps_cover_direct_references():
-    """A NEW query that drives a shared module must be added to
-    SHARED_MODULE_DEPS or the hash tripwire silently excludes it.  This
-    auto-derives direct references from each registered callable's source
-    (precise markers, not docstring mentions) and requires them to be a
-    subset of the hand-curated map."""
-    import inspect
+def test_window_rotates_oldest_green_keys(tmp_path):
+    assert list(driver_order(tmp_path)) == list(QUERIES)
 
-    from bossarrowstorageengine_spark.operators import QUERIES
-    from bossarrowstorageengine_spark.operators._staleness import (
-        SHARED_MODULE_DEPS,
-    )
+    paths = list(REPO.glob("CORRECTNESS_r*.json"))
+    for path in paths:
+        shutil.copy(path, tmp_path)
+    window = list(driver_order(REPO))[:WINDOW]
+    nxt = 1 + max(int(p.stem.split("_r")[1]) for p in paths)
+    green = {"rows_match": True, "schema_match": True, "hash_match": True,
+             "err": None}
+    (tmp_path / f"CORRECTNESS_r{nxt:02d}.json").write_text(
+        json.dumps({k: green for k in window}))
 
-    markers = {
-        "sources/arrowipc.py": ("register_arrowipc", 'format("arrowipc")'),
-        "sources/maintenance.py": ("sources.maintenance import",),
-        "sources/feed_maintain.py": ("sources.feed_maintain import",),
-        "sources/feed_consume.py": ("sources.feed_consume import",),
-        "streaming/pipelines.py": ("streaming.pipelines import",),
-        "streaming/mv_maintain.py": ("streaming.mv_maintain import",),
-        "functions/components.py": ("functions.components import",),
-    }
-    for rel, needles in markers.items():
-        declared = set(SHARED_MODULE_DEPS[rel])
-        for key, fn in QUERIES.items():
-            src = inspect.getsource(fn)
-            if any(n in src for n in needles):
-                assert key in declared, (
-                    f"{key} references {rel} but is missing from "
-                    f"SHARED_MODULE_DEPS[{rel!r}] in operators/_staleness.py"
-                )
+    order = driver_order(tmp_path)
+    assert set(list(order)[-WINDOW:]) == set(window)
+    assert all(order[k] == nxt for k in window)
+    _assert_valid(order)
