@@ -22,7 +22,15 @@ DataFrame / Structured Streaming:
 - ``streaming``   — Structured Streaming harness for the event-time ops.
 """
 
-from bossarrowstorageengine_spark.engine import Engine, EngineError, EngineResult
-
 __all__ = ["Engine", "EngineError", "EngineResult"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # Lazy (PEP 562): importing the package must not import pyspark, so that
+    # ``_worker_daemon`` can fix the worker's import path before pyspark loads.
+    if name in __all__:
+        from bossarrowstorageengine_spark import engine
+
+        return getattr(engine, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

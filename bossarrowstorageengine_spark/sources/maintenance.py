@@ -493,11 +493,11 @@ def _cow_rewrite(
         # Inserts ride the SAME staged write as the rewrites (union of
         # two explicit repartitions — partition sets concatenate, so file
         # granularity is unchanged): one Spark job instead of two, which
-        # at the Python-datasource fixed floor (~1s per action) is the
-        # single biggest term in a MERGE.  repartition (not coalesce —
-        # see above) bounds the tiny-file fan-out a join-produced insert
-        # set would otherwise inherit from spark.sql.shuffle.partitions;
-        # empty partitions produce no files.
+        # at the Python-datasource fixed floor (~0.55 s for a 25-row
+        # append on 4 cores) is the single biggest term in a MERGE.
+        # repartition (not coalesce — see above) bounds the tiny-file
+        # fan-out a join-produced insert set would otherwise inherit from
+        # spark.sql.shuffle.partitions; empty partitions produce no files.
         ins = _repart(extra, max(1, len(affected_pinned) or 1))
         out_df = ins if out_df is None else out_df.unionByName(ins)
     if out_df is not None:
