@@ -34,16 +34,17 @@ def worker_path(path: list[str], spark_home: str | None) -> list[str]:
     """``path`` with ``$SPARK_HOME/python`` in place of ``pyspark.zip`` and
     archives holding no Python module dropped.  Returned unchanged unless
     ``$SPARK_HOME/python/pyspark`` is an unpacked package."""
-    unpacked = os.path.join(spark_home or "", "python")
-    if not spark_home or not os.path.isfile(
-            os.path.join(unpacked, "pyspark", "__init__.py")):
+    if not spark_home:
+        return list(path)
+    unpacked = os.path.join(spark_home, "python")
+    if not os.path.isfile(os.path.join(unpacked, "pyspark", "__init__.py")):
         return list(path)
     zipped = os.path.realpath(os.path.join(unpacked, "lib", "pyspark.zip"))
     out = []
     for entry in path:
-        if entry and os.path.realpath(entry) == zipped:
+        if os.path.realpath(entry) == zipped:
             entry = unpacked
-        elif entry and os.path.isfile(entry) and not _holds_python(entry):
+        elif os.path.isfile(entry) and not _holds_python(entry):
             continue
         out.append(entry)
     return out

@@ -107,10 +107,12 @@ def test_path_unchanged_without_unpacked_pyspark(tmp_path):
 
 def test_path_swaps_zip_keeps_python_archives_drops_the_rest(tmp_path):
     layout = _spark_layout(tmp_path, unpacked=True)
-    path = _spark_path(layout, tmp_path)
+    not_a_zip = tmp_path / "not-a-zip.egg"
+    not_a_zip.write_text("kept: the import system decides what it is")
+    path = _spark_path(layout, tmp_path) + [str(not_a_zip)]
     assert worker_path(path, layout["home"]) == [
         str(tmp_path), os.path.join(layout["home"], "python"),
-        layout["py4j_zip"], os.path.dirname(os.__file__)]
+        layout["py4j_zip"], os.path.dirname(os.__file__), str(not_a_zip)]
 
 
 def test_package_import_leaves_pyspark_unloaded():
