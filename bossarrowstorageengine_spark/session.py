@@ -14,14 +14,17 @@ per task took 3.6-3.9 s on 4 cores (Spark 4.1.2, Python 3.11).  Sessions
 built here start their workers through ``_worker_daemon``
 (``ENGINE_STATIC_CONF``), which takes those archives off the path before
 pyspark loads; the same map then takes ~0.9 s.  The planner round trips of
-Python data sources (``schema()``, ``partitions()``, the write commit) start
-a fresh non-daemon Python process per call and keep Spark's default path.
+Python data sources (``schema()``, ``partitions()``, the write commit) run in
+reused workers forked from a plain ``pyspark.daemon``, which Spark starts
+whatever the daemon-module conf says; ``sources/arrowipc.py`` takes the
+archives off their path when it is first imported there, in every session.
 
 The launcher conf is static: it only takes effect when ``build_session``
 creates the SparkContext.  ``apply_engine_conf`` cannot set it, so a session
 built elsewhere -- the vanilla driver session that ``__spark_entry__``
 receives, or ``SparkSession.builder.getOrCreate()`` in the verify steps --
-keeps Spark's default launch and the per-task cost.
+keeps Spark's default launch and the per-task cost in every worker that
+has not imported ``arrowipc``.
 """
 
 from __future__ import annotations

@@ -90,8 +90,8 @@ def compact_feed_thru(
     ``schema`` (r17, VERDICT r16 item 3): the feed's FULL on-disk row
     schema (DDL string or StructType), when the caller knows it — the
     rewrite's internal read then skips the Python-datasource
-    schema-inference plan-worker round trip (0.14–0.23 s per call on 4
-    cores; a fresh Python process each time, guide §1.2).  Partition
+    schema-inference planner round trip (about 0.01 s per call on 4
+    cores once the planner worker is warm; guide §1.2).  Partition
     columns (``commit_seq``) are stored physically by the writer, so the
     written frame's schema IS the read schema; a type mismatch fails the
     read loudly via ``_validate_declared_schema``.  ``None`` keeps

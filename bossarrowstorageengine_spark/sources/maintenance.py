@@ -492,9 +492,9 @@ def _cow_rewrite(
     if extra is not None:
         # Inserts ride the SAME staged write as the rewrites (union of
         # two explicit repartitions — partition sets concatenate, so file
-        # granularity is unchanged): one Spark job instead of two, which
-        # at the Python-datasource fixed floor (~0.55 s for a 25-row
-        # append on 4 cores) is the single biggest term in a MERGE.
+        # granularity is unchanged): one Spark job instead of two, each of
+        # which pays the Python-datasource fixed floor (~0.1 s for a
+        # 25-row append on 4 cores).
         # repartition (not coalesce — see above) bounds the tiny-file
         # fan-out a join-produced insert set would otherwise inherit from
         # spark.sql.shuffle.partitions; empty partitions produce no files.

@@ -1,21 +1,26 @@
-"""The Python worker launcher (``bossarrowstorageengine_spark._worker_daemon``).
+"""The unzipped worker import path (``bossarrowstorageengine_spark._worker_daemon``).
 
 Engine sessions start their Python workers with the unpacked
 ``$SPARK_HOME/python`` tree in place of ``pyspark.zip`` and without the
-``spark-core`` jar on the import path.  These tests pin that the workers
-still import the same pyspark, pyarrow, pandas and packaging as the driver,
-that no archive importer is left for ``invalidate_caches()`` to rescan, and
-that the path rewrite leaves the path alone when no unpacked tree exists.
+``spark-core`` jar on the import path, and Spark's data-source planner
+workers get the same path when they first import ``arrowipc``.  These tests
+pin that the workers still import the same pyspark, pyarrow, pandas and
+packaging as the driver, that no archive importer is left for
+``invalidate_caches()`` to rescan, and that the path rewrite leaves the path
+alone when no unpacked tree exists or the process is not a Spark worker.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import subprocess
 import sys
 import zipfile
 
 import pyarrow as pa
+import pytest
 
 from bossarrowstorageengine_spark._worker_daemon import worker_path
 
@@ -122,3 +127,131 @@ def test_package_import_leaves_pyspark_unloaded():
             "from bossarrowstorageengine_spark.engine import Engine as E\n"
             "assert Engine is E\n")
     subprocess.run([sys.executable, "-c", code], cwd=REPO, check=True)
+
+
+def _real_spark_archives():
+    """``$SPARK_HOME`` with its ``pyspark.zip``, py4j zip and ``spark-core``
+    jar, as Spark puts them on a worker's path."""
+    home = os.environ.get("SPARK_HOME", "")
+    lib = os.path.join(home, "python", "lib")
+    zipped = os.path.join(lib, "pyspark.zip")
+    py4j = glob.glob(os.path.join(lib, "py4j-*.zip"))
+    jar = glob.glob(os.path.join(home, "jars", "spark-core_*.jar"))
+    if not (home and py4j and jar and os.path.isfile(zipped) and os.path.isfile(
+            os.path.join(home, "python", "pyspark", "__init__.py"))):
+        pytest.skip("no $SPARK_HOME with an unpacked python/pyspark and its archives")
+    return {"home": home, "pyspark_zip": zipped, "py4j_zip": py4j[0], "core_jar": jar[0]}
+
+
+def _run_on_spark_path(code, archives, *args):
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        [archives["pyspark_zip"], archives["py4j_zip"], archives["core_jar"], REPO]))
+    subprocess.run([sys.executable, "-c", code, *args], cwd=REPO, env=env, check=True)
+
+
+def test_unzip_after_pyspark_loaded_from_zip():
+    archives = _real_spark_archives()
+    code = """
+import importlib, os, sys, zipimport
+ZIP, JAR, HOME = sys.argv[1:]
+import pyspark.sql.worker.plan_data_source_read
+import pyspark
+assert pyspark.__file__.startswith(ZIP + os.sep), pyspark.__file__
+version = pyspark.__version__
+assert "pyspark.sql.avro.functions" not in sys.modules
+from bossarrowstorageengine_spark._worker_daemon import unzip_import_path
+unzip_import_path(HOME)
+
+def bad():
+    return sorted({f.archive for f in sys.path_importer_cache.values()
+                   if isinstance(f, zipimport.zipimporter) and f.archive in (ZIP, JAR)})
+
+assert bad() == [], bad()
+importlib.invalidate_caches()
+assert bad() == [], bad()
+import pyspark.sql.avro.functions as fresh
+assert fresh.__file__ == os.path.join(HOME, "python", "pyspark", "sql", "avro",
+                                      "functions.py"), fresh.__file__
+assert bad() == [], bad()
+assert pyspark.__version__ == version
+"""
+    _run_on_spark_path(code, archives, archives["pyspark_zip"],
+                       archives["core_jar"], archives["home"])
+
+
+def test_arrowipc_import_leaves_plain_process_path_alone():
+    archives = _real_spark_archives()
+    code = """
+import sys
+before = list(sys.path)
+import bossarrowstorageengine_spark.sources.arrowipc
+assert sys.path == before, (before, sys.path)
+"""
+    _run_on_spark_path(code, archives)
+
+
+def test_planner_workers_drop_zip_importers_after_arrowipc_import(spark, tmp_path):
+    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+    # Defined in the test, so Spark pickles it by value: the planner workers
+    # import arrowipc only through report().
+    class PlannerProbe(DataSource):
+        @classmethod
+        def name(cls):
+            return "planner_probe"
+
+        @staticmethod
+        def report(out, call):
+            import json
+            import os
+            import sys
+            import uuid
+            import zipfile
+            import zipimport
+
+            import bossarrowstorageengine_spark.sources.arrowipc  # noqa: F401
+
+            def holds_python(archive):
+                with zipfile.ZipFile(archive) as zf:
+                    return any(n.endswith((".py", ".pyc")) for n in zf.namelist())
+
+            archives = {f.archive for f in sys.path_importer_cache.values()
+                        if isinstance(f, zipimport.zipimporter)}
+            bad = sorted(a for a in archives
+                         if os.path.basename(a) == "pyspark.zip" or not holds_python(a))
+            with open(os.path.join(out, f"{call}-{uuid.uuid4().hex}.json"), "w") as f:
+                json.dump({"call": call, "bad": bad}, f)
+
+        def schema(self):
+            self.report(self.options["out"], "schema")
+            return "id int"
+
+        def reader(self, schema):
+            return PlannerProbeReader(self.options["out"])
+
+    class PlannerProbeReader(DataSourceReader):
+        def __init__(self, out):
+            self.out = out
+
+        def partitions(self):
+            PlannerProbe.report(self.out, "partitions")
+            return [InputPartition(0)]
+
+        def read(self, partition):
+            yield (1,)
+
+    spark.dataSource.register(PlannerProbe)
+
+    def read_reports(out):
+        os.makedirs(out)
+        assert spark.read.format("planner_probe").option("out", out).load().count() == 1
+        reports = []
+        for name in sorted(os.listdir(out)):
+            with open(os.path.join(out, name)) as f:
+                reports.append(json.load(f))
+        return reports
+
+    read_reports(str(tmp_path / "first"))
+    second = read_reports(str(tmp_path / "second"))
+    assert {r["call"] for r in second} == {"schema", "partitions"}
+    assert [r["bad"] for r in second] == [[] for _ in second]
