@@ -1,32 +1,50 @@
-"""Unzipped import path for Spark Python workers.
+"""Unzipped import path and frozen heap for Spark Python workers.
 
-Spark starts its Python workers with ``pyspark.zip``, the py4j zip and the
-``spark-core`` jar at the front of ``PYTHONPATH``.  Before each call, a
-worker calls ``importlib.invalidate_caches()``, and on Python 3.11 every
-cached ``zipimporter`` then re-reads its archive's central directory: about
-0.2 s per executor task and 80 ms per data-source planner call for
-``pyspark.zip`` (one importer per imported subpackage) and the jar
-(thousands of entries, no Python).  ``unzip_import_path`` takes those
-archives off the import path.  It changes which archives a worker rescans,
-never which module an import resolves to: the unpacked ``$SPARK_HOME/python``
-tree is the same pyspark as ``pyspark.zip``, and a dropped archive holds no
-module to import.  It has two callers:
+A reused Spark Python worker pays two fixed costs on every call, whatever
+the call does:
+
+- Zip rescans.  Spark starts its workers with ``pyspark.zip``, the py4j zip
+  and the ``spark-core`` jar at the front of ``PYTHONPATH``.  Before each
+  call a worker calls ``importlib.invalidate_caches()``, and on Python 3.11
+  every cached ``zipimporter`` then re-reads its archive's central
+  directory: about 0.2 s per executor task and 80 ms per data-source planner
+  call for ``pyspark.zip`` (one importer per imported subpackage) and the
+  jar (thousands of entries, no Python).  ``unzip_import_path`` takes those
+  archives off the import path.  It changes which archives a worker
+  rescans, never which module an import resolves to: the unpacked
+  ``$SPARK_HOME/python`` tree is the same pyspark as ``pyspark.zip``, and a
+  dropped archive holds no module to import.
+- A full collection.  After each call, ``pyspark.daemon`` runs
+  ``gc.collect()`` in the reused worker, which walks every tracked object
+  the worker holds: about 74k in an executor worker with pyspark, pyarrow
+  and pandas loaded, 43k in a planner worker.  Timed inside the workers
+  (``local[4]``, 4 tasks at once), that took 46-160 ms per executor task
+  and 22-43 ms per planner call.  ``freeze_heap`` collects once and then
+  moves every object to the permanent generation (``gc.freeze()``), so the
+  per-call collection walks only what the call itself left: 0.3 ms and
+  0.1 ms.  Objects created later are collected as before; only a frozen
+  object that later becomes cyclic garbage would be kept, and the frozen
+  heap is the loaded modules.
+
+Both fixes run in two places:
 
 - Executor workers.  ``session.build_session`` sets this module as
   ``spark.python.daemon.module``; ``main()`` rewrites the path before
-  pyspark is imported, then runs ``pyspark.daemon``.
+  pyspark is imported, imports what the workers run, freezes the heap, then
+  runs ``pyspark.daemon``, whose forked workers inherit it all.
 - Planner workers.  Spark runs each Python data-source planner call
   (``schema()``, ``partitions()``, filter pushdown, the write set-up and
   commit) in a worker forked from a plain ``pyspark.daemon``, whatever the
   session's daemon module, and reuses that worker for later calls.  Every
   such call unpickles the ``arrowipc`` source, so ``sources/arrowipc.py``
-  calls ``unzip_import_path`` at import in Spark worker processes, after
-  pyspark has been imported from the zip; the worker is unzipped from its
-  first call on.
+  calls both at import in Spark worker processes, after pyspark has been
+  imported from the zip; the worker is unzipped and frozen from its first
+  call on.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import runpy
 import sys
@@ -113,8 +131,22 @@ def unzip_import_path(spark_home: str | None) -> None:
             del sys.path_importer_cache[key]
 
 
+def freeze_heap() -> None:
+    """Collect this process's garbage once, then move every object left to
+    the permanent generation, so later collections skip them."""
+    gc.collect()
+    gc.freeze()
+
+
 def main() -> None:
     unzip_import_path(os.environ.get("SPARK_HOME"))
+    # What nearly every engine task loads; the forked workers inherit it
+    # loaded and frozen.
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+    import pyspark.worker  # noqa: F401
+
+    freeze_heap()
     runpy.run_module("pyspark.daemon", run_name="__main__", alter_sys=True)
 
 

@@ -5,19 +5,27 @@ Python boundary, and scale-friendly execution (AQE on, coalesced shuffle
 partitions).  On a real cluster the same builder is used with a different
 master; nothing here is local-mode-specific except the fallback master.
 
-Python workers.  Spark puts ``pyspark.zip`` and the ``spark-core`` jar on
-every Python worker's import path, and before each task the worker calls
+Python workers.  A reused Spark Python worker pays two fixed costs on every
+task.  Spark puts ``pyspark.zip`` and the ``spark-core`` jar on every Python
+worker's import path, and before each task the worker calls
 ``importlib.invalidate_caches()``, which on Python 3.11 makes every cached
-``zipimporter`` re-read its archive's central directory.  That costs about
-0.2 s per Python task on a reused worker: a 64-task RDD map of one element
-per task took 3.6-3.9 s on 4 cores (Spark 4.1.2, Python 3.11).  Sessions
-built here start their workers through ``_worker_daemon``
-(``ENGINE_STATIC_CONF``), which takes those archives off the path before
-pyspark loads; the same map then takes ~0.9 s.  The planner round trips of
-Python data sources (``schema()``, ``partitions()``, the write commit) run in
-reused workers forked from a plain ``pyspark.daemon``, which Spark starts
-whatever the daemon-module conf says; ``sources/arrowipc.py`` takes the
-archives off their path when it is first imported there, in every session.
+``zipimporter`` re-read its archive's central directory: about 0.2 s per
+Python task.  After each task ``pyspark.daemon`` runs ``gc.collect()``,
+which walks the ~74k objects of a worker with pyspark, pyarrow and pandas
+loaded: 46-160 ms per task, timed inside 4 concurrent workers on 4 cores.
+A 64-task RDD map of one element per task took 3.6-3.9 s on 4 cores (Spark
+4.1.2, Python 3.11).  Sessions built here start their workers through
+``_worker_daemon`` (``ENGINE_STATIC_CONF``), which takes those archives off
+the path before pyspark loads and freezes the daemon's heap
+(``gc.freeze()``) before it forks workers, so the per-task collection walks
+only the task's own objects (0.3 ms).  The zip fix brought the same map to
+~0.9 s; on a busier host (load ~2.5), the freeze then took it from
+1.02-1.07 s to 0.90-0.93 s.  The planner round trips of Python data sources
+(``schema()``, ``partitions()``, the write commit) run in reused workers
+forked from a plain ``pyspark.daemon``, which Spark starts whatever the
+daemon-module conf says; ``sources/arrowipc.py`` takes the archives off
+their path and freezes their heap when it is first imported there, in every
+session.
 
 The launcher conf is static: it only takes effect when ``build_session``
 creates the SparkContext.  ``apply_engine_conf`` cannot set it, so a session
@@ -77,10 +85,12 @@ ENGINE_SQL_CONF: dict[str, str] = {
 #: Launch-time Spark conf for sessions ``build_session`` creates.  Static, so
 #: ``apply_engine_conf`` cannot set it on a running session.
 ENGINE_STATIC_CONF: dict[str, str] = {
-    # Start Python workers through the engine launcher: about 0.2 s less
-    # per Python task (module docstring).  The workers must import this
-    # package, which every engine session needs anyway: the arrowipc source
-    # and the engine's UDFs are pickled by reference.
+    # Start Python workers through the engine launcher: no zip rescans
+    # (about 0.2 s per Python task) and a frozen heap for the daemon's
+    # per-task gc.collect() (tens of ms per task; module docstring).  The
+    # workers must import this package, which every engine session needs
+    # anyway: the arrowipc source and the engine's UDFs are pickled by
+    # reference.
     "spark.python.daemon.module": "bossarrowstorageengine_spark._worker_daemon",
 }
 

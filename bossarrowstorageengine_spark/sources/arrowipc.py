@@ -84,15 +84,17 @@ from pyspark.sql.datasource import (
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
-from .._worker_daemon import unzip_import_path
+from .._worker_daemon import freeze_heap, unzip_import_path
 
 # Spark runs each planner call of this source in a reused worker forked from
 # a plain ``pyspark.daemon``, with pyspark imported from ``pyspark.zip``;
 # every call unpickles this source, so unzipping the worker's import path
-# here spares its later calls the zip rescan (``_worker_daemon``).
+# and freezing its heap here spare its later calls the zip rescan and most
+# of the daemon's after-call ``gc.collect()`` (``_worker_daemon``).
 if getattr(getattr(sys.modules.get("__main__"), "__spec__", None),
            "name", None) == "pyspark.daemon":
     unzip_import_path(os.environ.get("SPARK_HOME"))
+    freeze_heap()
 
 FORMAT_NAME = "arrowipc"
 

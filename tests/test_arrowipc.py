@@ -1827,11 +1827,13 @@ def test_cow_delete_on_two_level_partitioned_table(spark):
     shutil.rmtree(out, ignore_errors=True)
 
 
+@pytest.mark.parametrize("mutation", ["delete", "update", "merge"])
 def test_mutation_conflict_retry_succeeds_against_new_snapshot(
-        spark, monkeypatch):
+        spark, monkeypatch, mutation):
     """max_retries re-runs a losing mutation from scratch: the retry
     re-pins the NEW latest snapshot and commits cleanly — 'apply my
-    mutation to current state' semantics."""
+    mutation to current state' semantics.  MERGE keeps its source cached
+    through every attempt and unpersists it once at the end."""
     from bossarrowstorageengine_spark.sources import maintenance
     from bossarrowstorageengine_spark.sources.arrowipc import (
         ConcurrentWriteConflict)
@@ -1840,12 +1842,14 @@ def test_mutation_conflict_retry_succeeds_against_new_snapshot(
     spark.range(20).withColumn("v", F.col("id") * 2).repartition(2) \
         .write.format("arrowipc").option("snapshots", "true") \
         .mode("append").save(out)
+    source = spark.range(10, 25).withColumn("v", F.col("id") * 3)
 
     real = maintenance._write_manifest
-    calls = {"n": 0}
+    calls = {"n": 0, "source_cached": []}
 
     def flaky(path, new_files, replace=False, remove=(), **kwargs):
         calls["n"] += 1
+        calls["source_cached"].append(source.is_cached)
         if calls["n"] == 1:
             # Simulate losing the race once; clean up like the real path
             # would have (the wrapper raises before the real commit).
@@ -1854,12 +1858,27 @@ def test_mutation_conflict_retry_succeeds_against_new_snapshot(
                     **kwargs)
 
     monkeypatch.setattr(maintenance, "_write_manifest", flaky)
-    info = maintenance.delete_arrowipc(
-        spark, out, "id >= 10", predicate_columns=["id"], max_retries=1)
-    assert info["rows_deleted"] == 10
+    if mutation == "delete":
+        info = maintenance.delete_arrowipc(
+            spark, out, "id >= 10", predicate_columns=["id"], max_retries=1)
+        assert info["rows_deleted"] == 10
+        want = [(i, 2 * i) for i in range(10)]
+    elif mutation == "update":
+        info = maintenance.update_arrowipc(
+            spark, out, "id >= 10", {"v": "v + 1"},
+            predicate_columns=["id"], max_retries=1)
+        assert info["rows_updated"] == 10
+        want = [(i, 2 * i + (i >= 10)) for i in range(20)]
+    else:
+        info = maintenance.merge_arrowipc(
+            spark, out, source, "id", max_retries=1)
+        assert (info["rows_updated"], info["rows_inserted"]) == (10, 5)
+        assert calls["source_cached"] == [True, True]
+        assert not source.is_cached
+        want = [(i, 2 * i if i < 10 else 3 * i) for i in range(25)]
     assert calls["n"] == 2  # first attempt lost, retry committed
     back = spark.read.format("arrowipc").option("snapshots", "true").load(out)
-    assert sorted(r["id"] for r in back.collect()) == list(range(10))
+    assert sorted((r["id"], r["v"]) for r in back.collect()) == want
     shutil.rmtree(out, ignore_errors=True)
 
 

@@ -1,12 +1,13 @@
-"""The unzipped worker import path (``bossarrowstorageengine_spark._worker_daemon``).
+"""The unzipped, frozen worker (``bossarrowstorageengine_spark._worker_daemon``).
 
 Engine sessions start their Python workers with the unpacked
-``$SPARK_HOME/python`` tree in place of ``pyspark.zip`` and without the
-``spark-core`` jar on the import path, and Spark's data-source planner
-workers get the same path when they first import ``arrowipc``.  These tests
-pin that the workers still import the same pyspark, pyarrow, pandas and
-packaging as the driver, that no archive importer is left for
-``invalidate_caches()`` to rescan, and that the path rewrite leaves the path
+``$SPARK_HOME/python`` tree in place of ``pyspark.zip``, without the
+``spark-core`` jar on the import path and with a frozen heap, and Spark's
+data-source planner workers get the same path and freeze when they first
+import ``arrowipc``.  These tests pin that the workers still import the same
+pyspark, pyarrow, pandas and packaging as the driver, that no archive
+importer is left for ``invalidate_caches()`` to rescan, that the workers'
+heaps are frozen, and that the path rewrite and the freeze leave a process
 alone when no unpacked tree exists or the process is not a Spark worker.
 """
 
@@ -32,6 +33,7 @@ def test_workers_import_unzipped_pyspark_and_driver_packages(spark):
     import pandas
 
     def worker_facts(batches):
+        import gc
         import os
         import sys
         import zipfile
@@ -58,10 +60,11 @@ def test_workers_import_unzipped_pyspark_and_driver_packages(spark):
                 "pyarrow": pyarrow.__file__,
                 "pandas": pandas.__file__,
                 "packaging": packaging.__file__,
+                "frozen": gc.get_freeze_count(),
             }])
 
     schema = ("version string, pyspark string, bad_importers string, "
-              "pyarrow string, pandas string, packaging string")
+              "pyarrow string, pandas string, packaging string, frozen long")
     rows = (spark.range(0, 4, 1, 4).mapInArrow(worker_facts, schema)
             .collect())
     assert len(rows) == 4
@@ -72,6 +75,7 @@ def test_workers_import_unzipped_pyspark_and_driver_packages(spark):
         assert row.pyarrow == pa.__file__
         assert row.pandas == pandas.__file__
         assert row.packaging == packaging.__file__
+        assert row.frozen > 0
 
 
 def _zip(path, names):
@@ -182,10 +186,11 @@ assert pyspark.__version__ == version
 def test_arrowipc_import_leaves_plain_process_path_alone():
     archives = _real_spark_archives()
     code = """
-import sys
+import gc, sys
 before = list(sys.path)
 import bossarrowstorageengine_spark.sources.arrowipc
 assert sys.path == before, (before, sys.path)
+assert gc.get_freeze_count() == 0, gc.get_freeze_count()
 """
     _run_on_spark_path(code, archives)
 
@@ -202,6 +207,7 @@ def test_planner_workers_drop_zip_importers_after_arrowipc_import(spark, tmp_pat
 
         @staticmethod
         def report(out, call):
+            import gc
             import json
             import os
             import sys
@@ -220,7 +226,8 @@ def test_planner_workers_drop_zip_importers_after_arrowipc_import(spark, tmp_pat
             bad = sorted(a for a in archives
                          if os.path.basename(a) == "pyspark.zip" or not holds_python(a))
             with open(os.path.join(out, f"{call}-{uuid.uuid4().hex}.json"), "w") as f:
-                json.dump({"call": call, "bad": bad}, f)
+                json.dump({"call": call, "bad": bad,
+                           "frozen": gc.get_freeze_count()}, f)
 
         def schema(self):
             self.report(self.options["out"], "schema")
@@ -255,3 +262,4 @@ def test_planner_workers_drop_zip_importers_after_arrowipc_import(spark, tmp_pat
     second = read_reports(str(tmp_path / "second"))
     assert {r["call"] for r in second} == {"schema", "partitions"}
     assert [r["bad"] for r in second] == [[] for _ in second]
+    assert all(r["frozen"] > 0 for r in second), second
