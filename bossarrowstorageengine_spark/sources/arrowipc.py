@@ -1142,13 +1142,6 @@ class ArrowIPCReader(DataSourceReader):
         self._snapshots = _snapshots_mode(options)
         self._fname_col = options.get(
             "filenamecolumn", options.get("filenameColumn"))
-        # Optional planning allowlist: a JSON file naming the exact part
-        # files this scan may touch.  The path (one string) rides in the
-        # options instead of an N-literal In filter, so mutation plans stay
-        # O(1) in the number of affected files.  Loaded in partitions()
-        # (driver-side) — never shipped to executors.
-        self._file_list_path = options.get(
-            "filelistpath", options.get("fileListPath"))
         self._group_bucket = str(options.get(
             "groupbybucket", options.get("groupByBucket", "false"))
         ).lower() == "true"
@@ -1236,14 +1229,10 @@ class ArrowIPCReader(DataSourceReader):
             schema_ser = target.serialize().to_pybytes()
         root_is_dir = os.path.isdir(self._path)
         # File-name pruning: an EqualTo/In filter on the attribution column
-        # (filenameColumn) names the exact part files a scan may touch — the
-        # copy-on-write rewrite path filters on it, so a DELETE/MERGE that
-        # affects 1% of a table's files plans tasks for only that 1% instead
-        # of re-reading every file and discarding rows post-scan.
+        # (filenameColumn) names the exact part files a scan may touch, so
+        # the scan plans tasks for only those files instead of reading
+        # every file and discarding rows post-scan.
         fname_allow: set | None = None
-        if self._file_list_path:
-            with open(self._file_list_path) as f:
-                fname_allow = set(json.load(f))
         if self._fname_col:
             for f in self._filters:
                 col = f.attribute[-1] if hasattr(f, "attribute") else None

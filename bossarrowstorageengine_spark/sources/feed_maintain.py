@@ -34,23 +34,10 @@ maintenance runs.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import SparkSession
 
-from bossarrowstorageengine_spark.sources.arrowipc import (
-    ConcurrentWriteConflict,
-    _manifest_versions,
-    _read_manifest,
-    _write_manifest,
-    register_arrowipc,
-    stats_path,
-)
-from bossarrowstorageengine_spark.sources.maintenance import (
-    _staged_rows,
-    _walk_staged_parts,
-)
+from bossarrowstorageengine_spark.sources.maintenance import _Rewrite
 
 
 def _scope_key(path: str, part_file: str) -> int | None:
@@ -87,101 +74,49 @@ def compact_feed_thru(
     repartition keeps each output file a CONTIGUOUS ``commit_seq``
     span, so per-file min/max stats still prune commit-range reads.
 
-    ``schema`` (r17, VERDICT r16 item 3): the feed's FULL on-disk row
-    schema (DDL string or StructType), when the caller knows it — the
-    rewrite's internal read then skips the Python-datasource
-    schema-inference planner round trip (about 0.01 s per call on 4
-    cores once the planner worker is warm; guide §1.2).  Partition
-    columns (``commit_seq``) are stored physically by the writer, so the
-    written frame's schema IS the read schema; a type mismatch fails the
-    read loudly via ``_validate_declared_schema``.  ``None`` keeps
-    inference (callers compacting a feed of unknown layout).
+    ``schema``: the feed's FULL on-disk row schema (DDL string or
+    StructType), when the caller knows it — the rewrite's internal read
+    then skips the Python-datasource schema-inference planner round trip
+    (about 0.01 s per call on 4 cores once the planner worker is warm).
+    Partition columns (``commit_seq``) are stored physically by the
+    writer, so the written frame's schema IS the read schema; a type
+    mismatch fails the read loudly via ``_validate_declared_schema``.
+    ``None`` keeps inference (callers compacting a feed of unknown
+    layout).
 
     Returns ``{"files_before", "files_after", "compacted", "rows",
     "version", "thru"}``; no-op (no manifest commit) when nothing is in
     scope."""
-    register_arrowipc(spark)
-    versions = _manifest_versions(path)
-    if not versions:
-        raise ValueError(
-            f"{path!r} is not a snapshotted feed — checkpoint compaction "
-            "needs the manifest log to swap readers atomically and keep "
-            "history; write the feed with option('snapshots', 'true')")
-    before = _read_manifest(path, versions[-1])
-    scope = {f: _scope_key(path, f) for f in before}
-    in_scope = sorted(f for f, k in scope.items()
-                      if k is not None and k <= thru)
-    if not in_scope:
-        return {"files_before": len(before), "files_after": len(before),
-                "compacted": 0, "rows": 0, "version": versions[-1],
-                "thru": thru}
-
-    # Pin the input to the snapshot (same discipline as compact_arrowipc):
-    # hard-link exactly the in-scope set into a hidden source dir and scan
-    # THAT, so a concurrent producer commit landing mid-compaction is
-    # neither rewritten nor removed.
-    snapshot = os.path.join(path, f".feedcompact-src-{uuid.uuid4().hex}")
-    staging = os.path.join(path, f".feedcompact-{uuid.uuid4().hex}")
-    os.makedirs(snapshot, exist_ok=True)
-    try:
-        for old in in_scope:
-            for src in (old, stats_path(old)):
-                if not os.path.exists(src):
-                    continue
-                dst = os.path.join(snapshot, os.path.relpath(src, path))
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                try:
-                    os.link(src, dst)
-                except OSError:
-                    shutil.copy2(src, dst)
-
+    with _Rewrite(spark, path, "feedcompact") as tx:
+        if tx.head is None:
+            raise ValueError(
+                f"{path!r} is not a snapshotted feed — checkpoint "
+                "compaction needs the manifest log to swap readers "
+                "atomically and keep history; write the feed with "
+                "option('snapshots', 'true')")
+        before = tx.visible
+        in_scope = sorted(f for f in before
+                          if (k := _scope_key(path, f)) is not None
+                          and k <= thru)
+        if not in_scope:
+            return {"files_before": len(before),
+                    "files_after": len(before), "compacted": 0, "rows": 0,
+                    "version": tx.head, "thru": thru}
         # Checkpoint files range-keyed and sorted by feed position, so
         # each file's min/max stats record the exact commit span it
         # covers (readers pruning past `thru` skip them at plan time).
         # commit_seq rides along as a data column — it was stored
         # physically by the partitioned write, so the collapse loses
-        # nothing.
-        reader = spark.read.format("arrowipc")
-        if schema is not None:
-            reader = reader.schema(schema)
-        (reader.load(snapshot)
-         .repartitionByRange(max(1, target_files), "commit_seq")
-         .sortWithinPartitions("commit_seq")
-         .write.format("arrowipc").option("compression", compression)
-         .mode("append")
-         .save(os.path.join(staging, f"compacted_thru={thru}")))
-
-        rows = _staged_rows(staging)
-        promoted: list[str] = []
-        for src, _ in _walk_staged_parts(staging):
-            dst = os.path.join(path, os.path.relpath(src, staging))
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(src, dst)
-            sp = stats_path(src)
-            if os.path.exists(sp):
-                os.replace(sp, stats_path(dst))
-            promoted.append(dst)
-        # Logical swap: one manifest version whose visible set replaces the
-        # compacted inputs with their checkpoint.  Old parts stay on disk
-        # for time travel until vacuum.
-        try:
-            version = _write_manifest(path, promoted, replace=False,
-                                      remove=in_scope,
-                                      adds_new_rows=False)
-        except ConcurrentWriteConflict:
-            # Same orphan rule as compact_arrowipc: an unpublished
-            # checkpoint is invisible and must not linger on disk.
-            for p in promoted:
-                for victim in (p, stats_path(p)):
-                    try:
-                        os.remove(victim)
-                    except FileNotFoundError:
-                        pass
-            raise
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(snapshot, ignore_errors=True)
+        # nothing.  Only the in-scope files are pinned: a concurrent
+        # producer commit landing mid-compaction is neither rewritten
+        # nor removed.
+        tx.stage(tx.read(in_scope, schema=schema)
+                 .repartitionByRange(max(1, target_files), "commit_seq")
+                 .sortWithinPartitions("commit_seq"),
+                 into=f"compacted_thru={thru}", compression=compression)
+        rows = tx.staged_rows()
+        promoted = tx.commit(remove=in_scope)
     files_after = len(before) - len(in_scope) + len(promoted)
     return {"files_before": len(before), "files_after": files_after,
-            "compacted": len(in_scope), "rows": rows, "version": version,
+            "compacted": len(in_scope), "rows": rows, "version": tx.version,
             "thru": thru}

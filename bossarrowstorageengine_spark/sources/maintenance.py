@@ -6,14 +6,14 @@ footers, and per-file task overhead dominate.  ``compact_arrowipc``
 rewrites a directory into few large files — the Arrow-IPC equivalent of
 parquet compaction / Delta ``OPTIMIZE``.
 
-Scale design: the rewrite IS a Spark job — ``spark.read.format("arrowipc")``
-→ ``repartition(target_files)`` → ``write.format("arrowipc")`` — so
-compaction parallelizes across the cluster like any other query; nothing
-passes through the driver.  The swap is a two-phase directory commit:
-new files land under a hidden ``.compact-*`` staging dir (each part file
-itself atomic via the writer's tmp+rename), then replace the old parts.
-On a real object store the swap would be a manifest/transaction-log flip;
-the staging + atomic-per-file pattern is the same.
+Every operation here that changes data already on disk — compaction,
+the copy-on-write DELETE / UPDATE / MERGE, and (in other modules) feed
+checkpoint compaction and LSM index compaction — is one ``_Rewrite``
+transaction: pin the input files, rewrite them with an ordinary Spark job
+into a hidden staging directory, promote the staged parts, and commit one
+add/remove manifest (a physical swap on a plain directory).  The rewrite
+parallelizes across the cluster like any other query; nothing passes
+through the driver but file names and counts.
 """
 
 from __future__ import annotations
@@ -39,6 +39,169 @@ from bossarrowstorageengine_spark.sources.arrowipc import (
     register_arrowipc,
     stats_path,
 )
+
+
+class _Rewrite:
+    """One rewrite transaction: replace visible part files of the table at
+    ``path`` with a rewrite of them (the Delta copy-on-write / ``OPTIMIZE``
+    commit).  Use it as a context manager; every exit, normal or not,
+    removes its pin and staging directories.
+
+    - ``visible``: the files the rewrite may replace — the head manifest's
+      set on a snapshotted table (``head`` is its version), else the
+      directory listing (``head`` is None).  A listing would include an
+      in-flight appender's renamed-but-uncommitted part, which must be
+      neither rewritten (its own commit would later double its rows) nor
+      deleted.
+    - ``read(files)``: a fresh ``arrowipc`` load of a hard-link pin
+      (copy fallback) of ``files``, default all of ``visible``.  The
+      pin keeps the relative layout, so partition directories read back
+      the same.  Reads, rewrite and commit then cover the same files
+      even if an appender lands parts or a vacuum deletes files
+      mid-rewrite.  A fresh load per read also keeps clear of the
+      pushdown plan-cache hazard (FORMAT.md §8).
+    - ``origins(names)``: the table files behind attribution-column
+      (``filenameColumn``) values of a ``read``.
+    - ``stage(df)``: write the rewrite into the staging directory.
+    - ``commit(remove)``: promote the staged parts with their sidecars,
+      then publish one manifest version adding them and removing
+      ``remove``, applied inside the CAS retry loop so concurrent
+      appends survive and old parts stay readable by time travel until
+      vacuum.  On a plain directory the swap is physical: delete
+      ``remove``, then promote.  A commit that loses a write-write race
+      deletes the files it promoted (vacuum never touches unmanifested
+      files, so they would linger forever) and re-raises
+      ``ConcurrentWriteConflict``.
+    """
+
+    def __init__(self, spark: SparkSession, path: str, kind: str):
+        register_arrowipc(spark)
+        self._spark = spark
+        self._path = path
+        self._kind = kind
+        versions = _manifest_versions(path)
+        self.head = versions[-1] if versions else None
+        self.visible = (_read_manifest(path, self.head) if versions
+                        else _list_ipc_files(path))
+        self.version: int | None = None
+        self._staging = os.path.join(path, f".{kind}-{uuid.uuid4().hex}")
+        self._staged_schema: StructType | None = None
+        self._pins: dict[tuple, str] = {}
+        self._held: dict[str, str] = {}      # table file -> a pinned link
+        self._origin: dict[str, str] = {}    # pinned link -> table file
+
+    def __enter__(self) -> "_Rewrite":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        shutil.rmtree(self._staging, ignore_errors=True)
+        for pin in self._pins.values():
+            shutil.rmtree(pin, ignore_errors=True)
+
+    def _pin(self, files: tuple) -> str:
+        pin = os.path.join(self._path, f".{self._kind}-src-{uuid.uuid4().hex}")
+        self._pins[files] = pin
+        os.makedirs(pin, exist_ok=True)
+        for f in files:
+            # Link from an earlier pin when there is one: the table's own
+            # copy may be gone by now.
+            held = self._held.get(f, f)
+            dst = os.path.join(pin, os.path.relpath(f, self._path))
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            for src, to in ((held, dst), (stats_path(held), stats_path(dst))):
+                if not os.path.exists(src):
+                    continue
+                try:
+                    os.link(src, to)
+                except OSError:
+                    shutil.copy2(src, to)
+            self._held.setdefault(f, dst)
+            self._origin[dst] = f
+        return pin
+
+    def read(self, files=None, schema: StructType | None = None, **options):
+        files = tuple(sorted(self.visible if files is None else files))
+        pin = self._pins.get(files) or self._pin(files)
+        reader = self._spark.read.format("arrowipc").options(**options)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.load(pin)
+
+    def origins(self, names) -> list[str]:
+        return [self._origin[n] for n in names]
+
+    def stage(self, df, into: str = "", **options) -> None:
+        """Write ``df`` into the staging directory, or its ``into``
+        subdirectory (e.g. ``seg=3``); empty options are left out."""
+        self._staged_schema = df.schema
+        writer = df.write.format("arrowipc").mode("append")
+        for key, value in options.items():
+            if value:
+                writer = writer.option(key, value)
+        writer.save(os.path.join(self._staging, into) if into
+                    else self._staging)
+
+    def staged_rows(self) -> int:
+        """Rows staged so far, from the parts' stats sidecars (metadata
+        only, no Spark job)."""
+        return sum(_part_row_count(p)
+                   for p in _walk_staged_parts(self._staging))
+
+    def input_rows(self, files) -> int:
+        """Rows in pinned input ``files``, from their stats sidecars."""
+        return sum(_part_row_count(self._held[f]) for f in files)
+
+    def commit(self, remove, adds_new_rows: bool = False) -> list[str]:
+        """Swap the staged parts in for ``remove``; returns the promoted
+        paths.  ``adds_new_rows`` is the manifest's dataChange hint:
+        False for pure rewrites, True when the staged parts also carry
+        new logical rows (a MERGE's inserts)."""
+        if self.head is None:
+            if (remove and self._staged_schema is not None
+                    and not any(_walk_staged_parts(self._staging))
+                    and set(_list_ipc_files(self._path, missing_ok=True))
+                    <= set(remove)):
+                self._stage_empty_part()
+            for old in remove:
+                for victim in (old, stats_path(old)):
+                    if os.path.exists(victim):
+                        os.remove(victim)
+        promoted: list[str] = []
+        for src in _walk_staged_parts(self._staging):
+            dst = os.path.join(self._path, os.path.relpath(src, self._staging))
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(src, dst)
+            if os.path.exists(stats_path(src)):
+                os.replace(stats_path(src), stats_path(dst))
+            promoted.append(dst)
+        if self.head is not None and (promoted or remove):
+            try:
+                self.version = _write_manifest(
+                    self._path, promoted, replace=False, remove=remove,
+                    adds_new_rows=adds_new_rows)
+            except ConcurrentWriteConflict:
+                for p in promoted:
+                    for victim in (p, stats_path(p)):
+                        if os.path.exists(victim):
+                            os.remove(victim)
+                raise
+        return promoted
+
+    def _stage_empty_part(self) -> None:
+        """The rewrite empties a plain directory (e.g. a DELETE matched
+        every row).  A directory with zero part files is unreadable (no
+        file to infer the schema from), so stage one empty part that
+        carries the schema — a table that exists but holds no rows.
+        Snapshotted tables don't need this: old parts stay on disk for
+        schema inference and the manifest defines the empty set."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        os.makedirs(self._staging, exist_ok=True)
+        marker = os.path.join(self._staging,
+                              f"part-empty-{uuid.uuid4().hex}.arrows")
+        with pa.OSFile(marker, "wb") as f:
+            with pa.ipc.new_file(f, to_arrow_schema(self._staged_schema)):
+                pass
 
 
 def compact_arrowipc(
@@ -69,166 +232,77 @@ def compact_arrowipc(
     is per-partition (the range key leads with the partition columns);
     zorder columns may not themselves be partition columns.
 
-    Returns ``{"files_before": n, "files_after": m, "rows": r}``.
-    The read is the normal distributed scan (batch-range splits), the
-    write the normal distributed writer; the directory swap happens only
-    after every new part file has committed.
+    Returns ``{"files_before": n, "files_after": m, "rows": r}``, plus
+    ``"version"`` on a snapshotted table.  The read is the normal
+    distributed scan (batch-range splits), the write the normal
+    distributed writer; the swap happens only after every new part file
+    has committed.
     """
-    register_arrowipc(spark)
-    # On a snapshotted table, compact the latest COMMITTED set (the
-    # manifest), never the raw listing: a directory listing can include an
-    # in-flight appender's renamed-but-uncommitted part, which must be
-    # neither rewritten (its own commit would later double its rows) nor
-    # deleted.
-    versions = _manifest_versions(path)
-    before = (_read_manifest(path, versions[-1]) if versions
-              else _list_ipc_files(path))
-
-    # Pin the input to the snapshot: hard-link (fall back to copy) exactly
-    # the `before` file set into a hidden source dir and scan THAT, so the
-    # rewrite and the deletion cover the same files even if
-    # a concurrent appender lands new parts mid-compaction (those survive
-    # untouched — they are neither rewritten nor removed).
-    snapshot = os.path.join(path, f".compact-src-{uuid.uuid4().hex}")
-    os.makedirs(snapshot, exist_ok=True)
-    for old in before:
-        for src in (old, stats_path(old)):
-            if not os.path.exists(src):
-                continue
-            # keep relative layout: partitioned (col=value) part files may
-            # share basenames across subdirectories
-            dst = os.path.join(snapshot, os.path.relpath(src, path))
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            try:
-                os.link(src, dst)
-            except OSError:
-                shutil.copy2(src, dst)
-
-    reader = spark.read.format("arrowipc")
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.load(snapshot)
-
-    # Keep the table's Hive partition layout through compaction (same
-    # rationale as the CoW rewrite): target_files bounds the shuffle
-    # width, the partitionBy write splits each task's rows back into
-    # their col=value directories, and keying the repartition by the
-    # partition columns keeps the output near one file per (task, combo)
-    # instead of target_files × combos.
-    part_cols = _partition_columns(path, before)
-    staging = os.path.join(path, f".compact-{uuid.uuid4().hex}")
-    if zorder:
-        from bossarrowstorageengine_spark.functions.zorder import (
-            morton16, norm10)
-
-        zcols = [c.strip() for c in zorder.split(",")]
-        if len(zcols) != 2:
-            raise ValueError("zorder requires exactly two columns")
+    zcols = [c.strip() for c in zorder.split(",")] if zorder else []
+    if zorder and len(zcols) != 2:
+        raise ValueError("zorder requires exactly two columns")
+    with _Rewrite(spark, path, "compact") as tx:
+        # Keep the table's Hive partition layout through compaction (same
+        # rationale as the CoW rewrite): target_files bounds the shuffle
+        # width, the partitionBy write splits each task's rows back into
+        # their col=value directories, and keying the repartition by the
+        # partition columns keeps the output near one file per (task,
+        # combo) instead of target_files × combos.
+        part_cols = _partition_columns(path, tx.visible)
         if any(c in part_cols for c in zcols):
             raise ValueError(
                 "zorder columns overlap the partition columns — a "
                 "partition column is constant per directory and cannot "
                 "be a curve dimension")
-        a, b = (F.col(c) for c in zcols)
-        # Bounds from a projection-narrowed scan (metadata-cheap columns
-        # only), broadcast back to the mappers like write_zorder_orders.
-        bounds = (spark.read.format("arrowipc")
-                  .option("columns", ",".join(zcols)).load(snapshot)
-                  .agg(F.min(a).alias("_z_alo"), F.max(a).alias("_z_ahi"),
-                       F.min(b).alias("_z_blo"), F.max(b).alias("_z_bhi")))
-        zcode = morton16(norm10(a, "_z_alo", "_z_ahi"),
-                         norm10(b, "_z_blo", "_z_bhi"))
-        # On a partitioned table, lead the range key with the partition
-        # columns: each task then holds contiguous (partition, z-range)
-        # slices, so the partitionBy write emits ~one file per slice
-        # (bounded by target_files + live combos) and every file is a
-        # per-partition curve rectangle — per-partition OPTIMIZE ZORDER.
-        range_keys = [*[F.col(c) for c in part_cols], F.col("_z")]
-        repartitioned = (
-            df.join(F.broadcast(bounds))
-            .withColumn("_z", zcode)
-            .repartitionByRange(max(1, target_files), *range_keys)
-            .sortWithinPartitions(*range_keys)
-            .drop("_z", "_z_alo", "_z_ahi", "_z_blo", "_z_bhi"))
-    elif part_cols:
-        repartitioned = df.repartition(
-            max(1, target_files), *[F.col(c) for c in part_cols])
-    else:
-        repartitioned = df.repartition(max(1, target_files))
-    writer = (
-        repartitioned
-        .write.format("arrowipc")
-        .option("compression", compression)
-        .option("ipcFormat", ipc_format)
-        .mode("append")
-    )
-    if part_cols:
-        writer = writer.option("partitionBy", ",".join(part_cols))
-    if dictionary:
-        writer = writer.option("dictionary", dictionary)
-    writer.save(staging)
-    # Row count for the report comes from the staged files' stats sidecars
-    # (written by the writer as it streams) — metadata only, so compaction
-    # runs ONE scan of the input, not a count scan plus a rewrite scan.
-    rows = _staged_rows(staging)
+        df = tx.read(schema=schema)
+        if zcols:
+            from bossarrowstorageengine_spark.functions.zorder import (
+                morton16, norm10)
 
-    # Swap.  On a snapshotted table (manifests present) the swap is LOGICAL:
-    # promote the new parts, then publish one manifest version whose visible
-    # set replaces the compacted inputs with their rewrite — readers flip
-    # atomically from old parts to new, concurrent appender commits survive
-    # (the removal set is applied inside the manifest CAS retry loop), and
-    # the old parts stay on disk so time travel to pre-compaction versions
-    # keeps working until `vacuum_arrowipc` reclaims them.  On a plain
-    # directory there is no manifest to flip, so the swap is physical:
-    # delete old parts, promote new.
-    snapshotted = bool(versions)
-    if not snapshotted:
-        for old in before:
-            os.remove(old)
-            sp = stats_path(old)
-            if os.path.exists(sp):
-                os.remove(sp)
-    promoted = 0
-    promoted_paths: list[str] = []
-    # Recursive promotion (sidecars move with their data file): a
-    # partition-preserving stage writes into col=value subdirectories.
-    for src, _ in _walk_staged_parts(staging):
-        dst = os.path.join(path, os.path.relpath(src, staging))
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.replace(src, dst)
-        sp = stats_path(src)
-        if os.path.exists(sp):
-            os.replace(sp, stats_path(dst))
-        promoted += 1
-        promoted_paths.append(dst)
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(snapshot, ignore_errors=True)
-    out = {"files_before": len(before), "files_after": promoted, "rows": rows}
-    if snapshotted:
-        try:
-            out["version"] = _write_manifest(
-                path, promoted_paths, replace=False, remove=before,
-                adds_new_rows=False)
-        except ConcurrentWriteConflict:
-            # Same orphan-cleanup rule as the CoW rewrite: an unpublished
-            # compaction output is invisible and must not linger.
-            for p in promoted_paths:
-                for victim in (p, stats_path(p)):
-                    try:
-                        os.remove(victim)
-                    except FileNotFoundError:
-                        pass
-            raise
+            a, b = (F.col(c) for c in zcols)
+            # Bounds from a projection-narrowed scan (metadata-cheap
+            # columns only), broadcast back to the mappers like
+            # write_zorder_orders.
+            bounds = (tx.read(columns=",".join(zcols))
+                      .agg(F.min(a).alias("_z_alo"), F.max(a).alias("_z_ahi"),
+                           F.min(b).alias("_z_blo"), F.max(b).alias("_z_bhi")))
+            zcode = morton16(norm10(a, "_z_alo", "_z_ahi"),
+                             norm10(b, "_z_blo", "_z_bhi"))
+            # On a partitioned table, lead the range key with the partition
+            # columns: each task then holds contiguous (partition, z-range)
+            # slices, so the partitionBy write emits ~one file per slice
+            # (bounded by target_files + live combos) and every file is a
+            # per-partition curve rectangle — per-partition OPTIMIZE ZORDER.
+            range_keys = [*[F.col(c) for c in part_cols], F.col("_z")]
+            repartitioned = (
+                df.join(F.broadcast(bounds))
+                .withColumn("_z", zcode)
+                .repartitionByRange(max(1, target_files), *range_keys)
+                .sortWithinPartitions(*range_keys)
+                .drop("_z", "_z_alo", "_z_ahi", "_z_blo", "_z_bhi"))
+        elif part_cols:
+            repartitioned = df.repartition(
+                max(1, target_files), *[F.col(c) for c in part_cols])
+        else:
+            repartitioned = df.repartition(max(1, target_files))
+        tx.stage(repartitioned, compression=compression,
+                 ipcFormat=ipc_format, partitionBy=",".join(part_cols),
+                 dictionary=dictionary)
+        # Row count for the report comes from the staged files' stats
+        # sidecars (written by the writer as it streams) — metadata only,
+        # so compaction runs ONE scan of the input, not a count scan plus
+        # a rewrite scan.
+        rows = tx.staged_rows()
+        promoted = tx.commit(remove=tx.visible)
+    out = {"files_before": len(tx.visible), "files_after": len(promoted),
+           "rows": rows}
+    if tx.version is not None:
+        out["version"] = tx.version
     return out
 
 
 #: Column name the copy-on-write scans use for part-file attribution.
 _FCOL = "_part_file"
-
-#: Largest affected-file set expressed as an In-literal filter; above this
-#: the allowlist goes to the reader via a file (``fileListPath``) so the
-#: Catalyst plan stays O(1) in the number of rewritten files.
-_INLIST_MAX = 32
 
 
 def _part_row_count(p: str) -> int:
@@ -259,19 +333,9 @@ def _part_row_count(p: str) -> int:
         return sum(b.num_rows for b in pa.ipc.open_stream(f))
 
 
-def _staged_rows(staging_dir: str) -> int:
-    """Total rows across a staging directory's part files (including
-    Hive-style ``col=value`` subdirectories a partition-preserving stage
-    writes) — stats sidecars where present (the normal case: our writer
-    always emits them; no Spark job), pyarrow reads otherwise so a
-    missing sidecar can never silently undercount."""
-    return sum(_part_row_count(p)
-               for p, _rows in _walk_staged_parts(staging_dir))
-
-
 def _walk_staged_parts(staging_dir: str):
-    """Yield ``(part_file_path, None)`` for every ``*.arrows`` under a
-    staging dir, depth-first in sorted order (deterministic promotion)."""
+    """Yield the path of every ``*.arrows`` under a staging dir,
+    depth-first in sorted order (deterministic promotion)."""
     if not os.path.isdir(staging_dir):
         return
     for dirpath, dirs, names in os.walk(staging_dir):
@@ -279,7 +343,7 @@ def _walk_staged_parts(staging_dir: str):
         for name in sorted(names):
             if name.startswith((".", "_")) or not name.endswith(".arrows"):
                 continue
-            yield os.path.join(dirpath, name), None
+            yield os.path.join(dirpath, name)
 
 
 def _partition_columns(root: str, files: list[str]) -> list[str]:
@@ -361,239 +425,121 @@ def _cow_rewrite(
 
     Scale shape: one distributed scan finds the affected file list (only
     file names + counts are collected, never rows); one distributed job
-    rewrites just those files; untouched files are not read again.  On a
-    snapshotted table the swap is one replace-manifest commit through the
-    ConditionalPut CAS (old parts retained for time travel until vacuum);
-    otherwise affected files are physically replaced.
+    rewrites just those files, read from a pin of only them, so the plan
+    stays O(1) in the affected-file count; untouched files are not read
+    again.  The swap is the ``_Rewrite`` commit.
 
     Returns ``{"rows_matched": n, "files_rewritten": k, "version": v?}``.
     """
-    register_arrowipc(spark)
-    versions = _manifest_versions(path)
-    snapshotted = bool(versions)
-    visible = (_read_manifest(path, versions[-1]) if snapshotted
-               else _list_ipc_files(path))
-
-    # Pin the input set (hard-link mirror), exactly like compaction: the
-    # scan, the rewrite, and the swap must all cover the same files even if
-    # appenders land new parts mid-operation.
-    pin = os.path.join(path, f".cow-src-{uuid.uuid4().hex}")
-    os.makedirs(pin, exist_ok=True)
-    pinned_to_orig: dict[str, str] = {}
-    for orig in visible:
-        for src in (orig, stats_path(orig)):
-            if not os.path.exists(src):
-                continue
-            dst = os.path.join(pin, os.path.relpath(src, path))
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            try:
-                os.link(src, dst)
-            except OSError:
-                shutil.copy2(src, dst)
-        pinned_to_orig[os.path.join(pin, os.path.relpath(orig, path))] = orig
-
-    full_read = spark.read.format("arrowipc").option("filenameColumn", _FCOL)
-    if schema is not None:
-        # Reader composition rule: selected columns, attribution last
-        # (a non-nullable string — the reader always populates it).
-        full_read = full_read.schema(StructType(
-            list(schema.fields)
-            + [StructField(_FCOL, StringType(), False)]))
-    df = full_read.load(pin)
-    if scan_columns:
-        # Derive the pruned read's schema from the full read instead of a
-        # second inference pass — each Python-datasource schema inference
-        # costs a plan-worker round trip (~0.015 s on 4 cores), and the
-        # composition rule is the reader's own
-        # (selected columns in option order, attribution column last).
-        pruned_schema = StructType(
-            [df.schema[c] for c in scan_columns] + [df.schema[_FCOL]])
-        scan_df = (spark.read.format("arrowipc")
-                   .option("filenameColumn", _FCOL)
-                   .option("columns", ",".join(scan_columns))
-                   .schema(pruned_schema).load(pin))
-    else:
-        scan_df = df
-    per_file = (affected_rows(scan_df).groupBy(_FCOL)
-                .agg(F.count(F.lit(1)).alias("n")).collect())
-    affected_pinned = [r[_FCOL] for r in per_file]
-    rows_matched = sum(r["n"] for r in per_file)
-    affected_orig = [pinned_to_orig[p] for p in affected_pinned]
-    extra = appends(df, scan_df) if appends is not None else None
-    if not per_file and extra is None:
-        shutil.rmtree(pin, ignore_errors=True)
-        return {"rows_matched": 0, "files_rewritten": 0, "rows_appended": 0}
-
-    staging = os.path.join(path, f".cow-{uuid.uuid4().hex}")
-
-    # Preserve the table's Hive partition layout through the rewrite: a
-    # flat rewrite would strand survivors at the table root, and every
-    # mutation would erode directory pruning a bit more — after enough
-    # CoW cycles a partition-filtered scan of a 100 TB table would read
-    # most of it.  Staging with the same partitionBy keeps every rewritten
-    # (and inserted) row under its col=value directory; an UPDATE that
-    # changes a partition value migrates the row to its new directory for
-    # free.  Correctness never depends on this (partition columns are also
-    # stored physically in the data), only pruning does.
-    part_cols = _partition_columns(path, visible)
-
-    def _stage(out_df, into=None):
-        writer = (out_df.write.format("arrowipc")
-                  .option("compression", compression)
-                  .option("ipcFormat", ipc_format))
-        if part_cols:
-            writer = writer.option("partitionBy", ",".join(part_cols))
-        writer.mode("append").save(into or staging)
-
-    def _repart(out_df, k: int):
-        # Flat tables: round-robin repartition(K) (see the rewrite note
-        # below).  Partitioned tables: key the shuffle by the partition
-        # columns so each output task holds whole value-combos — otherwise
-        # K round-robin tasks × P live combos would emit K·P small files.
-        if part_cols:
-            return out_df.repartition(k, *[F.col(c) for c in part_cols])
-        return out_df.repartition(k)
-
-    rewritten_schema = None
-    if affected_pinned:
-        if len(affected_pinned) <= _INLIST_MAX:
-            # Small file set: an In-literal on the attribution column, which
-            # the reader's pushFilters turns into file-level task pruning.
-            aff_df = df.filter(F.col(_FCOL).isin(affected_pinned))
+    with _Rewrite(spark, path, "cow") as tx:
+        if schema is not None:
+            # Reader composition rule: selected columns, attribution last
+            # (a non-nullable string — the reader always populates it).
+            schema = StructType(list(schema.fields)
+                                + [StructField(_FCOL, StringType(), False)])
+        df = tx.read(schema=schema, filenameColumn=_FCOL)
+        if scan_columns:
+            # Derive the pruned read's schema from the full read instead of
+            # a second inference pass — each Python-datasource schema
+            # inference costs a plan-worker round trip (~0.015 s on 4
+            # cores), and the composition rule is the reader's own
+            # (selected columns in option order, attribution column last).
+            pruned_schema = StructType(
+                [df.schema[c] for c in scan_columns] + [df.schema[_FCOL]])
+            scan_df = tx.read(schema=pruned_schema, filenameColumn=_FCOL,
+                              columns=",".join(scan_columns))
         else:
-            # Many affected files: a giant In literal bloats the Catalyst
-            # plan (one expression node per file) and slows optimization.
-            # Hand the reader the allowlist as a FILE (one path string in
-            # the plan, O(1) expression size); planning prunes to exactly
-            # those files, same as the In pushdown.
-            list_file = os.path.join(pin, ".affected-files.json")
-            import json
+            scan_df = df
+        per_file = (affected_rows(scan_df).groupBy(_FCOL)
+                    .agg(F.count(F.lit(1)).alias("n")).collect())
+        affected = tx.origins(r[_FCOL] for r in per_file)
+        rows_matched = sum(r["n"] for r in per_file)
+        extra = appends(df, scan_df) if appends is not None else None
+        if not affected and extra is None:
+            return {"rows_matched": 0, "files_rewritten": 0,
+                    "rows_appended": 0}
 
-            with open(list_file, "w") as lf:
-                json.dump(affected_pinned, lf)
-            aff_df = (spark.read.format("arrowipc")
-                      .option("filenameColumn", _FCOL)
-                      .option("fileListPath", list_file)
-                      .schema(df.schema).load(pin))
-        rewritten = rewrite(aff_df)
-        rewritten_schema = rewritten.schema
-        # Preserve file granularity: rewriting K affected parts must yield
-        # ~K parts, not one per shuffle partition — at cluster settings a
-        # 4-file rewrite would otherwise emit hundreds of tiny files
-        # (slower write, slower every later scan, bloated manifests).
-        # repartition(K), not coalesce(K): coalesce propagates upstream
-        # without a shuffle barrier, capping the MERGE/UPDATE join itself
-        # at K tasks — a one-file rewrite of a huge table would run its
-        # join single-task.  The repartition shuffles only the rewritten
-        # rows; join parallelism stays independent of output file count.
-        out_df = _repart(rewritten, max(1, len(affected_pinned)))
-    else:
+        # Preserve the table's Hive partition layout through the rewrite: a
+        # flat rewrite would strand survivors at the table root, and every
+        # mutation would erode directory pruning a bit more — after enough
+        # CoW cycles a partition-filtered scan of a 100 TB table would read
+        # most of it.  Staging with the same partitionBy keeps every
+        # rewritten (and inserted) row under its col=value directory; an
+        # UPDATE that changes a partition value migrates the row to its new
+        # directory for free.  Correctness never depends on this (partition
+        # columns are also stored physically in the data), only pruning
+        # does.
+        part_cols = _partition_columns(path, tx.visible)
+
+        def _repart(out_df):
+            # Preserve file granularity: rewriting K affected parts must
+            # yield ~K parts, not one per shuffle partition — at cluster
+            # settings a 4-file rewrite would otherwise emit hundreds of
+            # tiny files (slower write, slower every later scan, bloated
+            # manifests).  repartition(K), not coalesce(K): coalesce
+            # propagates upstream without a shuffle barrier, capping the
+            # MERGE/UPDATE join itself at K tasks — a one-file rewrite of a
+            # huge table would run its join single-task.  The repartition
+            # shuffles only the rewritten rows; join parallelism stays
+            # independent of output file count.  Partitioned tables key the
+            # shuffle by the partition columns so each output task holds
+            # whole value-combos — otherwise K round-robin tasks × P live
+            # combos would emit K·P small files.
+            k = max(1, len(affected))
+            if part_cols:
+                return out_df.repartition(k, *[F.col(c) for c in part_cols])
+            return out_df.repartition(k)
+
         out_df = None
-    if extra is not None:
-        # Inserts ride the SAME staged write as the rewrites (union of
-        # two explicit repartitions — partition sets concatenate, so file
-        # granularity is unchanged): one Spark job instead of two, each of
-        # which pays the Python-datasource fixed floor (~0.13 s for a
-        # 25-row append on 4 cores).
-        # repartition (not coalesce — see above) bounds the tiny-file
-        # fan-out a join-produced insert set would otherwise inherit from
-        # spark.sql.shuffle.partitions; empty partitions produce no files.
-        ins = _repart(extra, max(1, len(affected_pinned) or 1))
-        out_df = ins if out_df is None else out_df.unionByName(ins)
-    if out_df is not None:
-        _stage(out_df)
-    n_extra = 0
-    if extra is not None:
-        # The staged rows = rewritten rows + inserted rows, and a rewrite
-        # passed alongside ``appends`` preserves row multiplicity (MERGE
-        # semantics: every affected-file row is kept or replaced, never
-        # dropped or duplicated) — so the insert count is the staged
-        # total minus the affected files' row totals, both metadata-only
-        # reads (stats sidecars; bounded by file count, not rows).
-        # Asymmetry (by design): only the NEGATIVE violation — a rewrite
-        # that DROPPED rows — is detectable, because the staged total
-        # minus the affected totals then under-counts and goes negative.
-        # A rewrite that DUPLICATED rows alongside appends is absorbed
-        # into n_extra and silently inflates rows_appended; there is no
-        # cheap upper bound for the insert set (it is join-produced, so
-        # its size is unknown until staged).  Callers passing a rewrite
-        # with appends own the full multiplicity contract.
-        n_extra = _staged_rows(staging) - sum(
-            _part_row_count(p) for p in affected_pinned)
-        if n_extra < 0:
-            raise RuntimeError(
-                "cow_rewrite: staged rows fewer than the affected files' "
-                f"totals ({n_extra}) — the rewrite passed alongside "
-                "appends dropped rows, violating the multiplicity "
-                "contract this accounting depends on")
-
-    if not snapshotted:
-        for old in affected_orig:
-            os.remove(old)
-            sp = stats_path(old)
-            if os.path.exists(sp):
-                os.remove(sp)
-    promoted: list[str] = []
-    for stg in (staging,):
-        if not os.path.isdir(stg):
-            continue
-        # Recursive promotion: a partition-preserving stage writes into
-        # col=value subdirectories; each part file keeps its relative path
-        # under the table root.
-        for src, _ in _walk_staged_parts(stg):
-            dst = os.path.join(path, os.path.relpath(src, stg))
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(src, dst)
-            sp = stats_path(src)
-            if os.path.exists(sp):
-                os.replace(sp, stats_path(dst))
-            promoted.append(dst)
-        shutil.rmtree(stg, ignore_errors=True)
-    shutil.rmtree(pin, ignore_errors=True)
-    if (not snapshotted and affected_orig and not promoted
-            and not _list_ipc_files(path, missing_ok=True)):
-        # The operation emptied the table (e.g. DELETE matched every row of
-        # every file).  A plain directory with zero part files is unreadable
-        # (no file to infer schema from), so leave one empty schema-bearing
-        # part behind — the arrowipc equivalent of a table that exists but
-        # holds no rows.  Snapshotted tables don't need this: old parts
-        # remain on disk for schema inference and the manifest defines the
-        # (empty) visible set.
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        out_schema = rewritten_schema if rewritten_schema is not None else (
-            StructType([f for f in df.schema.fields if f.name != _FCOL]))
-        arrow_schema = to_arrow_schema(out_schema)
-        marker = os.path.join(path, f"part-empty-{uuid.uuid4().hex}.arrows")
-        tmp = marker + ".tmp"
-        with pa.OSFile(tmp, "wb") as f:
-            with pa.ipc.new_file(f, arrow_schema):
-                pass
-        os.replace(tmp, marker)
-        promoted.append(marker)
+        if affected:
+            out_df = _repart(rewrite(
+                tx.read(affected, schema=df.schema, filenameColumn=_FCOL)))
+        if extra is not None:
+            # Inserts ride the SAME staged write as the rewrites (union of
+            # two explicit repartitions — partition sets concatenate, so
+            # file granularity is unchanged): one Spark job instead of two,
+            # each of which pays the Python-datasource fixed floor.
+            # repartition (not coalesce — see above) bounds the tiny-file
+            # fan-out a join-produced insert set would otherwise inherit
+            # from spark.sql.shuffle.partitions; empty partitions produce
+            # no files.
+            ins = _repart(extra)
+            out_df = ins if out_df is None else out_df.unionByName(ins)
+        tx.stage(out_df, compression=compression, ipcFormat=ipc_format,
+                 partitionBy=",".join(part_cols))
+        n_extra = 0
+        if extra is not None:
+            # The staged rows = rewritten rows + inserted rows, and a
+            # rewrite passed alongside ``appends`` preserves row
+            # multiplicity (MERGE semantics: every affected-file row is
+            # kept or replaced, never dropped or duplicated) — so the
+            # insert count is the staged total minus the affected files'
+            # row totals, both metadata-only reads (stats sidecars; bounded
+            # by file count, not rows).
+            # Asymmetry (by design): only the NEGATIVE violation — a
+            # rewrite that DROPPED rows — is detectable, because the staged
+            # total minus the affected totals then under-counts and goes
+            # negative.  A rewrite that DUPLICATED rows alongside appends
+            # is absorbed into n_extra and silently inflates rows_appended;
+            # there is no cheap upper bound for the insert set (it is
+            # join-produced, so its size is unknown until staged).  Callers
+            # passing a rewrite with appends own the full multiplicity
+            # contract.
+            n_extra = tx.staged_rows() - tx.input_rows(affected)
+            if n_extra < 0:
+                raise RuntimeError(
+                    "cow_rewrite: staged rows fewer than the affected "
+                    f"files' totals ({n_extra}) — the rewrite passed "
+                    "alongside appends dropped rows, violating the "
+                    "multiplicity contract this accounting depends on")
+        # dataChange hint for skipChangeCommits consumers: DELETE / UPDATE
+        # rewrites carry no new logical rows; a MERGE whose not-matched arm
+        # inserted rows does (n_extra > 0).
+        promoted = tx.commit(remove=affected, adds_new_rows=n_extra > 0)
     out = {"rows_matched": rows_matched, "files_rewritten": len(promoted),
            "rows_appended": n_extra}
-    if snapshotted and (promoted or affected_orig):
-        try:
-            # dataChange hint for skipChangeCommits consumers: DELETE /
-            # UPDATE rewrites carry no new logical rows; a MERGE whose
-            # not-matched arm inserted rows does (n_extra > 0).
-            out["version"] = _write_manifest(
-                path, promoted, replace=False, remove=affected_orig,
-                adds_new_rows=n_extra > 0)
-        except ConcurrentWriteConflict:
-            # Our commit lost a write-write race: the promoted files were
-            # never published, so no reader can reference them — remove
-            # them rather than leave permanent orphans (vacuum never
-            # touches unmanifested files, by design).  The caller re-runs
-            # the mutation against the new snapshot.
-            for p in promoted:
-                for victim in (p, stats_path(p)):
-                    try:
-                        os.remove(victim)
-                    except FileNotFoundError:
-                        pass
-            raise
+    if tx.version is not None:
+        out["version"] = tx.version
     return out
 
 

@@ -295,20 +295,7 @@ def compact_index(spark: SparkSession, idx_dir: str, thru: int,
     corpus-sized fold (each output file a contiguous ``vec_id`` range,
     so the merged base keeps stats-prunable point lookups).  Returns
     ``{"files_before", "files_after", "rows"}``."""
-    import shutil
-    import uuid
-
-    from bossarrowstorageengine_spark.sources.arrowipc import (
-        ConcurrentWriteConflict,
-        _manifest_versions,
-        _read_manifest,
-        _write_manifest,
-        stats_path,
-    )
-    from bossarrowstorageengine_spark.sources.maintenance import (
-        _staged_rows,
-        _walk_staged_parts,
-    )
+    from bossarrowstorageengine_spark.sources.maintenance import _Rewrite
 
     hw = _seg_high_water(idx_dir)
     if thru > hw:
@@ -320,10 +307,6 @@ def compact_index(spark: SparkSession, idx_dir: str, thru: int,
             f"compact_index thru={thru} exceeds the absorbed high-water "
             f"segment {hw} — compaction may only fold segments that "
             "exist")
-    versions = _manifest_versions(idx_dir)
-    if not versions:
-        raise ValueError(f"index table {idx_dir!r} has no manifest log")
-    before = _read_manifest(idx_dir, versions[-1])
 
     def seg_of(f: str) -> int | None:
         rel = os.path.relpath(os.path.dirname(f), idx_dir)
@@ -335,30 +318,17 @@ def compact_index(spark: SparkSession, idx_dir: str, thru: int,
                     return None
         return None
 
-    in_scope = sorted(f for f in before
-                      if (s := seg_of(f)) is not None and s <= thru)
-    if not in_scope:
-        return {"files_before": len(before), "files_after": len(before),
-                "rows": 0}
-    snapshot = os.path.join(idx_dir, f".idxcompact-src-{uuid.uuid4().hex}")
-    staging = os.path.join(idx_dir, f".idxcompact-{uuid.uuid4().hex}")
-    os.makedirs(snapshot, exist_ok=True)
-    try:
-        for old in in_scope:
-            for s in (old, stats_path(old)):
-                if not os.path.exists(s):
-                    continue
-                dst = os.path.join(snapshot, os.path.relpath(s, idx_dir))
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                try:
-                    os.link(s, dst)
-                except OSError:
-                    shutil.copy2(s, dst)
+    with _Rewrite(spark, idx_dir, "idxcompact") as tx:
+        before = tx.visible
+        in_scope = sorted(f for f in before
+                          if (s := seg_of(f)) is not None and s <= thru)
+        if not in_scope:
+            return {"files_before": len(before), "files_after": len(before),
+                    "rows": 0}
         schema, pay_cols = _index_schema(idx_dir)
-        scoped = (spark.read.format("arrowipc").schema(schema)
-                  .load(snapshot))
         w = Window.partitionBy("vec_id").orderBy(F.col("seg").desc())
-        merged = (scoped.withColumn("_rn", F.row_number().over(w))
+        merged = (tx.read(in_scope, schema=schema)
+                  .withColumn("_rn", F.row_number().over(w))
                   .filter((F.col("_rn") == 1) & ~F.col("tombstone"))
                   .select("vec_id", "bucket", *pay_cols, "tombstone",
                           F.lit(thru).cast("long").alias("seg")))
@@ -368,44 +338,16 @@ def compact_index(spark: SparkSession, idx_dir: str, thru: int,
             # the SAME storage-bucket function so each task holds whole
             # buckets (one merged file per bucket dir, not
             # target_files × buckets fragments).
-            out = (merged.repartition(max(1, target_files),
-                                      F.pmod("vec_id", F.lit(layout)))
-                   .sortWithinPartitions("vec_id"))
-            writer = (out.write.format("arrowipc")
-                      .option("compression", "lz4")
-                      .option("bucketBy", "vec_id")
-                      .option("buckets", str(layout)))
+            out = merged.repartition(max(1, target_files),
+                                     F.pmod("vec_id", F.lit(layout)))
+            bucketing = {"bucketBy": "vec_id", "buckets": str(layout)}
         else:
-            out = (merged.repartitionByRange(max(1, target_files),
-                                             "vec_id")
-                   .sortWithinPartitions("vec_id"))
-            writer = (out.write.format("arrowipc")
-                      .option("compression", "lz4"))
-        writer.mode("append").save(os.path.join(staging, f"seg={thru}"))
-        rows = _staged_rows(staging)
-        promoted: list[str] = []
-        for s, _ in _walk_staged_parts(staging):
-            dst = os.path.join(idx_dir, os.path.relpath(s, staging))
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(s, dst)
-            sp = stats_path(s)
-            if os.path.exists(sp):
-                os.replace(sp, stats_path(dst))
-            promoted.append(dst)
-        try:
-            _write_manifest(idx_dir, promoted, replace=False,
-                            remove=in_scope, adds_new_rows=False)
-        except ConcurrentWriteConflict:
-            for p in promoted:
-                for victim in (p, stats_path(p)):
-                    try:
-                        os.remove(victim)
-                    except FileNotFoundError:
-                        pass
-            raise
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(snapshot, ignore_errors=True)
+            out = merged.repartitionByRange(max(1, target_files), "vec_id")
+            bucketing = {}
+        tx.stage(out.sortWithinPartitions("vec_id"), into=f"seg={thru}",
+                 compression="lz4", **bucketing)
+        rows = tx.staged_rows()
+        promoted = tx.commit(remove=in_scope)
     return {"files_before": len(before),
             "files_after": len(before) - len(in_scope) + len(promoted),
             "rows": rows}

@@ -1387,50 +1387,13 @@ def test_in_filter_prunes_files_by_stats(spark):
     assert df.filter(F.col("n_nationkey").isin([0, 1])).count() == 2
 
 
-def test_file_list_path_prunes_planning(spark):
-    """fileListPath: a JSON allowlist FILE restricts planning to exactly
-    the named part files — the O(1)-plan-size alternative the CoW path
-    switches to when the affected set outgrows an In literal."""
-    import json as _json
-
-    from bossarrowstorageengine_spark.sources.arrowipc import (
-        ArrowIPCReader,
-        _list_ipc_files,
-    )
-
-    path = _tmpdir()
-    d = load_table(spark, SF, "nation").select("n_nationkey", "n_name")
-    d.repartition(4).write.format("arrowipc").mode("append").save(path)
-    files = sorted(_list_ipc_files(path))
-    assert len(files) == 4
-
-    lst = os.path.join(path, ".allow.json")
-    with open(lst, "w") as f:
-        _json.dump(files[:2], f)
-    schema = spark.read.format("arrowipc").load(path).schema
-    r = ArrowIPCReader(schema, {"path": path, "filelistpath": lst})
-    assert _planned_files(r) == files[:2]
-
-    # End-to-end: the allowlisted read returns exactly those files' rows.
-    df = (spark.read.format("arrowipc")
-          .option("fileListPath", lst)
-          .option("filenameColumn", "_f").load(path))
-    rows = df.collect()
-    assert {r._f for r in rows} == set(files[:2])
-    per_file = (spark.read.format("arrowipc")
-                .option("filenameColumn", "_f").load(path)
-                .filter(F.col("_f").isin(files[:2])).count())
-    assert len(rows) == per_file
-
-
-def test_many_file_mutation_plan_has_no_giant_in_literal(spark, monkeypatch):
-    """A mutation whose affected-file set outgrows _INLIST_MAX must route
-    the rewrite scan through fileListPath: the Catalyst plan of the rewrite
-    input carries NO per-file In literal, and the mutation still produces
-    exact results."""
+def test_many_file_mutation_plan_has_no_giant_in_literal(spark):
+    """A mutation that affects many files reads its rewrite input from a
+    pin of only those files: the Catalyst plan of the rewrite input
+    carries NO per-file In literal, and the mutation still produces exact
+    results."""
     from bossarrowstorageengine_spark.sources import maintenance as m
 
-    monkeypatch.setattr(m, "_INLIST_MAX", 4)
     path = _tmpdir()
     d = load_table(spark, SF, "orders").select("o_orderkey", "o_totalprice")
     d.repartition(12).write.format("arrowipc").mode("append").save(path)
@@ -1448,8 +1411,7 @@ def test_many_file_mutation_plan_has_no_giant_in_literal(spark, monkeypatch):
     )
     exp_del = d.filter("o_orderkey % 2 = 0").count()
     assert res["rows_matched"] == exp_del
-    # 12 affected files > patched threshold → allowlist path, no In literal
-    # enumerating part files in the plan.
+    # 12 affected files, and no In literal enumerating them in the plan.
     assert "plan" in captured
     assert captured["plan"].count(".arrows") == 0, \
         "rewrite plan must not enumerate part files as literals"
@@ -1766,37 +1728,6 @@ def test_manifest_commit_rejects_conflicting_remove(spark):
     shutil.rmtree(out, ignore_errors=True)
 
 
-def test_losing_cow_mutation_cleans_up_orphans(spark, monkeypatch):
-    """A CoW mutation that loses a write-write race must raise
-    ConcurrentWriteConflict AND remove its promoted-but-never-published
-    part files — vacuum never touches unmanifested files, so anything
-    left behind would be a permanent orphan."""
-    import pytest as _pytest
-
-    from bossarrowstorageengine_spark.sources import maintenance
-    from bossarrowstorageengine_spark.sources.arrowipc import (
-        ConcurrentWriteConflict, _write_manifest)
-
-    out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
-    spark.range(20).repartition(2).write.format("arrowipc") \
-        .option("snapshots", "true").mode("append").save(out)
-    a, b = sorted(glob.glob(os.path.join(out, "*.arrows")))
-
-    # A concurrent mutation rewrites part A, publishing version 2.
-    rewrite1 = os.path.join(out, "part-rewrite1.arrows")
-    shutil.copy2(a, rewrite1)
-    _write_manifest(out, [rewrite1], replace=False, remove=[a])
-
-    # Force OUR delete to pin the stale version 1 (as if it had read the
-    # table just before the concurrent commit landed).
-    monkeypatch.setattr(maintenance, "_manifest_versions", lambda p: [1])
-    before_files = set(glob.glob(os.path.join(out, "*.arrows")))
-    with _pytest.raises(ConcurrentWriteConflict):
-        maintenance.delete_arrowipc(spark, out, "id >= 0")
-    after_files = set(glob.glob(os.path.join(out, "*.arrows")))
-    assert after_files == before_files, "losing mutation left orphan parts"
-
-
 def test_cow_delete_on_two_level_partitioned_table(spark):
     """Partition-chain inference and layout preservation must hold for
     multi-level Hive layouts (a=.../b=.../part-*.arrows)."""
@@ -2037,32 +1968,104 @@ def test_zorder_compaction_on_partitioned_table(spark):
     shutil.rmtree(out, ignore_errors=True)
 
 
-def test_losing_compaction_cleans_up_orphans(spark, monkeypatch):
-    """A compaction that loses its commit race (e.g. a concurrent DELETE
-    rewrote one of its inputs) must raise ConcurrentWriteConflict and
-    remove its promoted-but-unpublished output files."""
+def _hidden_dirs(root: str) -> list[str]:
+    """Hidden directories anywhere under a table: a rewrite's pin
+    (``.<kind>-src-*``) and staging (``.<kind>-*``) directories."""
+    return sorted(os.path.join(d, n) for d, dirs, _ in os.walk(root)
+                  for n in dirs if n.startswith("."))
+
+
+def _part_files(root: str) -> set[str]:
+    return set(glob.glob(os.path.join(root, "**", "*.arrows"),
+                         recursive=True))
+
+
+@pytest.mark.parametrize("op", ["delete", "compact", "feed", "index"])
+def test_losing_rewrite_cleans_up_orphans(spark, monkeypatch, op):
+    """A rewrite whose commit loses a write-write race (a concurrent
+    mutation rewrote one of its inputs) must raise ConcurrentWriteConflict
+    AND remove its promoted-but-never-published part files — vacuum never
+    touches unmanifested files, so anything left behind would be a
+    permanent orphan — and its hidden pin and staging directories."""
     import pytest as _pytest
 
     from bossarrowstorageengine_spark.sources import maintenance
     from bossarrowstorageengine_spark.sources.arrowipc import (
         ConcurrentWriteConflict, _write_manifest)
+    from bossarrowstorageengine_spark.sources.feed_maintain import (
+        compact_feed_thru)
+    from bossarrowstorageengine_spark.streaming.ann_index import (
+        compact_index, seed_index)
+
+    out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
+    rows = spark.range(20)
+    if op == "index":
+        seed_index(out, rows.select(
+            F.col("id").alias("vec_id"), (F.col("id") % 4).alias("bucket"))
+            .repartition(2))
+    elif op == "feed":
+        (rows.withColumn("commit_seq", F.col("id") % 2 + 1).repartition(1)
+         .write.format("arrowipc").option("partitionBy", "commit_seq")
+         .option("snapshots", "true").mode("append").save(out))
+    else:
+        rows.repartition(2).write.format("arrowipc") \
+            .option("snapshots", "true").mode("append").save(out)
+    a = sorted(_part_files(out))[0]
+
+    # A concurrent mutation rewrites part A, publishing version 2.
+    rewrite1 = os.path.join(os.path.dirname(a), "part-rewrite1.arrows")
+    shutil.copy2(a, rewrite1)
+    _write_manifest(out, [rewrite1], replace=False, remove=[a])
+
+    # Force OUR rewrite to pin the stale version 1 (as if it had read the
+    # table just before the concurrent commit landed).
+    monkeypatch.setattr(maintenance, "_manifest_versions", lambda p: [1])
+    run = {
+        "delete": lambda: maintenance.delete_arrowipc(spark, out, "id >= 0"),
+        "compact": lambda: maintenance.compact_arrowipc(
+            spark, out, target_files=1),
+        "feed": lambda: compact_feed_thru(spark, out, thru=2),
+        "index": lambda: compact_index(spark, out, thru=0),
+    }[op]
+    before_files = _part_files(out)
+    with _pytest.raises(ConcurrentWriteConflict):
+        run()
+    assert _part_files(out) == before_files, "losing rewrite left orphans"
+    assert _hidden_dirs(out) == []
+    shutil.rmtree(out, ignore_errors=True)
+
+
+@pytest.mark.parametrize("op", ["compact_zorder", "delete", "update"])
+def test_failed_rewrite_leaves_no_pin_or_staging(spark, op):
+    """A rewrite that fails before its commit — a bad argument, or an
+    expression that fails analysis after the inputs are pinned — leaves
+    no hidden pin or staging directory behind (their hard links would
+    keep vacuumed bytes on disk), and the table reads back unchanged."""
+    from pyspark.errors import AnalysisException
+
+    from bossarrowstorageengine_spark.sources.maintenance import (
+        compact_arrowipc, delete_arrowipc, update_arrowipc)
 
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     spark.range(20).repartition(2).write.format("arrowipc") \
         .option("snapshots", "true").mode("append").save(out)
-    a, b = sorted(glob.glob(os.path.join(out, "*.arrows")))
-
-    # A concurrent mutation rewrites part A (version 2)...
-    rewrite1 = os.path.join(out, "part-rewrite1.arrows")
-    shutil.copy2(a, rewrite1)
-    _write_manifest(out, [rewrite1], replace=False, remove=[a])
-    # ...while OUR compaction pinned stale version 1.
-    monkeypatch.setattr(maintenance, "_manifest_versions", lambda p: [1])
-    before_files = set(glob.glob(os.path.join(out, "*.arrows")))
-    with _pytest.raises(ConcurrentWriteConflict):
-        maintenance.compact_arrowipc(spark, out, target_files=1)
-    after_files = set(glob.glob(os.path.join(out, "*.arrows")))
-    assert after_files == before_files, "losing compaction left orphans"
+    run, error = {
+        "compact_zorder": (lambda: compact_arrowipc(spark, out, zorder="id"),
+                           ValueError),
+        "delete": (lambda: delete_arrowipc(spark, out, "nosuchcol = 1"),
+                   AnalysisException),
+        # The match scan succeeds and pins the affected files; the
+        # rewrite then fails analysis.
+        "update": (lambda: update_arrowipc(
+            spark, out, "id < 3", {"id": "nosuchcol + 1"},
+            predicate_columns=["id"]), AnalysisException),
+    }[op]
+    with pytest.raises(error):
+        run()
+    assert _hidden_dirs(out) == []
+    back = spark.read.format("arrowipc").option("snapshots", "true").load(out)
+    assert sorted(r.id for r in back.collect()) == list(range(20))
+    shutil.rmtree(out, ignore_errors=True)
 
 
 def test_partition_chain_inference_edges():
