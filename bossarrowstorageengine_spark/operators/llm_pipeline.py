@@ -17,6 +17,8 @@ Scale design (100 TB of documents):
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -25,23 +27,7 @@ from bossarrowstorageengine_spark.functions import text as TX
 from bossarrowstorageengine_spark.functions import vector as V
 from bossarrowstorageengine_spark.operators.registry import query
 from bossarrowstorageengine_spark.plans.hints import fan_out
-
-
-def _session_thread(spark: SparkSession, fn):
-    """Wrap ``fn`` for a driver-side worker thread (the concurrent-jobs
-    pattern, guide §2.6): a fresh Python thread talks to a FRESH JVM
-    thread whose active-session thread-local is unset, so creating a
-    reader/writer for a session-registered Python data source (our
-    ``arrowipc``) inside the thread fails lookup with
-    ``ClassNotFoundException: arrowipc.DefaultSource``.  Binding the
-    active session once per thread (py4j pins each Python thread to one
-    JVM thread) restores the main-thread behavior; job submission and
-    results are otherwise unchanged."""
-    def run(*a, **kw):
-        spark._jvm.org.apache.spark.sql.SparkSession.setActiveSession(
-            spark._jsparkSession)
-        return fn(*a, **kw)
-    return run
+from bossarrowstorageengine_spark.session import run_concurrently
 
 
 # ---------------------------------------------------------------------------
@@ -3039,8 +3025,7 @@ def _ann_recall_report_oracle() -> str:
 
 @query("q_ann_recall_report", oracle=_ann_recall_report_oracle())
 def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN RECALL-vs-COST REPORT over all SIX index families (SURVEY §7
-    round-12 runway item 2, completed by VERDICT r11 item 3): for the
+    """ANN RECALL-vs-COST REPORT over all SIX index families: for the
     fixed probe set, one row per (method, probe) with the method's
     candidate-scan count (the cost proxy — what an index actually buys
     is scanning fewer candidates) and its recall@3 hit count against the
@@ -3072,24 +3057,22 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     each is tiny (probe-grained) but carries a training lineage that
     would otherwise replay once for the count and once for the top-3.
 
-    r16 cost surgery (VERDICT r15 item 3): the LSH-bucketed corpus and
-    the trained IVF centroids are materialized once (the centroids'
-    lazy Lloyd lineage replayed its full-corpus training passes twice
-    inside candidate generation), and the four independent family
-    preparations — ground truth, IVF, PQ, IVF-PQ — run as CONCURRENT
-    Spark jobs from driver threads: each is a separate training chain
+    The LSH-bucketed corpus and the trained IVF centroids are
+    materialized once (the centroids' lazy Lloyd lineage replayed its
+    full-corpus training passes twice inside candidate generation), and
+    the four independent family preparations — ground truth, IVF, PQ,
+    IVF-PQ — run as CONCURRENT Spark jobs from driver threads
+    (``run_concurrently``): each is a separate training chain
     on the same immutable inputs, so their jobs interleave on idle
     executor slots and the wall clock is the slowest family, not the
     sum.  Results are bit-identical — only materialization order
     changes.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     e = load_table(spark, sf_dir, "embeddings")
-    # Materialize the LSH-bucketed corpus ONCE (r16 cost surgery):
-    # five consumers (probe set, probe buckets, lsh/multiprobe
-    # candidate counts and top-3s) otherwise re-project the 8
-    # hyperplanes over a fresh parquet scan each.
+    # Materialize the LSH-bucketed corpus ONCE: five consumers (probe
+    # set, probe buckets, lsh/multiprobe candidate counts and top-3s)
+    # otherwise re-project the 8 hyperplanes over a fresh parquet scan
+    # each.
     bucketed = e.withColumn("bucket", _lsh_bucket_col(8)).localCheckpoint()
     probes = _ann_probe_set(bucketed)
     probe_buckets = _ann_probe_buckets(probes, 8)
@@ -3106,7 +3089,7 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute_cands = (e.crossJoin(F.broadcast(probes.drop("bucket")))
                    .filter(not_self))
 
-    # ---- family preparations, one thread each (r16 cost surgery) ----
+    # ---- family preparations, one thread each ----
 
     def _truth_branch() -> DataFrame:
         # ground truth = brute top-3; checkpointed: every hit-join
@@ -3158,15 +3141,8 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inputs — submit them as concurrent Spark jobs so the wall clock
     # is the slowest family, not the sum (results are bit-identical;
     # only materialization order changes).
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_truth = pool.submit(_truth_branch)
-        f_ivf = pool.submit(_ivf_branch)
-        f_pq = pool.submit(_pq_branch)
-        f_iq = pool.submit(_ivfpq_branch)
-        truth = f_truth.result()
-        ivf_cands = f_ivf.result()
-        pq_adc = f_pq.result()
-        iv2, probes2, iq_adc = f_iq.result()
+    truth, ivf_cands, pq_adc, (iv2, probes2, iq_adc) = run_concurrently(
+        spark, _truth_branch, _ivf_branch, _pq_branch, _ivfpq_branch)
 
     ivf_top = _ivf_topk(ivf_cands).select("probe_id", "vec_id")
     wpq = Window.partitionBy("probe_id").orderBy("approx_d2", "vec_id")
@@ -3292,13 +3268,21 @@ def _ann_mutation_feed(spark: SparkSession, sf_dir: str,
 
     src = _ann_mutated_src(spark, sf_dir, base)
     feed = os.path.join(base, "feed")
+    _ann_bucket_feed(spark, src, feed)
+    return src, feed
+
+
+def _ann_bucket_feed(spark: SparkSession, src: str, feed: str) -> None:
+    """Write the mutated corpus's two bucket-grain feed commits (the
+    diffs v1→v2 and v2→head) at ``feed`` in ONE write job: a union with
+    per-diff commit_seq literals lands in the same partition directories
+    as two appends."""
     b1, b2, b3 = (_ann_bucketed(_ann_snap(spark, src, v))
                   for v in ("1", "2", None))
     (_ann_idx_changes(b1, b2, 1).unionByName(_ann_idx_changes(b2, b3, 2))
      .write.format("arrowipc").option("partitionBy", "commit_seq")
      .option("snapshots", "true").option("compression", "lz4")
      .mode("append").save(feed))
-    return src, feed
 
 
 @query(
@@ -3352,6 +3336,7 @@ def q_ann_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bossarrowstorageengine_spark.operators.scans import _scratch
     from bossarrowstorageengine_spark.sources import register_arrowipc
+    from bossarrowstorageengine_spark.streaming.ann_index import read_feed
 
     register_arrowipc(spark)
     base = _scratch(sf_dir, "ann_idx")
@@ -3363,12 +3348,7 @@ def q_ann_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (b1.write.format("arrowipc").option("snapshots", "true")
      .option("compression", "lz4").mode("append").save(idx))
 
-    feed_rows = (spark.read.format("arrowipc")
-                 .option("snapshots", "true")
-                 .option("columns", "vec_id,bucket,change,commit_seq")
-                 .schema("vec_id long, bucket int, change string, "
-                         "commit_seq long")
-                 .load(feed))
+    feed_rows = read_feed(spark, feed)
     # a vector touched by BOTH commits resolves to its LAST change
     wv = Window.partitionBy("vec_id").orderBy(F.col("commit_seq").desc())
     last = (feed_rows.withColumn("rn", F.row_number().over(wv))
@@ -3470,13 +3450,12 @@ def q_ann_lsh_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment count); the search itself is the q_ann_lsh shape — bucket
     equi-join against 3 broadcast probes, never all-pairs.
 
-    r16 (with the IVF/IVF-PQ unification): the index lives under the
-    SHARED generation-pointer layout (``seed_generation`` publishes
-    gen 0; reads pin it via ``read_index_generation``) — no roll fires
-    here (LSH has nothing to re-train), but all three maintained faces
-    now share one directory contract, so a future drift-triggered
-    re-index drops into the same `roll_generation` path the trained
-    families use."""
+    The index lives under the SHARED generation-pointer layout
+    (``seed_generation`` publishes gen 0; reads pin it via
+    ``read_index_generation``) — no roll fires here (LSH has nothing to
+    re-train), but all three maintained faces share one directory
+    contract, so a future drift-triggered re-index drops into the same
+    `roll_generation` path the trained families use."""
     import os
 
     from bossarrowstorageengine_spark.operators.scans import _scratch
@@ -3484,6 +3463,7 @@ def q_ann_lsh_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bossarrowstorageengine_spark.streaming.ann_index import (
         apply_index_batch,
         generation_dir,
+        read_feed,
         read_index_generation,
         seed_generation,
     )
@@ -3495,14 +3475,8 @@ def q_ann_lsh_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ONE corpus-sized build (index of v1), then O(Δ) delta segments
     seed_generation(idx_root, _ann_bucketed(_ann_snap(spark, src, "1")),
                     layout_buckets=8)   # shuffle-free read_index path
-    idx = generation_dir(idx_root, 0)
-    feed_rows = (spark.read.format("arrowipc")
-                 .option("snapshots", "true")
-                 .option("columns", "vec_id,bucket,change,commit_seq")
-                 .schema("vec_id long, bucket int, change string, "
-                         "commit_seq long")
-                 .load(feed))
-    apply_index_batch(feed_rows, 0, idx)
+    apply_index_batch(read_feed(spark, feed), 0,
+                      generation_dir(idx_root, 0))
 
     def _gen0(_):
         # Fresh pinned read per branch (FORMAT.md §8: the upstream
@@ -3541,8 +3515,8 @@ def q_ann_lsh_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: both robust at every test SF): centroid shift is q_embedding_drift's
 #: metric between the frozen-training corpus and the head (the negation
 #: mutation shifts it to 0.017-0.039 across sf0.001-0.1, an order above
-#: a stable corpus's ~0); assignment churn is the fraction of the
-#: frozen-generation corpus whose inverted-list assignment changed or
+#: a stable corpus's ~0); churn is ``ann_index.generation_churn``, the
+#: fraction of the frozen-generation corpus whose index row changed or
 #: died (~0.31 here — the signal an IVF operator actually watches, since
 #: churned assignments are what degrade list balance and recall).
 _IVF_DRIFT_SHIFT_MIN = 0.01
@@ -3555,20 +3529,21 @@ def _ivf_assign_frozen(vecs: DataFrame, cents: DataFrame,
     """Nearest FROZEN centroid per vector (tie → lower centroid_id) —
     ``_ivf_nearest``'s rule with an explicit window key, so per-commit
     delta assignment can key on (vec_id, commit_seq) and a vector
-    re-assigned by two different commits never mixes ranks."""
+    re-assigned by two different commits never mixes ranks.  Returns
+    ``(*part_cols, centroid_id)``."""
     scored = vecs.crossJoin(F.broadcast(cents)).withColumn(
         "sim", _ivf_cos(F.col("iemb"), F.col("cent")))
     w = Window.partitionBy(*part_cols).orderBy(
         F.col("sim").desc(), F.asc("centroid_id"))
     return (scored.withColumn("crn", F.row_number().over(w))
-            .filter(F.col("crn") == 1).drop("crn", "sim", "cent"))
+            .filter(F.col("crn") == 1).select(*part_cols, "centroid_id"))
 
 
 def _ivf_vec_changes(pre: DataFrame, post: DataFrame, seq: int) -> DataFrame:
     """One VECTOR-grain source commit: the keyed diff of two corpus
     snapshots (micro-unit vectors), carrying both sides' embeddings so
     the maintainer can compute pre- and post-assignments for exactly
-    the changed rows.  NOTE the cost split (VERDICT r14): producing the
+    the changed rows.  NOTE the cost split: producing the
     diff this way is O(corpus) — a fixture convenience; in production
     the vector-grain delta comes from the changefeed the CoW mutations
     already publish (streaming/ann_index.py tails it), and only the
@@ -3585,6 +3560,121 @@ def _ivf_vec_changes(pre: DataFrame, post: DataFrame, seq: int) -> DataFrame:
             .filter(F.col("change") != "same")
             .select("vec_id", "e_pre", "e_post", "change",
                     F.lit(seq).cast("long").alias("commit_seq")))
+
+
+def _ann_vec_history(spark: SparkSession, sf_dir: str, base: str,
+                     int_vec) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The vector-grain fixture of the trained maintained indexes: the
+    shared mutating corpus (``_ann_mutated_src`` at ``base/src``) in the
+    family's fixed-point contract (``int_vec`` = ``_ivf_int_vec`` or
+    ``_ivfpq_milli``).  Returns ``(s1, head, ch)``: the v1 and head
+    snapshots as ``(vec_id, iemb)`` and both commits' vector-grain diffs,
+    each materialized — every one feeds several branches (the arrowipc
+    plan-cache rule), and s1 also feeds the IVF drift monitor."""
+    src = _ann_mutated_src(spark, sf_dir, base)
+
+    def snap(ver: str | None) -> DataFrame:
+        return _ann_snap(spark, src, ver).select(
+            "vec_id", int_vec(F.col("embedding")).alias("iemb"))
+
+    s1, s2 = snap("1").localCheckpoint(), snap("2")
+    head = snap(None).localCheckpoint()
+    ch = (_ivf_vec_changes(s1, s2, 1)
+          .unionByName(_ivf_vec_changes(s2, head, 2))
+          .localCheckpoint())
+    return s1, head, ch
+
+
+def _ann_delta_feed(spark: SparkSession, ch: DataFrame, encode,
+                    feed: str) -> tuple[DataFrame, DataFrame]:
+    """Publish a trained index's changefeed for the vector-grain commits
+    ``ch`` at ``feed`` (both commits in one write job) and read it back.
+
+    ``encode(vecs, keys)`` is the FROZEN quantizer (``_ivf_assign_frozen``
+    or ``_ivfpq_encode_frozen`` bound to its artifacts): it maps
+    ``(*keys, iemb)`` rows to ``(*keys, centroid_id, *payload)``, where
+    ``dist``, the quantization error, is a monitor column and never a
+    payload.  Only changed rows are encoded (O(Δ·k)): the post-image of
+    an insert or update and the pre-image of an update.  An update that
+    keeps its list and payload is index-noise and is dropped (the LSH
+    feed's 'same' rule); the rest land as insert / move rows carrying the
+    new list and payload, and deletes as tombstone rows.  Returns
+    ``(feed_rows, new)``: the feed read back and the encoded
+    post-images (materialized)."""
+    from bossarrowstorageengine_spark.streaming.ann_index import read_feed
+
+    keys = ["vec_id", "commit_seq"]
+    # Materialized: the IVF-PQ distortion monitor reads it again, and its
+    # multi-stage encode would otherwise run twice.
+    new = encode(ch.filter(F.col("change") != "delete")
+                 .select(*keys, "change", F.col("e_post").alias("iemb")),
+                 (*keys, "change")).localCheckpoint()
+    pay = [c for c in new.columns
+           if c not in (*keys, "change", "centroid_id", "dist")]
+    old = encode(ch.filter(F.col("change") == "update")
+                 .select(*keys, F.col("e_pre").alias("iemb")),
+                 tuple(keys)).select(
+        *keys, F.col("centroid_id").alias("c_old"),
+        *[F.col(c).alias(f"{c}_old") for c in pay])
+    changed = [F.col("c_old").isNull(),
+               F.col("c_old") != F.col("centroid_id"),
+               *[F.col(f"{c}_old") != F.col(c) for c in pay]]
+    moved = (new.join(old, keys, "left")
+             .filter(reduce(lambda a, b: a | b, changed)))
+    (moved.select(
+        "vec_id", F.col("centroid_id").cast("int").alias("bucket"), *pay,
+        F.when(F.col("change") == "insert", F.lit("insert"))
+        .otherwise(F.lit("recode" if pay else "rebucket")).alias("change"),
+        "commit_seq")
+     .unionByName(
+        ch.filter(F.col("change") == "delete")
+        .select("vec_id", F.lit(None).cast("int").alias("bucket"),
+                *[F.lit(None).cast(new.schema[c].dataType).alias(c)
+                  for c in pay],
+                F.lit("delete").alias("change"), "commit_seq"))
+     .write.format("arrowipc").option("partitionBy", "commit_seq")
+     .option("snapshots", "true").option("compression", "lz4")
+     .mode("append").save(feed))
+    payload = ", ".join(f"{c} {new.schema[c].dataType.simpleString()}"
+                        for c in pay)
+    return read_feed(spark, feed, payload or None), new
+
+
+def _index_rows(df: DataFrame, *payload: str) -> DataFrame:
+    """A trained assignment ``(vec_id, centroid_id, ...)`` as index rows
+    ``(vec_id, bucket[, payload...])``."""
+    return df.select("vec_id", F.col("centroid_id").cast("int")
+                     .alias("bucket"), *payload)
+
+
+def _same_rows(a: DataFrame, b: DataFrame) -> bool:
+    """Row identity both ways (multiset equality) in ONE count job."""
+    return a.exceptAll(b).unionByName(b.exceptAll(a)).count() == 0
+
+
+def _row_counts(**frames: DataFrame) -> dict[str, int]:
+    """Each frame's row count, keyed by name, from ONE job (a tagged
+    union) instead of one count per frame."""
+    tagged = [df.select(F.lit(t).alias("t")) for t, df in frames.items()]
+    got = {r["t"]: r["n"] for r in (
+        reduce(lambda a, b: a.unionAll(b), tagged).groupBy("t")
+        .agg(F.count(F.lit(1)).alias("n")).collect())}
+    return {t: got.get(t, 0) for t in frames}
+
+
+def _retire_gen0(idx_root: str) -> bool:
+    """Vacuum the rolled-past generation 0 (keep=1: only the pointer
+    generation survives) and attest that it is gone."""
+    import os
+
+    from bossarrowstorageengine_spark.streaming.ann_index import (
+        generation_dir,
+        vacuum_generations,
+    )
+
+    vac = vacuum_generations(idx_root, keep=1)
+    return bool(vac == {"removed_generations": [0], "kept": [1]}
+                and not os.path.exists(generation_dir(idx_root, 0)))
 
 
 _ANN_IVF_MAINTAINED_ORACLE = f"""
@@ -3639,9 +3729,8 @@ _ANN_IVF_MAINTAINED_ORACLE = f"""
        .replace("{cos_vc}", _ivf_cos_sql("v.iemb", "c.cent"))
        .replace("{cos_pl}", _ivf_cos_sql("p.piemb", "l.iemb")))
 def q_ann_ivf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF INDEX MAINTENANCE UNDER MUTATIONS (SURVEY §7 round-14 runway
-    item 2; VERDICT r13 next-round item 2): the LSM maintenance pattern
-    applied to the TRAINED index family.  ``q_ann_lsh_maintained``
+    """IVF INDEX MAINTENANCE UNDER MUTATIONS: the LSM maintenance
+    pattern applied to the TRAINED index family.  ``q_ann_lsh_maintained``
     proved search-over-the-maintained-index for data-independent
     hashing; real ANN deployments run TRAINED quantizers (IVF/PQ), and
     until now a corpus mutation forced a from-scratch re-train.  Here:
@@ -3662,9 +3751,9 @@ def q_ann_ivf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
       (``apply_index_batch`` — idempotent on the segment high-water).
     - **Drift-triggered re-train**: ``retrain_due`` composes
       ``q_embedding_drift``'s centroid-shift monitor (frozen-corpus
-      mean vs head mean, L2 over dims) with assignment churn (fraction
-      of gen-0 vectors whose list changed or died); either crossing its
-      floor flags a new generation.  The trigger FIRES here (the
+      mean vs head mean, L2 over dims) with ``generation_churn``
+      (fraction of gen-0 vectors whose list changed or died); either
+      crossing its floor flags a new generation.  The trigger FIRES here (the
       negation mutation is calibrated to), and the re-train actually
       RUNS: the same Lloyd chain on the head corpus trains generation
       1, whose complete inverted lists are seeded as a second index
@@ -3692,13 +3781,13 @@ def q_ann_ivf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``nprobe/k`` of the corpus against broadcast probes; audits and
     re-trains are the scheduled passes, never the refresh path.
 
-    r16 (VERDICT r15 item 2): the generation axis now lives on the
-    SHARED pointer machinery — ``seed_generation`` publishes gen 0,
-    the triggered re-train rolls through :func:`roll_generation`
-    (crash-idempotent temp-dir+rename, pointer flip), gen-1 state is
-    read back via ``read_index_generation``, and ``vacuum_generations``
-    retires the rolled-past gen-0 directory AFTER the pinned gen-0
-    search state materialized (the ``vacuumed`` attestation)."""
+    The generation axis lives on the shared pointer machinery —
+    ``seed_generation`` publishes gen 0, the triggered re-train rolls
+    through :func:`roll_generation` (crash-idempotent temp-dir+rename,
+    pointer flip), gen-1 state is read back via
+    ``read_index_generation``, and ``vacuum_generations`` retires the
+    rolled-past gen-0 directory AFTER the pinned gen-0 search state
+    materialized (the ``vacuumed`` attestation)."""
     import os
 
     from bossarrowstorageengine_spark.operators.scans import _scratch
@@ -3706,26 +3795,17 @@ def q_ann_ivf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bossarrowstorageengine_spark.streaming.ann_index import (
         _seg_high_water,
         apply_index_batch,
+        generation_churn,
         generation_dir,
         read_index_generation,
         roll_generation,
         seed_generation,
-        vacuum_generations,
     )
-
-    from concurrent.futures import ThreadPoolExecutor
 
     register_arrowipc(spark)
     base = _scratch(sf_dir, "ann_ivf_maint")
     idx_root = os.path.join(base, "idx_gens")
-    feed = os.path.join(base, "feed")
-
-    # The gen-0 training+seed branch reads only the immutable embeddings
-    # parquet; the mutation-history branch writes only base/src — two
-    # independent chains over disjoint inputs/outputs, so they run as
-    # CONCURRENT Spark jobs (guide §2.6; the recall-report r16 pattern)
-    # and the wall clock is the slower branch, not the sum.  Results are
-    # bit-identical — only job scheduling changes.
+    idx = generation_dir(idx_root, 0)
 
     def _train_and_seed():
         # Frozen generation-0 quantizer: q_ann_ivf's training chain on
@@ -3736,157 +3816,83 @@ def q_ann_ivf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         # shared generation pointer.
         iv, cents = _ivf_train(spark, sf_dir)
         cents = cents.localCheckpoint()
-        seed_generation(idx_root, _ivf_assign_frozen(iv, cents).select(
-            "vec_id", F.col("centroid_id").cast("int").alias("bucket")),
-            layout_buckets=8)   # shuffle-free read_index path
-        return iv, cents
+        seed_generation(idx_root, _index_rows(_ivf_assign_frozen(iv, cents)),
+                        layout_buckets=8)   # shuffle-free read_index path
+        return cents
 
-    def _mutate_and_snap():
-        src = _ann_mutated_src(spark, sf_dir, base)
+    # The gen-0 training+seed branch reads only the immutable embeddings
+    # parquet; the mutation history writes only base/src — independent
+    # chains, so they run as concurrent Spark jobs.
+    cents, (s1, head, ch) = run_concurrently(
+        spark, _train_and_seed,
+        lambda: _ann_vec_history(spark, sf_dir, base, _ivf_int_vec))
 
-        def _snap_iv(ver: str | None) -> DataFrame:
-            return _ann_snap(spark, src, ver).select(
-                "vec_id", _ivf_int_vec(F.col("embedding")).alias("iemb"))
+    def _maintain_and_audit():
+        feed_rows, _ = _ann_delta_feed(
+            spark, ch, lambda v, keys: _ivf_assign_frozen(v, cents, keys),
+            os.path.join(base, "feed"))
+        apply_index_batch(feed_rows, 0, idx)
+        # Pin generation 0 (the pointer at read time) and MATERIALIZE it:
+        # the pinned search state survives both the roll and the vacuum
+        # below — the generational read contract.
+        pinned_gen, maintained = read_index_generation(spark, idx_root)
+        maintained = maintained.localCheckpoint()
 
-        # Vector-grain commit diffs (checkpointed: each feeds two
-        # assignment branches — the arrowipc plan-cache rule; s1 also
-        # feeds the drift monitor below, head feeds five branches).
-        s1, s2 = _snap_iv("1").localCheckpoint(), _snap_iv("2")
-        head = _snap_iv(None).localCheckpoint()
-        ch = (_ivf_vec_changes(s1, s2, 1)
-              .unionByName(_ivf_vec_changes(s2, head, 2))
-              .localCheckpoint())
-        return s1, head, ch
+        # Audit: maintained lists == from-scratch frozen assignment of
+        # the head corpus (per-list count + id checksum).
+        direct = _index_rows(_ivf_assign_frozen(head, cents))
+        got = maintained.groupBy("bucket").agg(
+            F.count(F.lit(1)).alias("n"), F.sum("vec_id").alias("s"))
+        want = direct.groupBy("bucket").agg(
+            F.count(F.lit(1)).alias("n2"), F.sum("vec_id").alias("s2"))
+        audit_mismatch = (got.join(want, "bucket", "full_outer")
+                          .filter((F.coalesce("n", F.lit(0))
+                                   != F.coalesce("n2", F.lit(0)))
+                                  | (F.coalesce("s", F.lit(0))
+                                     != F.coalesce("s2", F.lit(0)))))
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_train = pool.submit(_session_thread(spark, _train_and_seed))
-        f_mut = pool.submit(_session_thread(spark, _mutate_and_snap))
-        iv, cents = f_train.result()
-        s1, head, ch = f_mut.result()
-    idx = generation_dir(idx_root, 0)
+        # Re-train trigger: centroid-shift monitor (q_embedding_drift's
+        # metric, frozen corpus vs head) OR churn.
+        def _mean_dims(df: DataFrame, m: str) -> DataFrame:
+            return (df.select(F.posexplode("iemb").alias("dim", "x"))
+                    .groupBy("dim")
+                    .agg((F.sum("x").cast("double") / F.count(F.lit(1))
+                          / _IVF_MICRO).alias(m)))
+
+        shift_df = (_mean_dims(s1, "m0")
+                    .join(_mean_dims(head, "m1"), "dim")
+                    .agg(F.sqrt(F.sum((F.col("m0") - F.col("m1"))
+                                      * (F.col("m0") - F.col("m1"))))))
+        # Independent reads over materialized frames: concurrent jobs.
+        n_bad, shift, churn = run_concurrently(
+            spark, audit_mismatch.count,
+            lambda: shift_df.collect()[0][0],
+            lambda: generation_churn(spark, idx_root, 0))
+        return (pinned_gen, maintained, n_bad == 0,
+                bool(shift > _IVF_DRIFT_SHIFT_MIN or churn > _IVF_CHURN_MIN))
 
     # The gen-1 re-train (the Lloyd chain on the head corpus) depends
-    # ONLY on `head`, which just materialized — start it now so its
-    # training jobs interleave with the feed write + delta applies
-    # below (the roll itself still waits for the absorbed high-water).
-    retrain_pool = ThreadPoolExecutor(max_workers=1)
-    f_cents1 = retrain_pool.submit(_session_thread(
-        spark, lambda: _ivf_lloyd(head).localCheckpoint()))
+    # ONLY on `head`, so its training jobs overlap the feed write, the
+    # delta applies and the audit; the roll waits for both.
+    cents1, (pinned_gen, maintained, consistent, retrain_due) = (
+        run_concurrently(spark, lambda: _ivf_lloyd(head).localCheckpoint(),
+                         _maintain_and_audit))
 
-    # Delta assignment against the FROZEN quantizer — changed rows only.
-    keys = ("vec_id", "commit_seq")
-    new_a = _ivf_assign_frozen(
-        ch.filter(F.col("change") != "delete")
-        .select("vec_id", "commit_seq", "change",
-                F.col("e_post").alias("iemb")),
-        cents, keys).withColumnRenamed("centroid_id", "c_new")
-    old_a = _ivf_assign_frozen(
-        ch.filter(F.col("change") == "update")
-        .select("vec_id", "commit_seq", F.col("e_pre").alias("iemb")),
-        cents, keys).select("vec_id", "commit_seq",
-                            F.col("centroid_id").alias("c_old"))
-    moved = (new_a.join(old_a, list(keys), "left")
-             .filter(F.col("c_old").isNull()
-                     | (F.col("c_old") != F.col("c_new"))))
-    feed_df = (
-        moved.select(
-            "vec_id", F.col("c_new").cast("int").alias("bucket"),
-            F.when(F.col("change") == "insert", F.lit("insert"))
-            .otherwise(F.lit("rebucket")).alias("change"), "commit_seq")
-        .unionByName(
-            ch.filter(F.col("change") == "delete")
-            .select("vec_id", F.lit(None).cast("int").alias("bucket"),
-                    F.lit("delete").alias("change"), "commit_seq")))
-    (feed_df.write.format("arrowipc").option("partitionBy", "commit_seq")
-     .option("snapshots", "true").option("compression", "lz4")
-     .mode("append").save(feed))
-
-    feed_rows = (spark.read.format("arrowipc")
-                 .option("snapshots", "true")
-                 .option("columns", "vec_id,bucket,change,commit_seq")
-                 .schema("vec_id long, bucket int, change string, "
-                         "commit_seq long")
-                 .load(feed))
-    apply_index_batch(feed_rows, 0, idx)
-    # Pin generation 0 (the pointer at read time) and MATERIALIZE it:
-    # the pinned search state survives both the roll and the vacuum
-    # below — the generational read contract.
-    pinned_gen, maintained = read_index_generation(spark, idx_root)
-    maintained = maintained.localCheckpoint()
-
-    # Audit: maintained lists == from-scratch frozen assignment of the
-    # head corpus (per-list count + id checksum).
-    direct = _ivf_assign_frozen(head, cents).select(
-        "vec_id", F.col("centroid_id").cast("int").alias("bucket"))
-    got = maintained.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("vec_id").alias("s"))
-    want = direct.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n2"), F.sum("vec_id").alias("s2"))
-    audit_mismatch = (got.join(want, "bucket", "full_outer")
-                      .filter((F.coalesce("n", F.lit(0))
-                               != F.coalesce("n2", F.lit(0)))
-                              | (F.coalesce("s", F.lit(0))
-                                 != F.coalesce("s2", F.lit(0)))))
-
-    # Re-train trigger: centroid-shift monitor (q_embedding_drift's
-    # metric, frozen corpus vs head) OR assignment churn.
-    def _mean_dims(df: DataFrame, m: str) -> DataFrame:
-        return (df.select(F.posexplode("iemb").alias("dim", "x"))
-                .groupBy("dim")
-                .agg((F.sum("x").cast("double") / F.count(F.lit(1))
-                      / _IVF_MICRO).alias(m)))
-
-    shift_df = (_mean_dims(s1, "m0")
-                .join(_mean_dims(head, "m1"), "dim")
-                .agg(F.sqrt(F.sum((F.col("m0") - F.col("m1"))
-                                  * (F.col("m0") - F.col("m1"))))))
-    # The four attestation actions (audit count, drift collect, gen-0
-    # size, churn distinct-count) are independent reads over already-
-    # materialized frames — run them as concurrent jobs (guide §2.6);
-    # each lands the same value it did sequentially.
-    with ThreadPoolExecutor(max_workers=4) as apool:
-        f_audit = apool.submit(audit_mismatch.count)
-        f_shift = apool.submit(lambda: shift_df.collect()[0][0])
-        f_n0 = apool.submit(iv.count)
-        f_churn = apool.submit(
-            feed_rows.select("vec_id").distinct().count)
-        consistent = f_audit.result() == 0
-        shift = f_shift.result()
-        n_gen0 = f_n0.result()
-        churn = f_churn.result() / n_gen0
-    retrain_due = bool(shift > _IVF_DRIFT_SHIFT_MIN
-                       or churn > _IVF_CHURN_MIN)
-
-    # The triggered re-train: generation 1 = the SAME Lloyd chain on
-    # the head corpus (trained CONCURRENTLY with the apply phase above
-    # — f_cents1), its complete lists ROLLED through the shared
-    # generation machinery (temp-dir seed + atomic rename + pointer
-    # flip — crash-idempotent, trained_thru = the absorbed feed head).
-    cents1 = f_cents1.result()
-    retrain_pool.shutdown()
-    gen1_lists = _ivf_assign_frozen(head, cents1).select(
-        "vec_id", F.col("centroid_id").cast("int").alias("bucket"))
-    roll = roll_generation(idx_root, gen1_lists, _seg_high_water(idx),
-                           layout_buckets=8)
+    # The triggered re-train: generation 1's complete lists ROLLED
+    # through the shared generation machinery (temp-dir seed + atomic
+    # rename + pointer flip — crash-idempotent, trained_thru = the
+    # absorbed feed head).
+    roll = roll_generation(idx_root,
+                           _index_rows(_ivf_assign_frozen(head, cents1)),
+                           _seg_high_water(idx), layout_buckets=8)
     gen1_no, gen1 = read_index_generation(spark, idx_root)
-    # One tagged-union count job instead of three separate counts
-    # (cents1 / gen1 read-back / head) — same three numbers (r17).
-    cnt = {r["t"]: r["n"] for r in (
-        cents1.select(F.lit("cents1").alias("t"))
-        .unionAll(gen1.select(F.lit("gen1").alias("t")))
-        .unionAll(head.select(F.lit("head").alias("t")))
-        .groupBy("t").agg(F.count(F.lit(1)).alias("n")).collect())}
+    cnt = _row_counts(cents1=cents1, gen1=gen1, head=head)
     gen1_trained = bool(
         roll == {"generation": 1, "rolled": True} and gen1_no == 1
-        and cnt.get("cents1", 0) == _IVF_K
-        and cnt.get("gen1", 0) == cnt.get("head", 0))
-
-    # Retention: the rolled-past gen-0 directory is retired (keep=1 →
-    # only the pointer generation survives); the pinned gen-0 search
-    # state above already materialized, so the read outlives the dir.
-    vac = vacuum_generations(idx_root, keep=1)
-    vacuumed = bool(vac == {"removed_generations": [0], "kept": [1]}
-                    and not os.path.exists(idx))
+        and cnt["cents1"] == _IVF_K and cnt["gen1"] == cnt["head"])
+    # Retention: the pinned gen-0 search state above already
+    # materialized, so the read outlives the directory.
+    vacuumed = _retire_gen0(idx_root)
 
     # Search over the FROZEN generation: candidates' list membership
     # comes ONLY from the maintained index; embeddings from the head.
@@ -3920,9 +3926,12 @@ def q_ann_ivf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: distortion signal codebook drift (the negation mutation pushes the
 #: changed rows' residuals far outside the trained codebook's support,
 #: so the ratio lands an order of magnitude above stable-corpus noise);
-#: assignment churn (_IVF_CHURN_MIN) rides along as the coarse-grain
-#: trigger, exactly as in q_ann_ivf_maintained.
+#: churn (_IVF_CHURN_MIN over ``generation_churn``) rides along as the
+#: coarse-grain trigger, exactly as in q_ann_ivf_maintained.
 _IVFPQ_DIST_FACTOR = 2.0
+
+#: Index payload of the IVF-PQ faces: one code per subspace.
+_IVFPQ_PAYLOAD = "codes array<bigint>"
 
 
 def _ann_ivfpq_maintained_oracle() -> str:
@@ -4023,8 +4032,8 @@ def _ann_ivfpq_maintained_oracle() -> str:
 
 @query("q_ann_ivfpq_maintained", oracle=_ann_ivfpq_maintained_oracle())
 def q_ann_ivfpq_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ INDEX MAINTENANCE UNDER MUTATIONS (SURVEY §7 round-15
-    runway item 2; VERDICT r14 item 2) — the last trained-family face:
+    """IVF-PQ INDEX MAINTENANCE UNDER MUTATIONS — the last trained-family
+    face:
     ``q_ann_ivf_maintained`` maintains a frozen COARSE quantizer; here
     BOTH trained artifacts freeze (coarse centroids AND the per-subspace
     PQ codebooks) and the LSM delta segments carry DELTA-ENCODED CODES,
@@ -4048,10 +4057,10 @@ def q_ann_ivfpq_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
       distortion vs the frozen-training mean (``_IVFPQ_DIST_FACTOR``;
       the negation mutation pushes changed residuals outside the
       trained codebook's support) — with ``q_ann_ivf_maintained``'s
-      assignment-churn floor.  The trigger FIRES and the re-train RUNS:
-      generation 1 re-trains coarse + codebooks on the head corpus
-      through the identical chain (``_ivfpq_train_encode``) and seeds a
-      second payload-carrying index; ``gen1_trained`` attests full
+      churn floor (``generation_churn``).  The trigger FIRES and the
+      re-train RUNS: generation 1 re-trains coarse + codebooks on the
+      head corpus through the identical chain (``_ivfpq_train_encode``)
+      and seeds a second payload-carrying index; ``gen1_trained`` attests full
       coverage with complete code vectors.
     - **Search (frozen generation, merge-on-read codes)**: probes rank
       candidates by ADC using ONLY the maintained index state (list
@@ -4075,12 +4084,11 @@ def q_ann_ivfpq_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-free merge-on-read and reranks only shortlist-many full
     vectors per probe.
 
-    r16 (VERDICT r15 item 2): the generation axis lives on the SHARED
-    pointer machinery — ``seed_generation`` publishes gen 0 with its
-    payload DDL, the triggered re-train rolls the PAYLOAD-CARRYING
-    generation through :func:`roll_generation` (which inherits nothing
-    implicitly here: the codes DDL is re-declared because gen 1 is a
-    fresh training, not a copy), gen-1 codes are read back via
+    The generation axis lives on the shared pointer machinery —
+    ``seed_generation`` publishes gen 0 with its payload DDL, the
+    triggered re-train rolls the PAYLOAD-CARRYING generation through
+    :func:`roll_generation` (the codes DDL is re-declared because gen 1
+    is a fresh training, not a copy), gen-1 codes are read back via
     ``read_index_generation``, and ``vacuum_generations`` retires the
     rolled-past gen-0 directory after the pinned search state
     materialized (the ``vacuumed`` attestation)."""
@@ -4091,192 +4099,90 @@ def q_ann_ivfpq_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bossarrowstorageengine_spark.streaming.ann_index import (
         _seg_high_water,
         apply_index_batch,
+        generation_churn,
         generation_dir,
         read_index_generation,
         roll_generation,
         seed_generation,
-        vacuum_generations,
     )
-
-    from concurrent.futures import ThreadPoolExecutor
 
     register_arrowipc(spark)
     base = _scratch(sf_dir, "ann_ivfpq_maint")
     idx_root = os.path.join(base, "idx_gens")
-    feed = os.path.join(base, "feed")
-
-    # Gen-0 training + payload seed (immutable embeddings parquet only)
-    # vs the mutation fixture + snapshots (writes only base/src): two
-    # independent chains over disjoint inputs/outputs, run as CONCURRENT
-    # Spark jobs (guide §2.6, the r16 recall-report pattern; r17 per
-    # VERDICT item 1).  Bit-identical results — scheduling only.
+    idx = generation_dir(idx_root, 0)
 
     def _train_and_seed():
         # Frozen generation-0 quantizer: q_ann_ivfpq's training chain on
         # the v1 corpus (cents + codebook are localCheckpointed by the
         # trainer); base segment = (vec_id, list, codes[NSUB]) + dist.
-        iv, cents, _, codebook, enc = _ivfpq_encode(
+        _, cents, _, codebook, enc = _ivfpq_encode(
             spark, sf_dir, _PQ_LLOYD_PASSES)
-        codes0 = (enc.groupBy("vec_id", "centroid_id")
-                  .agg(F.transform(
-                      F.array_sort(F.collect_list(F.struct("s", "code"))),
-                      lambda st: st.code).alias("codes"),
-                      F.sum("cd2").cast("long").alias("dist"))
-                  .localCheckpoint())
-        seed_generation(idx_root, codes0.select(
-            "vec_id", F.col("centroid_id").cast("int").alias("bucket"),
-            "codes"), layout_buckets=8, payload="codes array<bigint>")
-        return iv, cents, codebook, codes0
+        codes0 = _ivfpq_codes(enc).localCheckpoint()
+        seed_generation(idx_root, _index_rows(codes0, "codes"),
+                        layout_buckets=8, payload=_IVFPQ_PAYLOAD)
+        return cents, codebook, codes0
 
-    def _mutate_and_snap():
-        src = _ann_mutated_src(spark, sf_dir, base)
+    # Gen-0 training + payload seed (immutable embeddings parquet only)
+    # vs the mutation history (writes only base/src): concurrent jobs.
+    (cents, codebook, codes0), (_, head, ch) = run_concurrently(
+        spark, _train_and_seed,
+        lambda: _ann_vec_history(spark, sf_dir, base, _ivfpq_milli))
 
-        def _snap_iv(ver: str | None) -> DataFrame:
-            return _ann_snap(spark, src, ver).select(
-                "vec_id", _ivfpq_milli(F.col("embedding")).alias("iemb"))
+    def _maintain_and_audit():
+        feed_rows, new_e = _ann_delta_feed(
+            spark, ch,
+            lambda v, keys: _ivfpq_encode_frozen(v, cents, codebook, keys),
+            os.path.join(base, "feed"))
+        apply_index_batch(feed_rows, 0, idx)
+        # Pin generation 0 and MATERIALIZE it: the pinned (list, codes)
+        # search state survives the roll and the vacuum below.
+        pinned_gen, maintained = read_index_generation(spark, idx_root)
+        maintained = maintained.localCheckpoint()
+        # Audit: maintained (vec_id, list, codes) == from-scratch frozen
+        # encode of the head corpus — row identity both ways.  The
+        # direct encode appears on both sides of the pair, so it is
+        # materialized once.
+        direct = _index_rows(_ivfpq_encode_frozen(head, cents, codebook),
+                             "codes").localCheckpoint()
+        # Re-train trigger: PQ distortion monitor OR churn.  Independent
+        # reads over materialized frames: concurrent jobs.
+        consistent, base_avg, delta_avg, churn = run_concurrently(
+            spark, lambda: _same_rows(maintained, direct),
+            lambda: codes0.agg(F.avg("dist")).collect()[0][0],
+            lambda: new_e.agg(F.avg("dist")).collect()[0][0],
+            lambda: generation_churn(spark, idx_root, 0))
+        retrain_due = bool(
+            (delta_avg is not None
+             and delta_avg > _IVFPQ_DIST_FACTOR * float(base_avg))
+            or churn > _IVF_CHURN_MIN)
+        return pinned_gen, maintained, consistent, retrain_due
 
-        s1, s2 = _snap_iv("1").localCheckpoint(), _snap_iv("2")
-        head = _snap_iv(None).localCheckpoint()
-        ch = (_ivf_vec_changes(s1, s2, 1)
-              .unionByName(_ivf_vec_changes(s2, head, 2))
-              .localCheckpoint())
-        return head, ch
+    # The gen-1 re-train (the identical IVF-PQ chain on the head corpus;
+    # fewer seeds survive the delete — empty-cluster removal handles
+    # that) depends only on `head`, so its training jobs overlap the
+    # delta re-encode, feed write, applies and audit.
+    (_, cents1, _, _, enc1), (pinned_gen, maintained, consistent,
+                              retrain_due) = run_concurrently(
+        spark, lambda: _ivfpq_train_encode(head, _PQ_LLOYD_PASSES),
+        _maintain_and_audit)
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_train = pool.submit(_session_thread(spark, _train_and_seed))
-        f_mut = pool.submit(_session_thread(spark, _mutate_and_snap))
-        iv, cents, codebook, codes0 = f_train.result()
-        head, ch = f_mut.result()
-    idx = generation_dir(idx_root, 0)
-
-    # The gen-1 re-train (the identical IVF-PQ chain on the head corpus)
-    # depends only on `head`, which just materialized — start its
-    # training jobs now so they interleave with the delta re-encode +
-    # feed write + applies below (the roll still waits for the absorbed
-    # high-water).
-    retrain_pool = ThreadPoolExecutor(max_workers=1)
-    f_retrain = retrain_pool.submit(_session_thread(
-        spark, lambda: _ivfpq_train_encode(head, _PQ_LLOYD_PASSES)))
-
-    # Delta re-encode against the FROZEN artifacts — changed rows only.
-    keys = ("vec_id", "commit_seq")
-    new_e = _ivfpq_encode_frozen(
-        ch.filter(F.col("change") != "delete")
-        .select("vec_id", "commit_seq", "change",
-                F.col("e_post").alias("iemb")),
-        cents, codebook, ("vec_id", "commit_seq", "change")
-    ).localCheckpoint()
-    old_e = _ivfpq_encode_frozen(
-        ch.filter(F.col("change") == "update")
-        .select("vec_id", "commit_seq", F.col("e_pre").alias("iemb")),
-        cents, codebook, keys
-    ).select("vec_id", "commit_seq",
-             F.col("centroid_id").alias("c_old"),
-             F.col("codes").alias("codes_old"))
-    moved = (new_e.join(old_e, list(keys), "left")
-             .filter(F.col("c_old").isNull()
-                     | (F.col("c_old") != F.col("centroid_id"))
-                     | (F.col("codes_old") != F.col("codes"))))
-    feed_df = (
-        moved.select(
-            "vec_id", F.col("centroid_id").cast("int").alias("bucket"),
-            "codes",
-            F.when(F.col("change") == "insert", F.lit("insert"))
-            .otherwise(F.lit("recode")).alias("change"), "commit_seq")
-        .unionByName(
-            ch.filter(F.col("change") == "delete")
-            .select("vec_id", F.lit(None).cast("int").alias("bucket"),
-                    F.lit(None).cast("array<bigint>").alias("codes"),
-                    F.lit("delete").alias("change"), "commit_seq")))
-    (feed_df.write.format("arrowipc").option("partitionBy", "commit_seq")
-     .option("snapshots", "true").option("compression", "lz4")
-     .mode("append").save(feed))
-
-    feed_rows = (spark.read.format("arrowipc")
-                 .option("snapshots", "true")
-                 .option("columns", "vec_id,bucket,codes,change,commit_seq")
-                 .schema("vec_id long, bucket int, codes array<bigint>, "
-                         "change string, commit_seq long")
-                 .load(feed))
-    apply_index_batch(feed_rows, 0, idx)
-    # Pin generation 0 and MATERIALIZE it: the pinned (list, codes)
-    # search state survives the roll and the vacuum below.
-    pinned_gen, maintained = read_index_generation(spark, idx_root)
-    maintained = maintained.localCheckpoint()
-
-    # Audit: maintained (vec_id, list, codes) == from-scratch frozen
-    # encode of the head corpus — row identity both ways.  The direct
-    # encode appears on BOTH sides of the exceptAll pair, so it is
-    # materialized once (r17: unmaterialized it was evaluated twice
-    # inside the one audit job — a full crossJoin+window encode each
-    # time; same values, one fewer corpus pass).
-    direct = _ivfpq_encode_frozen(head, cents, codebook).select(
-        "vec_id", F.col("centroid_id").cast("int").alias("bucket"),
-        "codes").localCheckpoint()
-    consistent = (maintained.exceptAll(direct)
-                  .unionByName(direct.exceptAll(maintained))
-                  .count() == 0)
-
-    # Re-train trigger: PQ distortion monitor + assignment churn.  The
-    # four attestation actions are independent reads over materialized
-    # frames — run them as concurrent jobs (guide §2.6); same values.
-    with ThreadPoolExecutor(max_workers=4) as apool:
-        f_n0 = apool.submit(iv.count)
-        f_base = apool.submit(
-            lambda: codes0.agg(F.avg("dist")).collect()[0][0])
-        f_delta = apool.submit(
-            lambda: new_e.agg(F.avg("dist")).collect()[0][0])
-        f_churn = apool.submit(ch.select("vec_id").distinct().count)
-        n_gen0 = f_n0.result()
-        base_avg = f_base.result()
-        delta_avg = f_delta.result()
-        churn = f_churn.result() / n_gen0
-    retrain_due = bool(
-        (delta_avg is not None
-         and delta_avg > _IVFPQ_DIST_FACTOR * float(base_avg))
-        or churn > _IVF_CHURN_MIN)
-
-    # The triggered re-train: generation 1 = the identical chain on the
-    # head corpus (fewer seeds survive the delete — empty-cluster
-    # removal handles that; trained CONCURRENTLY with the apply phase
-    # above — f_retrain), ROLLED as a payload-carrying generation
-    # through the shared machinery (temp-dir seed + atomic rename +
-    # pointer flip).
-    _, cents1, _, codebook1, enc1 = f_retrain.result()
-    retrain_pool.shutdown()
-    codes1 = (enc1.groupBy("vec_id", "centroid_id")
-              .agg(F.transform(
-                  F.array_sort(F.collect_list(F.struct("s", "code"))),
-                  lambda st: st.code).alias("codes")))
-    roll = roll_generation(
-        idx_root, codes1.select(
-            "vec_id", F.col("centroid_id").cast("int").alias("bucket"),
-            "codes"),
-        _seg_high_water(idx), layout_buckets=8,
-        payload="codes array<bigint>")
+    # ROLLED as a payload-carrying generation through the shared
+    # machinery (temp-dir seed + atomic rename + pointer flip).
+    roll = roll_generation(idx_root, _index_rows(_ivfpq_codes(enc1), "codes"),
+                           _seg_high_water(idx), layout_buckets=8,
+                           payload=_IVFPQ_PAYLOAD)
     gen1_no, gen1 = read_index_generation(spark, idx_root)
     gen1 = gen1.localCheckpoint()
-    # One tagged-union count job instead of four separate counts
-    # (cents1 / gen1 read-back / head / malformed-codes rows) — the
-    # same four numbers (r17).
-    cnt = {r["t"]: r["n"] for r in (
-        cents1.select(F.lit("cents1").alias("t"))
-        .unionAll(gen1.select(F.lit("gen1").alias("t")))
-        .unionAll(head.select(F.lit("head").alias("t")))
-        .unionAll(gen1.filter(F.size("codes") != _IVFPQ_NSUB)
-                  .select(F.lit("badcodes").alias("t")))
-        .groupBy("t").agg(F.count(F.lit(1)).alias("n")).collect())}
+    cnt = _row_counts(
+        cents1=cents1, gen1=gen1, head=head,
+        badcodes=gen1.filter(F.size("codes") != _IVFPQ_NSUB))
     gen1_trained = bool(
         roll == {"generation": 1, "rolled": True} and gen1_no == 1
-        and cnt.get("cents1", 0) >= 1
-        and cnt.get("gen1", 0) == cnt.get("head", 0)
-        and cnt.get("badcodes", 0) == 0)
-
-    # Retention: retire the rolled-past gen-0 directory; the pinned
-    # gen-0 (list, codes) state above already materialized.
-    vac = vacuum_generations(idx_root, keep=1)
-    vacuumed = bool(vac == {"removed_generations": [0], "kept": [1]}
-                    and not os.path.exists(idx))
+        and cnt["cents1"] >= 1 and cnt["gen1"] == cnt["head"]
+        and cnt["badcodes"] == 0)
+    # Retention: the pinned gen-0 (list, codes) state above already
+    # materialized.
+    vacuumed = _retire_gen0(idx_root)
 
     # Search over the FROZEN generation: candidates' list AND codes come
     # ONLY from the maintained index; exact rerank reads head vectors.
@@ -4352,8 +4258,8 @@ def q_ann_ivfpq_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_ann_generations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GENERATIONAL INDEX ROLLOVER, driver-attested (r15; the oracle
-    face of ``ivf_index_stream``'s machinery): the persisted ANN index
+    """GENERATIONAL INDEX ROLLOVER, driver-attested (the oracle face
+    of ``ivf_index_stream``'s machinery): the persisted ANN index
     lives as one LSM table per trained GENERATION under a root with an
     atomically-flipped pointer; mutations maintain the current
     generation until the churn monitor trips, then a re-train seeds
@@ -4387,83 +4293,74 @@ def q_ann_generations(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bossarrowstorageengine_spark.operators.scans import _scratch
     from bossarrowstorageengine_spark.sources import register_arrowipc
     from bossarrowstorageengine_spark.streaming.ann_index import (
-        apply_generational_batch,
-        current_generation,
-        read_index_generation,
+        read_feed,
         seed_generation,
     )
-
-    from concurrent.futures import ThreadPoolExecutor
 
     register_arrowipc(spark)
     base = _scratch(sf_dir, "ann_generations")
     idx_root = os.path.join(base, "gens")
     feed = os.path.join(base, "feed")
     src = _ann_mutated_src(spark, sf_dir, base)
-    b1, b2, b3 = (_ann_bucketed(_ann_snap(spark, src, v))
-                  for v in ("1", "2", None))
-
     # The gen-0 seed and the feed build both read the (now-immutable)
-    # mutation history and write DISJOINT tables — run them as
-    # concurrent Spark jobs (guide §2.6; r17).  Both commits' diffs land
-    # in ONE feed write job (union with per-diff commit_seq literals —
-    # same partition directories as two appends, the r11 changefeed
-    # pattern), so the fixture costs two jobs total, overlapped.
-    def _seed():
-        seed_generation(idx_root, b1, layout_buckets=8)
-
-    def _feed_build():
-        (_ann_idx_changes(b1, b2, 1)
-         .unionByName(_ann_idx_changes(b2, b3, 2))
-         .write.format("arrowipc").option("partitionBy", "commit_seq")
-         .option("snapshots", "true").option("compression", "lz4")
-         .mode("append").save(feed))
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_seed = pool.submit(_session_thread(spark, _seed))
-        f_feed = pool.submit(_session_thread(spark, _feed_build))
-        f_seed.result()
-        f_feed.result()
-    feed_rows = (spark.read.format("arrowipc")
-                 .option("snapshots", "true")
-                 .option("columns", "vec_id,bucket,change,commit_seq")
-                 .schema("vec_id long, bucket int, change string, "
-                         "commit_seq long")
-                 .load(feed))
+    # mutation history and write DISJOINT tables — concurrent Spark
+    # jobs, so the fixture costs two jobs total, overlapped.
+    run_concurrently(
+        spark,
+        lambda: seed_generation(
+            idx_root, _ann_bucketed(_ann_snap(spark, src, "1")),
+            layout_buckets=8),
+        lambda: _ann_bucket_feed(spark, src, feed))
 
     def _retrain(sess: SparkSession) -> DataFrame:
         return _ann_snap(sess, src, None).select(
             "vec_id", _lsh_bucket_col(4).alias("bucket"))
 
+    return _ann_generation_faces(spark, idx_root, read_feed(spark, feed),
+                                 _retrain)
+
+
+def _ann_generation_faces(spark: SparkSession, idx_root: str,
+                          feed_rows: DataFrame, retrain,
+                          **extra: "F.Column") -> DataFrame:
+    """The rollover shared by ``q_ann_generations`` and
+    ``q_ann_generations_payload``: open a search handle pinned to
+    generation 0, apply the feed through ``apply_generational_batch``
+    (its churn trips the 0.2 floor and ``retrain`` rolls generation 1),
+    attest that the pinned handle still reads generation-0 state (row
+    identity both ways), and return per-bucket (count, id-checksum,
+    ``extra`` long sums) faces of both generations with the pointer's
+    generation / trained_thru, the roll result and the attestation."""
+    from bossarrowstorageengine_spark.streaming.ann_index import (
+        apply_generational_batch,
+        current_generation,
+        read_index_generation,
+    )
+
     pinned_gen, pinned = read_index_generation(spark, idx_root)
     res = apply_generational_batch(spark, feed_rows, 0, idx_root,
-                                   _retrain, churn_min=0.2)
+                                   retrain, churn_min=0.2)
     ptr = current_generation(idx_root)
     _, g0 = read_index_generation(spark, idx_root, gen=0)
     g0 = g0.localCheckpoint()   # feeds the pinned audit AND the face agg
     _, g1 = read_index_generation(spark, idx_root)
-    # A handle opened before the roll (pinned to gen 0) must still read
-    # generation-0 state — row identity both ways.  The pinned handle
-    # appears on BOTH sides of the exceptAll pair, so materialize it
-    # once here, at the same post-roll evaluation point the audit job
-    # always ran at (r17: unmaterialized, its merge-on-read subtree was
-    # evaluated twice inside the one audit job).
+    # The pinned handle appears on both sides of the exceptAll pair, so
+    # it is materialized once, at the post-roll evaluation point.
     pinned = pinned.localCheckpoint()
-    pinned_matches = bool(
-        pinned_gen == 0
-        and pinned.exceptAll(g0).unionByName(g0.exceptAll(pinned))
-        .count() == 0)
+    pinned_matches = bool(pinned_gen == 0 and _same_rows(pinned, g0))
 
     def _face(df: DataFrame, tag: str) -> DataFrame:
         return (df.groupBy("bucket")
                 .agg(F.count(F.lit(1)).alias("n_vecs"),
-                     F.sum("vec_id").cast("long").alias("id_checksum"))
+                     F.sum("vec_id").cast("long").alias("id_checksum"),
+                     *[F.sum(c).cast("long").alias(n)
+                       for n, c in extra.items()])
                 .select(F.lit(tag).alias("face"),
                         F.col("bucket").cast("int").alias("bucket"),
-                        "n_vecs", "id_checksum"))
+                        "n_vecs", "id_checksum", *extra))
 
     return (_face(g0, "gen0").unionByName(_face(g1, "gen1"))
-            .select("face", "bucket", "n_vecs", "id_checksum",
+            .select("face", "bucket", "n_vecs", "id_checksum", *extra,
                     F.lit(int(ptr["generation"])).cast("long")
                     .alias("generation"),
                     F.lit(int(ptr["trained_thru"])).cast("long")
@@ -4595,8 +4492,8 @@ def _ann_generations_payload_oracle() -> str:
 @query("q_ann_generations_payload",
        oracle=_ann_generations_payload_oracle())
 def q_ann_generations_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PAYLOAD-CARRYING GENERATIONAL ROLLOVER, driver-attested (r16,
-    VERDICT r15 item 7): ``q_ann_generations`` rolls a payload-less LSH
+    """PAYLOAD-CARRYING GENERATIONAL ROLLOVER, driver-attested:
+    ``q_ann_generations`` rolls a payload-less LSH
     index; this key rolls the CODES-carrying IVF-PQ face through the
     same pointer machinery — the delta segments are delta-encoded code
     vectors (the ``payload`` face), and the roll's re-train re-encodes
@@ -4633,99 +4530,33 @@ def q_ann_generations_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bossarrowstorageengine_spark.operators.scans import _scratch
     from bossarrowstorageengine_spark.sources import register_arrowipc
     from bossarrowstorageengine_spark.streaming.ann_index import (
-        apply_generational_batch,
-        current_generation,
-        read_index_generation,
         seed_generation,
     )
-
-    from concurrent.futures import ThreadPoolExecutor
 
     register_arrowipc(spark)
     base = _scratch(sf_dir, "ann_gens_payload")
     idx_root = os.path.join(base, "gens")
-    feed = os.path.join(base, "feed")
-
-    # Two independent chains over disjoint inputs/outputs run as
-    # CONCURRENT Spark jobs (guide §2.6, the r16 recall-report pattern;
-    # r17 here per VERDICT item 1): the gen-0 IVF-PQ training + payload
-    # seed reads only the immutable embeddings parquet, while the
-    # mutation fixture + snapshots write only base/src.  Results are
-    # bit-identical — only job scheduling changes.
 
     def _train_and_seed():
         # Frozen gen-0 artifacts: q_ann_ivfpq's training chain on v1.
-        iv, cents, _, codebook, enc = _ivfpq_encode(
+        _, cents, _, codebook, enc = _ivfpq_encode(
             spark, sf_dir, _PQ_LLOYD_PASSES)
-        codes0 = (enc.groupBy("vec_id", "centroid_id")
-                  .agg(F.transform(
-                      F.array_sort(F.collect_list(F.struct("s", "code"))),
-                      lambda st: st.code).alias("codes")))
-        seed_generation(idx_root, codes0.select(
-            "vec_id", F.col("centroid_id").cast("int").alias("bucket"),
-            "codes"), layout_buckets=8, payload="codes array<bigint>")
+        seed_generation(idx_root, _index_rows(_ivfpq_codes(enc), "codes"),
+                        layout_buckets=8, payload=_IVFPQ_PAYLOAD)
         return cents, codebook
 
-    def _mutate_and_snap():
-        src = _ann_mutated_src(spark, sf_dir, base)
-
-        def _snap_iv(ver: str | None) -> DataFrame:
-            return _ann_snap(spark, src, ver).select(
-                "vec_id", _ivfpq_milli(F.col("embedding")).alias("iemb"))
-
-        s1, s2 = _snap_iv("1").localCheckpoint(), _snap_iv("2")
-        head = _snap_iv(None).localCheckpoint()
-        ch = (_ivf_vec_changes(s1, s2, 1)
-              .unionByName(_ivf_vec_changes(s2, head, 2))
-              .localCheckpoint())
-        return head, ch
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_train = pool.submit(_session_thread(spark, _train_and_seed))
-        f_mut = pool.submit(_session_thread(spark, _mutate_and_snap))
-        cents, codebook = f_train.result()
-        head, ch = f_mut.result()
-
+    # The gen-0 IVF-PQ training + payload seed reads only the immutable
+    # embeddings parquet, while the mutation history writes only
+    # base/src: concurrent Spark jobs.
+    (cents, codebook), (_, head, ch) = run_concurrently(
+        spark, _train_and_seed,
+        lambda: _ann_vec_history(spark, sf_dir, base, _ivfpq_milli))
     # Code-carrying deltas: changed rows re-encoded against the FROZEN
     # artifacts; unchanged (list, codes) pairs are index-noise.
-    keys = ("vec_id", "commit_seq")
-    new_e = _ivfpq_encode_frozen(
-        ch.filter(F.col("change") != "delete")
-        .select("vec_id", "commit_seq", "change",
-                F.col("e_post").alias("iemb")),
-        cents, codebook, ("vec_id", "commit_seq", "change")
-    ).localCheckpoint()
-    old_e = _ivfpq_encode_frozen(
-        ch.filter(F.col("change") == "update")
-        .select("vec_id", "commit_seq", F.col("e_pre").alias("iemb")),
-        cents, codebook, keys
-    ).select("vec_id", "commit_seq",
-             F.col("centroid_id").alias("c_old"),
-             F.col("codes").alias("codes_old"))
-    moved = (new_e.join(old_e, list(keys), "left")
-             .filter(F.col("c_old").isNull()
-                     | (F.col("c_old") != F.col("centroid_id"))
-                     | (F.col("codes_old") != F.col("codes"))))
-    feed_df = (
-        moved.select(
-            "vec_id", F.col("centroid_id").cast("int").alias("bucket"),
-            "codes",
-            F.when(F.col("change") == "insert", F.lit("insert"))
-            .otherwise(F.lit("recode")).alias("change"), "commit_seq")
-        .unionByName(
-            ch.filter(F.col("change") == "delete")
-            .select("vec_id", F.lit(None).cast("int").alias("bucket"),
-                    F.lit(None).cast("array<bigint>").alias("codes"),
-                    F.lit("delete").alias("change"), "commit_seq")))
-    (feed_df.write.format("arrowipc").option("partitionBy", "commit_seq")
-     .option("snapshots", "true").option("compression", "lz4")
-     .mode("append").save(feed))
-    feed_rows = (spark.read.format("arrowipc")
-                 .option("snapshots", "true")
-                 .option("columns", "vec_id,bucket,codes,change,commit_seq")
-                 .schema("vec_id long, bucket int, codes array<bigint>, "
-                         "change string, commit_seq long")
-                 .load(feed))
+    feed_rows, _ = _ann_delta_feed(
+        spark, ch,
+        lambda v, keys: _ivfpq_encode_frozen(v, cents, codebook, keys),
+        os.path.join(base, "feed"))
 
     def _retrain(sess: SparkSession) -> DataFrame:
         # Zero-pass retrain on the head corpus: re-seeded coarse
@@ -4733,59 +4564,16 @@ def q_ann_generations_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the codebook-retrain idiom at seed cost) — fresh codes for
         # every surviving vector.
         _, _, _, _, enc1 = _ivfpq_train_encode(head, 0)
-        return (enc1.groupBy("vec_id", "centroid_id")
-                .agg(F.transform(
-                    F.array_sort(F.collect_list(F.struct("s", "code"))),
-                    lambda st: st.code).alias("codes"))
-                .select("vec_id",
-                        F.col("centroid_id").cast("int").alias("bucket"),
-                        "codes"))
+        return _index_rows(_ivfpq_codes(enc1), "codes")
 
-    pinned_gen, pinned = read_index_generation(spark, idx_root)
-    res = apply_generational_batch(spark, feed_rows, 0, idx_root,
-                                   _retrain, churn_min=0.2)
-    ptr = current_generation(idx_root)
-    _, g0 = read_index_generation(spark, idx_root, gen=0)
-    g0 = g0.localCheckpoint()   # feeds the pinned audit AND the face agg
-    _, g1 = read_index_generation(spark, idx_root)
-    # A handle opened before the roll must still read generation-0
-    # state — codes included — row identity both ways.  Materialize the
-    # pinned handle once at the audit's evaluation point: it appears on
-    # both sides of the exceptAll pair, and unmaterialized its bucketed
-    # merge-on-read (codes included) was evaluated TWICE inside the one
-    # audit job — the single most expensive action this key ran (r17).
-    pinned = pinned.localCheckpoint()
-    pinned_matches = bool(
-        pinned_gen == 0
-        and pinned.exceptAll(g0).unionByName(g0.exceptAll(pinned))
-        .count() == 0)
-
+    # Position-weighted code checksum Σ codes[s]·(s+1) per row.
     code_sum = F.aggregate(
         F.zip_with(F.col("codes"),
                    F.sequence(F.lit(1), F.size("codes")),
                    lambda c, i: c * i),
         F.lit(0).cast("long"), lambda a, x: a + x)
-
-    def _face(df: DataFrame, tag: str) -> DataFrame:
-        return (df.withColumn("csum", code_sum)
-                .groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("n_vecs"),
-                     F.sum("vec_id").cast("long").alias("id_checksum"),
-                     F.sum("csum").cast("long").alias("code_checksum"))
-                .select(F.lit(tag).alias("face"),
-                        F.col("bucket").cast("int").alias("bucket"),
-                        "n_vecs", "id_checksum", "code_checksum"))
-
-    return (_face(g0, "gen0").unionByName(_face(g1, "gen1"))
-            .select("face", "bucket", "n_vecs", "id_checksum",
-                    "code_checksum",
-                    F.lit(int(ptr["generation"])).cast("long")
-                    .alias("generation"),
-                    F.lit(int(ptr["trained_thru"])).cast("long")
-                    .alias("trained_thru"),
-                    F.lit(bool(res["rolled"])).alias("rolled"),
-                    F.lit(pinned_matches)
-                    .alias("gen0_pinned_matches")))
+    return _ann_generation_faces(spark, idx_root, feed_rows, _retrain,
+                                 code_checksum=code_sum)
 
 
 @query(
@@ -4858,6 +4646,7 @@ def q_purge_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bossarrowstorageengine_spark.streaming.ann_index import (
         INDEX_SCHEMA,
         apply_index_batch,
+        read_feed,
         read_index,
         seed_index,
     )
@@ -4869,21 +4658,11 @@ def q_purge_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, feed = _ann_mutation_feed(spark, sf_dir, base)
     seed_index(idx, _ann_bucketed(_ann_snap(spark, src, "1")),
                layout_buckets=8)   # shuffle-free read_index path
-    feed_schema = ("vec_id long, bucket int, change string, "
-                   "commit_seq long")
-
-    def _feed_rows():
-        # fresh load() per consumer (FORMAT.md §8 plan-cache hazard)
-        return (spark.read.format("arrowipc")
-                .option("snapshots", "true")
-                .option("columns", "vec_id,bucket,change,commit_seq")
-                .schema(feed_schema).load(feed))
-
-    apply_index_batch(_feed_rows(), 0, idx)
+    apply_index_batch(read_feed(spark, feed), 0, idx)
 
     # --- MV ledger: one version per commit, deltas only ---------------
     def _mv_delta(k: int) -> DataFrame:
-        touched = _feed_rows().filter(F.col("commit_seq") == k)
+        touched = read_feed(spark, feed).filter(F.col("commit_seq") == k)
         old = (read_index(spark, idx, thru=k - 1)
                .join(touched.select("vec_id"), "vec_id")
                .select("bucket", F.lit(-1).alias("dn"),
@@ -4924,22 +4703,15 @@ def q_purge_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- purge audit (fresh load per probe) ----------------------------
     purged = "vec_id % 5 = 0"
     head_v = _manifest_versions(src)[-1]
-    # One tagged-union count job for the head/previous-version probes
-    # (r17: two separate counts before — same two numbers, one action).
-    src_cnt = {r["t"]: r["n"] for r in (
-        _ann_snap(spark, src, None).filter(purged)
-        .select(F.lit("head").alias("t"))
-        .unionAll(_ann_snap(spark, src, str(head_v - 1)).filter(purged)
-                  .select(F.lit("prev").alias("t")))
-        .groupBy("t").agg(F.count(F.lit(1)).alias("n")).collect())}
-    source_purged = (src_cnt.get("head", 0) == 0
-                     and src_cnt.get("prev", 0) > 0)
+    src_cnt = _row_counts(
+        head=_ann_snap(spark, src, None).filter(purged),
+        prev=_ann_snap(spark, src, str(head_v - 1)).filter(purged))
+    source_purged = src_cnt["head"] == 0 and src_cnt["prev"] > 0
 
     n_alive_pre = (read_index(spark, idx, thru=1)
                    .filter(purged).count())
-    # Count + high-water of the purge tombstones in ONE agg job (r17:
-    # the same filtered feed scan ran twice before).
-    tomb = (_feed_rows()
+    # Count + high-water of the purge tombstones in ONE agg job.
+    tomb = (read_feed(spark, feed)
             .filter((F.col("change") == "delete") & F.expr(purged))
             .agg(F.count(F.lit(1)).alias("n"),
                  F.max("commit_seq").alias("hw")).collect()[0])
@@ -4967,12 +4739,7 @@ def q_purge_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
               .groupBy("bucket").agg(
                   F.count(F.lit(1)).cast("long").alias("n_vecs"),
                   F.sum("vec_id").cast("long").alias("id_checksum")))
-    mv_final = _mv_back(3)
-    # Both exceptAll directions in ONE count job (r17: two before; the
-    # conjunction needs both anyway on the green path).
-    mv_consistent = (mv_final.exceptAll(direct)
-                     .unionByName(direct.exceptAll(mv_final))
-                     .count() == 0)
+    mv_consistent = _same_rows(_mv_back(3), direct)
     mv_purge_version = ((spark.read.format("arrowipc")
                          .option("snapshots", "true")
                          .option("columns", "mv_version")
@@ -5060,6 +4827,7 @@ def q_purge_restore_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bossarrowstorageengine_spark.streaming.ann_index import (
         PurgeViolation,
         apply_index_batch_guarded,
+        read_feed,
         read_index,
         read_purge_ledger,
         record_purge,
@@ -5079,18 +4847,10 @@ def q_purge_restore_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     seed_index(idx, _ann_bucketed(_ann_snap(spark, src, "1")),
                layout_buckets=8)   # shuffle-free read_index path
-    feed_schema = ("vec_id long, bucket int, change string, "
-                   "commit_seq long")
-
-    def _feed_rows():
-        return (spark.read.format("arrowipc")
-                .option("snapshots", "true")
-                .option("columns", "vec_id,bucket,change,commit_seq")
-                .schema(feed_schema).load(feed))
 
     # backlog (commits 1-2): commit 1 re-buckets keys purged LATER —
     # the positional guard must NOT fire on them
-    apply_index_batch_guarded(_feed_rows(), 0, idx, ledger)
+    apply_index_batch_guarded(read_feed(spark, feed), 0, idx, ledger)
 
     # RESTORE the source past the purge, publish the resurrection diff
     res = restore_arrowipc(src, version=2)
@@ -5103,7 +4863,8 @@ def q_purge_restore_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     try:
         apply_index_batch_guarded(
-            _feed_rows().filter(F.col("commit_seq") == 3), 1, idx, ledger)
+            read_feed(spark, feed).filter(F.col("commit_seq") == 3), 1,
+            idx, ledger)
         guard_fired = False
     except PurgeViolation:
         guard_fired = True
@@ -5112,19 +4873,14 @@ def q_purge_restore_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the audited override: un-purge + apply
     info = apply_index_batch_guarded(
-        _feed_rows().filter(F.col("commit_seq") == 3), 2, idx, ledger,
-        allow_unpurge=True)
+        read_feed(spark, feed).filter(F.col("commit_seq") == 3), 2,
+        idx, ledger, allow_unpurge=True)
     ledger_cleared = (info["n_unpurged"] > 0
                       and read_purge_ledger(spark, ledger).count() == 0)
 
     state = read_index(spark, idx)
     direct = _ann_bucketed(_ann_snap(spark, src, None))
-    # Both exceptAll directions in ONE count job (r17: two before; the
-    # conjunction needs both anyway on the green path).
-    consistent = (state.select("vec_id", "bucket").exceptAll(direct)
-                  .unionByName(direct.exceptAll(
-                      state.select("vec_id", "bucket")))
-                  .count() == 0)
+    consistent = _same_rows(state.select("vec_id", "bucket"), direct)
     # versions derived, not asserted: the purge position from the
     # PRE-override ledger (time travel — the un-purge overwrite kept it),
     # the resurrection position from the feed itself
@@ -5134,7 +4890,7 @@ def q_purge_restore_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     purge_commit = (spark.read.format("arrowipc").option("version", "1")
                     .schema(LEDGER_SCHEMA).load(ledger)
                     .agg(F.max("purged_at")).collect()[0][0])
-    resurrect_commit = (_feed_rows().agg(F.max("commit_seq"))
+    resurrect_commit = (read_feed(spark, feed).agg(F.max("commit_seq"))
                         .collect()[0][0])
 
     return (read_index(spark, idx).groupBy("bucket").agg(
@@ -5413,7 +5169,16 @@ def _ivfpq_encode_frozen(vecs: DataFrame, cents: DataFrame,
         .select(*part_cols, "centroid_id", "s",
                 F.col("_m.code").alias("code"),
                 F.col("_m.cd2").alias("cd2")))
-    return (enc.groupBy(*part_cols, "centroid_id")
+    return _ivfpq_codes(enc, part_cols)
+
+
+def _ivfpq_codes(enc: DataFrame,
+                 keys: tuple[str, ...] = ("vec_id",)) -> DataFrame:
+    """Per-(vector, subspace) codes ``(*keys, centroid_id, s, code, cd2)``
+    folded into one row per vector: ``(*keys, centroid_id, codes
+    array<bigint> ordered by subspace, dist = total squared
+    quantization error)``."""
+    return (enc.groupBy(*keys, "centroid_id")
             .agg(F.transform(
                 F.array_sort(F.collect_list(F.struct("s", "code"))),
                 lambda st: st.code).alias("codes"),
@@ -6118,9 +5883,7 @@ def q_purge_text(spark: SparkSession, sf_dir: str) -> DataFrame:
               .filter(F.col("df") > 0))
     df_direct = (toks.join(purged_ids, "doc_id", "left_anti")
                  .groupBy("tok").agg(F.count(F.lit(1)).alias("df")))
-    # Both exceptAll directions in ONE count job (r17).
-    df_ok = (df_inc.exceptAll(df_direct)
-             .unionByName(df_direct.exceptAll(df_inc)).count() == 0)
+    df_ok = _same_rows(df_inc, df_direct)
 
     no_purged = _no_purged_members(surv, purged_ids)
 
@@ -6206,9 +5969,11 @@ def q_feed_index_cocompact(spark: SparkSession, sf_dir: str) -> DataFrame:
         vacuum_arrowipc,
     )
     from bossarrowstorageengine_spark.streaming.ann_index import (
+        FEED_SCHEMA,
         _seg_high_water,
         apply_index_batch,
         compact_index,
+        read_feed,
         read_index,
         seed_index,
     )
@@ -6219,19 +5984,11 @@ def q_feed_index_cocompact(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, feed = _ann_mutation_feed(spark, sf_dir, base)
     seed_index(idx, _ann_bucketed(_ann_snap(spark, src, "1")),
                layout_buckets=8)   # shuffle-free read_index path
-    feed_schema = ("vec_id long, bucket int, change string, "
-                   "commit_seq long")
 
-    def _feed_rows():
-        return (spark.read.format("arrowipc")
-                .option("snapshots", "true")
-                .option("columns", "vec_id,bucket,change,commit_seq")
-                .schema(feed_schema).load(feed))
-
-    apply_index_batch(_feed_rows(), 0, idx)
+    apply_index_batch(read_feed(spark, feed), 0, idx)
 
     def _feed_face():
-        return (_feed_rows().groupBy("commit_seq", "change").agg(
+        return (read_feed(spark, feed).groupBy("commit_seq", "change").agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("vec_id").cast("long").alias("ck")))
 
@@ -6241,27 +5998,20 @@ def q_feed_index_cocompact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- the co-compaction pass: one retention position, both tables --
     K = 2
     # schema=: the ANN feed's full on-disk layout (the bucket-grain
-    # change rows) — the rewrite's internal read skips inference
-    # (VERDICT r16 item 3).
-    res_f = compact_feed_thru(spark, feed, thru=K, schema=feed_schema)
+    # change rows) — the rewrite's internal read skips inference.
+    res_f = compact_feed_thru(spark, feed, thru=K, schema=FEED_SCHEMA)
     res_i = compact_index(spark, idx, thru=K)
     if res_f["compacted"] == 0 or res_i["files_after"] >= res_i["files_before"]:
         raise RuntimeError(
             "co-compaction was vacuous — the fixture writes feed commits "
             "1..2 and index segments 0..2, so thru=2 must rewrite both")
 
-    post_feed = _feed_face()
-    # Both exceptAll directions in ONE count job per audit pair (r17).
-    feed_ok = (pre_feed.exceptAll(post_feed)
-               .unionByName(post_feed.exceptAll(pre_feed)).count() == 0)
-    post_state = read_index(spark, idx)
-    state_ok = (pre_state.exceptAll(post_state)
-                .unionByName(post_state.exceptAll(pre_state))
-                .count() == 0)
+    feed_ok = _same_rows(pre_feed, _feed_face())
+    state_ok = _same_rows(pre_state, read_index(spark, idx))
     hw_ok = _seg_high_water(idx) == K
 
     n_ver = len(_manifest_versions(idx))
-    apply_index_batch(_feed_rows(), 1, idx)      # replay the whole feed
+    apply_index_batch(read_feed(spark, feed), 1, idx)   # replay the whole feed
     replay_ok = len(_manifest_versions(idx)) == n_ver
 
     rec_f = vacuum_arrowipc(feed, keep_versions=1)

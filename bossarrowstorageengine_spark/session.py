@@ -121,6 +121,36 @@ def build_session(app_name: str = "bossarrowstorageengine-spark",
     return spark
 
 
+def run_concurrently(spark: SparkSession, *thunks) -> list:
+    """Run each zero-argument thunk on its own driver thread, so their Spark
+    jobs share the executors, and return the results in argument order.
+
+    A fresh Python thread talks to a fresh JVM thread whose active-session
+    thread-local is unset, so creating a reader or writer for a
+    session-registered Python data source (``arrowipc``) there fails lookup
+    with ``ClassNotFoundException: arrowipc.DefaultSource``.  py4j pins each
+    Python thread to one JVM thread, so binding the active session once at
+    the start of each thunk restores the main thread's behaviour.
+
+    Every thunk runs to its end before anything is returned or raised: if
+    some raise, the first of them in argument order is re-raised once all
+    siblings have returned and every helper thread has exited, so no thread
+    goes on submitting jobs for a caller that has already failed."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def bound(fn):
+        def run():
+            spark._jvm.org.apache.spark.sql.SparkSession.setActiveSession(
+                spark._jsparkSession)
+            return fn()
+        return run
+
+    # Leaving the block joins every worker thread.
+    with ThreadPoolExecutor(max_workers=max(1, len(thunks))) as pool:
+        futures = [pool.submit(bound(fn)) for fn in thunks]
+    return [f.result() for f in futures]
+
+
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime-mutable SQL confs to an existing session.
 

@@ -40,14 +40,34 @@ from pyspark.sql import functions as F
 #: Persisted index-segment row layout.
 INDEX_SCHEMA = "vec_id long, bucket int, tombstone boolean, seg long"
 
-#: Column set the maintainer reads back from the bucket-grain feed.
+#: Row layout of the bucket-grain changefeed the maintainer reads.
 FEED_SCHEMA = "vec_id long, bucket int, change string, commit_seq long"
 
 
 def _payload_cols(ddl: str) -> list[str]:
-    """Column names of a payload DDL (comma-free types only — enforced
-    at seed time)."""
+    """Column names of a DDL string (comma-free types only — enforced
+    for payloads at seed time)."""
     return [c.strip().split(" ")[0] for c in ddl.split(",")]
+
+
+def read_feed(spark: SparkSession, feed_dir: str,
+              payload: str | None = None, *, stream: bool = False,
+              tagged: bool = False) -> DataFrame:
+    """Load an index changefeed: ``FEED_SCHEMA`` with the index's payload
+    DDL (e.g. ``"codes array<bigint>"``) after ``bucket``, and, for a
+    generation-tagged feed, the producer's ``gen long`` last.  A batch
+    read (fresh ``load()`` per call: FORMAT.md §8's plan-cache hazard)
+    follows the head manifest; ``stream=True`` tails the feed instead."""
+    schema = FEED_SCHEMA
+    if payload:
+        schema = schema.replace("bucket int,", f"bucket int, {payload},")
+    if tagged:
+        schema += ", gen long"
+    reader = (spark.readStream if stream
+              else spark.read.option("snapshots", "true"))
+    return (reader.format("arrowipc")
+            .option("columns", ",".join(_payload_cols(schema)))
+            .schema(schema).load(feed_dir))
 
 
 def seed_index(idx_dir: str, bucketed: DataFrame,
@@ -58,7 +78,7 @@ def seed_index(idx_dir: str, bucketed: DataFrame,
     one corpus-sized build.  ``bucketed`` must carry ``(vec_id,
     bucket)``.
 
-    ``base_seg`` (r15, the generation-rollover face): a re-trained
+    ``base_seg`` (the generation-rollover face): a re-trained
     generation's base already REFLECTS every feed commit up to the
     position it trained at, so it seeds with that position as its base
     segment — the segment high-water then makes a redelivered
@@ -74,7 +94,7 @@ def seed_index(idx_dir: str, bucketed: DataFrame,
     shuffle (the groupByBucket + mapInPandas path).  Size N so a
     bucket's merged rows fit one task's memory.
 
-    ``payload`` (r15, the IVF-PQ face): extra per-key column DDL (e.g.
+    ``payload`` (the IVF-PQ face): extra per-key column DDL (e.g.
     ``"codes array<int>"``) carried through every segment and the
     merge-on-read — the delta segments are then DELTA-ENCODED CODES,
     not just list moves.  Payload columns ride last-wins with their
@@ -90,7 +110,7 @@ def seed_index(idx_dir: str, bucketed: DataFrame,
             # (struct/map) shows up here as a fragment with unbalanced
             # angle brackets, and a missing type / trailing comma as a
             # one-token (or empty) entry — both are ValueError, never a
-            # bare IndexError (ADVICE r15).
+            # bare IndexError.
             if len(parts) != 2 or parts[1].count("<") != parts[1].count(">"):
                 raise ValueError(
                     f"payload DDL {payload!r}: entry {entry.strip()!r} "
@@ -196,8 +216,7 @@ def apply_index_batch(batch_df: DataFrame, batch_id: int,
     # One materialization before the mixed filtered actions below (the
     # documented arrowipc pushdown plan-cache hazard), and each commit
     # re-reads it anyway.  The commit list doubles as the emptiness
-    # probe (r17: the old separate take(1) was one more full job at the
-    # per-action floor; an empty batch's checkpoint is a no-op job).
+    # probe (an empty batch's checkpoint is a no-op job).
     batch = batch_df.localCheckpoint()
     all_commits = sorted(
         int(r["commit_seq"])
@@ -376,9 +395,7 @@ def ann_index_stream(spark: SparkSession, feed_dir: str, idx_dir: str,
             "position needs a group name and a table to land in")
 
     register_arrowipc(spark)
-    feed = (spark.readStream.format("arrowipc")
-            .option("columns", "vec_id,bucket,change,commit_seq")
-            .schema(FEED_SCHEMA).load(feed_dir))
+    feed = read_feed(spark, feed_dir, stream=True)
 
     def _apply(df: DataFrame, bid: int) -> None:
         apply_index_batch(df, bid, idx_dir)
@@ -476,7 +493,7 @@ def apply_index_batch_guarded(batch_df: DataFrame, batch_id: int,
 
 
 # ---------------------------------------------------------------------------
-# Generation rollover (r15, VERDICT r14 item 3): the batch re-train arm of
+# Generation rollover: the batch re-train arm of
 # q_ann_ivf_maintained as a LIVE foreachBatch face — the maintainer rolls
 # the TRAINED index to generation k+1 when the drift monitor trips, while
 # searches stay pinned to the generation they opened.
@@ -524,9 +541,7 @@ def _seeded_rows(idx_dir: str) -> int:
     """Row count of a freshly seeded index table from its stats sidecars
     (the writer emits one per part; the manifest names the parts) —
     metadata only, no Spark job.  Exactly the rows the seed's save just
-    streamed, so it replaces a second corpus-sized ``count()`` pass
-    (r17, VERDICT r16 item 1: each such count was one more full job on
-    an UNmaterialized corpus-sized frame)."""
+    streamed, so it replaces a second corpus-sized ``count()`` pass."""
     from bossarrowstorageengine_spark.sources.arrowipc import (
         _manifest_versions,
         _read_manifest,
@@ -595,18 +610,22 @@ def _read_gen_meta(gdir: str) -> dict | None:
 
 def generation_churn(spark: SparkSession, idx_root: str,
                      gen: int) -> float:
-    """Cumulative assignment churn of one generation: distinct keys in
-    its DELTA segments over its base row count — the streaming face of
-    ``q_ann_ivf_maintained``'s churn trigger (the base seg is the
-    generation's training snapshot, so the ratio is exactly 'what
-    fraction of the trained corpus has moved since').
+    """THE churn of one generation, the re-train trigger every maintained
+    index uses (the batch keys ``q_ann_ivf_maintained``,
+    ``q_ann_ivfpq_maintained``, ``q_ann_generations[_payload]`` and the
+    streaming ``ivf_index_stream``): distinct keys in the generation's
+    DELTA segments over its base row count — the fraction of the trained
+    corpus whose index row has changed or died since training.  A key
+    counts once however many commits touched it, and a change that never
+    reached the index (an update that keeps a vector's list and payload
+    is index-noise, dropped before the feed) does not count at all.
 
-    Scale: the monitor runs after EVERY micro-batch, so it must never
-    re-scan the corpus-sized base — the base row count comes from the
+    Scale: the monitor may run after every micro-batch, so it never
+    re-scans the corpus-sized base — the base row count comes from the
     seed-time ``_gen.json``, and the delta read pushes ``seg >
     base_seg`` down to the partition directories (O(deltas) per call).
-    Generations seeded before r15's meta file fall back to one full
-    scan per call."""
+    A generation without the meta file pays one full scan, once: the
+    fallback records what it scanned."""
     gdir = generation_dir(idx_root, gen)
     meta = _read_gen_meta(gdir)
     if meta is None:   # pre-meta generation: one full scan, then backfill
@@ -618,9 +637,8 @@ def generation_churn(spark: SparkSession, idx_root: str,
         n_base = rows.filter(F.col("seg") == base).count()
         n_delta = (rows.filter(F.col("seg") > base)
                    .select("vec_id").distinct().count())
-        # One-time backfill (VERDICT r15 blemish 1): record the scanned
-        # base under the r15 meta convention so every subsequent call on
-        # this generation takes the O(deltas) path.
+        # Backfill: every later call on this generation takes the
+        # O(deltas) path.
         _write_gen_meta(gdir, base, n_base)
         return (n_delta / n_base) if n_base else 0.0
     n_base = int(meta["base_rows"])
@@ -693,18 +711,8 @@ def ivf_index_stream(spark: SparkSession, feed_dir: str, idx_root: str,
     ptr0 = current_generation(idx_root)
     pay_ddl = _payload_ddl(generation_dir(idx_root,
                                           int(ptr0["generation"])))
-    cols = "vec_id,bucket"
-    schema = "vec_id long, bucket int"
-    if pay_ddl:
-        cols += "," + ",".join(_payload_cols(pay_ddl))
-        schema += f", {pay_ddl}"
-    cols += ",change,commit_seq"
-    schema += ", change string, commit_seq long"
-    if generation_tagged:
-        cols += ",gen"
-        schema += ", gen long"
-    feed = (spark.readStream.format("arrowipc")
-            .option("columns", cols).schema(schema).load(feed_dir))
+    feed = read_feed(spark, feed_dir, pay_ddl, stream=True,
+                     tagged=generation_tagged)
 
     def _apply(df: DataFrame, bid: int) -> None:
         apply_generational_batch(spark, df, bid, idx_root, retrain,
@@ -768,25 +776,25 @@ def apply_generational_batch(spark: SparkSession, df: DataFrame,
 def roll_generation(idx_root: str, new_base, absorbed: int, *,
                     layout_buckets: int | None = None,
                     payload: str | None = None) -> dict:
-    """Publish a re-trained base as the NEXT generation — the ONE roll
-    path shared by the streaming maintainer (``ivf_index_stream``'s
-    churn-triggered roll via :func:`apply_generational_batch`) and the
-    batch maintained-index faces (``q_ann_ivf_maintained`` /
-    ``q_ann_ivfpq_maintained``), r16 unification (VERDICT r15 item 2).
-    ``new_base`` is the retrained ``(vec_id, bucket[, payload...])``
-    frame or a zero-arg thunk producing it; ``absorbed`` is the feed
-    position the training reflects (seeded as ``base_seg`` so
-    redelivered pre-roll commits no-op, published as ``trained_thru``).
+    """Publish a re-trained base as the NEXT generation — the one roll
+    path of every maintained index: the churn-triggered roll of
+    :func:`apply_generational_batch` (``ivf_index_stream``,
+    ``q_ann_generations[_payload]``) and the re-trains of
+    ``q_ann_ivf_maintained`` / ``q_ann_ivfpq_maintained``, whose trigger
+    is :func:`generation_churn` too.  ``new_base`` is the retrained
+    ``(vec_id, bucket[, payload...])`` frame or a zero-arg thunk
+    producing it; ``absorbed`` is the feed position the training
+    reflects (seeded as ``base_seg`` so redelivered pre-roll commits
+    no-op, published as ``trained_thru``).
 
-    Crash-idempotent (ADVICE r15 medium): the seed lands in a temp dir
-    committed by ONE atomic os.rename, so the target directory's
-    existence proves a COMPLETE seed.  A replay after a crash between
-    the rename and the pointer flip resumes by publishing — the thunk
-    is never re-invoked (a second append-mode seed would stack a
-    duplicate base segment at the same seg, and a non-deterministic
-    retrain would mix rows from two trainings under last-wins).  A
-    crash MID-seed leaves only a ``.tmp`` orphan, swept on the next
-    roll attempt."""
+    Crash-idempotent: the seed lands in a temp dir committed by ONE
+    atomic os.rename, so the target directory's existence proves a
+    COMPLETE seed.  A replay after a crash between the rename and the
+    pointer flip resumes by publishing — the thunk is never re-invoked
+    (a second append-mode seed would stack a duplicate base segment at
+    the same seg, and a non-deterministic retrain would mix rows from
+    two trainings under last-wins).  A crash MID-seed leaves only a
+    ``.tmp`` orphan, swept on the next roll attempt."""
     import shutil
 
     cur = int(current_generation(idx_root)["generation"])
@@ -799,9 +807,8 @@ def roll_generation(idx_root: str, new_base, absorbed: int, *,
         return {"generation": cur + 1, "rolled": True}
     base_df = new_base() if callable(new_base) else new_base
     # The seed's save is base_df's ONLY consumer (the meta row count
-    # comes from the staged stats sidecars below), so the frame needs no
-    # materialization point — the thunk is invoked once either way (r17;
-    # the old localCheckpoint + count() were two extra jobs per roll).
+    # comes from the stats sidecars below), so the frame needs no
+    # materialization point.
     tmp = ndir + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     seed_index(tmp, base_df, layout_buckets=layout_buckets,
@@ -839,7 +846,7 @@ def vacuum_generations(idx_root: str, keep: int = 2) -> dict:
         if (m := re.fullmatch(r"gen=(\d+)", d)))
     keep = max(1, int(keep))
     # Retention counts directories actually PRESENT, not generation
-    # numbers (ADVICE r15): with gaps (dirs gen=0 and gen=5, keep=2) a
+    # numbers: with gaps (dirs gen=0 and gen=5, keep=2) a
     # number window ``g > cur - keep`` would delete gen=0 even though
     # only one newer generation exists.
     kept_set = set(gens[-keep:]) | {cur}

@@ -319,8 +319,9 @@ def test_stream_ivf_generation_rollover(spark, tmp_path):
     restart redelivers the whole backlog: the rolled generation's
     base_seg high-water makes it a no-op and no double-roll fires."""
     from bossarrowstorageengine_spark.operators.llm_pipeline import (
-        _ann_mutated_src, _ann_snap, _ivf_assign_frozen, _ivf_int_vec,
-        _ivf_lloyd, _ivf_train, _ivf_vec_changes)
+        _ann_delta_feed, _ann_mutated_src, _ann_snap, _index_rows,
+        _ivf_assign_frozen, _ivf_int_vec, _ivf_lloyd, _ivf_train,
+        _ivf_vec_changes)
     from bossarrowstorageengine_spark.streaming.ann_index import (
         current_generation, generation_churn, ivf_index_stream,
         read_index_generation, seed_generation)
@@ -334,8 +335,7 @@ def test_stream_ivf_generation_rollover(spark, tmp_path):
 
     iv, cents = _ivf_train(spark, sf)
     cents = cents.localCheckpoint()
-    seed_generation(idx_root, _ivf_assign_frozen(iv, cents).select(
-        "vec_id", F.col("centroid_id").cast("int").alias("bucket")))
+    seed_generation(idx_root, _index_rows(_ivf_assign_frozen(iv, cents)))
 
     def _snap_iv(ver):
         return _ann_snap(spark, src, ver).select(
@@ -346,38 +346,16 @@ def test_stream_ivf_generation_rollover(spark, tmp_path):
     head = _snap_iv(None).localCheckpoint()
 
     def _feed_commit(pre, post, seq):
-        ch = _ivf_vec_changes(pre, post, seq)
-        keys = ("vec_id", "commit_seq")
-        new_a = _ivf_assign_frozen(
-            ch.filter(F.col("change") != "delete")
-            .select("vec_id", "commit_seq", "change",
-                    F.col("e_post").alias("iemb")), cents, keys
-        ).withColumnRenamed("centroid_id", "c_new")
-        old_a = _ivf_assign_frozen(
-            ch.filter(F.col("change") == "update")
-            .select("vec_id", "commit_seq",
-                    F.col("e_pre").alias("iemb")), cents, keys
-        ).select("vec_id", "commit_seq",
-                 F.col("centroid_id").alias("c_old"))
-        moved = (new_a.join(old_a, list(keys), "left")
-                 .filter(F.col("c_old").isNull()
-                         | (F.col("c_old") != F.col("c_new"))))
-        rows = (moved.select(
-            "vec_id", F.col("c_new").cast("int").alias("bucket"),
-            F.lit("rebucket").alias("change"), "commit_seq")
-            .unionByName(ch.filter(F.col("change") == "delete").select(
-                "vec_id", F.lit(None).cast("int").alias("bucket"),
-                F.lit("delete").alias("change"), "commit_seq")))
-        (rows.write.format("arrowipc").option("partitionBy", "commit_seq")
-         .option("snapshots", "true").option("compression", "lz4")
-         .mode("append").save(feed))
+        # the batch key's delta-feed path, one commit per call
+        _ann_delta_feed(spark, _ivf_vec_changes(pre, post, seq),
+                        lambda v, keys: _ivf_assign_frozen(v, cents, keys),
+                        feed)
 
     _feed_commit(s1, s2, 1)
 
     def _retrain(sess):
-        return _ivf_assign_frozen(head, _ivf_lloyd(head).localCheckpoint()
-                                  ).select(
-            "vec_id", F.col("centroid_id").cast("int").alias("bucket"))
+        return _index_rows(_ivf_assign_frozen(
+            head, _ivf_lloyd(head).localCheckpoint()))
 
     q = ivf_index_stream(spark, feed, idx_root, os.path.join(base, "ck1"),
                          _retrain, churn_min=0.2)
@@ -398,10 +376,8 @@ def test_stream_ivf_generation_rollover(spark, tmp_path):
 
     # Differential vs the batch key's generations:
     # gen 0 fully maintained == from-scratch frozen assignment of head.
-    direct0 = sorted((r.vec_id, r.bucket) for r in _ivf_assign_frozen(
-        head, cents).select(
-        "vec_id", F.col("centroid_id").cast("int").alias("bucket"))
-        .collect())
+    direct0 = sorted((r.vec_id, r.bucket) for r in _index_rows(
+        _ivf_assign_frozen(head, cents)).collect())
     _, g0 = read_index_generation(spark, idx_root, gen=0)
     assert sorted(map(tuple, g0.collect())) == direct0
     # the PINNED pre-roll search handle still reads generation 0.

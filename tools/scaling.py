@@ -173,7 +173,8 @@ FLOOR_NOTES = {
     "q_ann_ivf_maintained": (
         "3-action mutation history + TWO Lloyd trainings (frozen gen-0 "
         "+ the fired gen-1 re-train) + bucketed seed/segment/gen-1 "
-        "writes + feed write + assignment audit + drift aggregates — "
+        "writes + feed write + assignment audit + drift aggregate + "
+        "delta-segment churn count — "
         "the delta-assignment path itself is O(changed rows x k)."),
     "q_purge_derived": (
         "src write + purge DELETE + pack-map seed (32-shard partitioned "
@@ -195,7 +196,8 @@ FLOOR_NOTES = {
         "3-action mutation history + TWO full IVF-PQ trainings (frozen "
         "gen-0 coarse+codebooks; the fired gen-1 re-train) + bucketed "
         "payload seed/segments/gen-1 writes + feed write + exceptAll "
-        "code audit + ADC search — the delta re-encode itself is "
+        "code audit + distortion aggregates + delta-segment churn count "
+        "+ ADC search — the delta re-encode itself is "
         "O(changed rows x (k + m x codes))."),
     "q_timetravel_asof": (
         "3 snapshotted appends + 3 manifest-ts pins + 3 timestamp-"
