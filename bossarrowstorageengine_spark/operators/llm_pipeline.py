@@ -18,8 +18,9 @@ Scale design (100 TB of documents):
 from __future__ import annotations
 
 from functools import reduce
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bossarrowstorageengine_spark.catalog import load_table
@@ -1195,13 +1196,14 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_nearest(vecs: DataFrame, cents: DataFrame, n: int,
-                 vec_col: str) -> DataFrame:
+                 vec_col: str, keys: tuple[str, ...] = ()) -> DataFrame:
     """Each vector's ``n`` nearest centroids by exact-integer cosine
     (tie → lower centroid_id) — the assignment step shared by training,
-    list building, and probing."""
+    list building, probing and the frozen delta assignment.  A vector is
+    keyed by ``keys`` (default: the first column)."""
     scored = vecs.crossJoin(F.broadcast(cents)).withColumn(
         "sim", _ivf_cos(F.col(vec_col), F.col("cent")))
-    w = Window.partitionBy(vecs.columns[0]).orderBy(
+    w = Window.partitionBy(*(keys or vecs.columns[:1])).orderBy(
         F.col("sim").desc(), F.asc("centroid_id"))
     return scored.withColumn("crn", F.row_number().over(w)) \
         .filter(F.col("crn") <= n).drop("crn", "sim")
@@ -1263,6 +1265,13 @@ def _ivf_train(spark: SparkSession, sf_dir: str) -> tuple[DataFrame,
     return iv, _ivf_lloyd(iv)
 
 
+def _probe_rows(iv: DataFrame, *ids: int) -> DataFrame:
+    """The probe vectors ``(probe_id, piemb)`` of the ``(vec_id, iemb)``
+    rows ``ids``."""
+    return iv.filter(F.col("vec_id").isin(*ids)).select(
+        F.col("vec_id").alias("probe_id"), F.col("iemb").alias("piemb"))
+
+
 def _ivf_candidates(iv: DataFrame, cents: DataFrame) -> DataFrame:
     """IVF candidate generation: every vector lands in exactly one
     inverted list; each probe's candidates are the members of its
@@ -1270,8 +1279,7 @@ def _ivf_candidates(iv: DataFrame, cents: DataFrame) -> DataFrame:
     ``(centroid_id, vec_id, iemb, probe_id, piemb)``."""
     lists = _ivf_nearest(iv, cents, 1, "iemb").select(
         "vec_id", "iemb", "centroid_id")
-    probes = iv.filter(F.col("vec_id").isin(0, 1, 2)).select(
-        F.col("vec_id").alias("probe_id"), F.col("iemb").alias("piemb"))
+    probes = _probe_rows(iv, 0, 1, 2)
     probe_lists = _ivf_nearest(probes, cents, _IVF_NPROBE, "piemb").select(
         "probe_id", "piemb", "centroid_id")
     return lists.join(F.broadcast(probe_lists), "centroid_id").filter(
@@ -3133,8 +3141,8 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # set); the exact rerank composes lazily on the result.
         iv2, cents2, _, codebook2, enc2 = _ivfpq_encode(
             spark, sf_dir, _PQ_LLOYD_PASSES)
-        probes2, iq_adc = _ivfpq_adc(iv2, cents2, codebook2,
-                                     enc2.drop("cd2"))
+        probes2 = _probe_rows(iv2, 0, 1, 2)
+        iq_adc = _ivfpq_adc(probes2, cents2, codebook2, enc2.drop("cd2"))
         return iv2, probes2, iq_adc.localCheckpoint()
 
     # The four chains are independent trainings over the same immutable
@@ -3531,12 +3539,8 @@ def _ivf_assign_frozen(vecs: DataFrame, cents: DataFrame,
     delta assignment can key on (vec_id, commit_seq) and a vector
     re-assigned by two different commits never mixes ranks.  Returns
     ``(*part_cols, centroid_id)``."""
-    scored = vecs.crossJoin(F.broadcast(cents)).withColumn(
-        "sim", _ivf_cos(F.col("iemb"), F.col("cent")))
-    w = Window.partitionBy(*part_cols).orderBy(
-        F.col("sim").desc(), F.asc("centroid_id"))
-    return (scored.withColumn("crn", F.row_number().over(w))
-            .filter(F.col("crn") == 1).select(*part_cols, "centroid_id"))
+    return _ivf_nearest(vecs, cents, 1, "iemb", part_cols).select(
+        *part_cols, "centroid_id")
 
 
 def _ivf_vec_changes(pre: DataFrame, post: DataFrame, seq: int) -> DataFrame:
@@ -3586,7 +3590,7 @@ def _ann_vec_history(spark: SparkSession, sf_dir: str, base: str,
 
 
 def _ann_delta_feed(spark: SparkSession, ch: DataFrame, encode,
-                    feed: str) -> tuple[DataFrame, DataFrame]:
+                    feed: str) -> tuple[DataFrame, float | None]:
     """Publish a trained index's changefeed for the vector-grain commits
     ``ch`` at ``feed`` (both commits in one write job) and read it back.
 
@@ -3599,18 +3603,23 @@ def _ann_delta_feed(spark: SparkSession, ch: DataFrame, encode,
     keeps its list and payload is index-noise and is dropped (the LSH
     feed's 'same' rule); the rest land as insert / move rows carrying the
     new list and payload, and deletes as tombstone rows.  Returns
-    ``(feed_rows, new)``: the feed read back and the encoded
-    post-images (materialized)."""
+    ``(feed_rows, mean_dist)``: the feed read back and the mean ``dist``
+    over every encoded post-image (None when the encoder emits no
+    ``dist`` or no post-image exists), observed by the feed write's own
+    job."""
     from bossarrowstorageengine_spark.streaming.ann_index import read_feed
 
     keys = ["vec_id", "commit_seq"]
-    # Materialized: the IVF-PQ distortion monitor reads it again, and its
-    # multi-stage encode would otherwise run twice.
     new = encode(ch.filter(F.col("change") != "delete")
                  .select(*keys, "change", F.col("e_post").alias("iemb")),
-                 (*keys, "change")).localCheckpoint()
+                 (*keys, "change"))
     pay = [c for c in new.columns
            if c not in (*keys, "change", "centroid_id", "dist")]
+    mean_dist = Observation() if "dist" in new.columns else None
+    if mean_dist is not None:
+        # Observed before the index-noise filter: the mean covers every
+        # post-image, and the encode runs once, inside the write.
+        new = new.observe(mean_dist, F.avg("dist").alias("dist"))
     old = encode(ch.filter(F.col("change") == "update")
                  .select(*keys, F.col("e_pre").alias("iemb")),
                  tuple(keys)).select(
@@ -3637,7 +3646,8 @@ def _ann_delta_feed(spark: SparkSession, ch: DataFrame, encode,
      .mode("append").save(feed))
     payload = ", ".join(f"{c} {new.schema[c].dataType.simpleString()}"
                         for c in pay)
-    return read_feed(spark, feed, payload or None), new
+    return (read_feed(spark, feed, payload or None),
+            None if mean_dist is None else mean_dist.get["dist"])
 
 
 def _index_rows(df: DataFrame, *payload: str) -> DataFrame:
@@ -3648,8 +3658,13 @@ def _index_rows(df: DataFrame, *payload: str) -> DataFrame:
 
 
 def _same_rows(a: DataFrame, b: DataFrame) -> bool:
-    """Row identity both ways (multiset equality) in ONE count job."""
-    return a.exceptAll(b).unionByName(b.exceptAll(a)).count() == 0
+    """Row identity both ways (multiset equality, ``a.exceptAll(b)`` and
+    ``b.exceptAll(a)`` both empty) in ONE count job that reads each side
+    once: every distinct row occurs as often in ``a`` as in ``b``."""
+    side = "_same_rows_side"
+    diff = (a.withColumn(side, F.lit(1)).union(b.withColumn(side, F.lit(-1)))
+            .groupBy(*a.columns).agg(F.sum(side).alias(side)))
+    return diff.filter(F.col(side) != 0).count() == 0
 
 
 def _row_counts(**frames: DataFrame) -> dict[str, int]:
@@ -3675,6 +3690,199 @@ def _retire_gen0(idx_root: str) -> bool:
     vac = vacuum_generations(idx_root, keep=1)
     return bool(vac == {"removed_generations": [0], "kept": [1]}
                 and not os.path.exists(generation_dir(idx_root, 0)))
+
+
+class _Quantizer(NamedTuple):
+    """The hooks of :func:`_ann_trained_maintained`: everything the IVF
+    and IVF-PQ lifecycles do not share.  ``art`` is what
+    ``train_and_seed`` returned (the frozen generation-0 artifacts)."""
+
+    #: float embedding column -> the family's exact integer vector
+    int_vec: Callable
+    #: ``(spark, sf_dir, idx_root) -> art``: train generation 0 on the v1
+    #: corpus and seed its index rows under the generation pointer
+    train_and_seed: Callable
+    #: ``(art, vecs, keys) -> (*keys, centroid_id[, payload...][, dist])``
+    #: — the FROZEN quantizer
+    encode: Callable
+    #: ``(art, s1, head, mean_dist) -> bool``: the drift half of the
+    #: re-train trigger (``mean_dist`` as :func:`_ann_delta_feed` returns it)
+    drifted: Callable
+    #: ``head -> (gen-1 index rows, gen-1 centroids)``: the re-train
+    retrain: Callable
+    #: inclusive bounds on an intact re-train's centroid count
+    cents_range: tuple[int, int]
+    #: ``gen1 -> rows`` malformed for this quantizer (must be empty)
+    gen1_bad: Callable
+    #: ``(art, maintained, head, probes) -> rows``: the search over the
+    #: maintained generation-0 state
+    search: Callable
+
+
+def _ann_trained_gen0(spark: SparkSession, sf_dir: str, base: str,
+                      idx_root: str, q: _Quantizer):
+    """Generation 0 of a trained maintained index beside its mutation
+    history: ``q.train_and_seed`` reads only the immutable embeddings
+    parquet and the history (:func:`_ann_vec_history`) writes only
+    ``base/src``, so the two run as concurrent Spark jobs.  Returns
+    ``(art, s1, head, ch)``."""
+    art, hist = run_concurrently(
+        spark, lambda: q.train_and_seed(spark, sf_dir, idx_root),
+        lambda: _ann_vec_history(spark, sf_dir, base, q.int_vec))
+    return (art, *hist)
+
+
+def _ann_trained_maintained(spark: SparkSession, sf_dir: str, scratch: str,
+                            q: _Quantizer) -> DataFrame:
+    """The lifecycle of a trained maintained index, the re-train-on-drift
+    loop of *Continuously Adaptive Similarity Search* (SIGMOD 2020):
+
+    1. train generation 0 on the v1 corpus and seed it
+       (:func:`_ann_trained_gen0`);
+    2. concurrently: re-train generation 1 on the head corpus, and apply
+       the delta feed (changed rows encoded against the FROZEN
+       quantizer, :func:`_ann_delta_feed`) to generation 0, pin and
+       materialize generation 0, audit it against a from-scratch frozen
+       encode of the head (row identity both ways), and evaluate the
+       re-train trigger — ``q.drifted`` OR ``generation_churn`` over
+       ``_IVF_CHURN_MIN``;
+    3. roll generation 1 (:func:`roll_generation`), attest it (the
+       pointer moved, ``q.cents_range`` centroids, one row per head
+       vector, no ``q.gen1_bad`` row) and retire generation 0 — the
+       pinned state already materialized, so the search outlives it;
+    4. search the pinned generation-0 state (``q.search``) for probes
+       1-3 and append the five attestation columns ``generation``,
+       ``index_consistent``, ``retrain_due``, ``gen1_trained`` and
+       ``vacuumed``.
+
+    Scale: maintenance is O(Δ·k) per commit against broadcast artifacts;
+    the audit and the re-trains are the scheduled corpus passes, never
+    the refresh path."""
+    import os
+
+    from bossarrowstorageengine_spark.operators.scans import _scratch
+    from bossarrowstorageengine_spark.sources import register_arrowipc
+    from bossarrowstorageengine_spark.streaming.ann_index import (
+        apply_index_batch,
+        generation_churn,
+        generation_dir,
+        read_index_generation,
+        roll_generation,
+    )
+
+    register_arrowipc(spark)
+    base = _scratch(sf_dir, scratch)
+    idx_root = os.path.join(base, "idx_gens")
+    art, s1, head, ch = _ann_trained_gen0(spark, sf_dir, base, idx_root, q)
+
+    def encode(vecs: DataFrame, keys=("vec_id",)) -> DataFrame:
+        return q.encode(art, vecs, keys)
+
+    def maintain_and_audit():
+        feed_rows, mean_dist = _ann_delta_feed(
+            spark, ch, encode, os.path.join(base, "feed"))
+        apply_index_batch(feed_rows, 0, generation_dir(idx_root, 0))
+        pinned_gen, maintained = read_index_generation(spark, idx_root)
+        maintained = maintained.localCheckpoint()
+        direct = _index_rows(encode(head), *maintained.columns[2:])
+        # Independent reads over materialized frames: concurrent jobs.
+        consistent, drifted, churn = run_concurrently(
+            spark, lambda: _same_rows(maintained, direct),
+            lambda: q.drifted(art, s1, head, mean_dist),
+            lambda: generation_churn(spark, idx_root, 0))
+        return (pinned_gen, maintained, consistent,
+                bool(drifted or churn > _IVF_CHURN_MIN))
+
+    # The re-train depends only on `head`, so its training jobs overlap
+    # the feed write, the delta apply and the audit.
+    (rows1, cents1), (pinned_gen, maintained, consistent, retrain_due) = (
+        run_concurrently(spark, lambda: q.retrain(head), maintain_and_audit))
+    roll = roll_generation(idx_root, lambda: rows1)
+    gen1_no, gen1 = read_index_generation(spark, idx_root)
+    cnt = _row_counts(cents1=cents1, gen1=gen1, head=head,
+                      bad=q.gen1_bad(gen1))
+    lo, hi = q.cents_range
+    gen1_trained = bool(
+        roll == {"generation": 1, "rolled": True} and gen1_no == 1
+        and lo <= cnt["cents1"] <= hi and cnt["gen1"] == cnt["head"]
+        and cnt["bad"] == 0)
+    vacuumed = _retire_gen0(idx_root)
+
+    return q.search(art, maintained, head,
+                    _probe_rows(head, 1, 2, 3)).select(
+        "*",
+        F.lit(pinned_gen).cast("long").alias("generation"),
+        F.lit(consistent).alias("index_consistent"),
+        F.lit(retrain_due).alias("retrain_due"),
+        F.lit(gen1_trained).alias("gen1_trained"),
+        F.lit(vacuumed).alias("vacuumed"),
+    )
+
+
+def _ivf_train_and_seed(spark: SparkSession, sf_dir: str,
+                        idx_root: str) -> DataFrame:
+    """``q_ann_ivf``'s training chain on the v1 corpus; the frozen
+    centroids (16 rows, materialized — they feed the seed, every delta
+    assignment, the audit and the probes) seed generation 0's inverted
+    lists on the bucketed layout (the shuffle-free ``read_index``
+    path)."""
+    from bossarrowstorageengine_spark.streaming.ann_index import (
+        seed_generation,
+    )
+
+    iv, cents = _ivf_train(spark, sf_dir)
+    cents = cents.localCheckpoint()
+    seed_generation(idx_root, _index_rows(_ivf_assign_frozen(iv, cents)),
+                    layout_buckets=8)
+    return cents
+
+
+def _ivf_drifted(cents: DataFrame, s1: DataFrame, head: DataFrame,
+                 mean_dist) -> bool:
+    """The centroid-shift monitor (``q_embedding_drift``'s metric, the
+    frozen v1 corpus vs the head) past ``_IVF_DRIFT_SHIFT_MIN``."""
+    def _mean_dims(df: DataFrame, m: str) -> DataFrame:
+        return (df.select(F.posexplode("iemb").alias("dim", "x"))
+                .groupBy("dim")
+                .agg((F.sum("x").cast("double") / F.count(F.lit(1))
+                      / _IVF_MICRO).alias(m)))
+
+    d = F.col("m0") - F.col("m1")
+    shift = (_mean_dims(s1, "m0").join(_mean_dims(head, "m1"), "dim")
+             .agg(F.sqrt(F.sum(d * d))).collect()[0][0])
+    return shift > _IVF_DRIFT_SHIFT_MIN
+
+
+def _ivf_retrain(head: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The same Lloyd chain on the head corpus (centroids materialized:
+    the gen-1 assignment and its attestation both read them)."""
+    cents1 = _ivf_lloyd(head).localCheckpoint()
+    return _index_rows(_ivf_assign_frozen(head, cents1)), cents1
+
+
+def _ivf_maintained_search(cents: DataFrame, maintained: DataFrame,
+                           head: DataFrame, probes: DataFrame) -> DataFrame:
+    """Probes rank the members of their ``_IVF_NPROBE`` nearest FROZEN
+    lists by exact-integer cosine; list membership comes ONLY from the
+    maintained index, embeddings from the head."""
+    probe_lists = _ivf_nearest(probes, cents, _IVF_NPROBE, "piemb").select(
+        "probe_id", "piemb", F.col("centroid_id").cast("int").alias("bucket"))
+    cands = (maintained.join(head, "vec_id")
+             .join(F.broadcast(probe_lists), "bucket")
+             .filter(F.col("vec_id") != F.col("probe_id")))
+    return _ivf_topk(cands)
+
+
+_IVF_QUANTIZER = _Quantizer(
+    int_vec=_ivf_int_vec,
+    train_and_seed=_ivf_train_and_seed,
+    encode=lambda cents, vecs, keys: _ivf_assign_frozen(vecs, cents, keys),
+    drifted=_ivf_drifted,
+    retrain=_ivf_retrain,
+    cents_range=(_IVF_K, _IVF_K),
+    gen1_bad=lambda g: g.filter(~F.col("bucket").between(0, _IVF_K - 1)),
+    search=_ivf_maintained_search,
+)
 
 
 _ANN_IVF_MAINTAINED_ORACLE = f"""
@@ -3732,40 +3940,30 @@ def q_ann_ivf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF INDEX MAINTENANCE UNDER MUTATIONS: the LSM maintenance
     pattern applied to the TRAINED index family.  ``q_ann_lsh_maintained``
     proved search-over-the-maintained-index for data-independent
-    hashing; real ANN deployments run TRAINED quantizers (IVF/PQ), and
-    until now a corpus mutation forced a from-scratch re-train.  Here:
+    hashing; real ANN deployments run TRAINED quantizers (IVF/PQ), whose
+    corpus mutations would otherwise force a from-scratch re-train.  The
+    lifecycle is :func:`_ann_trained_maintained`'s; this key's quantizer
+    (``_IVF_QUANTIZER``):
 
     - **Frozen generation 0**: ``q_ann_ivf``'s exact-integer Lloyd
       chain trains the coarse quantizer ONCE on the v1 corpus; the
-      generation's inverted lists (vec_id → centroid_id, stored as the
-      LSM machinery's ``bucket``) are seeded as the base segment of a
-      persisted LSM index (``seed_index`` — the one corpus-sized
-      build).
-    - **Delta maintenance against FROZEN centroids**: each source
-      commit (the shared CoW UPDATE-negation + DELETE scenario) yields
-      a VECTOR-grain diff; pre- and post-embeddings of ONLY the changed
-      rows are assigned to the frozen quantizer (O(Δ·k) with k
-      broadcast centroids), assignment-preserving updates are dropped
-      as index-noise (the LSH feed's 'same' rule), and the surviving
-      moves/deletes land as one delta segment per commit
-      (``apply_index_batch`` — idempotent on the segment high-water).
+      inverted lists (vec_id → centroid_id, stored as the LSM
+      machinery's ``bucket``) seed generation 0.
+    - **Delta maintenance against FROZEN centroids**: pre- and
+      post-embeddings of ONLY the changed rows are assigned to the
+      frozen quantizer (O(Δ·k) with k broadcast centroids).
     - **Drift-triggered re-train**: ``retrain_due`` composes
       ``q_embedding_drift``'s centroid-shift monitor (frozen-corpus
-      mean vs head mean, L2 over dims) with ``generation_churn``
-      (fraction of gen-0 vectors whose list changed or died); either
-      crossing its floor flags a new generation.  The trigger FIRES here (the
-      negation mutation is calibrated to), and the re-train actually
-      RUNS: the same Lloyd chain on the head corpus trains generation
-      1, whose complete inverted lists are seeded as a second index
-      generation — ``gen1_trained`` attests k centroids + full
-      assignment coverage.
-    - **Search reads (generation, merge-on-read assignments)**: the
-      probe chain consumes ``read_index`` state ONLY (base + delta
-      segments, last-wins, tombstones dropped); probes rank candidates
-      from their ``nprobe`` nearest frozen centroids by exact-integer
-      cosine.  ``index_consistent`` engine-verifies the maintained
-      lists against a from-scratch assignment of the head corpus (the
-      audit arm — the only corpus-sized pass besides builds).
+      mean vs head mean, L2 over dims) with ``generation_churn``.  The
+      trigger FIRES here (the negation mutation is calibrated to), and
+      the same Lloyd chain on the head corpus trains generation 1 —
+      ``gen1_trained`` attests k centroids, every row in one of the k
+      lists, and full assignment coverage.
+    - **Search**: probes rank candidates from their ``nprobe`` nearest
+      frozen centroids by exact-integer cosine, list membership read
+      from the maintained index only.  ``index_consistent``
+      engine-verifies the maintained lists against a from-scratch
+      assignment of the head corpus (row identity).
 
     The EXACT oracle replays the frozen generation end-to-end: the
     Lloyd chain from ``_ivf_ctes`` (byte-shared with ``q_ann_ivf``),
@@ -3775,150 +3973,11 @@ def q_ann_ivf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     mutated corpus is SQL-expressible but adds nothing the gen-0 chain
     has not already proven about the training arithmetic).
 
-    Scale: maintenance is O(Δ·k) per commit against a broadcast
-    centroid table; the index is (vec_id, centroid_id) — bucket on
-    vec_id to co-locate the last-wins window; search is an equi-join of
-    ``nprobe/k`` of the corpus against broadcast probes; audits and
-    re-trains are the scheduled passes, never the refresh path.
-
-    The generation axis lives on the shared pointer machinery —
-    ``seed_generation`` publishes gen 0, the triggered re-train rolls
-    through :func:`roll_generation` (crash-idempotent temp-dir+rename,
-    pointer flip), gen-1 state is read back via
-    ``read_index_generation``, and ``vacuum_generations`` retires the
-    rolled-past gen-0 directory AFTER the pinned gen-0 search state
-    materialized (the ``vacuumed`` attestation)."""
-    import os
-
-    from bossarrowstorageengine_spark.operators.scans import _scratch
-    from bossarrowstorageengine_spark.sources import register_arrowipc
-    from bossarrowstorageengine_spark.streaming.ann_index import (
-        _seg_high_water,
-        apply_index_batch,
-        generation_churn,
-        generation_dir,
-        read_index_generation,
-        roll_generation,
-        seed_generation,
-    )
-
-    register_arrowipc(spark)
-    base = _scratch(sf_dir, "ann_ivf_maint")
-    idx_root = os.path.join(base, "idx_gens")
-    idx = generation_dir(idx_root, 0)
-
-    def _train_and_seed():
-        # Frozen generation-0 quantizer: q_ann_ivf's training chain on
-        # the v1 corpus (== the embeddings table).  16 rows,
-        # checkpointed — it feeds the seed, both delta assignments, the
-        # audit and the probes.  Then the one corpus-sized build: gen-0
-        # inverted lists as the base segment, published under the
-        # shared generation pointer.
-        iv, cents = _ivf_train(spark, sf_dir)
-        cents = cents.localCheckpoint()
-        seed_generation(idx_root, _index_rows(_ivf_assign_frozen(iv, cents)),
-                        layout_buckets=8)   # shuffle-free read_index path
-        return cents
-
-    # The gen-0 training+seed branch reads only the immutable embeddings
-    # parquet; the mutation history writes only base/src — independent
-    # chains, so they run as concurrent Spark jobs.
-    cents, (s1, head, ch) = run_concurrently(
-        spark, _train_and_seed,
-        lambda: _ann_vec_history(spark, sf_dir, base, _ivf_int_vec))
-
-    def _maintain_and_audit():
-        feed_rows, _ = _ann_delta_feed(
-            spark, ch, lambda v, keys: _ivf_assign_frozen(v, cents, keys),
-            os.path.join(base, "feed"))
-        apply_index_batch(feed_rows, 0, idx)
-        # Pin generation 0 (the pointer at read time) and MATERIALIZE it:
-        # the pinned search state survives both the roll and the vacuum
-        # below — the generational read contract.
-        pinned_gen, maintained = read_index_generation(spark, idx_root)
-        maintained = maintained.localCheckpoint()
-
-        # Audit: maintained lists == from-scratch frozen assignment of
-        # the head corpus (per-list count + id checksum).
-        direct = _index_rows(_ivf_assign_frozen(head, cents))
-        got = maintained.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("vec_id").alias("s"))
-        want = direct.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("n2"), F.sum("vec_id").alias("s2"))
-        audit_mismatch = (got.join(want, "bucket", "full_outer")
-                          .filter((F.coalesce("n", F.lit(0))
-                                   != F.coalesce("n2", F.lit(0)))
-                                  | (F.coalesce("s", F.lit(0))
-                                     != F.coalesce("s2", F.lit(0)))))
-
-        # Re-train trigger: centroid-shift monitor (q_embedding_drift's
-        # metric, frozen corpus vs head) OR churn.
-        def _mean_dims(df: DataFrame, m: str) -> DataFrame:
-            return (df.select(F.posexplode("iemb").alias("dim", "x"))
-                    .groupBy("dim")
-                    .agg((F.sum("x").cast("double") / F.count(F.lit(1))
-                          / _IVF_MICRO).alias(m)))
-
-        shift_df = (_mean_dims(s1, "m0")
-                    .join(_mean_dims(head, "m1"), "dim")
-                    .agg(F.sqrt(F.sum((F.col("m0") - F.col("m1"))
-                                      * (F.col("m0") - F.col("m1"))))))
-        # Independent reads over materialized frames: concurrent jobs.
-        n_bad, shift, churn = run_concurrently(
-            spark, audit_mismatch.count,
-            lambda: shift_df.collect()[0][0],
-            lambda: generation_churn(spark, idx_root, 0))
-        return (pinned_gen, maintained, n_bad == 0,
-                bool(shift > _IVF_DRIFT_SHIFT_MIN or churn > _IVF_CHURN_MIN))
-
-    # The gen-1 re-train (the Lloyd chain on the head corpus) depends
-    # ONLY on `head`, so its training jobs overlap the feed write, the
-    # delta applies and the audit; the roll waits for both.
-    cents1, (pinned_gen, maintained, consistent, retrain_due) = (
-        run_concurrently(spark, lambda: _ivf_lloyd(head).localCheckpoint(),
-                         _maintain_and_audit))
-
-    # The triggered re-train: generation 1's complete lists ROLLED
-    # through the shared generation machinery (temp-dir seed + atomic
-    # rename + pointer flip — crash-idempotent, trained_thru = the
-    # absorbed feed head).
-    roll = roll_generation(idx_root,
-                           _index_rows(_ivf_assign_frozen(head, cents1)),
-                           _seg_high_water(idx), layout_buckets=8)
-    gen1_no, gen1 = read_index_generation(spark, idx_root)
-    cnt = _row_counts(cents1=cents1, gen1=gen1, head=head)
-    gen1_trained = bool(
-        roll == {"generation": 1, "rolled": True} and gen1_no == 1
-        and cnt["cents1"] == _IVF_K and cnt["gen1"] == cnt["head"])
-    # Retention: the pinned gen-0 search state above already
-    # materialized, so the read outlives the directory.
-    vacuumed = _retire_gen0(idx_root)
-
-    # Search over the FROZEN generation: candidates' list membership
-    # comes ONLY from the maintained index; embeddings from the head.
-    probes = (head.filter(F.col("vec_id").isin(1, 2, 3))
-              .select(F.col("vec_id").alias("probe_id"),
-                      F.col("iemb").alias("piemb")))
-    scored = probes.crossJoin(F.broadcast(cents)).withColumn(
-        "sim", _ivf_cos(F.col("piemb"), F.col("cent")))
-    wp = Window.partitionBy("probe_id").orderBy(
-        F.col("sim").desc(), F.asc("centroid_id"))
-    probe_lists = (scored.withColumn("crn", F.row_number().over(wp))
-                   .filter(F.col("crn") <= _IVF_NPROBE)
-                   .select("probe_id", "piemb",
-                           F.col("centroid_id").cast("int")
-                           .alias("bucket")))
-    cands = (maintained.join(head, "vec_id")
-             .join(F.broadcast(probe_lists), "bucket")
-             .filter(F.col("vec_id") != F.col("probe_id")))
-    return _ivf_topk(cands).select(
-        "probe_id", "vec_id", "cos_sim", "rn",
-        F.lit(pinned_gen).cast("long").alias("generation"),
-        F.lit(consistent).alias("index_consistent"),
-        F.lit(retrain_due).alias("retrain_due"),
-        F.lit(gen1_trained).alias("gen1_trained"),
-        F.lit(vacuumed).alias("vacuumed"),
-    )
+    Scale: the index is (vec_id, centroid_id) — bucketed on vec_id to
+    co-locate the last-wins merge; search is an equi-join of
+    ``nprobe/k`` of the corpus against broadcast probes."""
+    return _ann_trained_maintained(spark, sf_dir, "ann_ivf_maint",
+                                   _IVF_QUANTIZER)
 
 
 #: Codebook re-train trigger for the maintained IVF-PQ index: delta rows
@@ -3932,6 +3991,70 @@ _IVFPQ_DIST_FACTOR = 2.0
 
 #: Index payload of the IVF-PQ faces: one code per subspace.
 _IVFPQ_PAYLOAD = "codes array<bigint>"
+
+
+def _ivfpq_milli(col) -> "F.Column":
+    """float embedding → exact milli-unit integer vector (the IVF-PQ
+    family's fixed-point contract)."""
+    return F.transform(
+        col, lambda x: F.round(x.cast("double") * 1000, 0).cast("long"))
+
+
+def _ivfpq_train_and_seed(spark: SparkSession, sf_dir: str,
+                          idx_root: str) -> tuple:
+    """``q_ann_ivfpq``'s training chain on the v1 corpus (the trainer
+    materializes cents + codebook); generation 0 stores per vector
+    ``(list, codes[NSUB])`` as a payload-carrying index.  Returns
+    ``(cents, codebook, mean gen-0 distortion)``, the mean observed by
+    the seed write's own job."""
+    from bossarrowstorageengine_spark.streaming.ann_index import (
+        seed_generation,
+    )
+
+    _, cents, _, codebook, enc = _ivfpq_encode(spark, sf_dir,
+                                               _PQ_LLOYD_PASSES)
+    dist0 = Observation()
+    codes0 = _ivfpq_codes(enc).observe(dist0, F.avg("dist").alias("dist"))
+    seed_generation(idx_root, _index_rows(codes0, "codes"),
+                    layout_buckets=8, payload=_IVFPQ_PAYLOAD)
+    return cents, codebook, float(dist0.get["dist"])
+
+
+def _ivfpq_retrain(head: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The identical IVF-PQ chain on the head corpus (fewer seeds survive
+    the delete — empty-cluster removal handles that)."""
+    _, cents1, _, _, enc1 = _ivfpq_train_encode(head, _PQ_LLOYD_PASSES)
+    return _index_rows(_ivfpq_codes(enc1), "codes"), cents1
+
+
+def _ivfpq_maintained_search(art: tuple, maintained: DataFrame,
+                             head: DataFrame, probes: DataFrame
+                             ) -> DataFrame:
+    """ADC over the maintained state — list membership AND codes come
+    ONLY from the index, never re-encoded at query time — then the exact
+    rerank against head vectors."""
+    cents, codebook, _ = art
+    codes = maintained.select(
+        "vec_id", F.col("bucket").alias("centroid_id"),
+        F.posexplode("codes").alias("s", "code"))
+    return _ivfpq_rerank(_ivfpq_adc(probes, cents, codebook, codes), head,
+                         probes)
+
+
+_IVFPQ_QUANTIZER = _Quantizer(
+    int_vec=_ivfpq_milli,
+    train_and_seed=_ivfpq_train_and_seed,
+    encode=lambda art, vecs, keys: _ivfpq_encode_frozen(
+        vecs, art[0], art[1], keys),
+    # PQ-native monitor: the changed rows' mean distortion against the
+    # frozen-training mean.
+    drifted=lambda art, s1, head, mean_dist: (
+        mean_dist is not None and mean_dist > _IVFPQ_DIST_FACTOR * art[2]),
+    retrain=_ivfpq_retrain,
+    cents_range=(1, _IVFPQ_K),
+    gen1_bad=lambda g: g.filter(F.size("codes") != _IVFPQ_NSUB),
+    search=_ivfpq_maintained_search,
+)
 
 
 def _ann_ivfpq_maintained_oracle() -> str:
@@ -4032,44 +4155,39 @@ def _ann_ivfpq_maintained_oracle() -> str:
 
 @query("q_ann_ivfpq_maintained", oracle=_ann_ivfpq_maintained_oracle())
 def q_ann_ivfpq_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ INDEX MAINTENANCE UNDER MUTATIONS — the last trained-family
-    face:
-    ``q_ann_ivf_maintained`` maintains a frozen COARSE quantizer; here
-    BOTH trained artifacts freeze (coarse centroids AND the per-subspace
-    PQ codebooks) and the LSM delta segments carry DELTA-ENCODED CODES,
-    so a mutation updates a vector's list membership and its compressed
-    representation in one idempotent commit.
+    """IVF-PQ INDEX MAINTENANCE UNDER MUTATIONS: ``q_ann_ivf_maintained``
+    maintains a frozen COARSE quantizer; here BOTH trained artifacts
+    freeze (coarse centroids AND the per-subspace PQ codebooks) and the
+    LSM delta segments carry DELTA-ENCODED CODES, so a mutation updates a
+    vector's list membership and its compressed representation in one
+    idempotent commit.  The lifecycle is
+    :func:`_ann_trained_maintained`'s; this key's quantizer
+    (``_IVFPQ_QUANTIZER``):
 
     - **Frozen generation 0**: ``q_ann_ivfpq``'s exact-integer chain
       (one coarse Lloyd pass + ``_PQ_LLOYD_PASSES`` codebook passes)
       trains ONCE on the v1 corpus; the base segment stores per vector
-      ``(list, codes[4])`` via the LSM machinery's NEW payload face
-      (``seed_index(payload="codes array<bigint>")`` — segments and the
-      merge-on-read carry the code vectors, streaming/ann_index.py).
-    - **Delta maintenance against the FROZEN quantizer**: each source
-      commit's vector-grain diff re-encodes ONLY the changed rows
-      (O(Δ·k) against broadcast centroids + codebooks,
-      ``_ivfpq_encode_frozen``); rows whose list AND codes are
-      unchanged are index-noise and dropped; survivors land as one
-      code-carrying delta segment per commit (``apply_index_batch``).
+      ``(list, codes[4])`` through the index's payload face
+      (``payload="codes array<bigint>"``).
+    - **Delta maintenance against the FROZEN quantizer**: changed rows
+      are re-encoded (O(Δ·k) against broadcast centroids + codebooks,
+      ``_ivfpq_encode_frozen``); rows whose list AND codes are unchanged
+      are index-noise and dropped.
     - **Distortion-triggered codebook re-train**: ``retrain_due``
-      composes the PQ-native monitor — delta rows' mean quantization
-      distortion vs the frozen-training mean (``_IVFPQ_DIST_FACTOR``;
-      the negation mutation pushes changed residuals outside the
-      trained codebook's support) — with ``q_ann_ivf_maintained``'s
-      churn floor (``generation_churn``).  The trigger FIRES and the
-      re-train RUNS: generation 1 re-trains coarse + codebooks on the
-      head corpus through the identical chain (``_ivfpq_train_encode``)
-      and seeds a second payload-carrying index; ``gen1_trained`` attests full
-      coverage with complete code vectors.
-    - **Search (frozen generation, merge-on-read codes)**: probes rank
-      candidates by ADC using ONLY the maintained index state (list
-      membership AND codes from ``read_index`` — never re-encoded at
-      query time, the point of storing codes), then exact-rerank
-      against head embeddings.  ``index_consistent`` engine-verifies
-      the maintained ``(vec_id, list, codes)`` rows against a
-      from-scratch frozen encode of the head corpus (exceptAll both
-      ways — row identity, not checksums).
+      composes the PQ-native monitor — the changed rows' mean
+      quantization distortion vs the frozen-training mean
+      (``_IVFPQ_DIST_FACTOR``; the negation mutation pushes changed
+      residuals outside the trained codebook's support) — with
+      ``generation_churn``.  The trigger FIRES and generation 1
+      re-trains coarse + codebooks on the head corpus through the
+      identical chain (``_ivfpq_train_encode``); the roll inherits the
+      codes payload, and ``gen1_trained`` attests full coverage with
+      complete code vectors.
+    - **Search**: probes rank candidates by ADC using ONLY the
+      maintained index state, then exact-rerank against head
+      embeddings.  ``index_consistent`` engine-verifies the maintained
+      ``(vec_id, list, codes)`` rows against a from-scratch frozen
+      encode of the head corpus (row identity).
 
     The EXACT oracle replays the frozen generation end-to-end (training
     CTEs byte-shared with ``q_ann_ivfpq``; the mutated corpus re-encoded
@@ -4077,152 +4195,13 @@ def q_ann_ivfpq_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigger and generation-1 completeness are boolean attestations, as
     in ``q_ann_ivf_maintained``.
 
-    Scale: maintenance is O(Δ·(k + m·codes)) per commit against
-    broadcast tables; the index stores 4 codes + 1 list id per vector
-    (the PQ compression that makes 100 TB vector search feasible);
-    search touches ~nprobe/k of the corpus via the bucketed,
-    shuffle-free merge-on-read and reranks only shortlist-many full
-    vectors per probe.
-
-    The generation axis lives on the shared pointer machinery —
-    ``seed_generation`` publishes gen 0 with its payload DDL, the
-    triggered re-train rolls the PAYLOAD-CARRYING generation through
-    :func:`roll_generation` (the codes DDL is re-declared because gen 1
-    is a fresh training, not a copy), gen-1 codes are read back via
-    ``read_index_generation``, and ``vacuum_generations`` retires the
-    rolled-past gen-0 directory after the pinned search state
-    materialized (the ``vacuumed`` attestation)."""
-    import os
-
-    from bossarrowstorageengine_spark.operators.scans import _scratch
-    from bossarrowstorageengine_spark.sources import register_arrowipc
-    from bossarrowstorageengine_spark.streaming.ann_index import (
-        _seg_high_water,
-        apply_index_batch,
-        generation_churn,
-        generation_dir,
-        read_index_generation,
-        roll_generation,
-        seed_generation,
-    )
-
-    register_arrowipc(spark)
-    base = _scratch(sf_dir, "ann_ivfpq_maint")
-    idx_root = os.path.join(base, "idx_gens")
-    idx = generation_dir(idx_root, 0)
-
-    def _train_and_seed():
-        # Frozen generation-0 quantizer: q_ann_ivfpq's training chain on
-        # the v1 corpus (cents + codebook are localCheckpointed by the
-        # trainer); base segment = (vec_id, list, codes[NSUB]) + dist.
-        _, cents, _, codebook, enc = _ivfpq_encode(
-            spark, sf_dir, _PQ_LLOYD_PASSES)
-        codes0 = _ivfpq_codes(enc).localCheckpoint()
-        seed_generation(idx_root, _index_rows(codes0, "codes"),
-                        layout_buckets=8, payload=_IVFPQ_PAYLOAD)
-        return cents, codebook, codes0
-
-    # Gen-0 training + payload seed (immutable embeddings parquet only)
-    # vs the mutation history (writes only base/src): concurrent jobs.
-    (cents, codebook, codes0), (_, head, ch) = run_concurrently(
-        spark, _train_and_seed,
-        lambda: _ann_vec_history(spark, sf_dir, base, _ivfpq_milli))
-
-    def _maintain_and_audit():
-        feed_rows, new_e = _ann_delta_feed(
-            spark, ch,
-            lambda v, keys: _ivfpq_encode_frozen(v, cents, codebook, keys),
-            os.path.join(base, "feed"))
-        apply_index_batch(feed_rows, 0, idx)
-        # Pin generation 0 and MATERIALIZE it: the pinned (list, codes)
-        # search state survives the roll and the vacuum below.
-        pinned_gen, maintained = read_index_generation(spark, idx_root)
-        maintained = maintained.localCheckpoint()
-        # Audit: maintained (vec_id, list, codes) == from-scratch frozen
-        # encode of the head corpus — row identity both ways.  The
-        # direct encode appears on both sides of the pair, so it is
-        # materialized once.
-        direct = _index_rows(_ivfpq_encode_frozen(head, cents, codebook),
-                             "codes").localCheckpoint()
-        # Re-train trigger: PQ distortion monitor OR churn.  Independent
-        # reads over materialized frames: concurrent jobs.
-        consistent, base_avg, delta_avg, churn = run_concurrently(
-            spark, lambda: _same_rows(maintained, direct),
-            lambda: codes0.agg(F.avg("dist")).collect()[0][0],
-            lambda: new_e.agg(F.avg("dist")).collect()[0][0],
-            lambda: generation_churn(spark, idx_root, 0))
-        retrain_due = bool(
-            (delta_avg is not None
-             and delta_avg > _IVFPQ_DIST_FACTOR * float(base_avg))
-            or churn > _IVF_CHURN_MIN)
-        return pinned_gen, maintained, consistent, retrain_due
-
-    # The gen-1 re-train (the identical IVF-PQ chain on the head corpus;
-    # fewer seeds survive the delete — empty-cluster removal handles
-    # that) depends only on `head`, so its training jobs overlap the
-    # delta re-encode, feed write, applies and audit.
-    (_, cents1, _, _, enc1), (pinned_gen, maintained, consistent,
-                              retrain_due) = run_concurrently(
-        spark, lambda: _ivfpq_train_encode(head, _PQ_LLOYD_PASSES),
-        _maintain_and_audit)
-
-    # ROLLED as a payload-carrying generation through the shared
-    # machinery (temp-dir seed + atomic rename + pointer flip).
-    roll = roll_generation(idx_root, _index_rows(_ivfpq_codes(enc1), "codes"),
-                           _seg_high_water(idx), layout_buckets=8,
-                           payload=_IVFPQ_PAYLOAD)
-    gen1_no, gen1 = read_index_generation(spark, idx_root)
-    gen1 = gen1.localCheckpoint()
-    cnt = _row_counts(
-        cents1=cents1, gen1=gen1, head=head,
-        badcodes=gen1.filter(F.size("codes") != _IVFPQ_NSUB))
-    gen1_trained = bool(
-        roll == {"generation": 1, "rolled": True} and gen1_no == 1
-        and cnt["cents1"] >= 1 and cnt["gen1"] == cnt["head"]
-        and cnt["badcodes"] == 0)
-    # Retention: the pinned gen-0 (list, codes) state above already
-    # materialized.
-    vacuumed = _retire_gen0(idx_root)
-
-    # Search over the FROZEN generation: candidates' list AND codes come
-    # ONLY from the maintained index; exact rerank reads head vectors.
-    probes = (head.filter(F.col("vec_id").isin(1, 2, 3))
-              .select(F.col("vec_id").alias("probe_id"),
-                      F.col("iemb").alias("piemb")))
-    wp = Window.partitionBy("probe_id").orderBy("d2", "centroid_id")
-    probed = (
-        probes.crossJoin(F.broadcast(cents))
-        .withColumn("d2", _il2(F.col("piemb"), F.col("cent")))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= _IVFPQ_NPROBE)
-        .select("probe_id", "centroid_id",
-                F.zip_with("piemb", "cent", lambda x, y: x - y)
-                .alias("pres")))
-    probe_sub = probed.select(
-        "probe_id", "centroid_id", _subspaces("pres").alias("e")
-    ).select("probe_id", "centroid_id", "e.s",
-             F.col("e.rsub").alias("prsub"))
-    cand = (maintained
-            .withColumnRenamed("bucket", "centroid_id")
-            .select("vec_id", "centroid_id",
-                    F.posexplode("codes").alias("s", "code")))
-    cb = codebook.select("cs", F.col("code").alias("cb_code"), "cvec")
-    adc = (cand.join(F.broadcast(probe_sub), ["centroid_id", "s"])
-           .filter(F.col("vec_id") != F.col("probe_id"))
-           .join(F.broadcast(cb),
-                 (F.col("cs") == F.col("s"))
-                 & (F.col("cb_code") == F.col("code")))
-           .groupBy("probe_id", "vec_id")
-           .agg(F.sum(_il2(F.col("prsub"), F.col("cvec")))
-                .cast("long").alias("approx_d2")))
-    return _ivfpq_rerank(adc, head, probes).select(
-        "probe_id", "vec_id", "approx_d2", "exact_d2", "rn",
-        F.lit(pinned_gen).cast("long").alias("generation"),
-        F.lit(consistent).alias("index_consistent"),
-        F.lit(retrain_due).alias("retrain_due"),
-        F.lit(gen1_trained).alias("gen1_trained"),
-        F.lit(vacuumed).alias("vacuumed"),
-    )
+    Scale: maintenance is O(Δ·(k + m·codes)) per commit; the index
+    stores 4 codes + 1 list id per vector (the PQ compression that makes
+    100 TB vector search feasible); search touches ~nprobe/k of the
+    corpus via the bucketed, shuffle-free merge-on-read and reranks only
+    shortlist-many full vectors per probe."""
+    return _ann_trained_maintained(spark, sf_dir, "ann_ivfpq_maint",
+                                   _IVFPQ_QUANTIZER)
 
 
 @query(
@@ -4344,9 +4323,6 @@ def _ann_generation_faces(spark: SparkSession, idx_root: str,
     _, g0 = read_index_generation(spark, idx_root, gen=0)
     g0 = g0.localCheckpoint()   # feeds the pinned audit AND the face agg
     _, g1 = read_index_generation(spark, idx_root)
-    # The pinned handle appears on both sides of the exceptAll pair, so
-    # it is materialized once, at the post-roll evaluation point.
-    pinned = pinned.localCheckpoint()
     pinned_matches = bool(pinned_gen == 0 and _same_rows(pinned, g0))
 
     def _face(df: DataFrame, tag: str) -> DataFrame:
@@ -4501,7 +4477,9 @@ def q_ann_generations_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-seeded codebook.
 
     The fixture: gen 0 = ``q_ann_ivfpq``'s trained artifacts on the v1
-    corpus, seeded with ``payload="codes array<bigint>"``; the shared
+    corpus, seeded with ``payload="codes array<bigint>"`` — the gen-0
+    fixture of ``q_ann_ivfpq_maintained`` (:func:`_ann_trained_gen0`
+    with ``_IVFPQ_QUANTIZER``); the shared
     CoW mutation scenario yields two vector-grain commits whose changed
     rows are re-encoded against the FROZEN artifacts (only rows whose
     list or codes changed survive as deltas — index-noise is dropped);
@@ -4529,33 +4507,16 @@ def q_ann_generations_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bossarrowstorageengine_spark.operators.scans import _scratch
     from bossarrowstorageengine_spark.sources import register_arrowipc
-    from bossarrowstorageengine_spark.streaming.ann_index import (
-        seed_generation,
-    )
 
     register_arrowipc(spark)
     base = _scratch(sf_dir, "ann_gens_payload")
     idx_root = os.path.join(base, "gens")
-
-    def _train_and_seed():
-        # Frozen gen-0 artifacts: q_ann_ivfpq's training chain on v1.
-        _, cents, _, codebook, enc = _ivfpq_encode(
-            spark, sf_dir, _PQ_LLOYD_PASSES)
-        seed_generation(idx_root, _index_rows(_ivfpq_codes(enc), "codes"),
-                        layout_buckets=8, payload=_IVFPQ_PAYLOAD)
-        return cents, codebook
-
-    # The gen-0 IVF-PQ training + payload seed reads only the immutable
-    # embeddings parquet, while the mutation history writes only
-    # base/src: concurrent Spark jobs.
-    (cents, codebook), (_, head, ch) = run_concurrently(
-        spark, _train_and_seed,
-        lambda: _ann_vec_history(spark, sf_dir, base, _ivfpq_milli))
+    q = _IVFPQ_QUANTIZER
+    art, _, head, ch = _ann_trained_gen0(spark, sf_dir, base, idx_root, q)
     # Code-carrying deltas: changed rows re-encoded against the FROZEN
     # artifacts; unchanged (list, codes) pairs are index-noise.
     feed_rows, _ = _ann_delta_feed(
-        spark, ch,
-        lambda v, keys: _ivfpq_encode_frozen(v, cents, codebook, keys),
+        spark, ch, lambda v, keys: q.encode(art, v, keys),
         os.path.join(base, "feed"))
 
     def _retrain(sess: SparkSession) -> DataFrame:
@@ -4922,13 +4883,6 @@ def _subspaces(col: str) -> "F.Column":
         for s in range(_IVFPQ_NSUB)]))
 
 
-def _ivfpq_milli(col) -> "F.Column":
-    """float embedding → exact milli-unit integer vector (the IVF-PQ
-    family's fixed-point contract)."""
-    return F.transform(
-        col, lambda x: F.round(x.cast("double") * 1000, 0).cast("long"))
-
-
 def _ivfpq_encode(spark: SparkSession, sf_dir: str,
                   pq_lloyd_passes: int):
     """Stages (0)-(2) of :func:`q_ann_ivfpq` — coarse-quantizer training
@@ -5066,18 +5020,18 @@ def _ivfpq_search(iv: DataFrame, cents: DataFrame,
                   codebook: DataFrame, enc: DataFrame) -> DataFrame:
     """Stages (3)-(4) of :func:`q_ann_ivfpq`: nprobe list probing, ADC
     ranking against the code vectors, exact top-k rerank."""
-    probes, adc = _ivfpq_adc(iv, cents, codebook, enc)
-    return _ivfpq_rerank(adc, iv, probes)
+    probes = _probe_rows(iv, 0, 1, 2)
+    return _ivfpq_rerank(_ivfpq_adc(probes, cents, codebook, enc), iv,
+                         probes)
 
 
-def _ivfpq_adc(iv: DataFrame, cents: DataFrame, codebook: DataFrame,
-               enc: DataFrame) -> tuple[DataFrame, DataFrame]:
+def _ivfpq_adc(probes: DataFrame, cents: DataFrame, codebook: DataFrame,
+               enc: DataFrame) -> DataFrame:
     """Stage (3) of :func:`q_ann_ivfpq` — nprobe list probing + ADC
-    scoring — factored so the recall report can count the ADC candidate
-    set (the method's scan cost) before the shortlist cuts it.  Returns
-    ``(probes, adc)``."""
-    probes = iv.filter(F.col("vec_id").isin(0, 1, 2)).select(
-        F.col("vec_id").alias("probe_id"), F.col("iemb").alias("piemb"))
+    scoring of ``probes`` against the code vectors ``enc`` ``(vec_id,
+    centroid_id, s, code)`` — factored so the recall report can count
+    the ADC candidate set (the method's scan cost) before the shortlist
+    cuts it, and the maintained key can score its index's codes."""
     wp = Window.partitionBy("probe_id").orderBy("d2", "centroid_id")
     probed = (
         probes.crossJoin(F.broadcast(cents))
@@ -5096,7 +5050,7 @@ def _ivfpq_adc(iv: DataFrame, cents: DataFrame, codebook: DataFrame,
     # depend on dataset-id disambiguation of identical expression ids.
     cb = codebook.select(
         "cs", F.col("code").alias("cb_code"), "cvec")
-    adc = (
+    return (
         enc.join(F.broadcast(probe_sub), ["centroid_id", "s"])
         .filter(F.col("vec_id") != F.col("probe_id"))
         .join(F.broadcast(cb),
@@ -5106,7 +5060,6 @@ def _ivfpq_adc(iv: DataFrame, cents: DataFrame, codebook: DataFrame,
         .agg(F.sum(_il2(F.col("prsub"), F.col("cvec")))
              .cast("long").alias("approx_d2"))
     )
-    return probes, adc
 
 
 def _ivfpq_rerank(adc: DataFrame, iv: DataFrame,

@@ -65,6 +65,7 @@ from typing import Iterable, Iterator, List, Sequence
 import pyarrow as pa
 
 from pyspark.sql.datasource import (
+    CaseInsensitiveDict,
     DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
@@ -152,13 +153,11 @@ def stats_path(data_path: str) -> str:
 # files).
 
 
-def _snapshots_mode(options: dict) -> bool | None:
+def _snapshots_mode(options: CaseInsensitiveDict) -> bool | None:
     """Tri-state ``snapshots`` option: True/False when the caller set it,
     None when absent (auto: follow the manifest iff the table has one)."""
-    for k, v in options.items():
-        if k.lower() == "snapshots":
-            return str(v).lower() == "true"
-    return None
+    v = options.get("snapshots")
+    return None if v is None else str(v).lower() == "true"
 
 
 def _visible_entries(path: str, version=None,
@@ -1115,6 +1114,7 @@ def _read_items(items: Sequence[tuple], declared: StructType,
 
 class ArrowIPCReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
+        options = CaseInsensitiveDict(options)
         self._options = options
         self._schema = schema
         self._path = _local_path(options.get("path"))
@@ -1124,10 +1124,9 @@ class ArrowIPCReader(DataSourceReader):
         cols = options.get("columns")
         if cols:
             self._columns = [c.strip() for c in cols.split(",")]
-        self._merge = options.get(
-            "mergeschema", options.get("mergeSchema", "false")).lower() == "true"
+        self._merge = options.get("mergeSchema", "false").lower() == "true"
         self._version = options.get("version")
-        ts = options.get("timestampasof", options.get("timestampAsOf"))
+        ts = options.get("timestampAsOf")
         if ts is not None:
             # Batch time travel by wall-clock (Delta's timestampAsOf):
             # resolve to the newest version committed at-or-before the
@@ -1140,11 +1139,9 @@ class ArrowIPCReader(DataSourceReader):
             self._version = str(_version_as_of(
                 self._path, _parse_ts_option(str(ts))))
         self._snapshots = _snapshots_mode(options)
-        self._fname_col = options.get(
-            "filenamecolumn", options.get("filenameColumn"))
-        self._group_bucket = str(options.get(
-            "groupbybucket", options.get("groupByBucket", "false"))
-        ).lower() == "true"
+        self._fname_col = options.get("filenameColumn")
+        self._group_bucket = str(
+            options.get("groupByBucket", "false")).lower() == "true"
         self._filters: list[Filter] = []
 
     def _visible_files(self) -> List[str]:
@@ -1507,7 +1504,7 @@ class _RotatingPart:
 
 class ArrowIPCWriter(DataSourceArrowWriter):
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
-        self._options = options
+        options = CaseInsensitiveDict(options)
         self._path = _local_path(options.get("path"))
         if not self._path:
             raise ValueError("arrowipc writer requires a path")
@@ -1515,7 +1512,7 @@ class ArrowIPCWriter(DataSourceArrowWriter):
         if self._compression in ("none", "uncompressed", ""):
             self._compression = None
         self._schema = schema
-        fmt = options.get("ipcformat", options.get("ipcFormat", "file")).lower()
+        fmt = options.get("ipcFormat", "file").lower()
         if fmt not in ("file", "stream"):
             raise ValueError(f"ipcFormat must be file|stream, got {fmt!r}")
         self._stream_format = fmt == "stream"
@@ -1528,10 +1525,10 @@ class ArrowIPCWriter(DataSourceArrowWriter):
             raise ValueError(
                 "dictionary encoding requires ipcFormat=stream "
                 "(IPC file format cannot replace dictionaries per batch)")
-        part_cols = options.get("partitionby", options.get("partitionBy"))
+        part_cols = options.get("partitionBy")
         self._partition_cols = (
             [c.strip() for c in part_cols.split(",")] if part_cols else [])
-        bb = options.get("bucketby", options.get("bucketBy"))
+        bb = options.get("bucketBy")
         self._bucket_col = bb.strip() if bb else None
         self._n_buckets = int(options.get("buckets", "16"))
         if self._bucket_col:
@@ -1555,7 +1552,7 @@ class ArrowIPCWriter(DataSourceArrowWriter):
                     "job co-locates the same keys")
         self._snapshots = _snapshots_mode(options)
         self._overwrite = overwrite
-        mb = options.get("maxbytesperfile", options.get("maxBytesPerFile"))
+        mb = options.get("maxBytesPerFile")
         if mb is not None:
             self._max_bytes = int(mb)
         else:
@@ -1724,10 +1721,11 @@ class ArrowIPCStreamWriter(DataSourceStreamArrowWriter):
     file-sink at-least-once semantics)."""
 
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
+        options = CaseInsensitiveDict(options)
         self._path = _local_path(options.get("path"))
         if not self._path:
             raise ValueError("arrowipc stream writer requires a path")
-        if options.get("partitionby", options.get("partitionBy")):
+        if options.get("partitionBy"):
             # Fail fast instead of silently flattening: commit-scope
             # promotion names files monotonically at the TABLE ROOT, and
             # the stream reader's offset is a single lexicographic
@@ -1741,14 +1739,14 @@ class ArrowIPCStreamWriter(DataSourceStreamArrowWriter):
                 "model); use streaming.pipelines.stream_to_partitioned_"
                 "table (foreachBatch + the batch writer) for partitioned "
                 "streaming output")
-        if options.get("bucketby", options.get("bucketBy")):
+        if options.get("bucketBy"):
             # Same offset-model conflict as partitionBy: __sb= directory
             # routing would sort files below the high-water mark.
             raise ValueError(
                 "arrowipc streaming sink does not support bucketBy "
                 "(incompatible with the lexicographic file-name offset "
                 "model); bucket via foreachBatch + the batch writer")
-        staged = dict(options)
+        staged = options.copy()
         staged["path"] = os.path.join(self._path, ".staging")
         self._snapshots = _snapshots_mode(options)
         self._delegate = ArrowIPCWriter(schema, staged, overwrite)
@@ -1827,18 +1825,17 @@ class ArrowIPCStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, schema: StructType, options: dict):
+        options = CaseInsensitiveDict(options)
         self._path = _local_path(options.get("path"))
         if not self._path:
             raise ValueError("arrowipc stream reader requires a path")
         self._schema = schema
         cols = options.get("columns")
         self._columns = [c.strip() for c in cols.split(",")] if cols else None
-        self._ignore_changes = str(options.get(
-            "ignorechanges", options.get("ignoreChanges", "false"))
-        ).lower() == "true"
-        self._skip_change_commits = str(options.get(
-            "skipchangecommits", options.get("skipChangeCommits", "false"))
-        ).lower() == "true"
+        self._ignore_changes = str(
+            options.get("ignoreChanges", "false")).lower() == "true"
+        self._skip_change_commits = str(
+            options.get("skipChangeCommits", "false")).lower() == "true"
         if self._ignore_changes and self._skip_change_commits:
             raise ValueError(
                 "arrowipc stream reader: ignoreChanges and "
@@ -1846,9 +1843,8 @@ class ArrowIPCStreamReader(DataSourceStreamReader):
                 "re-delivers a rewrite commit's added files, "
                 "skipChangeCommits drops the commit entirely; pick one.")
         self._manifest_mode = bool(_manifest_versions(self._path))
-        sv = options.get("startingversion", options.get("startingVersion"))
-        st = options.get("startingtimestamp",
-                         options.get("startingTimestamp"))
+        sv = options.get("startingVersion")
+        st = options.get("startingTimestamp")
         if sv is not None and st is not None:
             raise ValueError(
                 "arrowipc stream reader: startingVersion and "
@@ -2075,7 +2071,9 @@ class ArrowIPCDataSource(DataSource):
     to snapshot N; snapshot reads also give snapshot isolation against
     concurrent appenders), ``filenameColumn`` (read — append a string
     column carrying each row's part-file path, the arrowipc equivalent of
-    ``input_file_name()``), and ``path``.
+    ``input_file_name()``), and ``path``.  Option names are
+    case-insensitive: Spark hands them over lower-cased, and each reader
+    and writer looks them up through one ``CaseInsensitiveDict``.
     Directory maintenance (small-file compaction, row-level DELETE,
     vacuum) lives in ``sources.maintenance``.
     """
@@ -2085,11 +2083,12 @@ class ArrowIPCDataSource(DataSource):
         return FORMAT_NAME
 
     def schema(self):
-        path = _local_path(self.options.get("path"))
+        opts = CaseInsensitiveDict(self.options)
+        path = _local_path(opts.get("path"))
         if not path:
             raise ValueError("arrowipc requires a path")
         files = _visible_file_set(
-            path, self.options.get("version"), _snapshots_mode(self.options))
+            path, opts.get("version"), _snapshots_mode(opts))
         if not files:
             # The visible set can be legitimately empty (a DELETE matched
             # every row of a snapshotted table).  Old parts stay on disk
@@ -2102,9 +2101,7 @@ class ArrowIPCDataSource(DataSource):
                 raise ValueError(
                     f"arrowipc table at {path} has an empty visible set and "
                     "no retained part files to infer a schema from")
-        merge = self.options.get(
-            "mergeschema", self.options.get("mergeSchema", "false"))
-        if str(merge).lower() == "true":
+        if str(opts.get("mergeSchema", "false")).lower() == "true":
             arrow_schema = _union_schema(files)
         else:
             arrow_schema = _file_arrow_schema(files[0])
@@ -2118,15 +2115,14 @@ class ArrowIPCDataSource(DataSource):
                 ],
                 metadata=arrow_schema.metadata,
             )
-        cols = self.options.get("columns")
+        cols = opts.get("columns")
         if cols:
             names = [c.strip() for c in cols.split(",")]
             arrow_schema = pa.schema(
                 [arrow_schema.field(n) for n in names],
                 metadata=arrow_schema.metadata,
             )
-        fname = self.options.get(
-            "filenamecolumn", self.options.get("filenameColumn"))
+        fname = opts.get("filenameColumn")
         if fname:
             arrow_schema = arrow_schema.append(
                 pa.field(fname, pa.string(), False))
@@ -2136,16 +2132,16 @@ class ArrowIPCDataSource(DataSource):
         return from_arrow_schema(arrow_schema, prefer_timestamp_ntz=True)
 
     def reader(self, schema: StructType) -> ArrowIPCReader:
-        return ArrowIPCReader(schema, dict(self.options))
+        return ArrowIPCReader(schema, self.options)
 
     def streamReader(self, schema: StructType) -> ArrowIPCStreamReader:
-        return ArrowIPCStreamReader(schema, dict(self.options))
+        return ArrowIPCStreamReader(schema, self.options)
 
     def writer(self, schema: StructType, overwrite: bool) -> ArrowIPCWriter:
-        return ArrowIPCWriter(schema, dict(self.options), overwrite)
+        return ArrowIPCWriter(schema, self.options, overwrite)
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> ArrowIPCStreamWriter:
-        return ArrowIPCStreamWriter(schema, dict(self.options), overwrite)
+        return ArrowIPCStreamWriter(schema, self.options, overwrite)
 
 
 def register_arrowipc(spark) -> None:

@@ -673,16 +673,13 @@ def ivf_index_stream(spark: SparkSession, feed_dir: str, idx_root: str,
     - each micro-batch applies to the current generation's index
       (per-generation segment high-water = the usual replay safety);
     - after the apply, ``generation_churn`` evaluates the cumulative
-      drift (``q_ann_ivf_maintained``'s trigger, streaming face); when
-      it crosses ``churn_min`` the maintainer calls
+      drift; when it crosses ``churn_min`` the maintainer calls
       ``retrain(spark) -> DataFrame`` — the caller's corpus-sized
       re-train on the CURRENT head corpus, carrying ``(vec_id,
       bucket)`` plus the index's payload columns if it has any — and
-      seeds the result as generation k+1 with ``base_seg=<absorbed
-      head>`` (the new base reflects those commits, so their
-      redelivery no-ops), atomically flipping the pointer.  The new
-      generation INHERITS the physical layout and payload DDL recorded
-      by generation k's seed — one schema contract across the axis;
+      rolls the result to generation k+1 through
+      :func:`roll_generation`, which states what the new generation
+      inherits from generation k;
     - searches pin a generation (``read_index_generation``): an
       in-flight search during the roll keeps reading generation k,
       which the roll never mutates; the next search picks up k+1.
@@ -733,10 +730,10 @@ def apply_generational_batch(spark: SparkSession, df: DataFrame,
     foreachBatch body, callable from batch consumers too (e.g. a
     ``consume_and_apply`` refresh cycle): apply the batch's commits to
     the CURRENT generation, evaluate churn, roll to generation k+1 if
-    the monitor trips.  Returns ``{"generation": k', "rolled": bool}``
-    (the pointer after the step).  Semantics, replay safety, and the
-    ``generation_tagged`` contract are documented on
-    :func:`ivf_index_stream`."""
+    the monitor trips (:func:`roll_generation`).  Returns
+    ``{"generation": k', "rolled": bool}`` (the pointer after the step).
+    Semantics, replay safety, and the ``generation_tagged`` contract are
+    documented on :func:`ivf_index_stream`."""
     ptr = current_generation(idx_root)
     gen = int(ptr["generation"])
     gdir = generation_dir(idx_root, gen)
@@ -767,25 +764,23 @@ def apply_generational_batch(spark: SparkSession, df: DataFrame,
     apply_index_batch(batch, bid, gdir)
     if generation_churn(spark, idx_root, gen) <= churn_min:
         return {"generation": gen, "rolled": False}
-    return roll_generation(idx_root, lambda: retrain(spark),
-                           _seg_high_water(gdir),
-                           layout_buckets=_layout_buckets(gdir),
-                           payload=_payload_ddl(gdir))
+    return roll_generation(idx_root, lambda: retrain(spark))
 
 
-def roll_generation(idx_root: str, new_base, absorbed: int, *,
-                    layout_buckets: int | None = None,
-                    payload: str | None = None) -> dict:
+def roll_generation(idx_root: str, new_base) -> dict:
     """Publish a re-trained base as the NEXT generation — the one roll
-    path of every maintained index: the churn-triggered roll of
-    :func:`apply_generational_batch` (``ivf_index_stream``,
-    ``q_ann_generations[_payload]``) and the re-trains of
-    ``q_ann_ivf_maintained`` / ``q_ann_ivfpq_maintained``, whose trigger
-    is :func:`generation_churn` too.  ``new_base`` is the retrained
-    ``(vec_id, bucket[, payload...])`` frame or a zero-arg thunk
-    producing it; ``absorbed`` is the feed position the training
-    reflects (seeded as ``base_seg`` so redelivered pre-roll commits
-    no-op, published as ``trained_thru``).
+    path of every maintained index (:func:`apply_generational_batch` and
+    the trained batch keys, all triggered by :func:`generation_churn`).
+    ``new_base`` is a zero-arg thunk producing the retrained ``(vec_id,
+    bucket[, payload...])`` frame.
+
+    Generation k+1 INHERITS what generation k recorded: its physical
+    bucket layout (``_layout.json``), its payload DDL (``_payload.json``)
+    and, as its training position, generation k's segment high-water —
+    every feed commit generation k absorbed.  That position is seeded as
+    the new ``base_seg`` (so redelivered pre-roll commits no-op) and
+    published as ``trained_thru``: one schema and replay contract across
+    the generation axis, decided here and nowhere else.
 
     Crash-idempotent: the seed lands in a temp dir committed by ONE
     atomic os.rename, so the target directory's existence proves a
@@ -798,24 +793,25 @@ def roll_generation(idx_root: str, new_base, absorbed: int, *,
     import shutil
 
     cur = int(current_generation(idx_root)["generation"])
+    gdir = generation_dir(idx_root, cur)
     ndir = generation_dir(idx_root, cur + 1)
     if os.path.exists(ndir):
         meta = _read_gen_meta(ndir)
         _publish_generation(
             idx_root, cur + 1,
-            int(meta["base_seg"]) if meta else int(absorbed))
+            int(meta["base_seg"]) if meta else _seg_high_water(gdir))
         return {"generation": cur + 1, "rolled": True}
-    base_df = new_base() if callable(new_base) else new_base
-    # The seed's save is base_df's ONLY consumer (the meta row count
-    # comes from the stats sidecars below), so the frame needs no
+    absorbed = _seg_high_water(gdir)
+    # The seed's save is the frame's ONLY consumer (the meta row count
+    # comes from the stats sidecars below), so it needs no
     # materialization point.
     tmp = ndir + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    seed_index(tmp, base_df, layout_buckets=layout_buckets,
-               payload=payload, base_seg=int(absorbed))
-    _write_gen_meta(tmp, int(absorbed), _seeded_rows(tmp))
+    seed_index(tmp, new_base(), layout_buckets=_layout_buckets(gdir),
+               payload=_payload_ddl(gdir), base_seg=absorbed)
+    _write_gen_meta(tmp, absorbed, _seeded_rows(tmp))
     os.rename(tmp, ndir)
-    _publish_generation(idx_root, cur + 1, int(absorbed))
+    _publish_generation(idx_root, cur + 1, absorbed)
     return {"generation": cur + 1, "rolled": True}
 
 

@@ -8,6 +8,9 @@
   publishes for two vector-grain commits, under both frozen encoders
   (IVF assignment and IVF-PQ encoding), against a pure-Python model of
   the same rules on a hand-built 13-vector corpus.
+- ``llm_pipeline._same_rows``: the maintained indexes' audit rule is
+  multiset equality, so it tells apart frames that differ only in a
+  row's multiplicity, in one side's extra row, or in a payload array.
 """
 
 from __future__ import annotations
@@ -82,6 +85,26 @@ def test_run_concurrently_reraises_after_siblings_finish(spark):
 
 
 # ---------------------------------------------------------------------------
+# _same_rows
+# ---------------------------------------------------------------------------
+
+def test_same_rows_is_multiset_equality(spark):
+    from bossarrowstorageengine_spark.operators.llm_pipeline import _same_rows
+
+    ddl = "vec_id long, bucket int, codes array<bigint>"
+    rows = [(1, 0, [1, 2]), (2, 1, None), (2, 1, None), (3, None, [3])]
+
+    def df(rs):
+        return spark.createDataFrame(rs, ddl)
+
+    assert _same_rows(df(rows), df(list(reversed(rows))))
+    assert not _same_rows(df(rows), df(rows[:-1]))            # extra in a
+    assert not _same_rows(df(rows[:-1]), df(rows))            # extra in b
+    assert not _same_rows(df(rows), df(rows[:2] + rows[3:]))  # multiplicity
+    assert not _same_rows(df(rows), df([(1, 0, [2, 1])] + rows[1:]))
+
+
+# ---------------------------------------------------------------------------
 # _ann_delta_feed against a pure-Python model
 # ---------------------------------------------------------------------------
 
@@ -141,6 +164,16 @@ def _pq_model(cents: dict[int, list[int]],
                                                code)))
         return c, (tuple(codes),)
     return encode
+
+
+def _pq_dist(cents, codebook, v) -> int:
+    """The squared quantization error of ``v`` under ``_pq_model``'s
+    encode: residual to the list centroid vs the chosen codes."""
+    c, (codes,) = _pq_model(cents, codebook)(v)
+    res = [x - y for x, y in zip(v, cents[c])]
+    return sum(sum((x - y) * (x - y) for x, y in zip(
+        res[s * SUBDIM:(s + 1) * SUBDIM], codebook[(s, code)]))
+        for s, code in enumerate(codes))
 
 
 def _model_feed(versions, encode, move_label):
@@ -206,12 +239,13 @@ def test_ann_delta_feed_ivf_matches_python_model(spark, tmp_path):
     cents = {c: _rand_vec(rng) for c in range(3)}
     cents_df = spark.createDataFrame(sorted(cents.items()),
                                      "centroid_id long, cent array<bigint>")
-    feed_rows, _ = _ann_delta_feed(
+    feed_rows, mean_dist = _ann_delta_feed(
         spark, _changes(spark, versions),
         lambda v, keys: _ivf_assign_frozen(v, cents_df, keys),
         str(tmp_path / "feed"))
 
     assert feed_rows.columns == ["vec_id", "bucket", "change", "commit_seq"]
+    assert mean_dist is None   # the IVF encoder has no distortion column
     want, kinds = _model_feed(versions, _ivf_model(cents), "rebucket")
     # Non-vacuous: every rule of the feed is exercised.
     assert {"insert", "delete", "list", "noise"} <= kinds
@@ -235,14 +269,19 @@ def test_ann_delta_feed_ivfpq_matches_python_model(spark, tmp_path):
     cb_df = spark.createDataFrame(
         [(code, s, v) for (s, code), v in sorted(codebook.items())],
         "code long, cs int, cvec array<bigint>")
-    feed_rows, new = _ann_delta_feed(
+    feed_rows, mean_dist = _ann_delta_feed(
         spark, _changes(spark, versions),
         lambda v, keys: _ivfpq_encode_frozen(v, cents_df, cb_df, keys),
         str(tmp_path / "feed"))
 
     assert feed_rows.columns == ["vec_id", "bucket", "codes", "change",
                                  "commit_seq"]
-    assert "dist" in new.columns   # the monitor column, never stored
+    # The monitor column is never stored; its mean over every post-image
+    # (index-noise updates included) comes back from the feed write.
+    dists = [_pq_dist(cents, codebook, post[k])
+             for pre, post in zip(versions, versions[1:])
+             for k in post if pre.get(k) != post[k]]
+    assert mean_dist == pytest.approx(sum(dists) / len(dists))
     want, kinds = _model_feed(versions, _pq_model(cents, codebook), "recode")
     assert {"insert", "delete", "noise"} <= kinds
     assert kinds & {"list", "payload"}

@@ -2159,6 +2159,11 @@ def test_stream_file_splits_by_recorded_offsets(spark):
     back = spark.read.format("arrowipc").option("batchesPerSplit", "8").load(out)
     n_rows = df.count()
     assert back.rdd.getNumPartitions() == len(parts)
+    # A non-default split reaches the reader through Spark's lower-cased
+    # option map too.
+    four = spark.read.format("arrowipc").option("batchesPerSplit", "4")
+    assert four.load(out).rdd.getNumPartitions() == \
+        -(-len(side["batches"]) // 4)
     assert back.count() == n_rows
     agg = lambda d: d.agg(F.round(F.sum("l_extendedprice"), 2),
                           F.max("l_orderkey")).collect()

@@ -447,12 +447,17 @@ def test_generational_rollover_inherits_payload_and_checks_gen_tags(
     rows fail loudly (GenerationMismatch) instead of corrupting the new
     quantizer space."""
     from bossarrowstorageengine_spark.streaming.ann_index import (
-        GenerationMismatch, current_generation, generation_dir,
-        ivf_index_stream, read_index_generation, seed_generation)
+        GenerationMismatch, _seg_high_water, current_generation,
+        generation_dir, ivf_index_stream, read_index_generation,
+        seed_generation)
 
     register_arrowipc(spark)
     idx_root = str(tmp_path / "gens")
     feed = str(tmp_path / "feed")
+
+    def _recorded(gen, name):
+        with open(os.path.join(generation_dir(idx_root, gen), name)) as f:
+            return f.read()
 
     base = spark.range(10).select(
         F.col("id").alias("vec_id"),
@@ -485,14 +490,15 @@ def test_generational_rollover_inherits_payload_and_checks_gen_tags(
         q.processAllAvailable()
         assert current_generation(idx_root) == {"generation": 1,
                                                 "trained_thru": 1}
-        # the rolled generation carries the retrained payload + layout
+        # trained_thru is generation 0's segment high-water
+        assert _seg_high_water(generation_dir(idx_root, 0)) == 1
+        # the rolled generation carries the retrained payload + layout,
+        # under the layout and payload DDL generation 0 recorded
         _, g1 = read_index_generation(spark, idx_root)
         rows = {r.vec_id: (r.bucket, list(r.codes)) for r in g1.collect()}
         assert rows == {i: (1, [7, i]) for i in range(10)}
-        assert os.path.exists(os.path.join(
-            generation_dir(idx_root, 1), "_payload.json"))
-        assert os.path.exists(os.path.join(
-            generation_dir(idx_root, 1), "_layout.json"))
+        for name in ("_layout.json", "_payload.json"):
+            assert _recorded(1, name) == _recorded(0, name)
 
         # commit 2 tagged gen 0 with commit_seq 2 > trained_thru 1:
         # a producer that lost the pointer race — must fail loudly.

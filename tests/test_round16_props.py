@@ -73,6 +73,8 @@ def test_roll_resume_after_crash_before_pointer_flip(spark, tmp_path):
     assert res == {"generation": 1, "rolled": True}
     assert ai.current_generation(idx_root) == {"generation": 1,
                                                "trained_thru": 1}
+    # The published position is generation 0's segment high-water.
+    assert ai._seg_high_water(ai.generation_dir(idx_root, 0)) == 1
     # No duplicate base: exactly the 10 seeded rows, all bucket 9.
     _, g1 = ai.read_index_generation(spark, idx_root)
     rows = g1.collect()
@@ -107,6 +109,9 @@ def test_roll_sweeps_tmp_orphan_and_commits_by_rename(spark, tmp_path):
         churn_min=0.2)
     assert res == {"generation": 1, "rolled": True}
     assert calls == [1]
+    # The fresh roll trains through generation 0's segment high-water.
+    assert ai._seg_high_water(ai.generation_dir(idx_root, 0)) == 1
+    assert ai.current_generation(idx_root)["trained_thru"] == 1
     assert not os.path.exists(tmp)
     _, g1 = ai.read_index_generation(spark, idx_root)
     assert {r.bucket for r in g1.collect()} == {7}

@@ -6,6 +6,7 @@ as-of join against a brute-force reference."""
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 import uuid
@@ -53,6 +54,7 @@ def test_bpe_merge_is_greedy_leftmost(tok, pair):
 def test_stream_seek_splits_lossless_across_geometries(
         spark, rows_per_batch, split):
     from bossarrowstorageengine_spark.sources import register_arrowipc
+    from bossarrowstorageengine_spark.sources.arrowipc import stats_path
 
     register_arrowipc(spark)
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
@@ -68,10 +70,15 @@ def test_stream_seek_splits_lossless_across_geometries(
          .mode("append").save(out))
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    assert len(glob.glob(os.path.join(out, "*.arrows"))) == 1
+    files = glob.glob(os.path.join(out, "*.arrows"))
+    assert len(files) == 1
+    with open(stats_path(files[0])) as f:
+        n_batches = len(json.load(f)["batches"])
 
     back = (spark.read.format("arrowipc")
             .option("batchesPerSplit", str(split)).load(out))
+    # Spark hands the option over lower-cased; the split must still apply.
+    assert back.rdd.getNumPartitions() == -(-n_batches // split)
     got = sorted((r["id"], r["v"]) for r in back.collect())
     assert got == [(i, i * 7 % 13) for i in range(n)]
     shutil.rmtree(out, ignore_errors=True)

@@ -173,8 +173,8 @@ FLOOR_NOTES = {
     "q_ann_ivf_maintained": (
         "3-action mutation history + TWO Lloyd trainings (frozen gen-0 "
         "+ the fired gen-1 re-train) + bucketed seed/segment/gen-1 "
-        "writes + feed write + assignment audit + drift aggregate + "
-        "delta-segment churn count — "
+        "writes + feed write + row-identity assignment audit + drift "
+        "aggregate + delta-segment churn count — "
         "the delta-assignment path itself is O(changed rows x k)."),
     "q_purge_derived": (
         "src write + purge DELETE + pack-map seed (32-shard partitioned "
@@ -195,9 +195,10 @@ FLOOR_NOTES = {
     "q_ann_ivfpq_maintained": (
         "3-action mutation history + TWO full IVF-PQ trainings (frozen "
         "gen-0 coarse+codebooks; the fired gen-1 re-train) + bucketed "
-        "payload seed/segments/gen-1 writes + feed write + exceptAll "
-        "code audit + distortion aggregates + delta-segment churn count "
-        "+ ADC search — the delta re-encode itself is "
+        "payload seed/segments/gen-1 writes + feed write (the seed and "
+        "feed writes observe the two mean distortions) + row-identity "
+        "code audit + delta-segment churn count + ADC search — the delta "
+        "re-encode itself is "
         "O(changed rows x (k + m x codes))."),
     "q_timetravel_asof": (
         "3 snapshotted appends + 3 manifest-ts pins + 3 timestamp-"
@@ -205,12 +206,13 @@ FLOOR_NOTES = {
     "q_ann_generations": (
         "3-action mutation history + gen-0 seed + feed write + delta "
         "applies + the fired 4-plane re-train seed + pinned-read "
-        "exceptAll audit + two face aggregates."),
+        "row-identity audit + two face aggregates."),
     "q_ann_generations_payload": (
-        "3-action mutation history + full IVF-PQ gen-0 training + "
-        "payload seed + frozen delta re-encode feed + the fired "
-        "zero-pass head re-train rolled as a payload generation + "
-        "pinned-read exceptAll audit + two code-checksum faces."),
+        "3-action mutation history + q_ann_ivfpq_maintained's gen-0 "
+        "training and payload seed + feed write (the frozen delta "
+        "re-encode runs inside it) + the fired zero-pass head re-train "
+        "rolled as a payload generation + pinned-read row-identity "
+        "audit + two code-checksum faces."),
     "q_positions_asof": (
         "5 offsets-table CAS commits + 5 manifest-ts pins + 3 "
         "timestamp-resolved driver-side position reads — metadata "
