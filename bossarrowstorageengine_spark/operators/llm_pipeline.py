@@ -3205,7 +3205,8 @@ def _ann_snap(spark: SparkSession, src: str, ver: str | None) -> DataFrame:
     """One version snapshot of the mutating embedding table."""
     r = (spark.read.format("arrowipc")
          .schema("vec_id long, embedding array<float>"))
-    r = r.option("version", ver) if ver else r.option("snapshots", "true")
+    if ver:
+        r = r.option("version", ver)
     return r.load(src)
 
 
@@ -3254,7 +3255,7 @@ def _ann_mutated_src(spark: SparkSession, sf_dir: str, base: str) -> str:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding")
     (e.repartition(4).write.format("arrowipc")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(src))
     update_arrowipc(spark, src, _ANN_IDX_UPDATE_PRED, _ANN_IDX_UPDATE_SET,
                     compression="lz4", predicate_columns=["vec_id"],
@@ -3289,7 +3290,7 @@ def _ann_bucket_feed(spark: SparkSession, src: str, feed: str) -> None:
                   for v in ("1", "2", None))
     (_ann_idx_changes(b1, b2, 1).unionByName(_ann_idx_changes(b2, b3, 2))
      .write.format("arrowipc").option("partitionBy", "commit_seq")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(feed))
 
 
@@ -3353,7 +3354,7 @@ def q_ann_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1, b3 = (_ann_bucketed(_ann_snap(spark, src, v))
               for v in ("1", None))
     # the ONE corpus-sized build: index v1 persisted
-    (b1.write.format("arrowipc").option("snapshots", "true")
+    (b1.write.format("arrowipc")
      .option("compression", "lz4").mode("append").save(idx))
 
     feed_rows = read_feed(spark, feed)
@@ -3362,7 +3363,6 @@ def q_ann_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     last = (feed_rows.withColumn("rn", F.row_number().over(wv))
             .filter(F.col("rn") == 1))
     idx_back = (spark.read.format("arrowipc")
-                .option("snapshots", "true")
                 .schema("vec_id long, bucket int").load(idx))
     maintained = (
         idx_back.join(feed_rows.select("vec_id").distinct(),
@@ -3642,7 +3642,7 @@ def _ann_delta_feed(spark: SparkSession, ch: DataFrame, encode,
                   for c in pay],
                 F.lit("delete").alias("change"), "commit_seq"))
      .write.format("arrowipc").option("partitionBy", "commit_seq")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(feed))
     payload = ", ".join(f"{c} {new.schema[c].dataType.simpleString()}"
                         for c in pay)
@@ -4658,7 +4658,7 @@ def q_purge_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(k).cast("long").alias("mv_version"), "*")
         ledger = tagged if ledger is None else ledger.unionByName(tagged)
     (ledger.write.format("arrowipc").option("partitionBy", "mv_version")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(mv_path))
 
     # --- purge audit (fresh load per probe) ----------------------------
@@ -4682,14 +4682,12 @@ def q_purge_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     index_purged = read_index(spark, idx).filter(purged).count() == 0
     index_purge_seg = ((spark.read.format("arrowipc")
-                        .option("snapshots", "true")
                         .schema(INDEX_SCHEMA).load(idx)
                         .filter(F.col("tombstone") & F.expr(purged))
                         .agg(F.max("seg")).collect()[0][0]) or 0)
 
     def _mv_back(ver: int) -> DataFrame:
         return (spark.read.format("arrowipc")
-                .option("snapshots", "true")
                 .option("columns", "bucket,n_vecs,id_checksum,mv_version")
                 .schema("bucket int, n_vecs long, id_checksum long, "
                         "mv_version long").load(mv_path)
@@ -4702,7 +4700,6 @@ def q_purge_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.sum("vec_id").cast("long").alias("id_checksum")))
     mv_consistent = _same_rows(_mv_back(3), direct)
     mv_purge_version = ((spark.read.format("arrowipc")
-                         .option("snapshots", "true")
                          .option("columns", "mv_version")
                          .schema("mv_version long").load(mv_path)
                          .agg(F.max("mv_version")).collect()[0][0]) or 0)
@@ -4819,7 +4816,7 @@ def q_purge_restore_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     b4 = _ann_bucketed(_ann_snap(spark, src, None))
     (_ann_idx_changes(b3, b4, 3)
      .write.format("arrowipc").option("partitionBy", "commit_seq")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(feed))
 
     try:

@@ -1,6 +1,7 @@
 """B.1 scans / sources / sinks (SURVEY.md §2.B1).
 
-Round-trip queries write to a per-(query, sf) scratch dir under /tmp and
+Round-trip queries write to a per-(query, sf) scratch dir under the
+process's scratch root (``_SCRATCH_ROOT``, in the temp directory) and
 re-read through the format under test; the oracle runs the same aggregate
 on the ORIGINAL parquet, so a hash match proves the round-trip lossless.
 
@@ -12,8 +13,10 @@ and stats-pruned parallel read.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,7 +27,21 @@ from bossarrowstorageengine_spark.functions.zorder import morton16 as _morton16
 from bossarrowstorageengine_spark.operators.registry import query
 from bossarrowstorageengine_spark.sources import register_arrowipc
 
-_SCRATCH_ROOT = "/tmp/spark_graft_io"
+#: This process's scratch root, read at each ``_scratch`` call (a caller
+#: may point it elsewhere).  The default is unique per process, so two
+#: processes running the same key never delete each other's tables, and
+#: it is removed when the process exits.
+_SCRATCH_ROOT = os.path.join(tempfile.gettempdir(),
+                             f"spark_graft_io-{os.getpid()}")
+
+
+def _remove_scratch_root(root: str = _SCRATCH_ROOT,
+                         owner: int = os.getpid()) -> None:
+    if os.getpid() == owner:  # a forked child inherits the exit hook
+        shutil.rmtree(root, ignore_errors=True)
+
+
+atexit.register(_remove_scratch_root)
 
 
 def _scratch(sf_dir: str, key: str) -> str:
@@ -469,8 +486,8 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_arrowipc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot versioning (time travel) on the arrowipc source.
 
-    Two committed writes (`snapshots=true`) publish manifest versions 1
-    and 2; reading ``version=1`` sees only the first write's rows while a
+    Two committed writes publish manifest versions 1 and 2; reading
+    ``version=1`` sees only the first write's rows while a
     latest-snapshot read sees both — the Delta/Iceberg transaction-log
     pattern at directory scale (src/arrowipc.py `_write_manifest`).  The
     oracle replays both faces on the original events table, so a hash
@@ -487,7 +504,7 @@ def q_arrowipc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ev.filter(F.col("event_id") % 2 == 0)
     delta = ev.filter(F.col("event_id") % 2 == 1)
     for df in (base, delta):
-        (df.write.format("arrowipc").option("snapshots", "true")
+        (df.write.format("arrowipc")
            .mode("append").save(path))
 
     def _agg(df: DataFrame, tag: str) -> DataFrame:
@@ -502,7 +519,7 @@ def q_arrowipc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 = (spark.read.format("arrowipc").option("version", "1")
           .schema(ev.schema).load(path))
     latest = (spark.read.format("arrowipc")
-              .option("snapshots", "true").schema(ev.schema).load(path))
+              .schema(ev.schema).load(path))
     return _agg(v1, "v1").unionByName(_agg(latest, "latest"))
 
 
@@ -558,7 +575,7 @@ def q_timetravel_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "value")
     for m in (0, 1, 2):
         (ev.filter(F.col("event_id") % 3 == m)
-           .write.format("arrowipc").option("snapshots", "true")
+           .write.format("arrowipc")
            .option("compression", "lz4").mode("append").save(path))
     for v, ts in zip(_manifest_versions(path), (1000.0, 2000.0, 3000.0)):
         mf = _manifest_file(path, v)
@@ -628,7 +645,7 @@ def q_storage_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     # write+read round-trips (see q_scan_arrow_roundtrip); durability-grade
     # compaction can still re-encode zstd later.
     (d.repartition(4).write.format("arrowipc")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(path))
     delete_arrowipc(spark, path, "lang = 'en' AND n_chars < 500",
                     compression="lz4",
@@ -650,7 +667,6 @@ def q_storage_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre = (spark.read.format("arrowipc").option("version", "1")
            .option("columns", "lang,n_chars").schema(pruned).load(path))
     post = (spark.read.format("arrowipc")
-            .option("snapshots", "true")
             .option("columns", "lang,n_chars").schema(pruned).load(path))
     return _agg(pre, "pre").unionByName(_agg(post, "post"))
 
@@ -698,7 +714,7 @@ def q_storage_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source", "n_chars")
     # lz4 on the scratch/mutation path (see q_storage_delete note).
     (d.repartition(4).write.format("arrowipc")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(path))
 
     updates = d.filter(F.col("doc_id") % 10 == 0).withColumn(
@@ -712,7 +728,6 @@ def q_storage_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DataSource API): the post-merge face never needs ``source``.  The
     # explicit schema skips the inference plan-worker round trip (r16).
     latest = (spark.read.format("arrowipc")
-              .option("snapshots", "true")
               .option("columns", "doc_id,lang,n_chars")
               .schema(T.StructType([d.schema["doc_id"], d.schema["lang"],
                                     d.schema["n_chars"]]))
@@ -898,7 +913,7 @@ def q_storage_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source", "n_chars")
     # lz4 on the scratch/mutation path (see q_storage_delete note).
     (d.repartition(4).write.format("arrowipc")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(path))
     update_arrowipc(
         spark, path, "source = 'src3' AND n_chars >= 500",
@@ -920,7 +935,7 @@ def q_storage_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre = (spark.read.format("arrowipc").option("version", "1")
            .schema(d.schema).load(path))
     post = (spark.read.format("arrowipc")
-            .option("snapshots", "true").schema(d.schema).load(path))
+            .schema(d.schema).load(path))
     return _agg(pre, "pre").unionByName(_agg(post, "post"))
 
 
@@ -973,7 +988,7 @@ def q_storage_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value")
     (ev.repartition(16).write.format("arrowipc")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(path))
     res = compact_arrowipc(spark, path, target_files=_COMPACT_TARGET,
                            compression="lz4", schema=ev.schema)
@@ -981,7 +996,7 @@ def q_storage_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Explicit schema (= the written frame's): skips the inference
     # plan-worker round trip (r16).
     back = (spark.read.format("arrowipc")
-            .option("snapshots", "true").schema(ev.schema).load(path))
+            .schema(ev.schema).load(path))
     return back.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("event_id").cast("long").alias("id_checksum"),
@@ -1020,7 +1035,7 @@ def _write_mutation_history(spark: SparkSession, sf_dir: str,
         "doc_id", "lang", "source", "n_chars")
     # lz4 on the scratch/mutation path (see q_storage_delete note).
     (d.repartition(4).write.format("arrowipc")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(path))
     # schema=d.schema: the table was just written from d, so each
     # mutation's internal full read skips its Python-datasource schema
@@ -1067,8 +1082,8 @@ def _mutation_snap(spark: SparkSession, src: str,
     rewritten."""
     r = (spark.read.format("arrowipc")
          .option("columns", "doc_id,lang,n_chars").schema(_CF_HIST_SCHEMA))
-    r = (r.option("version", version) if version
-         else r.option("snapshots", "true"))
+    if version:
+        r = r.option("version", version)
     return r.load(src)
 
 
@@ -1086,7 +1101,7 @@ def _mutation_feed(spark: SparkSession, sf_dir: str,
     v1, v2, v3 = (_mutation_snap(spark, src, v) for v in ("1", "2", None))
     (_commit_changes(v1, v2, 1).unionByName(_commit_changes(v2, v3, 2))
      .write.format("arrowipc").option("partitionBy", "commit_seq")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(feed))
     return src, feed
 
@@ -1118,7 +1133,6 @@ def _read_feed(spark: SparkSession, feed: str,
     list the caller hands ``_feed_commit_deltas``, so the filter and the
     per-commit aggregation can never drift apart)."""
     return (spark.read.format("arrowipc")
-            .option("snapshots", "true")
             .option("columns", "lang,change,delta,commit_seq")
             .schema(_CF_FEED_SCHEMA)
             .load(feed).filter(F.col("commit_seq").isin(*seqs)))
@@ -1199,7 +1213,7 @@ def q_storage_timetravel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
            .option("columns", "doc_id,n_chars")
            .schema("doc_id long, n_chars long").load(path)
            .select("doc_id", F.col("n_chars").alias("chars_pre")))
-    post = (spark.read.format("arrowipc").option("snapshots", "true")
+    post = (spark.read.format("arrowipc")
             .option("columns", "doc_id,n_chars")
             .schema("doc_id long, n_chars long").load(path)
             .select("doc_id", F.col("n_chars").alias("chars_post")))
@@ -1277,7 +1291,7 @@ def q_storage_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
            .option("columns", "doc_id,lang,n_chars")
            .schema("doc_id long, lang string, n_chars long").load(src)
            .select("doc_id", "lang", F.col("n_chars").alias("chars_pre")))
-    post = (spark.read.format("arrowipc").option("snapshots", "true")
+    post = (spark.read.format("arrowipc")
             .option("columns", "doc_id,n_chars")
             .schema("doc_id long, n_chars long").load(src)
             .select("doc_id", F.col("n_chars").alias("chars_post")))
@@ -1287,10 +1301,10 @@ def q_storage_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lang; a general feed would coalesce both sides' payloads.
     (changes.write.format("arrowipc")
      .option("partitionBy", "change")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(feed))
 
-    back = (spark.read.format("arrowipc").option("snapshots", "true")
+    back = (spark.read.format("arrowipc")
             .option("columns", "doc_id,lang,delta,change")
             .schema("doc_id long, lang string, delta long, change string")
             .load(feed))
@@ -1492,11 +1506,10 @@ def q_mv_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.col("chars_delta_c2"))
     (mv1.unionByName(mv2).unionByName(mv3)
      .write.format("arrowipc").option("partitionBy", "mv_version")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(mv_path))
 
     mv_back = (spark.read.format("arrowipc")
-               .option("snapshots", "true")
                .option("columns", "lang,docs,chars,mv_version")
                .schema("lang string, docs long, chars long, "
                        "mv_version long")
@@ -1601,7 +1614,7 @@ def q_mv_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars")
     (d.repartition(2).write.format("arrowipc")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(src))
     update_arrowipc(spark, src, _TTDIFF_UPDATE_PRED, _TTDIFF_UPDATE_SET,
                     compression="lz4",
@@ -1616,8 +1629,8 @@ def q_mv_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         r = (spark.read.format("arrowipc")
              .option("columns", "doc_id,lang,source,n_chars")
              .schema(hist_schema))
-        r = (r.option("version", ver) if ver
-             else r.option("snapshots", "true"))
+        if ver:
+            r = r.option("version", ver)
         return r.load(src)
 
     def _commit(pre: DataFrame, post: DataFrame, seq: int) -> DataFrame:
@@ -1649,12 +1662,11 @@ def q_mv_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1, v2, v3 = (_snap(v) for v in ("1", "2", None))
     (_commit(v1, v2, 1).unionByName(_commit(v2, v3, 2))
      .write.format("arrowipc").option("partitionBy", "commit_seq")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(feed))
 
     # --- ONE feed scan, shared across both MV grains -------------------
     feed_rows = (spark.read.format("arrowipc")
-                 .option("snapshots", "true")
                  .option("columns", "lang,source,change,delta,commit_seq")
                  .schema("lang string, source string, change string, "
                          "delta long, commit_seq long")
@@ -1701,11 +1713,11 @@ def q_mv_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_chars").cast("long").alias("chars_base"))
     (_ledger(base_coarse, deltas_coarse, ["lang"])
      .write.format("arrowipc").option("partitionBy", "mv_version")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(mv_a))
     (_ledger(base_fine, deltas_fine, ["lang", "source"])
      .write.format("arrowipc").option("partitionBy", "mv_version")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(mv_b))
 
     # --- read back + per-version audit (fresh load per probe) ----------
@@ -1720,7 +1732,7 @@ def q_mv_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         ddl = (", ".join(f"{k} string" for k in keys)
                + ", docs long, chars long, mv_version long")
         back = (spark.read.format("arrowipc")
-                .option("snapshots", "true").option("columns", cols)
+                .option("columns", cols)
                 .schema(ddl).load(mv_path))
         direct = None
         for k, ver in ((1, "1"), (2, "2"), (3, None)):
@@ -1976,10 +1988,10 @@ def q_storage_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars")
     (d.filter(F.col("doc_id") % 2 == 0).repartition(2)
-     .write.format("arrowipc").option("snapshots", "true")
+     .write.format("arrowipc")
      .option("compression", "lz4").mode("append").save(path))
     (d.filter(F.col("doc_id") % 2 == 1).repartition(2)
-     .write.format("arrowipc").option("snapshots", "true")
+     .write.format("arrowipc")
      .option("compression", "lz4").mode("append").save(path))
     delete_arrowipc(spark, path, "lang = 'en'", compression="lz4",
                     predicate_columns=["lang"], schema=d.schema)
@@ -2053,7 +2065,7 @@ def q_storage_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars")
     (d.repartition(2).write.format("arrowipc")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(path))
     delete_arrowipc(spark, path, "lang = 'en'", compression="lz4",
                     predicate_columns=["lang"], schema=d.schema)
@@ -2071,7 +2083,7 @@ def q_storage_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre = (spark.read.format("arrowipc").option("version", "2")
            .schema(d.schema).load(path))
     restored = (spark.read.format("arrowipc")
-                .option("snapshots", "true").schema(d.schema).load(path))
+                .schema(d.schema).load(path))
     return _face(pre, "pre_restore", kinds[2]).unionByName(
         _face(restored, "restored", kinds[res["version"]]))
 
@@ -2124,7 +2136,7 @@ def q_storage_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars")
     (d.repartition(2).write.format("arrowipc")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(path))
     delete_arrowipc(spark, path, "lang = 'en'", compression="lz4",
                     predicate_columns=["lang"], schema=d.schema)
@@ -2134,7 +2146,6 @@ def q_storage_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     on_disk = set(_list_ipc_files(path))
 
     latest = (spark.read.format("arrowipc")
-              .option("snapshots", "true")
               .option("columns", "doc_id,n_chars")
               .schema(T.StructType([d.schema["doc_id"],
                                     d.schema["n_chars"]]))
@@ -2192,7 +2203,7 @@ def _write_three_commit_feed(spark: SparkSession, sf_dir: str,
     for c in commits:  # three appends = the per-commit accumulation
         (c.repartition(3).write.format("arrowipc")
          .option("partitionBy", "commit_seq")
-         .option("snapshots", "true").option("compression", "lz4")
+         .option("compression", "lz4")
          .mode("append").save(feed))
 
 
@@ -2528,7 +2539,7 @@ def q_mv_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.col("chars_delta_c2"))
     (mv1.unionByName(mv2).unionByName(mv3)
      .write.format("arrowipc").option("partitionBy", "mv_version")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(mv_path))
 
     # The mistake is reverted upstream: source rolls back to v1.
@@ -2538,7 +2549,7 @@ def q_mv_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Fresh load() per use — the Spark ≤4.1 pushdown plan-cache
         # hazard (arrowipc.pushFilters) forbids mixing filtered and
         # unfiltered actions on one load result.
-        return (spark.read.format("arrowipc").option("snapshots", "true")
+        return (spark.read.format("arrowipc")
                 .schema(_MV_SCHEMA).load(mv_path))
 
     # -- (a) detect the restore (all three arms enforced) ----------------
@@ -2576,7 +2587,7 @@ def q_mv_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Whole-feed head position (NOT pruned to known commits — the check
     # must see a commit the ledger has never heard of).
     feed_head = int(
-        spark.read.format("arrowipc").option("snapshots", "true")
+        spark.read.format("arrowipc")
         .option("columns", "commit_seq").schema("commit_seq long")
         .load(feed).agg(F.max("commit_seq")).collect()[0][0])
     if feed_head > thru:
@@ -2604,7 +2615,7 @@ def q_mv_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.lit(head_v + 1).cast("long").alias("mv_version"),
              F.lit(int(rollback_pos)).cast("long").alias("src_commit"))
      .write.format("arrowipc").option("partitionBy", "mv_version")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(mv_path))
 
     # -- output: every MV version audited against its own lineage --------
@@ -2745,7 +2756,7 @@ def q_feed_consumer_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     redeliver, _, _ = consume_next(spark, feed, offsets, "fast", cols,
                                    _CF_FEED_SCHEMA)
     _, ver_before, _ = _mv_head(spark, mv["fast"])
-    full = (spark.read.format("arrowipc").option("snapshots", "true")
+    full = (spark.read.format("arrowipc")
             .option("columns", cols).schema(_CF_FEED_SCHEMA).load(feed))
     apply_feed_batch(full, 99, mv["fast"])
     _, ver_after, _ = _mv_head(spark, mv["fast"])

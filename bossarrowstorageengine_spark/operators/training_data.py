@@ -1090,7 +1090,7 @@ def q_purge_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_H60).alias("h60"),
         F.size(F.split("text", " ")).cast("long").alias("tokens"))
     (d.repartition(2).write.format("arrowipc")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(src))
 
     src_schema = ("doc_id long, lang string, source string, n_chars long,"
@@ -1101,8 +1101,8 @@ def q_purge_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
                         if c.split(" ")[0] in cols.split(","))
         r = (spark.read.format("arrowipc").option("columns", cols)
              .schema(ddl))
-        r = (r.option("version", ver) if ver
-             else r.option("snapshots", "true"))
+        if ver:
+            r = r.option("version", ver)
         return r.load(src)
 
     # --- derived artifact seeds (v1, the corpus-sized builds) ----------
@@ -1119,7 +1119,7 @@ def q_purge_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (_pack_map(_snap("1", "doc_id,h60,tokens"))
      .write.format("arrowipc").option("partitionBy", "bucket")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(pack_path))
     pack_v1_paths = _read_manifest(
         pack_path, _manifest_versions(pack_path)[-1])
@@ -1149,11 +1149,10 @@ def q_purge_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.lit("delete").alias("change"),
                     F.lit(1).cast("long").alias("commit_seq")))
     (diff.write.format("arrowipc").option("partitionBy", "commit_seq")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(feed))
 
     feed_rows = (spark.read.format("arrowipc")
-                 .option("snapshots", "true")
                  .option("columns", "doc_id,lang,source,change,delta,"
                          "commit_seq")
                  .schema("doc_id long, lang string, source string, "
@@ -1166,7 +1165,7 @@ def q_purge_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- pack purge: CoW repack of ONLY the affected shards -------------
     affected = sorted(
         r.bucket for r in
-        (spark.read.format("arrowipc").option("snapshots", "true")
+        (spark.read.format("arrowipc")
          .option("columns", "bucket,doc_id")
          .schema("bucket int, doc_id long").load(pack_path)
          .join(purged_ids, "doc_id", "semi")
@@ -1215,11 +1214,11 @@ def q_purge_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (_ledger(base_coarse, deltas_coarse, ["lang"])
      .write.format("arrowipc").option("partitionBy", "mv_version")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(mv_a))
     (_ledger(base_fine, deltas_fine, ["lang", "source"])
      .write.format("arrowipc").option("partitionBy", "mv_version")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(mv_b))
 
     # --- audits (fresh load per probe — FORMAT.md §8) -------------------
@@ -1230,8 +1229,8 @@ def q_purge_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
         r = (spark.read.format("arrowipc")
              .option("columns", "bucket,doc_id,h60,tokens,chunk_id")
              .schema(pack_schema))
-        r = (r.option("version", ver) if ver
-             else r.option("snapshots", "true"))
+        if ver:
+            r = r.option("version", ver)
         return r.load(pack_path)
 
     # ONE head-map materialization feeds the purge check, the scratch
@@ -1275,7 +1274,7 @@ def q_purge_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
         ddl = (", ".join(f"{k} string" for k in keys)
                + ", docs long, chars long, mv_version long")
         return (spark.read.format("arrowipc")
-                .option("snapshots", "true").option("columns", cols)
+                .option("columns", cols)
                 .schema(ddl).load(path))
 
     # ONE read-back per ledger feeds the audit, the rollup check, the

@@ -13,9 +13,11 @@ Design:
 - **Write path** (``DataSourceArrowWriter``): each task streams its Arrow
   RecordBatches into one ``part-*.arrows`` IPC file with zstd/lz4/none
   buffer compression.  Per-column min/max stats for every batch are
-  computed on the fly and embedded in the file footer's custom metadata.
-  Tasks write to a hidden temp name and rename on success; ``abort``
-  removes leftovers (commit protocol per SURVEY.md §7 Phase 3).
+  computed on the fly and written to a stats sidecar.  Tasks write into
+  the writer's hidden staging directory; the commit promotes the parts
+  into the table and publishes the next manifest version, and ``abort``
+  removes the staging directory (commit protocol per SURVEY.md §7
+  Phase 3).
 - **Read path** (``DataSourceReader``): every input partition is a list
   of ``(path, batch indices, stream seek)`` items read by one loop.  A
   big IPC file splits into several batch-range tasks (``batchesPerSplit``,
@@ -33,12 +35,11 @@ Design:
   option; Arrow IPC is columnar so unrequested columns are never
   decompressed.
 - **Streaming read** (``DataSourceStreamReader``): micro-batch source over
-  the same directory layout — lexicographic file-name high-water-mark
-  offsets; a micro-batch's new files are packed into tasks like a batch
-  read's.
+  the same directory layout — manifest-version offsets; a micro-batch's
+  new files are packed into tasks like a batch read's.
 - **Streaming write** (``DataSourceStreamArrowWriter``): each micro-batch
-  appends timestamp-named compressed IPC files via the batch writer's
-  atomic-rename commit, so the sink's output is itself streamable.
+  is one batch-writer commit (one manifest version), so the sink's
+  output is itself streamable.
 - **Both IPC encodings**: the random-access *file* format (default; magic
   ``ARROW1`` header, footer with batch offsets → batch-range task splits)
   and the sequential *stream* format (``ipcFormat=stream``; no footer, so
@@ -55,6 +56,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import threading
 import time
@@ -129,61 +131,63 @@ def stats_path(data_path: str) -> str:
     return os.path.join(d, f"_{base}.stats.json")
 
 
-# -- snapshot manifests (time travel) ---------------------------------------
+# -- the manifest log (snapshots, time travel) ------------------------------
 #
-# Opt-in (`snapshots=true` on write): each commit writes `_manifest-N.json`
-# listing the table-relative part files visible at version N.  Readers with
-# `version=N` (or `snapshots=true` for the latest) see exactly that file
-# set — snapshot isolation against concurrent appends, and time travel to
-# any retained version.  The underscore prefix keeps manifests invisible to
-# data-file listings, so tables without the option behave exactly as before.
-# This is the transaction-log pattern (Delta/Iceberg) at directory scale;
-# on an object store the same JSON would live in the log prefix.
+# Every engine commit publishes `_manifest-N.json`, the table-relative part
+# files visible at version N: batch writes, stream-sink micro-batches and
+# the maintenance rewrites (`sources.maintenance._Rewrite`) alike.  A read
+# sees exactly the latest manifest's files, or version N's with `version=N`
+# — snapshot isolation against concurrent writers, and time travel to any
+# retained version.  Parts superseded by compaction or a copy-on-write
+# DELETE/UPDATE/MERGE stay on disk until vacuum, invisible to readers.  The
+# underscore prefix keeps manifests out of data-file listings.  This is the
+# transaction-log pattern (Delta/Iceberg) at directory scale; on an object
+# store the same JSON would live in the log prefix.
 #
-# Snapshot-ness is STICKY (the Delta rule: once a table has a log, every
-# operation goes through the log).  When a table has manifests, a reader
-# that does not set `snapshots` follows the LATEST MANIFEST, not the live
-# directory listing — after logical compaction or a copy-on-write
-# DELETE/UPDATE/MERGE, superseded part files legitimately remain on disk
-# until vacuum, so a raw listing would double-count rows and resurrect
-# deleted ones.  Writers likewise publish the next manifest version on
-# commit even without `snapshots=true`, so plain appends stay visible to
-# manifest readers.  Pass `snapshots=false` explicitly to force the raw
-# listing (debugging/recovery only — it sees uncommitted and superseded
-# files).
+# A directory that no engine write has touched (parts written by another
+# tool) has no log, and reads see its listing, read-only.  The first engine
+# write or rewrite converts it (Delta's CONVERT TO DELTA): `_ensure_log`
+# publishes a checkpoint of the listing before any task runs.  Engine
+# writers stage their parts in a hidden directory until their commit, so
+# that checkpoint can never name another writer's uncommitted part.
 
 
-def _snapshots_mode(options: CaseInsensitiveDict) -> bool | None:
-    """Tri-state ``snapshots`` option: True/False when the caller set it,
-    None when absent (auto: follow the manifest iff the table has one)."""
-    v = options.get("snapshots")
-    return None if v is None else str(v).lower() == "true"
-
-
-def _visible_entries(path: str, version=None,
-                     snapshots: bool | None = None) -> dict[str, dict | None]:
+def _visible_entries(path: str, version=None) -> dict[str, dict | None]:
     """``{absolute part path: manifest planning stats | None}`` a read may
-    see: a pinned manifest ``version``, the latest manifest (when requested,
-    or by default on a table that has manifests), else the live directory
-    listing (whose entries carry no manifest stats — planning falls back to
-    per-file sidecars)."""
-    v = None
-    if version is not None:
-        v = int(version)
-    elif snapshots is not False:
+    see: manifest ``version``, else the latest manifest, else (a directory
+    without a log) the live listing, whose entries carry no manifest
+    stats — planning falls back to per-file sidecars."""
+    if version is None:
         versions = _manifest_versions(path)
-        if versions:
-            v = versions[-1]
-    if v is not None:
-        return {os.path.join(path, rel): s
-                for rel, s in _read_manifest_entries(path, v).items()}
-    return {p: None for p in _list_ipc_files(path)}
+        if not versions:
+            return {p: None for p in _list_ipc_files(path)}
+        version = versions[-1]
+    return {os.path.join(path, rel): s
+            for rel, s in _read_manifest_entries(path, int(version)).items()}
 
 
-def _visible_file_set(path: str, version=None,
-                      snapshots: bool | None = None) -> List[str]:
+def _visible_file_set(path: str, version=None) -> List[str]:
     """The file set a read may see (sorted absolute paths)."""
-    return sorted(_visible_entries(path, version, snapshots))
+    return sorted(_visible_entries(path, version))
+
+
+def _ensure_log(path: str) -> int | None:
+    """The head version of the table at ``path``, first converting a
+    directory without a log: publish a checkpoint of its current listing.
+    None for a directory with neither a log nor a part file — a new table,
+    whose first commit becomes version 1.  Called where a write or rewrite
+    is set up on the driver, before any of its tasks runs."""
+    versions = _manifest_versions(path)
+    if versions:
+        return versions[-1]
+    files = _list_ipc_files(path, missing_ok=True)
+    if not files:
+        return None
+    try:
+        return _write_manifest(path, files, replace=True, expected_prev=0)
+    except ConcurrentWriteConflict:
+        return _manifest_versions(path)[-1]  # converted by a concurrent writer
+
 
 def _manifest_file(path: str, version: int) -> str:
     return os.path.join(path, f"_manifest-{version:010d}.json")
@@ -1138,18 +1142,10 @@ class ArrowIPCReader(DataSourceReader):
                     "one anchor.")
             self._version = str(_version_as_of(
                 self._path, _parse_ts_option(str(ts))))
-        self._snapshots = _snapshots_mode(options)
         self._fname_col = options.get("filenameColumn")
         self._group_bucket = str(
             options.get("groupByBucket", "false")).lower() == "true"
         self._filters: list[Filter] = []
-
-    def _visible_files(self) -> List[str]:
-        """The file set this read may see: a pinned manifest version, the
-        latest manifest (explicitly requested, or by default on a table
-        that has one — see the sticky-snapshot note above), else the live
-        directory listing."""
-        return _visible_file_set(self._path, self._version, self._snapshots)
 
     # -- optimizer hooks ----------------------------------------------------
     def pushFilters(self, filters: List[Filter]) -> Iterable[Filter]:
@@ -1190,7 +1186,7 @@ class ArrowIPCReader(DataSourceReader):
     def partitions(self) -> Sequence[ArrowIPCPartition]:
         split = max(1, int(self._options.get(
             "batchesPerSplit", self.BATCHES_PER_SPLIT)))
-        entries = _visible_entries(self._path, self._version, self._snapshots)
+        entries = _visible_entries(self._path, self._version)
         files = sorted(entries)
         if self._group_bucket:
             # Bucket-grouped planning: ONE input partition per __sb
@@ -1348,7 +1344,13 @@ class ArrowIPCReader(DataSourceReader):
 
 @dataclass
 class ArrowIPCCommitMessage(WriterCommitMessage):
+    """A task's staged part files and the staging directory they sit in.
+    The commit promotes each part relative to its message's directory:
+    Spark may run the commit on a writer instance other than the tasks'
+    (the stream sink does), so the committer's own staging path is not
+    necessarily theirs."""
     final_paths: list[str] | None
+    staging: str
 
 
 def _partition_segment(value) -> str:
@@ -1375,10 +1377,9 @@ class _OpenPart:
     unprunable-but-correct file, never an orphan sidecar); ``abandon``
     removes the tmp so failed tasks leave no garbage behind."""
 
-    def __init__(self, dirpath: str, prefix: str, compression,
-                 stream_format: bool):
+    def __init__(self, dirpath: str, compression, stream_format: bool):
         os.makedirs(dirpath, exist_ok=True)
-        name = f"{prefix}-{uuid.uuid4().hex}"
+        name = f"part-{uuid.uuid4().hex}"
         self.tmp = os.path.join(dirpath, f".{name}.arrows.tmp")
         self.final = os.path.join(dirpath, f"{name}.arrows")
         self._opts = pa.ipc.IpcWriteOptions(compression=compression)
@@ -1477,9 +1478,9 @@ class _RotatingPart:
     file (default ``_STREAM_ROTATE_BYTES``), which bounds the scan's
     per-task work the way batch-range splits do for the file encoding."""
 
-    def __init__(self, dirpath: str, prefix: str, compression,
-                 stream_format: bool, max_bytes: int | None):
-        self._args = (dirpath, prefix, compression, stream_format)
+    def __init__(self, dirpath: str, compression, stream_format: bool,
+                 max_bytes: int | None):
+        self._args = (dirpath, compression, stream_format)
         self._max_bytes = max_bytes
         self._sealed: list[_OpenPart] = []
         self.current = _OpenPart(*self._args)
@@ -1550,8 +1551,14 @@ class ArrowIPCWriter(DataSourceArrowWriter):
                     f"(got {f.dataType.simpleString()}) — the bucket "
                     "function is value % buckets, fixed so every write "
                     "job co-locates the same keys")
-        self._snapshots = _snapshots_mode(options)
         self._overwrite = overwrite
+        # Tasks write into a hidden staging directory (same relative
+        # layout); the commit promotes the parts into the table and
+        # publishes the next manifest.  Converting a log-less directory
+        # here, before any task runs, keeps this write's parts out of the
+        # conversion checkpoint.
+        self._staging = os.path.join(self._path, f".write-{uuid.uuid4().hex}")
+        _ensure_log(self._path)
         mb = options.get("maxBytesPerFile")
         if mb is not None:
             self._max_bytes = int(mb)
@@ -1590,28 +1597,28 @@ class ArrowIPCWriter(DataSourceArrowWriter):
         the read path free of column re-injection)."""
         first = next(iterator, None)
         if first is None:
-            return ArrowIPCCommitMessage(final_paths=None)  # empty task
+            return ArrowIPCCommitMessage(None, self._staging)  # empty task
         batches = _chain_first(first, iterator)
-        prefix = getattr(self, "_name_prefix", "part")
         parts: dict[tuple, _RotatingPart] = {}
         try:
             if not self._partition_cols and not self._bucket_col:
                 parts[()] = part = _RotatingPart(
-                    self._path, prefix, self._compression,
+                    self._staging, self._compression,
                     self._stream_format, self._max_bytes)
                 for batch in batches:
                     part.append(self._encode_dictionaries(batch), batch)
             else:
-                self._write_partitioned(batches, parts, prefix)
-            return ArrowIPCCommitMessage(final_paths=sorted(
-                p for part in parts.values() for p in part.finish_all()))
+                self._write_partitioned(batches, parts)
+            return ArrowIPCCommitMessage(sorted(
+                p for part in parts.values() for p in part.finish_all()),
+                self._staging)
         except BaseException:
             for p in parts.values():
                 p.abandon()
             raise
 
     def _write_partitioned(self, batches: Iterator[pa.RecordBatch],
-                           parts: dict[tuple, _RotatingPart], prefix: str) -> None:
+                           parts: dict[tuple, _RotatingPart]) -> None:
         import pyarrow.compute as pc
 
         split_cols = list(self._partition_cols)
@@ -1650,12 +1657,12 @@ class ArrowIPCWriter(DataSourceArrowWriter):
                 if self._bucket_col:
                     sub = sub.drop_columns([_SBUCKET_COL])
                 if key not in parts:
-                    subdir = os.path.join(self._path, *(
+                    subdir = os.path.join(self._staging, *(
                         f"{c}={_partition_segment(v)}"
                         for c, v in zip(split_cols, key)
                     ))
                     parts[key] = _RotatingPart(
-                        subdir, prefix, self._compression,
+                        subdir, self._compression,
                         self._stream_format, self._max_bytes)
                 for sb_ in sub.to_batches():
                     parts[key].append(self._encode_dictionaries(sb_), sb_)
@@ -1672,31 +1679,40 @@ class ArrowIPCWriter(DataSourceArrowWriter):
         return merged
 
     def commit(self, messages, *args, **kwargs):
-        # Files were atomically renamed per-task.  With snapshots on, the
-        # commit additionally publishes the next manifest version making
-        # this write's files (plus, for appends, the previous snapshot's)
-        # the visible set — the only global step, one small JSON.
-        # Sticky rule: a table that already has manifests gets a manifest
-        # commit even when the writer didn't ask for snapshots — otherwise
-        # this write's rows would be invisible to (default) manifest readers.
-        snap = self._snapshots
-        if snap is None:
-            snap = bool(_manifest_versions(self._path))
-        if snap:
-            new = sorted(
-                p for m in messages or []
-                for p in ((getattr(m, "final_paths", None) or []) if m else []))
+        """Promote the staged parts into the table, then publish the next
+        manifest version: this write's files, plus the previous version's
+        for an append — the only global step, one small JSON."""
+        messages = [m for m in messages or [] if m is not None]
+        try:
+            new = [p for m in messages
+                   for p in _promote(m.final_paths or [], m.staging,
+                                     self._path)]
+            os.makedirs(self._path, exist_ok=True)
             _write_manifest(self._path, new, replace=self._overwrite)
-        return None
+        finally:
+            # Also drops the parts of task attempts Spark did not commit.
+            self.abort(messages)
 
     def abort(self, messages, *args, **kwargs) -> None:
-        for m in messages or []:
-            for fp in (getattr(m, "final_paths", None) or []) if m else []:
-                for p in (fp, stats_path(fp)):
-                    try:
-                        os.remove(p)
-                    except OSError:
-                        pass
+        for staging in {self._staging,
+                        *(m.staging for m in messages or [] if m)}:
+            shutil.rmtree(staging, ignore_errors=True)
+
+
+def _promote(parts: Iterable[str], staging: str, root: str) -> list[str]:
+    """Move staged part files, each with its stats sidecar, to the same
+    relative place under ``root``; returns their new paths.  The data file
+    moves first, so a reader between the two renames sees a valid (merely
+    unprunable) part."""
+    out: list[str] = []
+    for src in parts:
+        dst = os.path.join(root, os.path.relpath(src, staging))
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.replace(src, dst)
+        if os.path.exists(stats_path(src)):
+            os.replace(stats_path(src), stats_path(dst))
+        out.append(dst)
+    return out
 
 
 def _chain_first(first: pa.RecordBatch, rest: Iterator[pa.RecordBatch]):
@@ -1705,80 +1721,34 @@ def _chain_first(first: pa.RecordBatch, rest: Iterator[pa.RecordBatch]):
 
 
 class ArrowIPCStreamWriter(DataSourceStreamArrowWriter):
-    """Streaming sink with commit-scope naming.
-
-    Tasks write their compressed IPC files (plus stats sidecars) into a
-    hidden ``.staging`` subdirectory — invisible to readers.  ``commit``
-    then promotes them, in order, to ``part-{batchId:010d}-{seq:05d}``
-    names.  Because promotion happens at commit scope, file names are
-    strictly monotonic across micro-batches regardless of task timing, so
-    a concurrent ``ArrowIPCStreamReader``'s lexicographic high-water-mark
-    offset can never advance past a file that a slow task renames later
-    (the data-loss window a per-task wall-clock name would leave open).  A
-    mid-commit listing sees a prefix of the batch's files; the rest sort
-    above the mark and land in the next micro-batch.  Replay dedup after
-    crash-before-checkpoint remains the checkpoint's job (standard
-    file-sink at-least-once semantics)."""
+    """Streaming sink: each non-empty micro-batch is one batch-writer
+    commit — its tasks' parts are staged, promoted and published as the
+    next manifest version, so a stream reader tailing the table picks up
+    whole micro-batches.  Replay dedup after crash-before-checkpoint
+    remains the checkpoint's job (standard file-sink at-least-once
+    semantics)."""
 
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
         options = CaseInsensitiveDict(options)
-        self._path = _local_path(options.get("path"))
-        if not self._path:
+        if not _local_path(options.get("path")):
             raise ValueError("arrowipc stream writer requires a path")
-        if options.get("partitionBy"):
-            # Fail fast instead of silently flattening: commit-scope
-            # promotion names files monotonically at the TABLE ROOT, and
-            # the stream reader's offset is a single lexicographic
-            # high-water mark over relative names — a later batch's file
-            # in an earlier-sorting col=value directory would fall below
-            # the mark and be silently skipped.  Partitioned streaming
-            # output belongs in foreachBatch with the batch writer.
-            raise ValueError(
-                "arrowipc streaming sink does not support partitionBy "
-                "(incompatible with the lexicographic file-name offset "
-                "model); use streaming.pipelines.stream_to_partitioned_"
-                "table (foreachBatch + the batch writer) for partitioned "
-                "streaming output")
-        if options.get("bucketBy"):
-            # Same offset-model conflict as partitionBy: __sb= directory
-            # routing would sort files below the high-water mark.
-            raise ValueError(
-                "arrowipc streaming sink does not support bucketBy "
-                "(incompatible with the lexicographic file-name offset "
-                "model); bucket via foreachBatch + the batch writer")
-        staged = options.copy()
-        staged["path"] = os.path.join(self._path, ".staging")
-        self._snapshots = _snapshots_mode(options)
-        self._delegate = ArrowIPCWriter(schema, staged, overwrite)
+        for layout in ("partitionBy", "bucketBy"):
+            if options.get(layout):
+                # Partitioned streaming output belongs in foreachBatch
+                # with the batch writer.
+                raise ValueError(
+                    f"arrowipc streaming sink does not support {layout}; "
+                    "use streaming.pipelines.stream_to_partitioned_table "
+                    "(foreachBatch + the batch writer) for partitioned or "
+                    "bucketed streaming output")
+        self._delegate = ArrowIPCWriter(schema, options, overwrite=False)
 
     def write(self, iterator: Iterator[pa.RecordBatch]) -> ArrowIPCCommitMessage:
         return self._delegate.write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        staged = sorted(
-            fp
-            for m in messages or [] if m is not None
-            for fp in (getattr(m, "final_paths", None) or [])
-        )
-        os.makedirs(self._path, exist_ok=True)
-        promoted: list[str] = []
-        for seq, sp in enumerate(staged):
-            final = os.path.join(
-                self._path, f"part-{batchId:010d}-{seq:05d}.arrows")
-            src_stats = stats_path(sp)
-            # Data file first, then its sidecar: a reader between the two
-            # renames sees a valid (merely unprunable) file.
-            os.replace(sp, final)
-            if os.path.exists(src_stats):
-                os.replace(src_stats, stats_path(final))
-            promoted.append(final)
-        # Same sticky-snapshot rule as the batch writer: keep micro-batch
-        # appends visible to (default) manifest readers.
-        snap = self._snapshots
-        if snap is None:
-            snap = bool(_manifest_versions(self._path))
-        if snap and promoted:
-            _write_manifest(self._path, promoted, replace=False)
+        if any(m is not None and m.final_paths for m in messages or []):
+            self._delegate.commit(messages)
 
     def abort(self, messages, batchId: int) -> None:
         self._delegate.abort(messages)
@@ -1788,9 +1758,9 @@ class ArrowIPCStreamReader(DataSourceStreamReader):
     """Micro-batch streaming reader over an arrowipc directory — two
     offset models, picked by the table's state at query start:
 
-    **Manifest mode** (table has snapshot manifests — a snapshotted
-    streaming sink, the foreachBatch partitioned sink, any
-    ``snapshots=true`` table): offsets are manifest VERSIONS
+    **Manifest mode** (every table an engine write has touched, and an
+    empty or missing directory, whose first engine commit will be
+    version 1): offsets are manifest VERSIONS
     (``{"v": N}``); a micro-batch covers exactly the part files ADDED by
     versions (start, end] — the commit-log offset model: object-store
     safe, partitioned-layout safe, immune to compaction's new file names.
@@ -1813,11 +1783,14 @@ class ArrowIPCStreamReader(DataSourceStreamReader):
     pattern: batch-bootstrap from the head at version V, then tail with
     ``startingVersion=V+1`` — no backlog re-delivery.
 
-    **Listing mode** (no manifests): lexicographic high-water mark over
-    file names (``{"last": "<name>"}``); a micro-batch covers every
-    ``.arrows`` file sorting strictly after the mark, so appenders must
-    use monotonically increasing names (the sink's ``part-{batch}-{seq}``
-    convention).
+    **Listing mode** (a directory that holds parts but no log — written
+    only by another tool): lexicographic high-water mark over file names
+    (``{"last": "<name>"}``); a micro-batch covers every ``.arrows`` file
+    sorting strictly after the mark, so that tool must use monotonically
+    increasing names.  The first engine write converts the directory to
+    a log; a listing-mode query must then restart from a fresh
+    checkpoint (resuming its old one fails, naming the offset-model
+    change).
 
     A micro-batch's new files are packed into tasks like a batch read's
     whole files, and read by the batch reader's item loop (record batches
@@ -1842,7 +1815,9 @@ class ArrowIPCStreamReader(DataSourceStreamReader):
                 "skipChangeCommits are mutually exclusive — ignoreChanges "
                 "re-delivers a rewrite commit's added files, "
                 "skipChangeCommits drops the commit entirely; pick one.")
-        self._manifest_mode = bool(_manifest_versions(self._path))
+        self._manifest_mode = (bool(_manifest_versions(self._path))
+                               or not _list_ipc_files(self._path,
+                                                      missing_ok=True))
         sv = options.get("startingVersion")
         st = options.get("startingTimestamp")
         if sv is not None and st is not None:
@@ -1854,7 +1829,8 @@ class ArrowIPCStreamReader(DataSourceStreamReader):
             if not self._manifest_mode:
                 raise ValueError(
                     "arrowipc stream reader: startingTimestamp requires a "
-                    f"snapshotted table (no manifests under {self._path})")
+                    f"snapshotted table (no manifests under {self._path}; "
+                    "an engine write converts the directory)")
             want = _parse_ts_option(str(st))
             # Smallest version whose commit time is at or after the
             # anchor.  Commit times are non-decreasing in the common
@@ -1883,8 +1859,8 @@ class ArrowIPCStreamReader(DataSourceStreamReader):
                 raise ValueError(
                     "arrowipc stream reader: startingVersion requires a "
                     f"snapshotted table (no manifests under {self._path}) "
-                    "— offsets on a plain directory are file names, not "
-                    "versions")
+                    "— offsets on a directory without a log are file "
+                    "names, not versions")
             if str(sv).lower() == "latest":
                 self._starting_version = "latest"
             else:
@@ -2005,9 +1981,9 @@ class ArrowIPCStreamReader(DataSourceStreamReader):
         if ("v" in start) != ("v" in end):
             raise ValueError(
                 "arrowipc stream offset model changed mid-checkpoint "
-                f"(start={start}, end={end}) — the table gained or lost "
-                "snapshot manifests under a running query; restart from a "
-                "fresh checkpoint")
+                f"(start={start}, end={end}) — an engine write gave the "
+                "directory a manifest log after the query started; "
+                "restart from a fresh checkpoint")
         if "v" in start:
             files = self._added_files(
                 int(start.get("v", 0)), int(end.get("v", 0)))
@@ -2061,21 +2037,17 @@ class ArrowIPCDataSource(DataSource):
     bytes; defaults to 128 MiB for stream-encoded files, whose lack of a
     footer makes each file one sequential scan task, and to no rotation
     for file-encoded parts, which split by batch range),
-    ``snapshots`` (true on write → each commit publishes a
-    ``_manifest-N.json`` snapshot version; true on read → read the latest
-    snapshot instead of the live listing; UNSET on a table that already
-    has manifests → sticky: reads follow the latest manifest and write
-    commits publish the next version, since a raw listing double-counts
-    parts superseded by compaction/DELETE until vacuum; false → force the
-    raw listing, debugging/recovery only), ``version`` (read — time-travel
-    to snapshot N; snapshot reads also give snapshot isolation against
-    concurrent appenders), ``filenameColumn`` (read — append a string
+    ``version`` (read — time-travel to manifest version N; every read is
+    a snapshot read, isolated from concurrent writers), ``filenameColumn`` (read — append a string
     column carrying each row's part-file path, the arrowipc equivalent of
     ``input_file_name()``), and ``path``.  Option names are
     case-insensitive: Spark hands them over lower-cased, and each reader
     and writer looks them up through one ``CaseInsensitiveDict``.
-    Directory maintenance (small-file compaction, row-level DELETE,
-    vacuum) lives in ``sources.maintenance``.
+    Every write commits the next ``_manifest-N.json`` version, and every
+    read follows the latest one (see the manifest-log note above); a
+    directory without a log reads as its listing until an engine write
+    converts it.  Directory maintenance (small-file compaction, row-level
+    DELETE, vacuum) lives in ``sources.maintenance``.
     """
 
     @classmethod
@@ -2087,11 +2059,10 @@ class ArrowIPCDataSource(DataSource):
         path = _local_path(opts.get("path"))
         if not path:
             raise ValueError("arrowipc requires a path")
-        files = _visible_file_set(
-            path, opts.get("version"), _snapshots_mode(opts))
+        files = _visible_file_set(path, opts.get("version"))
         if not files:
             # The visible set can be legitimately empty (a DELETE matched
-            # every row of a snapshotted table).  Old parts stay on disk
+            # every row of a table).  Old parts stay on disk
             # until vacuum — use them for SCHEMA inference only;
             # partitions() still plans zero tasks, so the read yields an
             # empty frame with the right schema.  A fully-vacuumed empty
@@ -2172,11 +2143,10 @@ def register_arrowipc_table(spark, name: str, path: str, **options) -> None:
     catalog does not forward OPTIONS/LOCATION to a Python data source's
     reader at query time (they arrive empty), so persistent-table DDL
     cannot carry the path.  A temp view over the reader gives SQL the same
-    scan — including filter pushdown, snapshot/version options, and
-    filenameColumn — under a stable name:
+    scan — including filter pushdown, time travel, and filenameColumn —
+    under a stable name:
 
-        register_arrowipc_table(spark, "docs", "/data/docs",
-                                snapshots="true")
+        register_arrowipc_table(spark, "docs", "/data/docs", version="3")
         spark.sql("SELECT count(*) FROM docs WHERE lang = 'en'")
     """
     register_arrowipc(spark)

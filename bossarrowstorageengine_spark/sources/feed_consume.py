@@ -185,7 +185,7 @@ def feed_head(spark: SparkSession, feed_dir: str) -> int:
                         pass
         if seqs:
             return max(seqs)
-    feed = (spark.read.format("arrowipc").option("snapshots", "true")
+    feed = (spark.read.format("arrowipc")
             .option("columns", "commit_seq").schema("commit_seq long")
             .load(feed_dir))
     head = feed.agg(F.max("commit_seq")).collect()[0][0]
@@ -207,7 +207,7 @@ def consume_next(spark: SparkSession, feed_dir: str, offsets_dir: str,
     sink's own ledger makes the re-apply a no-op."""
     pos = committed_position(spark, offsets_dir, group)
     head = feed_head(spark, feed_dir)
-    feed = (spark.read.format("arrowipc").option("snapshots", "true")
+    feed = (spark.read.format("arrowipc")
             .option("columns", columns).schema(schema).load(feed_dir))
     rows = feed.filter((F.col("commit_seq") > pos)
                        & (F.col("commit_seq") <= head))

@@ -88,12 +88,6 @@ def compact_feed_thru(
     "version", "thru"}``; no-op (no manifest commit) when nothing is in
     scope."""
     with _Rewrite(spark, path, "feedcompact") as tx:
-        if tx.head is None:
-            raise ValueError(
-                f"{path!r} is not a snapshotted feed — checkpoint "
-                "compaction needs the manifest log to swap readers "
-                "atomically and keep history; write the feed with "
-                "option('snapshots', 'true')")
         before = tx.visible
         in_scope = sorted(f for f in before
                           if (k := _scope_key(path, f)) is not None

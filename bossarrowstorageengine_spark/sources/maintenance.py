@@ -11,9 +11,8 @@ the copy-on-write DELETE / UPDATE / MERGE, and (in other modules) feed
 checkpoint compaction and LSM index compaction — is one ``_Rewrite``
 transaction: pin the input files, rewrite them with an ordinary Spark job
 into a hidden staging directory, promote the staged parts, and commit one
-add/remove manifest (a physical swap on a plain directory).  The rewrite
-parallelizes across the cluster like any other query; nothing passes
-through the driver but file names and counts.
+add/remove manifest.  The rewrite parallelizes across the cluster like any
+other query; nothing passes through the driver but file names and counts.
 """
 
 from __future__ import annotations
@@ -30,11 +29,13 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from bossarrowstorageengine_spark.sources.arrowipc import (
     ConcurrentWriteConflict,
-    _list_ipc_files,
+    _ensure_log,
     _load_manifest_doc,
     _manifest_file,
     _manifest_versions,
+    _promote,
     _read_manifest,
+    _visible_file_set,
     _write_manifest,
     register_arrowipc,
     stats_path,
@@ -47,12 +48,10 @@ class _Rewrite:
     commit).  Use it as a context manager; every exit, normal or not,
     removes its pin and staging directories.
 
-    - ``visible``: the files the rewrite may replace — the head manifest's
-      set on a snapshotted table (``head`` is its version), else the
-      directory listing (``head`` is None).  A listing would include an
-      in-flight appender's renamed-but-uncommitted part, which must be
-      neither rewritten (its own commit would later double its rows) nor
-      deleted.
+    - ``visible``: the files the rewrite may replace — the set of the head
+      manifest, version ``head``.  A directory without a log is first
+      converted (``_ensure_log``); one with no part files at all fails
+      here, as there is nothing to rewrite.
     - ``read(files)``: a fresh ``arrowipc`` load of a hard-link pin
       (copy fallback) of ``files``, default all of ``visible``.  The
       pin keeps the relative layout, so partition directories read back
@@ -67,11 +66,9 @@ class _Rewrite:
       then publish one manifest version adding them and removing
       ``remove``, applied inside the CAS retry loop so concurrent
       appends survive and old parts stay readable by time travel until
-      vacuum.  On a plain directory the swap is physical: delete
-      ``remove``, then promote.  A commit that loses a write-write race
-      deletes the files it promoted (vacuum never touches unmanifested
-      files, so they would linger forever) and re-raises
-      ``ConcurrentWriteConflict``.
+      vacuum.  A commit that loses a write-write race deletes the files
+      it promoted (vacuum never touches unmanifested files, so they would
+      linger forever) and re-raises ``ConcurrentWriteConflict``.
     """
 
     def __init__(self, spark: SparkSession, path: str, kind: str):
@@ -79,13 +76,10 @@ class _Rewrite:
         self._spark = spark
         self._path = path
         self._kind = kind
-        versions = _manifest_versions(path)
-        self.head = versions[-1] if versions else None
-        self.visible = (_read_manifest(path, self.head) if versions
-                        else _list_ipc_files(path))
+        self.head = _ensure_log(path)
+        self.visible = _visible_file_set(path, self.head)
         self.version: int | None = None
         self._staging = os.path.join(path, f".{kind}-{uuid.uuid4().hex}")
-        self._staged_schema: StructType | None = None
         self._pins: dict[tuple, str] = {}
         self._held: dict[str, str] = {}      # table file -> a pinned link
         self._origin: dict[str, str] = {}    # pinned link -> table file
@@ -133,7 +127,6 @@ class _Rewrite:
     def stage(self, df, into: str = "", **options) -> None:
         """Write ``df`` into the staging directory, or its ``into``
         subdirectory (e.g. ``seg=3``); empty options are left out."""
-        self._staged_schema = df.schema
         writer = df.write.format("arrowipc").mode("append")
         for key, value in options.items():
             if value:
@@ -156,25 +149,9 @@ class _Rewrite:
         paths.  ``adds_new_rows`` is the manifest's dataChange hint:
         False for pure rewrites, True when the staged parts also carry
         new logical rows (a MERGE's inserts)."""
-        if self.head is None:
-            if (remove and self._staged_schema is not None
-                    and not any(_walk_staged_parts(self._staging))
-                    and set(_list_ipc_files(self._path, missing_ok=True))
-                    <= set(remove)):
-                self._stage_empty_part()
-            for old in remove:
-                for victim in (old, stats_path(old)):
-                    if os.path.exists(victim):
-                        os.remove(victim)
-        promoted: list[str] = []
-        for src in _walk_staged_parts(self._staging):
-            dst = os.path.join(self._path, os.path.relpath(src, self._staging))
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(src, dst)
-            if os.path.exists(stats_path(src)):
-                os.replace(stats_path(src), stats_path(dst))
-            promoted.append(dst)
-        if self.head is not None and (promoted or remove):
+        promoted = _promote(_walk_staged_parts(self._staging),
+                            self._staging, self._path)
+        if promoted or remove:
             try:
                 self.version = _write_manifest(
                     self._path, promoted, replace=False, remove=remove,
@@ -186,22 +163,6 @@ class _Rewrite:
                             os.remove(victim)
                 raise
         return promoted
-
-    def _stage_empty_part(self) -> None:
-        """The rewrite empties a plain directory (e.g. a DELETE matched
-        every row).  A directory with zero part files is unreadable (no
-        file to infer the schema from), so stage one empty part that
-        carries the schema — a table that exists but holds no rows.
-        Snapshotted tables don't need this: old parts stay on disk for
-        schema inference and the manifest defines the empty set."""
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        os.makedirs(self._staging, exist_ok=True)
-        marker = os.path.join(self._staging,
-                              f"part-empty-{uuid.uuid4().hex}.arrows")
-        with pa.OSFile(marker, "wb") as f:
-            with pa.ipc.new_file(f, to_arrow_schema(self._staged_schema)):
-                pass
 
 
 def compact_arrowipc(
@@ -233,7 +194,7 @@ def compact_arrowipc(
     zorder columns may not themselves be partition columns.
 
     Returns ``{"files_before": n, "files_after": m, "rows": r}``, plus
-    ``"version"`` on a snapshotted table.  The read is the normal
+    the committed ``"version"`` when anything was rewritten.  The read is the normal
     distributed scan (batch-range splits), the write the normal
     distributed writer; the swap happens only after every new part file
     has committed.
@@ -668,7 +629,7 @@ def merge_arrowipc(
 
     Copy-on-write: only part files containing matched keys are rewritten;
     inserts land as new part files in the same commit — one atomic
-    replace-manifest publish on snapshotted tables.  ``max_retries`` as in
+    manifest publish.  ``max_retries`` as in
     ``delete_arrowipc`` (the cached source is reused across retries).
 
     Returns ``{"rows_updated": n, "rows_inserted": m, "files_rewritten": k,
@@ -730,7 +691,7 @@ def merge_arrowipc(
 
 
 def vacuum_arrowipc(path: str, keep_versions: int = 1) -> dict:
-    """Reclaim storage on a snapshotted table: drop all but the last
+    """Reclaim storage: drop all but the last
     ``keep_versions`` manifests and delete part files referenced ONLY by
     the dropped versions (the Delta ``VACUUM`` contract — compaction is a
     logical replace, vacuum is the physical delete).
@@ -779,9 +740,13 @@ def vacuum_arrowipc(path: str, keep_versions: int = 1) -> dict:
             for meta in ("ts", "adds_new_rows"):
                 if meta in doc:
                     full[meta] = doc[meta]
+            # Flush and fsync before the rename: a power loss must not
+            # leave the retained manifest empty.
             tmp = _manifest_file(path, v) + f".ckpt-{uuid.uuid4().hex}"
             with open(tmp, "w") as f:
                 json.dump(full, f)
+                f.flush()
+                os.fsync(f.fileno())
             os.replace(tmp, _manifest_file(path, v))
     removed = 0
     for f in sorted(dropped_refs - retained):
@@ -865,15 +830,10 @@ def schema_census_arrowipc(path: str) -> list[dict]:
     """
     from bossarrowstorageengine_spark.sources.arrowipc import (
         _file_arrow_schema,
-        _manifest_versions,
-        _read_manifest,
     )
 
-    versions = _manifest_versions(path)
-    files = (_read_manifest(path, versions[-1]) if versions
-             else _list_ipc_files(path))
     groups: dict[str, dict] = {}
-    for f in sorted(files):
+    for f in _visible_file_set(path):
         schema = _file_arrow_schema(f)
         key = ", ".join(f"{fld.name}:{fld.type}" for fld in schema)
         g = groups.setdefault(

@@ -63,8 +63,7 @@ def read_feed(spark: SparkSession, feed_dir: str,
         schema = schema.replace("bucket int,", f"bucket int, {payload},")
     if tagged:
         schema += ", gen long"
-    reader = (spark.readStream if stream
-              else spark.read.option("snapshots", "true"))
+    reader = spark.readStream if stream else spark.read
     return (reader.format("arrowipc")
             .option("columns", ",".join(_payload_cols(schema)))
             .schema(schema).load(feed_dir))
@@ -122,7 +121,7 @@ def seed_index(idx_dir: str, bucketed: DataFrame,
         F.lit(False).alias("tombstone"),
         F.lit(int(base_seg)).cast("long").alias("seg"))
         .write.format("arrowipc").option("partitionBy", "seg")
-        .option("snapshots", "true").option("compression", "lz4"))
+        .option("compression", "lz4"))
     if layout_buckets:
         w = w.option("bucketBy", "vec_id").option(
             "buckets", str(layout_buckets))
@@ -240,7 +239,7 @@ def apply_index_batch(batch_df: DataFrame, batch_id: int,
         # one write job per commit = one atomic manifest commit: the
         # segment is the ledger entry, no marker files
         w = (seg_rows.write.format("arrowipc").option("partitionBy", "seg")
-             .option("snapshots", "true").option("compression", "lz4"))
+             .option("compression", "lz4"))
         if layout:
             w = w.option("bucketBy", "vec_id").option("buckets",
                                                       str(layout))
@@ -273,7 +272,6 @@ def read_index(spark: SparkSession, idx_dir: str,
                   + (f", {ddl}" if ddl else ""))
     if layout:
         rows = (spark.read.format("arrowipc")
-                .option("snapshots", "true")
                 .option("groupByBucket", "true")
                 .schema(schema).load(idx_dir))
         if thru is not None:
@@ -293,7 +291,7 @@ def read_index(spark: SparkSession, idx_dir: str,
             yield df[out_cols]
 
         return rows.mapInPandas(_merge, schema=out_schema)
-    rows = (spark.read.format("arrowipc").option("snapshots", "true")
+    rows = (spark.read.format("arrowipc")
             .schema(schema).load(idx_dir))
     if thru is not None:
         rows = rows.filter(F.col("seg") <= thru)
@@ -439,7 +437,7 @@ def record_purge(keys_df: DataFrame, ledger_dir: str,
     against."""
     (keys_df.select(F.col("vec_id").cast("long"),
                     F.lit(purged_at).cast("long").alias("purged_at"))
-     .write.format("arrowipc").option("snapshots", "true")
+     .write.format("arrowipc")
      .option("compression", "lz4").mode("append").save(ledger_dir))
 
 
@@ -448,7 +446,7 @@ def read_purge_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame:
     recorded (a missing ledger is the common case, not an error)."""
     if not os.path.isdir(ledger_dir):
         return spark.createDataFrame([], LEDGER_SCHEMA)
-    return (spark.read.format("arrowipc").option("snapshots", "true")
+    return (spark.read.format("arrowipc")
             .schema(LEDGER_SCHEMA).load(ledger_dir))
 
 
@@ -486,7 +484,7 @@ def apply_index_batch_guarded(batch_df: DataFrame, batch_id: int,
         # (overwrite commit — pre-override ledger stays time-travelable)
         remaining = ledger.join(viol.select("vec_id").distinct(),
                                 "vec_id", "left_anti").localCheckpoint()
-        (remaining.write.format("arrowipc").option("snapshots", "true")
+        (remaining.write.format("arrowipc")
          .option("compression", "lz4").mode("overwrite").save(ledger_dir))
     apply_index_batch(batch, batch_id, idx_dir)
     return {"n_unpurged": n_viol}
@@ -629,7 +627,7 @@ def generation_churn(spark: SparkSession, idx_root: str,
     gdir = generation_dir(idx_root, gen)
     meta = _read_gen_meta(gdir)
     if meta is None:   # pre-meta generation: one full scan, then backfill
-        rows = (spark.read.format("arrowipc").option("snapshots", "true")
+        rows = (spark.read.format("arrowipc")
                 .option("columns", "vec_id,seg")
                 .schema("vec_id long, seg long").load(gdir)
                 .localCheckpoint())
@@ -642,7 +640,7 @@ def generation_churn(spark: SparkSession, idx_root: str,
         _write_gen_meta(gdir, base, n_base)
         return (n_delta / n_base) if n_base else 0.0
     n_base = int(meta["base_rows"])
-    deltas = (spark.read.format("arrowipc").option("snapshots", "true")
+    deltas = (spark.read.format("arrowipc")
               .option("columns", "vec_id,seg")
               .schema("vec_id long, seg long").load(gdir)
               .filter(F.col("seg") > int(meta["base_seg"])))

@@ -58,7 +58,7 @@ def seed_mv(mv_dir: str, base: DataFrame) -> None:
         "lang", F.col("docs").cast("long"), F.col("chars").cast("long"),
         F.lit(1).cast("long").alias("mv_version"),
         F.lit(0).cast("long").alias("src_commit"))
-     .write.format("arrowipc").option("snapshots", "true")
+     .write.format("arrowipc")
      .option("compression", "lz4").mode("append").save(mv_dir))
 
 
@@ -68,7 +68,7 @@ def _mv_head(spark: SparkSession, mv_dir: str) -> tuple[DataFrame, int,
     Two cheap steps — a 2-column scan for the maxima (one driver-side
     row), then a pruned re-read of just the head version's rows — so the
     head read never scales with the version history."""
-    versions = (spark.read.format("arrowipc").option("snapshots", "true")
+    versions = (spark.read.format("arrowipc")
                 .option("columns", "mv_version,src_commit")
                 .schema("mv_version long, src_commit long").load(mv_dir))
     head = versions.agg(F.max("mv_version").alias("v"),
@@ -78,7 +78,7 @@ def _mv_head(spark: SparkSession, mv_dir: str) -> tuple[DataFrame, int,
             f"MV table {mv_dir!r} is empty — write version 1 with "
             "seed_mv(mv_dir, base_aggregate) before starting the "
             "maintainer (the seed is the only corpus-sized pass)")
-    rows = (spark.read.format("arrowipc").option("snapshots", "true")
+    rows = (spark.read.format("arrowipc")
             .schema(MV_SCHEMA).load(mv_dir)
             .filter(F.col("mv_version") == int(head["v"])))
     return rows, int(head["v"]), int(head["c"])
@@ -171,7 +171,7 @@ def apply_feed_batch(batch_df: DataFrame, batch_id: int,
         # decomposition covers both without shuffling the ledger.
         new_state = _merge_ledger_state(head, deltas, ["lang"],
                                         head_ver, seq)
-        (new_state.write.format("arrowipc").option("snapshots", "true")
+        (new_state.write.format("arrowipc")
          .option("compression", "lz4").mode("append").save(mv_dir))
 
 
@@ -260,7 +260,7 @@ def seed_mv_fanout(grains: list[tuple[str, list[str]]],
             *keys, F.col("docs").cast("long"), F.col("chars").cast("long"),
             F.lit(1).cast("long").alias("mv_version"),
             F.lit(0).cast("long").alias("src_commit"))
-         .write.format("arrowipc").option("snapshots", "true")
+         .write.format("arrowipc")
          .option("compression", "lz4").mode("append").save(mv_dir))
 
 
@@ -268,7 +268,7 @@ def _grain_head(spark: SparkSession, mv_dir: str,
                 keys: list[str]) -> tuple[DataFrame, int, int]:
     """``(head rows, head_version, thru_commit)`` for one grain —
     ``_mv_head``'s two-step read with a grain-shaped schema."""
-    versions = (spark.read.format("arrowipc").option("snapshots", "true")
+    versions = (spark.read.format("arrowipc")
                 .option("columns", "mv_version,src_commit")
                 .schema("mv_version long, src_commit long").load(mv_dir))
     head = versions.agg(F.max("mv_version").alias("v"),
@@ -277,7 +277,7 @@ def _grain_head(spark: SparkSession, mv_dir: str,
         raise ValueError(
             f"fanout ledger {mv_dir!r} is empty — seed every grain with "
             "seed_mv_fanout(grains, base_fine) first")
-    rows = (spark.read.format("arrowipc").option("snapshots", "true")
+    rows = (spark.read.format("arrowipc")
             .schema(_grain_schema(keys)).load(mv_dir)
             .filter(F.col("mv_version") == int(head["v"])))
     return rows, int(head["v"]), int(head["c"])
@@ -326,7 +326,7 @@ def apply_fanout_batch(batch_df: DataFrame, batch_id: int,
             new_state = _merge_ledger_state(head, deltas, keys,
                                             head_ver, seq)
             (new_state.write.format("arrowipc")
-             .option("snapshots", "true").option("compression", "lz4")
+             .option("compression", "lz4")
              .mode("append").save(mv_dir))
             thrus[mv_dir] = seq
 

@@ -684,8 +684,8 @@ def stream_to_partitioned_table(events: DataFrame, path: str,
                                 checkpoint_dir: str):
     """Streaming face of the PARTITIONED arrowipc sink — the composition
     the native sink's partitionBy rejection points at: ``foreachBatch``
-    writes each micro-batch through the BATCH writer (Hive partitionBy +
-    snapshots append → one manifest commit per batch), so the directory
+    writes each micro-batch through the BATCH writer (Hive partitionBy
+    append → one manifest commit per batch), so the directory
     layout, stats sidecars, and time travel all match a batch-written
     table.
 
@@ -728,7 +728,7 @@ def stream_to_partitioned_table(events: DataFrame, path: str,
                     return  # replay of an already-committed batch
         (batch_df.write.format("arrowipc")
          .option("partitionBy", partition_by)
-         .option("snapshots", "true").mode("append").save(path))
+         .mode("append").save(path))
         tmp = hwm_file + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"stream_id": stream_id, "batch_id": batch_id}, f)

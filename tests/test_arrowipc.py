@@ -37,10 +37,10 @@ def _planned_files(reader) -> list[str]:
 
 
 def _inject_uncommitted_part(spark, table_dir: str, df) -> list[str]:
-    """Simulate a concurrent appender that renamed its part file(s) into the
-    table but has not (yet) committed a manifest: write ``df`` to a scratch
-    plain directory and move the parts in by hand.  (A plain write into a
-    manifest table would itself commit, per the sticky-snapshot rule.)"""
+    """Simulate a writer that put its part file(s) into the table but has
+    not (yet) committed a manifest: write ``df`` to a scratch table and
+    move the parts in by hand (an engine write into the table would
+    itself commit)."""
     scratch = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     df.write.format("arrowipc").mode("append").save(scratch)
     moved = []
@@ -218,8 +218,8 @@ def test_stream_read_incremental_micro_batches(spark):
 
 def test_stream_write_sink_appends_per_micro_batch(spark):
     """writeStream to arrowipc: each micro-batch lands as compressed IPC
-    files (atomic rename, stats sidecars); the batch reader sees the union
-    of all committed batches."""
+    files (stats sidecars) in one manifest commit; the batch reader sees
+    the union of all committed batches."""
     src = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}_out"
     ckpt = f"/tmp/spark_graft_test/{uuid.uuid4().hex}_ckpt"
@@ -250,16 +250,14 @@ def test_stream_write_sink_appends_per_micro_batch(spark):
         q.stop()
     back = spark.read.format("arrowipc").load(out)
     assert sorted(r.id for r in back.collect()) == [1, 2, 3]
-    # commit-scope naming: part-{batchId:010d}-{seq:05d}.arrows, strictly
-    # monotonic across micro-batches (what the stream reader's
-    # lexicographic high-water mark requires), no stale .staging leftovers
-    import re
+    # one manifest version per micro-batch, no staging leftovers
+    from bossarrowstorageengine_spark.sources.arrowipc import (
+        _manifest_versions)
 
-    names = sorted(os.path.basename(p)
-                   for p in glob.glob(os.path.join(out, "*.arrows")))
-    assert names and all(
-        re.fullmatch(r"part-\d{10}-\d{5}\.arrows", n) for n in names)
-    assert not glob.glob(os.path.join(out, ".staging", "*.arrows"))
+    assert _manifest_versions(out) == [1, 2]
+    v1 = spark.read.format("arrowipc").option("version", "1").load(out)
+    assert sorted(r.id for r in v1.collect()) == [1, 2]
+    assert not glob.glob(os.path.join(out, ".*"))
     for d in (src, out, ckpt):
         shutil.rmtree(d, ignore_errors=True)
 
@@ -413,7 +411,7 @@ def test_partitioned_write_and_directory_pruning(spark):
     df.repartition(2).write.format("arrowipc") \
         .option("partitionBy", "lang").mode("append").save(out)
     langs = {r.lang for r in df.select("lang").distinct().collect()}
-    assert {d for d in os.listdir(out) if not d.startswith(".")} == \
+    assert {d for d in os.listdir(out) if not d.startswith((".", "_"))} == \
         {f"lang={l}" for l in langs}
 
     back = spark.read.format("arrowipc").load(out)
@@ -434,7 +432,10 @@ def test_partitioned_write_and_directory_pruning(spark):
 
 def test_compaction_rewrites_small_files(spark):
     """compact_arrowipc collapses a many-small-files directory into few
-    large parts with identical data and fresh stats sidecars."""
+    large parts with identical data and fresh stats sidecars; the
+    replaced parts leave the visible set in one commit."""
+    from bossarrowstorageengine_spark.sources.arrowipc import (
+        _visible_file_set)
     from bossarrowstorageengine_spark.sources.maintenance import compact_arrowipc
 
     df = load_table(spark, SF, "lineitem")
@@ -447,9 +448,10 @@ def test_compaction_rewrites_small_files(spark):
                 F.count(F.lit(1)), F.min("l_orderkey"), F.max("l_shipdate")]
     before = df.agg(*checksum).collect()
     info = compact_arrowipc(spark, out, target_files=2)
-    assert info == {"files_before": 8, "files_after": 2, "rows": df.count()}
+    assert info == {"files_before": 8, "files_after": 2, "rows": df.count(),
+                    "version": 2}
 
-    parts = glob.glob(os.path.join(out, "*.arrows"))
+    parts = _visible_file_set(out)
     assert len(parts) == 2
     for p in parts:
         assert os.path.exists(stats_path(p))
@@ -486,42 +488,37 @@ def test_merge_schema_union_with_null_fill(spark):
 
 
 def test_snapshot_versions_isolate_and_accumulate(spark):
-    """snapshots=true: each commit publishes a manifest version; version-1
-    reads exclude later appends, latest-snapshot reads include them, and a
-    plain (listing-based) read still sees everything — back-compat."""
+    """Each commit publishes a manifest version; version-1 reads exclude
+    later appends, default (latest-version) reads include them."""
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     nat = load_table(spark, SF, "nation")
     first = nat.filter(F.col("n_regionkey") <= 1)
     second = nat.filter(F.col("n_regionkey") > 1)
     for df in (first, second):
-        (df.write.format("arrowipc").option("snapshots", "true")
+        (df.write.format("arrowipc")
            .mode("append").save(out))
 
     v1 = (spark.read.format("arrowipc").option("version", "1").load(out))
-    latest = (spark.read.format("arrowipc")
-              .option("snapshots", "true").load(out))
-    plain = spark.read.format("arrowipc").load(out)
+    latest = spark.read.format("arrowipc").load(out)
     assert v1.count() == first.count()
     assert latest.count() == nat.count()
-    assert plain.count() == nat.count()
     assert sorted(r.n_nationkey for r in v1.collect()) == \
         sorted(r.n_nationkey for r in first.collect())
     shutil.rmtree(out, ignore_errors=True)
 
 
 def test_snapshot_overwrite_replaces_visible_set_but_keeps_history(spark):
-    """mode('overwrite') with snapshots: the new manifest lists only the
-    new files, while earlier versions stay readable (time travel)."""
+    """mode('overwrite'): the new manifest lists only the new files,
+    while earlier versions stay readable (time travel)."""
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     nat = load_table(spark, SF, "nation")
-    (nat.write.format("arrowipc").option("snapshots", "true")
+    (nat.write.format("arrowipc")
         .mode("append").save(out))                       # v1: all nations
     replacement = nat.filter(F.col("n_regionkey") == 0)
-    (replacement.write.format("arrowipc").option("snapshots", "true")
+    (replacement.write.format("arrowipc")
         .mode("overwrite").save(out))                    # v2: replacement only
 
-    latest = (spark.read.format("arrowipc")
-              .option("snapshots", "true").load(out))
+    latest = spark.read.format("arrowipc").load(out)
     v1 = spark.read.format("arrowipc").option("version", "1").load(out)
     assert latest.count() == replacement.count()
     assert v1.count() == nat.count()
@@ -529,42 +526,39 @@ def test_snapshot_overwrite_replaces_visible_set_but_keeps_history(spark):
 
 
 def test_snapshot_read_ignores_uncommitted_listing_noise(spark):
-    """A snapshot read plans only from the manifest: a part file that
-    appears in the directory without a manifest entry (an in-flight or
-    failed-commit writer) is invisible until a commit publishes it."""
+    """A read plans only from the manifest: a part file that appears in
+    the directory without a manifest entry (an in-flight or failed-commit
+    writer) is invisible until a commit publishes it."""
+    from bossarrowstorageengine_spark.sources.arrowipc import (
+        _list_ipc_files, _visible_file_set)
+
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     nat = load_table(spark, SF, "nation")
-    (nat.write.format("arrowipc").option("snapshots", "true")
+    (nat.write.format("arrowipc")
         .mode("append").save(out))
     # simulate a concurrent appender that has renamed its file but not yet
     # committed a manifest: drop a part file straight into the directory
-    # (a plain write would itself commit, under the sticky-snapshot rule)
-    _inject_uncommitted_part(spark, out, nat.limit(3))
+    injected = set(_inject_uncommitted_part(spark, out, nat.limit(3)))
 
-    snap = (spark.read.format("arrowipc")
-            .option("snapshots", "true").load(out))
-    # default read on a manifest table = latest manifest (sticky), so it
-    # must ignore the uncommitted file too
     dflt = spark.read.format("arrowipc").load(out)
-    # explicit snapshots=false opts into the raw listing
-    raw = (spark.read.format("arrowipc")
-           .option("snapshots", "false").load(out))
-    assert snap.count() == nat.count()
     assert dflt.count() == nat.count()
-    assert raw.count() == nat.count() + 3
+    # the uncommitted part really is in the listing, outside the manifest
+    assert injected and injected <= set(_list_ipc_files(out))
+    assert not injected & set(_visible_file_set(out))
     shutil.rmtree(out, ignore_errors=True)
 
 
 def test_default_read_follows_manifest_after_cow_delete(spark):
-    """The silent-corruption hazard sticky snapshots close: after a CoW
-    DELETE on a snapshotted table, superseded parts stay on disk until
-    vacuum — a DEFAULT read (no snapshot options) must follow the latest
-    manifest, not double-count via the raw listing."""
+    """After a CoW DELETE, superseded parts stay on disk until vacuum — a
+    default read must follow the latest manifest, not double-count via
+    the directory listing."""
+    from bossarrowstorageengine_spark.sources.arrowipc import (
+        _visible_file_set)
     from bossarrowstorageengine_spark.sources.maintenance import delete_arrowipc
 
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     nat = load_table(spark, SF, "nation")
-    (nat.write.format("arrowipc").option("snapshots", "true")
+    (nat.write.format("arrowipc")
         .mode("append").save(out))                               # v1
     delete_arrowipc(spark, out, "n_regionkey = 0")               # v2 (CoW)
 
@@ -572,26 +566,22 @@ def test_default_read_follows_manifest_after_cow_delete(spark):
     dflt = spark.read.format("arrowipc").load(out)
     assert sorted(r.n_nationkey for r in dflt.collect()) == \
         sorted(r.n_nationkey for r in expect.collect())
-    # the old parts really are still on disk (what made raw listing wrong)
-    raw = (spark.read.format("arrowipc")
-           .option("snapshots", "false").load(out))
-    assert raw.count() > expect.count()
+    # the old parts really are still on disk (what a listing would read)
+    superseded = set(_visible_file_set(out, 1)) - set(_visible_file_set(out))
+    assert superseded and all(os.path.exists(p) for p in superseded)
     shutil.rmtree(out, ignore_errors=True)
 
 
-def test_plain_append_to_manifest_table_commits_sticky_version(spark):
-    """Once a table has manifests, a write WITHOUT snapshot options must
-    still publish the next version — otherwise its rows would be invisible
-    to (default) manifest readers: a lost write."""
+def test_every_append_commits_next_version(spark):
+    """Every write publishes the next manifest version — a write whose
+    rows no manifest names would be a lost write."""
     from bossarrowstorageengine_spark.sources import arrowipc as a
 
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     nat = load_table(spark, SF, "nation")
-    (nat.filter(F.col("n_regionkey") == 0)
-        .write.format("arrowipc").option("snapshots", "true")
-        .mode("append").save(out))                               # v1
-    (nat.filter(F.col("n_regionkey") == 1)
-        .write.format("arrowipc").mode("append").save(out))      # sticky v2
+    for region in (0, 1):
+        (nat.filter(F.col("n_regionkey") == region)
+            .write.format("arrowipc").mode("append").save(out))  # v1, v2
 
     assert a._manifest_versions(out) == [1, 2]
     dflt = spark.read.format("arrowipc").load(out)
@@ -678,7 +668,7 @@ def test_compaction_on_snapshotted_table_publishes_replace_manifest(spark):
     nat = load_table(spark, SF, "nation")
     for rk in (0, 1, 2):
         (nat.filter(F.col("n_regionkey") == rk)
-            .write.format("arrowipc").option("snapshots", "true")
+            .write.format("arrowipc")
             .mode("append").save(out))                          # v1..v3
     # in-flight appender: renamed part, no manifest commit yet
     _inject_uncommitted_part(spark, out, nat.filter(F.col("n_regionkey") == 3))
@@ -690,7 +680,7 @@ def test_compaction_on_snapshotted_table_publishes_replace_manifest(spark):
     assert info["version"] == 4
 
     latest = (spark.read.format("arrowipc")
-              .option("snapshots", "true").load(out))
+              .load(out))
     assert sorted(r.n_nationkey for r in latest.collect()) == \
         sorted(r.n_nationkey for r in committed.collect())
     # time travel to a pre-compaction version still works (files retained)
@@ -756,7 +746,7 @@ def test_vacuum_reclaims_only_dropped_version_files(spark):
     nat = load_table(spark, SF, "nation")
     for rk in (0, 1):
         (nat.filter(F.col("n_regionkey") == rk)
-            .write.format("arrowipc").option("snapshots", "true")
+            .write.format("arrowipc")
             .mode("append").save(out))                          # v1, v2
     old_parts = a._read_manifest(out, 2)
     inflight = set(_inject_uncommitted_part(spark, out, nat.limit(2)))
@@ -771,7 +761,7 @@ def test_vacuum_reclaims_only_dropped_version_files(spark):
         assert os.path.exists(p), "unmanifested files must survive vacuum"
 
     latest = (spark.read.format("arrowipc")
-              .option("snapshots", "true").load(out))
+              .load(out))
     expect = nat.filter(F.col("n_regionkey") <= 1)
     assert sorted(r.n_nationkey for r in latest.collect()) == \
         sorted(r.n_nationkey for r in expect.collect())
@@ -798,8 +788,10 @@ def test_filename_column_attributes_rows_to_part_files(spark):
 
 
 def test_delete_rewrites_only_affected_files(spark):
-    """Copy-on-write DELETE on a plain table: matching rows disappear,
+    """Copy-on-write DELETE: matching rows disappear,
     untouched part files keep their identity (not rewritten)."""
+    from bossarrowstorageengine_spark.sources.arrowipc import (
+        _visible_file_set)
     from bossarrowstorageengine_spark.sources.maintenance import delete_arrowipc
 
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
@@ -809,7 +801,7 @@ def test_delete_rewrites_only_affected_files(spark):
         .mode("append").save(out)
     nat.filter(F.col("n_regionkey") > 1).write.format("arrowipc") \
         .mode("append").save(out)
-    before_files = set(glob.glob(os.path.join(out, "*.arrows")))
+    before_files = set(_visible_file_set(out))
 
     info = delete_arrowipc(spark, out, "n_regionkey = 0")
     n_r0 = nat.filter(F.col("n_regionkey") == 0).count()
@@ -820,7 +812,7 @@ def test_delete_rewrites_only_affected_files(spark):
     expect = nat.filter(F.col("n_regionkey") != 0)
     assert sorted(r.n_nationkey for r in back.collect()) == \
         sorted(r.n_nationkey for r in expect.collect())
-    after_files = set(glob.glob(os.path.join(out, "*.arrows")))
+    after_files = set(_visible_file_set(out))
     assert len(before_files & after_files) == 1, \
         "the unaffected part file must survive untouched"
     shutil.rmtree(out, ignore_errors=True)
@@ -834,7 +826,7 @@ def test_delete_on_snapshotted_table_commits_replace_manifest(spark):
 
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     nat = load_table(spark, SF, "nation")
-    (nat.write.format("arrowipc").option("snapshots", "true")
+    (nat.write.format("arrowipc")
         .mode("append").save(out))                              # v1
 
     info = delete_arrowipc(spark, out, "n_regionkey IN (2, 3)")
@@ -843,7 +835,7 @@ def test_delete_on_snapshotted_table_commits_replace_manifest(spark):
     assert info["version"] == 2
 
     latest = (spark.read.format("arrowipc")
-              .option("snapshots", "true").load(out))
+              .load(out))
     expect = nat.filter(~F.col("n_regionkey").isin(2, 3))
     assert sorted(r.n_nationkey for r in latest.collect()) == \
         sorted(r.n_nationkey for r in expect.collect())
@@ -880,6 +872,8 @@ def test_delete_null_predicate_rows_survive(spark):
 
 
 def test_delete_with_no_matches_is_a_noop(spark):
+    from bossarrowstorageengine_spark.sources.arrowipc import (
+        _manifest_versions)
     from bossarrowstorageengine_spark.sources.maintenance import delete_arrowipc
 
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
@@ -889,6 +883,7 @@ def test_delete_with_no_matches_is_a_noop(spark):
     info = delete_arrowipc(spark, out, "n_regionkey = 999")
     assert info == {"rows_deleted": 0, "files_rewritten": 0}
     assert set(glob.glob(os.path.join(out, "*.arrows"))) == files
+    assert _manifest_versions(out) == [1]  # no commit either
     back = spark.read.format("arrowipc").load(out)
     assert back.count() == nat.count()
     shutil.rmtree(out, ignore_errors=True)
@@ -897,6 +892,8 @@ def test_delete_with_no_matches_is_a_noop(spark):
 def test_update_rewrites_matching_rows_in_place(spark):
     """CoW UPDATE: assignments apply simultaneously against the pre-update
     row, only matching rows change, only affected files are rewritten."""
+    from bossarrowstorageengine_spark.sources.arrowipc import (
+        _visible_file_set)
     from bossarrowstorageengine_spark.sources.maintenance import update_arrowipc
 
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
@@ -905,7 +902,7 @@ def test_update_rewrites_matching_rows_in_place(spark):
         .mode("append").save(out)
     nat.filter(F.col("n_regionkey") > 1).write.format("arrowipc") \
         .mode("append").save(out)
-    before_files = set(glob.glob(os.path.join(out, "*.arrows")))
+    before_files = set(_visible_file_set(out))
 
     info = update_arrowipc(
         spark, out, "n_regionkey = 4",
@@ -922,7 +919,7 @@ def test_update_rewrites_matching_rows_in_place(spark):
         for r in nat.collect()
     }
     assert got == expect
-    after_files = set(glob.glob(os.path.join(out, "*.arrows")))
+    after_files = set(_visible_file_set(out))
     assert len(before_files & after_files) == 1  # untouched file survives
     shutil.rmtree(out, ignore_errors=True)
 
@@ -935,7 +932,7 @@ def test_merge_upserts_by_key_in_one_snapshot_commit(spark):
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     nat = load_table(spark, SF, "nation").select(
         "n_nationkey", "n_name", "n_regionkey")
-    (nat.write.format("arrowipc").option("snapshots", "true")
+    (nat.write.format("arrowipc")
         .mode("append").save(out))                              # v1
 
     source = spark.createDataFrame(
@@ -947,7 +944,7 @@ def test_merge_upserts_by_key_in_one_snapshot_commit(spark):
     assert info["version"] == 2
 
     latest = (spark.read.format("arrowipc")
-              .option("snapshots", "true").load(out))
+              .load(out))
     got = {(r.n_nationkey, r.n_name, r.n_regionkey) for r in latest.collect()}
     expect = {(r.n_nationkey, r.n_name, r.n_regionkey)
               for r in nat.filter(~F.col("n_nationkey").isin(0, 1)).collect()}
@@ -1051,13 +1048,13 @@ def test_register_arrowipc_table_gives_sql_access(spark):
 
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     nat = load_table(spark, SF, "nation")
-    (nat.write.format("arrowipc").option("snapshots", "true")
+    (nat.write.format("arrowipc")
         .mode("append").save(out))                              # v1
-    (nat.limit(3).write.format("arrowipc").option("snapshots", "true")
+    (nat.limit(3).write.format("arrowipc")
         .mode("append").save(out))                              # v2
 
     register_arrowipc_table(spark, "nat_ipc_v1", out, version="1")
-    register_arrowipc_table(spark, "nat_ipc", out, snapshots="true")
+    register_arrowipc_table(spark, "nat_ipc", out)
     n_v1 = spark.sql("SELECT count(*) AS n FROM nat_ipc_v1").collect()[0].n
     n_latest = spark.sql("SELECT count(*) AS n FROM nat_ipc").collect()[0].n
     assert n_v1 == nat.count()
@@ -1134,7 +1131,7 @@ def test_manifest_commits_are_delta_sized_with_checkpoints(spark):
     nat = load_table(spark, SF, "nation").limit(1)
     n_commits = 2 * a._CHECKPOINT_EVERY + 3
     for _ in range(n_commits):
-        (nat.write.format("arrowipc").option("snapshots", "true")
+        (nat.write.format("arrowipc")
             .mode("append").save(out))
 
     versions = a._manifest_versions(out)
@@ -1174,7 +1171,7 @@ def test_vacuum_self_contains_retained_delta_manifests(spark):
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     nat = load_table(spark, SF, "nation").limit(1)
     for _ in range(5):   # v1 checkpoint + v2..v5 deltas
-        (nat.write.format("arrowipc").option("snapshots", "true")
+        (nat.write.format("arrowipc")
             .mode("append").save(out))
 
     info = vacuum_arrowipc(out, keep_versions=2)
@@ -1252,9 +1249,9 @@ def test_manifest_stats_drive_planning_without_sidecars(spark):
     orders = load_table(spark, SF, "orders")
     # two files split by key range → a selective filter prunes one
     (orders.filter(F.col("o_orderkey") <= 1000).write.format("arrowipc")
-        .option("snapshots", "true").mode("append").save(out))
+        .mode("append").save(out))
     (orders.filter(F.col("o_orderkey") > 1000).write.format("arrowipc")
-        .mode("append").save(out))                    # sticky commit v2
+        .mode("append").save(out))                    # v2
 
     # manifest entries carry stats for every committed file
     ent = a._read_manifest_entries(out, 2)
@@ -1470,7 +1467,7 @@ def test_cow_delete_on_partitioned_table_preserves_layout(spark):
         (F.col("id") % 3).cast("string").alias("grp"),
         (F.col("id") * 2).alias("v"))
     (df.repartition(1).write.format("arrowipc")
-     .option("partitionBy", "grp").option("snapshots", "true")
+     .option("partitionBy", "grp")
      .mode("append").save(out))
 
     info = delete_arrowipc(spark, out, "v >= 100", predicate_columns=["v"])
@@ -1481,13 +1478,13 @@ def test_cow_delete_on_partitioned_table_preserves_layout(spark):
     # col=value directory.
     assert not [f for f in os.listdir(out) if f.endswith(".arrows")]
 
-    back = spark.read.format("arrowipc").option("snapshots", "true").load(out)
+    back = spark.read.format("arrowipc").load(out)
     assert back.count() == 50
     got = sorted(r["id"] for r in back.filter(F.col("grp") == "1").collect())
     assert got == [i for i in range(100) if i % 3 == 1 and 2 * i < 100]
     # Directory pruning still holds post-mutation: planning a grp=1 scan
     # touches only grp=1 part files.
-    reader = ArrowIPCReader(None, {"path": out, "snapshots": "true"})
+    reader = ArrowIPCReader(None, {"path": out})
     reader.pushFilters([EqualTo(("grp",), "1")])
     kept = _planned_files(reader)
     assert kept and all("grp=1" in p for p in kept)
@@ -1510,7 +1507,7 @@ def test_cow_update_migrates_row_across_partitions(spark):
         F.when(F.col("id") < 20, "cold").otherwise("hot").alias("tier"),
         (F.col("id") * 10).alias("v"))
     (df.repartition(1).write.format("arrowipc")
-     .option("partitionBy", "tier").option("snapshots", "true")
+     .option("partitionBy", "tier")
      .mode("append").save(out))
 
     # Promote hot-adjacent cold rows: ids 15-19 move tier cold → hot.
@@ -1522,10 +1519,10 @@ def test_cow_update_migrates_row_across_partitions(spark):
     # Fresh load() per action — the documented upstream plan-cache hazard
     # (FORMAT.md §8) makes a filtered action poison a later unfiltered one
     # on the SAME load() result.
-    back = spark.read.format("arrowipc").option("snapshots", "true").load(out)
+    back = spark.read.format("arrowipc").load(out)
     hot = sorted(r["id"] for r in back.filter(F.col("tier") == "hot").collect())
     assert hot == list(range(15, 30))
-    back2 = spark.read.format("arrowipc").option("snapshots", "true").load(out)
+    back2 = spark.read.format("arrowipc").load(out)
     assert back2.count() == 30
     # The migrated rows physically live under tier=hot now.
     hot_files = glob.glob(os.path.join(out, "tier=hot", "*.arrows"))
@@ -1545,7 +1542,7 @@ def test_compaction_preserves_partition_layout(spark):
         F.col("id"), (F.col("id") % 3).cast("string").alias("grp"))
     # 6 tasks x 3 live combos -> many small files per partition dir.
     (df.repartition(6).write.format("arrowipc")
-     .option("partitionBy", "grp").option("snapshots", "true")
+     .option("partitionBy", "grp")
      .mode("append").save(out))
     n_before = len(glob.glob(os.path.join(out, "grp=*", "*.arrows")))
     assert n_before >= 9
@@ -1560,9 +1557,9 @@ def test_compaction_preserves_partition_layout(spark):
     visible = _read_manifest(out, _manifest_versions(out)[-1])
     assert len(visible) == 3
     assert all("grp=" in p for p in visible)
-    back = spark.read.format("arrowipc").option("snapshots", "true").load(out)
+    back = spark.read.format("arrowipc").load(out)
     assert back.count() == 90
-    reader = ArrowIPCReader(None, {"path": out, "snapshots": "true"})
+    reader = ArrowIPCReader(None, {"path": out})
     reader.pushFilters([EqualTo(("grp",), "2")])
     kept = _planned_files(reader)
     assert kept and all("grp=2" in p for p in kept)
@@ -1581,7 +1578,7 @@ def test_partitioned_table_full_lifecycle(spark):
     df = spark.range(90).select(
         F.col("id"), (F.col("id") % 3).cast("string").alias("grp"))
     (df.repartition(6).write.format("arrowipc")
-     .option("partitionBy", "grp").option("snapshots", "true")
+     .option("partitionBy", "grp")
      .mode("append").save(out))
 
     compact_arrowipc(spark, out, target_files=3)
@@ -1592,18 +1589,16 @@ def test_partitioned_table_full_lifecycle(spark):
     on_disk = glob.glob(os.path.join(out, "grp=*", "*.arrows"))
     assert len(on_disk) == 3  # latest visible set only, one per partition
     assert not [f for f in os.listdir(out) if f.endswith(".arrows")]
-    back = spark.read.format("arrowipc").option("snapshots", "true").load(out)
+    back = spark.read.format("arrowipc").load(out)
     assert back.count() == 81
     assert back.filter(F.col("id") % 10 == 0).count() == 0
     shutil.rmtree(out, ignore_errors=True)
 
 
 def test_stream_sink_rejects_partitionby():
-    """The streaming sink must fail fast on partitionBy: commit-scope
-    promotion names files at the table root and the stream reader's
-    single lexicographic high-water mark cannot span col=value
-    subdirectories — silently flattening (or worse, skipping files)
-    would betray the option."""
+    """The streaming sink must fail fast on partitionBy and point at the
+    foreachBatch composition — silently flattening the layout would
+    betray the option."""
     import pytest as _pytest
 
     from bossarrowstorageengine_spark.sources.arrowipc import (
@@ -1660,7 +1655,7 @@ def test_corrupt_manifest_error_names_the_manifest(spark):
 
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     spark.range(10).write.format("arrowipc") \
-        .option("snapshots", "true").mode("append").save(out)
+        .mode("append").save(out)
     mf = sorted(glob.glob(os.path.join(out, "_manifest-*.json")))[0]
     with open(mf, "w") as fh:
         fh.write("{broken")
@@ -1679,12 +1674,12 @@ def test_delete_everything_on_snapshotted_table_stays_readable(spark):
 
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     spark.range(10).withColumn("v", F.col("id") * 3).write \
-        .format("arrowipc").option("snapshots", "true") \
+        .format("arrowipc") \
         .mode("append").save(out)
     info = delete_arrowipc(spark, out, "id >= 0")
     assert info["rows_deleted"] == 10
 
-    back = spark.read.format("arrowipc").option("snapshots", "true").load(out)
+    back = spark.read.format("arrowipc").load(out)
     assert back.columns == ["id", "v"]
     assert back.count() == 0
     pre = spark.read.format("arrowipc").option("version", "1").load(out)
@@ -1704,7 +1699,7 @@ def test_manifest_commit_rejects_conflicting_remove(spark):
 
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     spark.range(20).repartition(2).write.format("arrowipc") \
-        .option("snapshots", "true").mode("append").save(out)
+        .mode("append").save(out)
     a, b = sorted(glob.glob(os.path.join(out, "*.arrows")))
 
     # Commit 1 (a successful CoW elsewhere): rewrites part A.
@@ -1723,7 +1718,7 @@ def test_manifest_commit_rejects_conflicting_remove(spark):
     extra = os.path.join(out, "part-zextra.arrows")
     shutil.copy2(b, extra)
     _write_manifest(out, [extra], replace=False, remove=[])
-    back = spark.read.format("arrowipc").option("snapshots", "true").load(out)
+    back = spark.read.format("arrowipc").load(out)
     assert back.count() == 30  # A-rewrite(10) + B(10) + extra copy of B(10)
     shutil.rmtree(out, ignore_errors=True)
 
@@ -1739,7 +1734,7 @@ def test_cow_delete_on_two_level_partitioned_table(spark):
         (F.col("id") % 2).cast("string").alias("a"),
         (F.col("id") % 3).cast("string").alias("b"))
     (df.repartition(1).write.format("arrowipc")
-     .option("partitionBy", "a,b").option("snapshots", "true")
+     .option("partitionBy", "a,b")
      .mode("append").save(out))
     assert glob.glob(os.path.join(out, "a=*", "b=*", "*.arrows"))
 
@@ -1749,7 +1744,7 @@ def test_cow_delete_on_two_level_partitioned_table(spark):
     # or at the single level.
     assert not [f for f in os.listdir(out) if f.endswith(".arrows")]
     assert not glob.glob(os.path.join(out, "a=*", "*.arrows"))
-    back = spark.read.format("arrowipc").option("snapshots", "true").load(out)
+    back = spark.read.format("arrowipc").load(out)
     assert back.count() == 48
     got = sorted(r["id"] for r in back.filter(
         (F.col("a") == "1") & (F.col("b") == "2")).collect())
@@ -1771,7 +1766,7 @@ def test_mutation_conflict_retry_succeeds_against_new_snapshot(
 
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     spark.range(20).withColumn("v", F.col("id") * 2).repartition(2) \
-        .write.format("arrowipc").option("snapshots", "true") \
+        .write.format("arrowipc") \
         .mode("append").save(out)
     source = spark.range(10, 25).withColumn("v", F.col("id") * 3)
 
@@ -1808,7 +1803,7 @@ def test_mutation_conflict_retry_succeeds_against_new_snapshot(
         assert not source.is_cached
         want = [(i, 2 * i if i < 10 else 3 * i) for i in range(25)]
     assert calls["n"] == 2  # first attempt lost, retry committed
-    back = spark.read.format("arrowipc").option("snapshots", "true").load(out)
+    back = spark.read.format("arrowipc").load(out)
     assert sorted((r["id"], r["v"]) for r in back.collect()) == want
     shutil.rmtree(out, ignore_errors=True)
 
@@ -1824,13 +1819,13 @@ def test_restore_rolls_back_to_old_version_as_new_commit(spark):
 
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     spark.range(20).withColumn("v", F.col("id") * 2).repartition(2) \
-        .write.format("arrowipc").option("snapshots", "true") \
+        .write.format("arrowipc") \
         .mode("append").save(out)                      # v1: 20 rows
     delete_arrowipc(spark, out, "id >= 5")             # v2: the bad delete
 
     info = restore_arrowipc(out, 1)                    # v3 = v1's file set
     assert info == {"version": 3, "restored_from": 1, "files": 2}
-    head = spark.read.format("arrowipc").option("snapshots", "true").load(out)
+    head = spark.read.format("arrowipc").load(out)
     assert head.count() == 20
     bad = spark.read.format("arrowipc").option("version", "2").load(out)
     assert bad.count() == 5  # the undone state stays time-travelable
@@ -1852,7 +1847,7 @@ def test_history_reports_every_commit(spark):
 
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     spark.range(20).repartition(2).write.format("arrowipc") \
-        .option("snapshots", "true").mode("append").save(out)
+        .mode("append").save(out)
     delete_arrowipc(spark, out, "id >= 10")
     restore_arrowipc(out, 1)
 
@@ -1880,12 +1875,12 @@ def test_compaction_with_zorder_clusters_both_dimensions(spark):
         (F.hash("id") % 1024 + 1024).alias("x"),
         (F.hash(F.col("id") * 7 + 3) % 1024 + 1024).alias("y"))
     df.repartition(8).write.format("arrowipc") \
-        .option("snapshots", "true").mode("append").save(out)
+        .mode("append").save(out)
 
     info = compact_arrowipc(spark, out, target_files=4, zorder="x,y")
     assert info["rows"] == 4096
 
-    back = spark.read.format("arrowipc").option("snapshots", "true").load(out)
+    back = spark.read.format("arrowipc").load(out)
     assert back.count() == 4096
     assert back.agg(F.sum("x")).collect()[0][0] == \
         df.agg(F.sum("x")).collect()[0][0]
@@ -1950,7 +1945,7 @@ def test_zorder_compaction_on_partitioned_table(spark):
         (F.hash("id") % 512 + 512).alias("x"),
         (F.hash(F.col("id") * 5 + 1) % 512 + 512).alias("y"))
     df.repartition(6).write.format("arrowipc") \
-        .option("partitionBy", "grp").option("snapshots", "true") \
+        .option("partitionBy", "grp") \
         .mode("append").save(out)
 
     with _pytest.raises(ValueError, match="partition column"):
@@ -1962,7 +1957,7 @@ def test_zorder_compaction_on_partitioned_table(spark):
     assert not [f for f in os.listdir(out) if f.endswith(".arrows")]
     hist = history_arrowipc(out)
     assert hist[-1]["kind"] == "full" or hist[-1]["visible_files"] > 0
-    back = spark.read.format("arrowipc").option("snapshots", "true").load(out)
+    back = spark.read.format("arrowipc").load(out)
     assert back.count() == 2048
     assert back.filter(F.col("grp") == "1").count() == 1024
     shutil.rmtree(out, ignore_errors=True)
@@ -2006,10 +2001,10 @@ def test_losing_rewrite_cleans_up_orphans(spark, monkeypatch, op):
     elif op == "feed":
         (rows.withColumn("commit_seq", F.col("id") % 2 + 1).repartition(1)
          .write.format("arrowipc").option("partitionBy", "commit_seq")
-         .option("snapshots", "true").mode("append").save(out))
+         .mode("append").save(out))
     else:
         rows.repartition(2).write.format("arrowipc") \
-            .option("snapshots", "true").mode("append").save(out)
+            .mode("append").save(out)
     a = sorted(_part_files(out))[0]
 
     # A concurrent mutation rewrites part A, publishing version 2.
@@ -2019,7 +2014,7 @@ def test_losing_rewrite_cleans_up_orphans(spark, monkeypatch, op):
 
     # Force OUR rewrite to pin the stale version 1 (as if it had read the
     # table just before the concurrent commit landed).
-    monkeypatch.setattr(maintenance, "_manifest_versions", lambda p: [1])
+    monkeypatch.setattr(maintenance, "_ensure_log", lambda p: 1)
     run = {
         "delete": lambda: maintenance.delete_arrowipc(spark, out, "id >= 0"),
         "compact": lambda: maintenance.compact_arrowipc(
@@ -2048,7 +2043,7 @@ def test_failed_rewrite_leaves_no_pin_or_staging(spark, op):
 
     out = f"/tmp/spark_graft_test/{uuid.uuid4().hex}"
     spark.range(20).repartition(2).write.format("arrowipc") \
-        .option("snapshots", "true").mode("append").save(out)
+        .mode("append").save(out)
     run, error = {
         "compact_zorder": (lambda: compact_arrowipc(spark, out, zorder="id"),
                            ValueError),
@@ -2063,7 +2058,7 @@ def test_failed_rewrite_leaves_no_pin_or_staging(spark, op):
     with pytest.raises(error):
         run()
     assert _hidden_dirs(out) == []
-    back = spark.read.format("arrowipc").option("snapshots", "true").load(out)
+    back = spark.read.format("arrowipc").load(out)
     assert sorted(r.id for r in back.collect()) == list(range(20))
     shutil.rmtree(out, ignore_errors=True)
 
@@ -2102,15 +2097,15 @@ def test_restore_on_partitioned_table(spark):
     df = spark.range(20).select(
         "id", (F.col("id") % 2).cast("string").alias("grp"))
     (df.repartition(1).write.format("arrowipc")
-     .option("partitionBy", "grp").option("snapshots", "true")
+     .option("partitionBy", "grp")
      .mode("append").save(out))
     update_arrowipc(spark, out, "grp = '0'", {"grp": "'1'"})  # v2: migrate
 
     info = restore_arrowipc(out, 1)
     assert info["restored_from"] == 1
-    back = spark.read.format("arrowipc").option("snapshots", "true").load(out)
+    back = spark.read.format("arrowipc").load(out)
     assert back.filter(F.col("grp") == "0").count() == 10  # migration undone
-    reader = ArrowIPCReader(None, {"path": out, "snapshots": "true"})
+    reader = ArrowIPCReader(None, {"path": out})
     reader.pushFilters([EqualTo(("grp",), "0")])
     kept = _planned_files(reader)
     assert kept and all("grp=0" in p for p in kept)

@@ -47,7 +47,7 @@ def _write_small_files(spark, path: str) -> None:
     (spark.range(N_FILES * FILE_ROWS)
      .select("id", (F.col("id") * 0.5).alias("val"))
      .repartitionByRange(N_FILES, "id")
-     .write.format("arrowipc").option("snapshots", "true")
+     .write.format("arrowipc")
      .mode("overwrite").save(path))
     assert len(a._visible_file_set(path)) == N_FILES
 

@@ -239,13 +239,13 @@ def test_partitioned_cow_update_equals_projection_and_placement(
     nat = load_table(spark, "/root/testdata/sf0.001", "nation").select(
         "n_nationkey", "n_regionkey")
     (nat.repartition(n_parts).write.format("arrowipc")
-     .option("partitionBy", "n_regionkey").option("snapshots", "true")
+     .option("partitionBy", "n_regionkey")
      .mode("append").save(out))
     pred = f"n_nationkey >= {lo}"
     update_arrowipc(spark, out, pred,
                     {"n_regionkey": f"pmod(n_regionkey + {delta}, 5)"})
 
-    back = (spark.read.format("arrowipc").option("snapshots", "true")
+    back = (spark.read.format("arrowipc")
             .option("filenameColumn", "_file").load(out))
     rows = back.collect()
     cond = F.expr(pred)
@@ -305,15 +305,15 @@ def test_feed_compact_content_invariant_arbitrary_histories(
     if data.draw(st.booleans(), label="batched"):
         (df.repartition(2).write.format("arrowipc")
          .option("partitionBy", "commit_seq")
-         .option("snapshots", "true").mode("append").save(feed))
+         .mode("append").save(feed))
     else:
         for seq in range(1, n_commits + 1):
             (df.filter(f"commit_seq = {seq}").repartition(2)
              .write.format("arrowipc").option("partitionBy", "commit_seq")
-             .option("snapshots", "true").mode("append").save(feed))
+             .mode("append").save(feed))
 
     def visible():
-        back = (spark.read.format("arrowipc").option("snapshots", "true")
+        back = (spark.read.format("arrowipc")
                 .schema("row_id long, payload long, commit_seq long")
                 .load(feed))
         return sorted(map(tuple, back.collect()))

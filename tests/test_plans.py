@@ -5,6 +5,8 @@ TakeOrderedAndProject (no global sort), and salted-join correctness."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
@@ -58,8 +60,11 @@ def test_aggregate_is_partial_then_final(spark):
 
 
 def test_partitioned_sink_prunes_directories(spark):
+    from bossarrowstorageengine_spark.operators.scans import _SCRATCH_ROOT
+
     QUERIES["q_sink_partitioned"](spark, SF).collect()  # writes the layout
-    back = spark.read.parquet("/tmp/spark_graft_io/sf0.001/partitioned")
+    back = spark.read.parquet(os.path.join(
+        _SCRATCH_ROOT, os.path.basename(SF), "partitioned"))
     pruned = back.filter(F.col("o_orderstatus") == "F")
     plan = _plan(pruned)
     # partition filter resolves at listing time, not as a data filter

@@ -183,7 +183,7 @@ def test_feed_compact_behind_head_then_absorb_and_time_travel(spark):
              .schema("lang string, change string, delta long, "
                      "commit_seq long"))
         r = (r.option("version", str(version)) if version
-             else r.option("snapshots", "true"))
+             else r)
         df = r.load(feed).filter("commit_seq IN (1, 2, 3)")
         return sorted(map(tuple, _feed_commit_deltas(df, [1, 2, 3])
                           .collect()))
@@ -207,22 +207,33 @@ def test_feed_compact_behind_head_then_absorb_and_time_travel(spark):
     assert _manifest_versions(feed)[-1] == v_before
 
 
-def test_feed_compact_requires_snapshots(spark, tmp_path):
-    """A plain (manifest-less) directory cannot be checkpoint-compacted —
-    there is no log to swap readers atomically — and the error must say
-    so rather than silently rewriting files."""
-    import pytest
+def test_feed_compact_converts_manifestless_feed(spark, tmp_path):
+    """A feed directory without a manifest log (parts written before the
+    engine committed every write, or by another tool) is converted by the
+    compaction's rewrite: a checkpoint of its listing first, then the
+    compaction commit — never a silent physical rewrite."""
+    import glob
+    import os
 
     from bossarrowstorageengine_spark.sources.feed_maintain import (
         compact_feed_thru,
     )
+    from bossarrowstorageengine_spark.sources.maintenance import (
+        history_arrowipc,
+    )
 
-    p = str(tmp_path / "plain_feed")
+    p = str(tmp_path / "old_feed")
     (spark.range(10).selectExpr("id", "id % 2 AS commit_seq")
      .write.format("arrowipc").option("partitionBy", "commit_seq")
      .mode("append").save(p))
-    with pytest.raises(ValueError, match="snapshot"):
-        compact_feed_thru(spark, p, thru=1)
+    for mf in glob.glob(os.path.join(p, "_manifest-*.json")):
+        os.remove(mf)
+    res = compact_feed_thru(spark, p, thru=1)
+    assert res["compacted"] > 0 and res["rows"] == 10
+    assert [h["kind"] for h in history_arrowipc(p)][:1] == ["full"]
+    assert len(history_arrowipc(p)) == 2
+    back = spark.read.format("arrowipc").load(p)
+    assert sorted(r.id for r in back.collect()) == list(range(10))
 
 
 def test_mv_restore_rolls_back_and_enforces_detection(spark):
@@ -277,12 +288,12 @@ def test_feed_compact_then_vacuum_reclaims_history(spark, tmp_path):
     for seq in (1, 2, 3):
         (rows.filter(F.col("commit_seq") == seq).repartition(2)
          .write.format("arrowipc").option("partitionBy", "commit_seq")
-         .option("snapshots", "true").mode("append").save(feed))
+         .mode("append").save(feed))
     compact_feed_thru(spark, feed, thru=2)
 
     def head():
         return sorted(map(tuple, (
-            spark.read.format("arrowipc").option("snapshots", "true")
+            spark.read.format("arrowipc")
             .schema("row_id long, payload long, commit_seq long")
             .load(feed).collect())))
 

@@ -128,7 +128,6 @@ def test_ann_lsh_maintained_probe3_rebucketed(spark, tmp_path):
     src, feed = _ann_mutation_feed(spark, SF, base)
     seed_index(idx, _ann_bucketed(_ann_snap(spark, src, "1")))
     feed_rows = (spark.read.format("arrowipc")
-                 .option("snapshots", "true")
                  .option("columns", "vec_id,bucket,change,commit_seq")
                  .schema("vec_id long, bucket int, change string, "
                          "commit_seq long").load(feed))

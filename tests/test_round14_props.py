@@ -42,7 +42,7 @@ def _snap_ids(spark, table, lo, hi):
     df = spark.range(lo, hi).select(
         "id", (F.col("id") % 2).cast("string").alias("grp"))
     (df.coalesce(1).write.format("arrowipc")
-     .option("snapshots", "true").mode("append").save(table))
+     .mode("append").save(table))
 
 
 def test_starting_version_past_head_rejected(spark, tmp_path):
@@ -238,7 +238,7 @@ def test_ann_ivf_maintained_properties(spark):
     # full head coverage: exactly the delete-surviving v1 corpus
     assert g1 == {v for v in v1_ids if v % 5 != 0}
     # O(Δ): feed is mutation-sized, never corpus-sized
-    n_feed = (spark.read.format("arrowipc").option("snapshots", "true")
+    n_feed = (spark.read.format("arrowipc")
               .schema("vec_id long, bucket int, change string,"
                       " commit_seq long").load(feed).count())
     assert 0 < n_feed < len(v1_ids)
@@ -265,17 +265,17 @@ def test_bucketby_write_and_grouped_read_roundtrip(spark, tmp_path):
         F.col("id").alias("vec_id"), (F.col("id") % 7).alias("v"))
     (df.repartition(4).write.format("arrowipc")
      .option("bucketBy", "vec_id").option("buckets", "8")
-     .option("snapshots", "true").mode("append").save(table))
+     .mode("append").save(table))
     sb_dirs = sorted(d for d in os.listdir(table) if d.startswith("__sb="))
     assert sb_dirs == [f"__sb={i}" for i in range(8)]
 
-    back = (spark.read.format("arrowipc").option("snapshots", "true")
+    back = (spark.read.format("arrowipc")
             .schema("vec_id long, v long").load(table))
     assert back.columns == ["vec_id", "v"]          # __sb never surfaces
     assert sorted((r.vec_id, r.v) for r in back.collect()) == \
         [(i, i % 7) for i in range(100)]
 
-    grouped = (spark.read.format("arrowipc").option("snapshots", "true")
+    grouped = (spark.read.format("arrowipc")
                .option("groupByBucket", "true")
                .schema("vec_id long, v long").load(table))
     assert sorted((r.vec_id, r.v) for r in grouped.collect()) == \
@@ -291,7 +291,7 @@ def test_bucketby_write_and_grouped_read_roundtrip(spark, tmp_path):
         F.lit(99).cast("long").alias("v"))
      .write.format("arrowipc").option("bucketBy", "vec_id")
      .option("buckets", "8").mode("append").save(table))
-    grouped2 = (spark.read.format("arrowipc").option("snapshots", "true")
+    grouped2 = (spark.read.format("arrowipc")
                 .option("groupByBucket", "true")
                 .schema("vec_id long, v long").load(table))
     for p in grouped2.select("vec_id").rdd.glom().collect():
@@ -302,7 +302,7 @@ def test_bucketby_write_and_grouped_read_roundtrip(spark, tmp_path):
         F.col("id").alias("vec_id"),
         F.lit(0).cast("long").alias("v"))
      .write.format("arrowipc").mode("append").save(table))
-    bad = (spark.read.format("arrowipc").option("snapshots", "true")
+    bad = (spark.read.format("arrowipc")
            .option("groupByBucket", "true")
            .schema("vec_id long, v long").load(table))
     with pytest.raises(Exception, match="not under a"):
@@ -383,9 +383,11 @@ def test_timestamp_as_of_batch_time_travel(spark, tmp_path):
     at-or-before the anchor — with the run-max monotonicity rule, so a
     ts dip can't mis-resolve — reads exactly like a pinned version, and
     the error arms (pre-first-commit anchor, version+ts both given,
-    unsnapshotted table) fail loudly."""
+    table without a manifest log) fail loudly."""
     import json
+    import os
 
+    import pyarrow as pa
     import pytest
 
     from bossarrowstorageengine_spark.sources import register_arrowipc
@@ -425,8 +427,12 @@ def test_timestamp_as_of_batch_time_travel(spark, tmp_path):
         _ids(timestampAsOf="10")
     with pytest.raises(Exception, match="mutually exclusive"):
         _ids(timestampAsOf="150", version="1")
-    plain = str(tmp_path / "plain")
-    spark.range(3).write.format("arrowipc").mode("append").save(plain)
+    plain = str(tmp_path / "plain")        # no manifest log: another tool
+    os.makedirs(plain)
+    table = pa.table({"id": pa.array([0, 1, 2], pa.int64())})
+    with pa.OSFile(os.path.join(plain, "ext-0.arrows"), "wb") as f, \
+            pa.ipc.new_file(f, table.schema) as w:
+        w.write_table(table)
     with pytest.raises(Exception, match="snapshotted"):
         (spark.read.format("arrowipc").schema("id bigint")
          .option("timestampAsOf", "100").load(plain).collect())
@@ -469,7 +475,7 @@ def test_feed_consumer_groups_properties(spark):
     # audit log: slow = register(seek 0), commit 1, rewind(seek 0),
     # commit 2; fast = register, commit 2 (the refused regression
     # never landed a row)
-    audit = (spark.read.format("arrowipc").option("snapshots", "true")
+    audit = (spark.read.format("arrowipc")
              .schema(OFFSETS_SCHEMA).load(offsets)
              .orderBy("seq").collect())
     slow_ops = [(r.op, r.position) for r in audit if r.group == "slow"]
@@ -517,7 +523,7 @@ def test_purge_derived_properties(spark):
 
     base = os.path.join(_SCRATCH_ROOT, os.path.basename(SF),
                         "purge_derived")
-    pack = (spark.read.format("arrowipc").option("snapshots", "true")
+    pack = (spark.read.format("arrowipc")
             .option("columns", "bucket,doc_id")
             .schema("bucket int, doc_id long")
             .load(os.path.join(base, "pack")))

@@ -132,7 +132,7 @@ def _snap_ids(spark, table, lo, hi):
     df = spark.range(lo, hi).select(
         "id", (F.col("id") % 2).cast("string").alias("grp"))
     (df.coalesce(1).write.format("arrowipc")
-     .option("snapshots", "true").mode("append").save(table))
+     .mode("append").save(table))
 
 
 def test_vacuum_checkpoint_preserves_commit_metadata(spark, tmp_path):
@@ -245,7 +245,7 @@ def test_consume_next_caps_delivery_at_head(spark, tmp_path):
             (F.col("id") + 100 * seq).alias("doc_id"))
          .coalesce(1).write.format("arrowipc")
          .option("partitionBy", "commit_seq")
-         .option("snapshots", "true").mode("append").save(feed))
+         .mode("append").save(feed))
 
     _commit(1, 3)
     _commit(2, 2)
@@ -472,7 +472,7 @@ def test_generational_rollover_inherits_payload_and_checks_gen_tags(
             "change string, commit_seq long, gen long")
          .coalesce(1).write.format("arrowipc")
          .option("partitionBy", "commit_seq")
-         .option("snapshots", "true").mode("append").save(feed))
+         .mode("append").save(feed))
 
     # commit 1 (tagged gen 0): recode 3 keys — churn 0.3 > 0.2 → roll.
     _commit([(i, 1, [90 + i, 0], "recode", 1, 0) for i in (0, 2, 4)])

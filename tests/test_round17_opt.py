@@ -25,7 +25,7 @@ def _write_feed(spark, path):
     for seq in (1, 2, 3):
         (df.filter(F.col("commit_seq") == seq)
          .write.format("arrowipc").option("partitionBy", "commit_seq")
-         .option("snapshots", "true").option("compression", "lz4")
+         .option("compression", "lz4")
          .mode("append").save(path))
 
 
@@ -49,7 +49,7 @@ def test_compact_feed_thru_schema_matches_inference(spark, tmp_path):
     assert res_a["rows"] == res_b["rows"]
 
     def state(path):
-        return (spark.read.format("arrowipc").option("snapshots", "true")
+        return (spark.read.format("arrowipc")
                 .schema(FEED_SCHEMA).load(path))
 
     sa, sb = state(a), state(b)

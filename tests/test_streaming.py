@@ -323,7 +323,7 @@ def test_foreach_batch_partitioned_table_sink(spark):
         hist = history_arrowipc(table)
         assert len(hist) == 2  # one manifest commit per micro-batch
         back = (spark.read.format("arrowipc")
-                .option("snapshots", "true").load(table))
+                .load(table))
         assert sorted(r.event_id for r in back.collect()) == [1, 2, 3]
         assert back.filter(F.col("event_type") == "click").count() == 2
     finally:
@@ -362,7 +362,7 @@ def test_manifest_mode_stream_reader(spark):
     df1 = spark.range(0, 5).select(
         "id", (F.col("id") % 2).cast("string").alias("grp"))
     (df1.coalesce(1).write.format("arrowipc")
-     .option("partitionBy", "grp").option("snapshots", "true")
+     .option("partitionBy", "grp")
      .mode("append").save(table))                              # v1
 
     name = f"mm_{_uuid.uuid4().hex[:8]}"
@@ -376,7 +376,7 @@ def test_manifest_mode_stream_reader(spark):
         df2 = spark.range(5, 8).select(
             "id", (F.col("id") % 2).cast("string").alias("grp"))
         (df2.coalesce(1).write.format("arrowipc")
-         .option("partitionBy", "grp").option("snapshots", "true")
+         .option("partitionBy", "grp")
          .mode("append").save(table))                          # v2
         q.processAllAvailable()
         got = sorted(r.id for r in spark.table(name).collect())
@@ -428,7 +428,6 @@ def test_snapshotted_sink_chains_into_manifest_mode_reader(spark):
     up = (spark.readStream.schema(EVENTS_SCHEMA)
           .option("maxFilesPerTrigger", 1).json(src)
           .writeStream.format("arrowipc")
-          .option("snapshots", "true")
           .option("path", table)
           .option("checkpointLocation", f"{base}/ckpt-up").start())
 
@@ -534,7 +533,7 @@ def test_partitioned_sink_idempotence_is_checkpoint_scoped(spark):
         qb.processAllAvailable()
 
         back = (spark.read.format("arrowipc")
-                .option("snapshots", "true").load(table))
+                .load(table))
         assert sorted(r.event_id for r in back.collect()) == [1, 2, 3]
         # BOTH identities keep their own mark FILES (no shared state —
         # concurrent writers cannot clobber each other's replay guard).
@@ -552,7 +551,7 @@ def test_partitioned_sink_idempotence_is_checkpoint_scoped(spark):
         push(src_b, "b1.json", [_ev(4, "2024-01-01 00:03:00")])
         qb.processAllAvailable()
         back = (spark.read.format("arrowipc")
-                .option("snapshots", "true").load(table))
+                .load(table))
         assert sorted(r.event_id for r in back.collect()) == [1, 2, 3]
         assert json.load(open(hwm_of(f"{base}/ckpt_b")))["batch_id"] == 5
         assert json.load(open(hwm_of(f"{base}/ckpt_a")))["batch_id"] == 1
@@ -583,7 +582,7 @@ def test_changefeed_streams_into_incremental_consumer(spark):
     def write_feed(rows):
         df = spark.createDataFrame(
             rows, "doc_id long, lang string, change string, delta long")
-        (df.write.format("arrowipc").option("snapshots", "true")
+        (df.write.format("arrowipc")
          .mode("append").save(feed))
 
     # commit 1: two updates + a delete
@@ -620,7 +619,7 @@ def test_changefeed_streams_into_incremental_consumer(spark):
     # full feed (exactly-once across both commits)
     batch = {r["lang"]: {"net": r["net"], "n": r["n"]}
              for r in (spark.read.format("arrowipc")
-                       .option("snapshots", "true").load(feed)
+                       .load(feed)
                        .groupBy("lang")
                        .agg(F.sum("delta").cast("long").alias("net"),
                             F.count(F.lit(1)).cast("long").alias("n"))
@@ -1170,7 +1169,7 @@ def test_stream_mv_maintain_matches_batch_twin(spark):
     def _commit(pre, post, seq):
         (_commit_changes(pre, post, seq)
          .write.format("arrowipc").option("partitionBy", "commit_seq")
-         .option("snapshots", "true").option("compression", "lz4")
+         .option("compression", "lz4")
          .mode("append").save(feed))
 
     base_agg = v1.groupBy("lang").agg(
@@ -1186,7 +1185,7 @@ def test_stream_mv_maintain_matches_batch_twin(spark):
         q.stop()
 
     def _mv_rows(path):
-        return (spark.read.format("arrowipc").option("snapshots", "true")
+        return (spark.read.format("arrowipc")
                 .schema(MV_SCHEMA).load(path)).collect()
 
     mv_rows = _mv_rows(mv)
@@ -1208,7 +1207,6 @@ def test_stream_mv_maintain_matches_batch_twin(spark):
     # load() result unsafe).
     def _feed_df():
         return (spark.read.format("arrowipc")
-                .option("snapshots", "true")
                 .option("columns", "lang,change,delta,commit_seq")
                 .schema(FEED_SCHEMA).load(feed))
 
@@ -1263,7 +1261,7 @@ def test_stream_vocab_refresh_matches_batch_trainer(spark):
 
     def _commit(df):
         (df.select("doc_id", "text").write.format("arrowipc")
-         .option("snapshots", "true").option("compression", "lz4")
+         .option("compression", "lz4")
          .mode("append").save(docs))
 
     # batch 0 = English only, batch 1 = the rest (incl. zh) — guarantees
@@ -1389,11 +1387,11 @@ def test_stream_mv_maintain_through_feed_compaction(spark):
     def _commit(pre, post, seq):
         (_commit_changes(pre, post, seq)
          .write.format("arrowipc").option("partitionBy", "commit_seq")
-         .option("snapshots", "true").option("compression", "lz4")
+         .option("compression", "lz4")
          .mode("append").save(feed))
 
     def _mv_rows(path):
-        return (spark.read.format("arrowipc").option("snapshots", "true")
+        return (spark.read.format("arrowipc")
                 .schema(MV_SCHEMA).load(path)).collect()
 
     base_agg = v1.groupBy("lang").agg(
@@ -1440,7 +1438,7 @@ def test_stream_mv_maintain_through_feed_compaction(spark):
     )
 
     seed_mv(mv2, base_agg)
-    head = (spark.read.format("arrowipc").option("snapshots", "true")
+    head = (spark.read.format("arrowipc")
             .option("columns", "lang,change,delta,commit_seq")
             .schema(FEED_SCHEMA).load(feed))
     apply_feed_batch(head, 0, mv2)
@@ -1491,7 +1489,7 @@ def test_stream_ann_index_maintain_matches_rebuild(spark):
 
     e = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
     (e.repartition(4).write.format("arrowipc")
-     .option("snapshots", "true").option("compression", "lz4")
+     .option("compression", "lz4")
      .mode("append").save(src))
     update_arrowipc(spark, src, _ANN_IDX_UPDATE_PRED, _ANN_IDX_UPDATE_SET,
                     compression="lz4", predicate_columns=["vec_id"],
@@ -1504,7 +1502,7 @@ def test_stream_ann_index_maintain_matches_rebuild(spark):
     def _commit(pre, post, seq):
         (_ann_idx_changes(pre, post, seq)
          .write.format("arrowipc").option("partitionBy", "commit_seq")
-         .option("snapshots", "true").option("compression", "lz4")
+         .option("compression", "lz4")
          .mode("append").save(feed))
 
     seed_index(idx, b1)
@@ -1537,7 +1535,7 @@ def test_stream_ann_index_maintain_matches_rebuild(spark):
     assert got == want and got
 
     def raw():
-        return (spark.read.format("arrowipc").option("snapshots", "true")
+        return (spark.read.format("arrowipc")
                 .schema(INDEX_SCHEMA).load(idx))
 
     assert {r.seg for r in raw().select("seg").distinct().collect()} \
@@ -1548,7 +1546,7 @@ def test_stream_ann_index_maintain_matches_rebuild(spark):
     # replay: the whole feed redelivered under a fresh batch id — the
     # segment high-water makes it a no-op (fresh load per the plan-cache
     # rule)
-    replay = (spark.read.format("arrowipc").option("snapshots", "true")
+    replay = (spark.read.format("arrowipc")
               .option("columns", "vec_id,bucket,change,commit_seq")
               .schema("vec_id long, bucket int, change string, "
                       "commit_seq long").load(feed))
@@ -1625,7 +1623,7 @@ def test_stream_drift_monitor_matches_batch_key(spark):
 
     def _commit(df):
         (df.select("label", "embedding").write.format("arrowipc")
-         .option("snapshots", "true").option("compression", "lz4")
+         .option("compression", "lz4")
          .mode("append").save(emb_dir))
 
     _commit(live.filter("vec_id % 4 = 1"))  # batch 0
@@ -1674,7 +1672,7 @@ def _snap_append(spark, table, lo, hi):
     df = spark.range(lo, hi).select(
         "id", (F.col("id") % 2).cast("string").alias("grp"))
     (df.coalesce(1).write.format("arrowipc")
-     .option("snapshots", "true").mode("append").save(table))
+     .mode("append").save(table))
 
 
 @pytest.mark.slow
@@ -1845,7 +1843,9 @@ def test_stream_starting_version_latest(spark):
 def test_stream_reader_option_validation(spark, tmp_path):
     """Option contract errors fire at reader construction with actionable
     messages: ignoreChanges+skipChangeCommits are mutually exclusive;
-    startingVersion needs a snapshotted table; version 0 is rejected."""
+    startingVersion needs a manifest log; version 0 is rejected."""
+    import os
+
     import pyarrow as pa
 
     from bossarrowstorageengine_spark.sources.arrowipc import (
@@ -1854,10 +1854,14 @@ def test_stream_reader_option_validation(spark, tmp_path):
 
     snap = str(tmp_path / "snap")
     df = spark.range(3).toDF("id")
-    (df.write.format("arrowipc").option("snapshots", "true")
+    (df.write.format("arrowipc")
      .mode("append").save(snap))
-    plain = str(tmp_path / "plain")
-    df.write.format("arrowipc").mode("append").save(plain)
+    plain = str(tmp_path / "plain")        # no manifest log: another tool
+    os.makedirs(plain)
+    table = pa.table({"id": pa.array([0, 1, 2], pa.int64())})
+    with pa.OSFile(os.path.join(plain, "ext-0.arrows"), "wb") as f, \
+            pa.ipc.new_file(f, table.schema) as w:
+        w.write_table(table)
 
     schema = StructType.fromDDL("id bigint")
     with pytest.raises(ValueError, match="mutually exclusive"):
@@ -1982,7 +1986,7 @@ def test_stream_native_maintained_index_tails_feed(spark):
     e = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
         "vec_id", "embedding")
     (e.repartition(2).write.format("arrowipc")
-     .option("snapshots", "true").mode("append").save(src))       # src v1
+     .mode("append").save(src))       # src v1
     schema = e.schema
 
     def _feed_append(pre_v, post_v, seq):
@@ -1990,7 +1994,7 @@ def test_stream_native_maintained_index_tails_feed(spark):
         b_post = _ann_bucketed(_ann_snap(spark, src, post_v))
         (_ann_idx_changes(b_pre, b_post, seq)
          .write.format("arrowipc").option("partitionBy", "commit_seq")
-         .option("snapshots", "true").mode("append").save(feed))
+         .mode("append").save(feed))
 
     # backlog: commit 1 (the UPDATE's re-buckets), already in the feed
     update_arrowipc(spark, src, "vec_id % 7 = 3",
@@ -2000,7 +2004,7 @@ def test_stream_native_maintained_index_tails_feed(spark):
 
     # BOOTSTRAP: seed from src v1, batch-absorb the feed backlog
     seed_index(idx, _ann_bucketed(_ann_snap(spark, src, "1")))
-    backlog = (spark.read.format("arrowipc").option("snapshots", "true")
+    backlog = (spark.read.format("arrowipc")
                .option("columns", "vec_id,bucket,change,commit_seq")
                .schema(FEED_SCHEMA).load(feed))
     apply_index_batch(backlog, -1, idx)
@@ -2091,7 +2095,7 @@ def test_stream_guarded_index_fails_loudly_on_resurrection(spark):
         (spark.createDataFrame(rows, FEED_SCHEMA)
          .coalesce(1).write.format("arrowipc")
          .option("partitionBy", "commit_seq")
-         .option("snapshots", "true").mode("append").save(feed))
+         .mode("append").save(feed))
 
     _push([(2, None, "delete", 1)], 1)   # the purge's own delete commit
 
@@ -2242,7 +2246,7 @@ def test_stream_mv_fanout_matches_batch_twin(spark):
         q.stop()
 
     def _rows(mv_dir, keys):
-        return (spark.read.format("arrowipc").option("snapshots", "true")
+        return (spark.read.format("arrowipc")
                 .schema(_grain_schema(keys)).load(mv_dir)).collect()
 
     def _got():
@@ -2261,7 +2265,7 @@ def test_stream_mv_fanout_matches_batch_twin(spark):
         {0, 1, 2}
 
     def _feed_df():
-        return (spark.read.format("arrowipc").option("snapshots", "true")
+        return (spark.read.format("arrowipc")
                 .option("columns", "lang,source,change,delta,commit_seq")
                 .schema("lang string, source string, change string, "
                         "delta long, commit_seq long").load(feed))
