@@ -52,6 +52,23 @@ def _scratch(sf_dir: str, key: str) -> str:
     return path
 
 
+def _stamp_commit_times(path: str, stamps) -> None:
+    """Pin the recorded commit time (``ts``) of the table's first
+    versions to ``stamps``, so timestamp anchors resolve the same on
+    every run; each manifest is replaced through the commit backend."""
+    import json
+
+    from bossarrowstorageengine_spark.sources.arrowipc import (
+        _load_manifest_doc, _manifest_file, _manifest_versions,
+        commit_backend)
+
+    for v, ts in zip(_manifest_versions(path), stamps):
+        doc = _load_manifest_doc(path, v)
+        doc["ts"] = ts
+        commit_backend().put(_manifest_file(path, v),
+                             json.dumps(doc).encode())
+
+
 @query(
     "q_scan_parquet",
     oracle="""
@@ -564,11 +581,6 @@ def q_timetravel_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: resolution is a manifest-metadata scan — O(versions) small
     JSON reads, no data file is opened to pick the version."""
-    import json as _json
-
-    from bossarrowstorageengine_spark.sources.arrowipc import (
-        _manifest_file, _manifest_versions)
-
     register_arrowipc(spark)
     path = _scratch(sf_dir, "timetravel_asof")
     ev = load_table(spark, sf_dir, "events").select(
@@ -577,13 +589,7 @@ def q_timetravel_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         (ev.filter(F.col("event_id") % 3 == m)
            .write.format("arrowipc")
            .option("compression", "lz4").mode("append").save(path))
-    for v, ts in zip(_manifest_versions(path), (1000.0, 2000.0, 3000.0)):
-        mf = _manifest_file(path, v)
-        with open(mf) as f:
-            doc = _json.load(f)
-        doc["ts"] = ts
-        with open(mf, "w") as f:
-            _json.dump(doc, f)
+    _stamp_commit_times(path, (1000.0, 2000.0, 3000.0))
 
     def _face(anchor: str, tag: str) -> DataFrame:
         df = (spark.read.format("arrowipc")
@@ -2850,10 +2856,6 @@ def q_positions_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: entirely driver-side metadata — O(versions) manifest-stat
     reads to resolve each anchor plus consumer-count-sized audit rows;
     no Spark job touches data."""
-    import json as _json
-
-    from bossarrowstorageengine_spark.sources.arrowipc import (
-        _manifest_file, _manifest_versions)
     from bossarrowstorageengine_spark.sources.feed_consume import (
         commit_position, positions_asof, seek)
 
@@ -2864,14 +2866,7 @@ def q_positions_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit_position(spark, offsets, "fast", 1)   # v3, seq 3
     commit_position(spark, offsets, "slow", 1)   # v4, seq 4
     commit_position(spark, offsets, "fast", 2)   # v5, seq 5
-    for v, ts in zip(_manifest_versions(offsets),
-                     (1000.0, 2000.0, 3000.0, 4000.0, 5000.0)):
-        mf = _manifest_file(offsets, v)
-        with open(mf) as f:
-            doc = _json.load(f)
-        doc["ts"] = ts
-        with open(mf, "w") as f:
-            _json.dump(doc, f)
+    _stamp_commit_times(offsets, (1000.0, 2000.0, 3000.0, 4000.0, 5000.0))
 
     def _face(anchor: str, tag: str) -> DataFrame:
         return positions_asof(spark, offsets, anchor).select(

@@ -54,11 +54,11 @@ Design:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import sys
-import threading
 import time
 import uuid
 from dataclasses import dataclass
@@ -420,57 +420,129 @@ def _read_manifest(path: str, version: int) -> list[str]:
 
 
 class ConditionalPut:
-    """The ONE storage primitive snapshot commits require: publish a blob at
-    a name iff the name does not exist yet, atomically and fully-formed
-    (a concurrent reader sees either nothing or the complete payload —
-    never a partial file).
+    """The commit backend: the ONE place where the storage engine makes a
+    file visible, and the one substitution point for that rule
+    (``set_commit_backend``).  Every engine publish goes through its three
+    methods, and each returns only after the published bytes and the
+    directory entry naming them are fsynced:
 
-    Commit logic is written only against this interface, so porting the
-    table format to an object store is a backend swap, not a redesign:
-    S3 ``PutObject`` with ``If-None-Match: *`` (first-writer-wins since
-    2024-08), GCS ``x-goog-if-generation-match: 0``, ADLS ``If-None-Match``
-    conditional create, or an external CAS (DynamoDB/etcd) for stores
-    without conditional writes.  Returns True iff this caller won the name.
+    - ``put_if_absent(target, payload)``: publish a blob at a name iff the
+      name does not exist yet, atomically and fully-formed (a concurrent
+      reader sees either nothing or the complete payload — never a partial
+      file).  Returns True iff this caller won the name.  The manifest
+      commit is written only against it, so porting the table format to an
+      object store is a backend swap, not a redesign: S3 ``PutObject``
+      with ``If-None-Match: *`` (first-writer-wins since 2024-08), GCS
+      ``x-goog-if-generation-match: 0``, ADLS ``If-None-Match``
+      conditional create, or an external CAS (DynamoDB/etcd) for stores
+      without conditional writes.
+    - ``put(target, payload)``: atomic replace (a generation pointer, a
+      vacuum checkpoint, a stream high-water mark).
+    - ``move(pairs)``: put finished files, or whole directories, in place
+      (``(src, dst)`` renames, in order), then fsync each distinct parent
+      directory once, and the parent of each directory it had to create.
+      The sources must already be durable: ``_OpenPart`` fsyncs every part
+      and sidecar it writes.
+
+    This class implements ``put`` and ``move`` for a local filesystem:
+    fsynced temp file, rename, directory fsync, the order that keeps
+    acknowledged data through a crash on ext4-class filesystems (Pillai et
+    al., *All File Systems Are Not Created Equal*, OSDI 2014).
     """
 
     def put_if_absent(self, target: str, payload: bytes) -> bool:
         raise NotImplementedError
 
+    def put(self, target: str, payload: bytes) -> None:
+        dirs = _make_dirs(os.path.dirname(target))
+        with _temp_beside(target) as tmp:
+            _write_synced(tmp, payload)
+            self._rename(tmp, target)
+        _fsync(*dirs)
+
+    def move(self, pairs: Iterable[tuple[str, str]]) -> None:
+        dirs: set[str] = set()
+        for src, dst in pairs:
+            dirs |= _make_dirs(os.path.dirname(dst))
+            self._rename(src, dst)
+        _fsync(*dirs)
+
+    def _rename(self, src: str, dst: str) -> None:
+        os.replace(src, dst)
+
 
 class PosixConditionalPut(ConditionalPut):
-    """Local/NFS-class filesystems: write a private temp file, then
+    """Local/NFS-class filesystems: write a private fsynced temp file, then
     ``os.link`` it to the target name.  Hard-link creation is atomic and
     fails with EEXIST if the name is taken — and unlike O_EXCL-then-rename
     the target only ever appears fully-formed (O_EXCL claims the name with
     an EMPTY file first, which a concurrent reader could see)."""
 
     def put_if_absent(self, target: str, payload: bytes) -> bool:
-        tmp = f"{target}.tmp-{os.getpid()}-{threading.get_ident()}"
-        with open(tmp, "wb") as f:
-            f.write(payload)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, target)
-            return True
-        except FileExistsError:
-            return False
-        except OSError:
-            # Filesystem without hard-link support (some FUSE/overlay/SMB
-            # mounts): fall back to an O_EXCL create.  Still atomic on the
-            # NAME; the trade-off is a brief claimed-but-incomplete window
-            # between create and write, which only this degraded mode has.
+        dirs = _make_dirs(os.path.dirname(target))
+        with _temp_beside(target) as tmp:
+            _write_synced(tmp, payload)
             try:
-                fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+                os.link(tmp, target)
             except FileExistsError:
                 return False
-            with os.fdopen(fd, "wb") as out:
-                out.write(payload)
-                out.flush()
-                os.fsync(out.fileno())
-            return True
+            except OSError:
+                # Filesystem without hard-link support (some FUSE/overlay/
+                # SMB mounts): fall back to an O_EXCL create.  Still atomic
+                # on the NAME; the trade-off is a brief claimed-but-
+                # incomplete window between create and write, which only
+                # this degraded mode has.
+                try:
+                    fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+                except FileExistsError:
+                    return False
+                _write_synced(fd, payload)
+        _fsync(*dirs)
+        return True
+
+
+def _write_synced(file, payload: bytes) -> None:
+    """Write ``payload`` to ``file`` (a path or an open descriptor) and
+    fsync it."""
+    with open(file, "wb") as f:
+        f.write(payload)
+        f.flush()
+        os.fsync(f.fileno())
+
+
+def _fsync(*paths: str) -> None:
+    """fsync files or directories by path."""
+    for p in paths:
+        fd = os.open(p or ".", os.O_RDONLY)
+        try:
+            os.fsync(fd)
         finally:
+            os.close(fd)
+
+
+@contextlib.contextmanager
+def _temp_beside(target: str):
+    """A private temp name beside ``target``, hidden from every listing
+    (this engine's and Spark's); removed on exit unless renamed away."""
+    d, name = os.path.split(target)
+    tmp = os.path.join(d, f".{name}.tmp-{uuid.uuid4().hex}")
+    try:
+        yield tmp
+    finally:
+        if os.path.lexists(tmp):
             os.remove(tmp)
+
+
+def _make_dirs(d: str) -> set[str]:
+    """Create directory ``d`` and its missing ancestors.  Returns the
+    directories a publish into ``d`` changes: ``d`` itself and the parent
+    of each directory created here."""
+    out, missing = {d}, d
+    while missing and not os.path.isdir(missing):
+        out.add(os.path.dirname(missing))
+        missing = os.path.dirname(missing)
+    os.makedirs(d or ".", exist_ok=True)
+    return out
 
 
 #: Process-wide commit backend; swap via ``set_commit_backend`` to target an
@@ -485,6 +557,11 @@ def set_commit_backend(backend: ConditionalPut) -> ConditionalPut:
     prev = _COMMIT_BACKEND
     _COMMIT_BACKEND = backend
     return prev
+
+
+def commit_backend() -> ConditionalPut:
+    """The installed backend, through which every engine publish goes."""
+    return _COMMIT_BACKEND
 
 
 def _write_manifest(path: str, new_files: list[str], replace: bool,
@@ -523,9 +600,9 @@ def _write_manifest(path: str, new_files: list[str], replace: bool,
     version is not the one the caller derived the commit's content from
     (the offsets table computes its ``seq`` counter against a pinned
     snapshot and must recompute on a lost race)."""
-    rel_abs = {os.path.relpath(p, path): p for p in new_files}
+    rel_abs = {_table_rel(path, p): p for p in new_files}
     rels = sorted(rel_abs)
-    rm = sorted(os.path.relpath(p, path) for p in remove)
+    rm = sorted(_table_rel(path, p) for p in remove)
     # Embed each new file's planning stats (file-level min/max + batch
     # count) in the log — O(Δ) sidecar reads at commit buys O(log) scan
     # planning (no per-file sidecar opens at plan time).
@@ -594,6 +671,18 @@ def _write_manifest(path: str, new_files: list[str], replace: bool,
         if _COMMIT_BACKEND.put_if_absent(target, json.dumps(doc).encode()):
             return next_v
         # lost the race — recompute against the new latest and retry
+
+
+def _table_rel(path: str, part: str) -> str:
+    """``part`` relative to the table at ``path``; a part outside the
+    table would be recorded as a ``../`` entry that every reader follows."""
+    rel = os.path.relpath(part, path)
+    if rel == os.pardir or rel.startswith(os.pardir + os.sep):
+        raise ValueError(
+            f"arrowipc commit under {path}: part file {part} is outside "
+            "the table directory")
+    return rel
+
 
 #: Columns types we collect min/max stats for (orderable primitives).
 _STATS_TYPES = (
@@ -1371,20 +1460,19 @@ _STREAM_ROTATE_BYTES = 128 * 1024 * 1024
 
 
 class _OpenPart:
-    """One in-flight part file: streams batches into a compressed tmp IPC
-    file while accumulating per-batch stats; ``finish`` makes it visible
-    (atomic rename THEN stats sidecar — a crash in between leaves an
-    unprunable-but-correct file, never an orphan sidecar); ``abandon``
-    removes the tmp so failed tasks leave no garbage behind."""
+    """One in-flight part file: streams batches into a compressed IPC file
+    under its final name in the writer's private staging directory, which
+    no reader lists, while accumulating per-batch stats.  ``finish`` closes
+    it, writes its stats sidecar and fsyncs both, so the commit's promotion
+    (``_promote``) moves durable files; ``abandon`` removes both so failed
+    tasks leave no garbage behind."""
 
     def __init__(self, dirpath: str, compression, stream_format: bool):
         os.makedirs(dirpath, exist_ok=True)
-        name = f"part-{uuid.uuid4().hex}"
-        self.tmp = os.path.join(dirpath, f".{name}.arrows.tmp")
-        self.final = os.path.join(dirpath, f"{name}.arrows")
+        self.final = os.path.join(dirpath, f"part-{uuid.uuid4().hex}.arrows")
         self._opts = pa.ipc.IpcWriteOptions(compression=compression)
         self._new_writer = pa.ipc.new_stream if stream_format else pa.ipc.new_file
-        self._sink = pa.OSFile(self.tmp, "wb")
+        self._sink = pa.OSFile(self.final, "wb")
         self._writer = None
         self.batch_stats: list[dict] = []
         self.rows = 0
@@ -1429,7 +1517,7 @@ class _OpenPart:
 
     def finish(self) -> str:
         self._close_handles()
-        os.replace(self.tmp, self.final)
+        _fsync(self.final)
         doc = {
             "file": ArrowIPCWriter._merge_stats(self.batch_stats),
             "batches": self.batch_stats,
@@ -1446,9 +1534,7 @@ class _OpenPart:
         # count alike — rather than silently planning against stale
         # metadata.
         doc["file_bytes"] = os.path.getsize(self.final)
-        payload = json.dumps(doc)
-        with open(stats_path(self.final), "w") as f:
-            f.write(payload)
+        _write_synced(stats_path(self.final), json.dumps(doc).encode())
         return self.final
 
     def abandon(self) -> None:
@@ -1456,7 +1542,7 @@ class _OpenPart:
             self._close_handles()
         except Exception:
             pass
-        for p in (self.tmp, stats_path(self.final)):
+        for p in (self.final, stats_path(self.final)):
             try:
                 os.remove(p)
             except OSError:
@@ -1468,10 +1554,10 @@ class _OpenPart:
 
 class _RotatingPart:
     """Size-targeted file rotation over ``_OpenPart``: when the current
-    file passes ``max_bytes`` it is SEALED (handles closed, still a hidden
-    tmp) and a fresh part starts.  Nothing is renamed until ``finish_all``
-    at task-commit time, so task atomicity is preserved — a failed task
-    leaves only tmp files.
+    file passes ``max_bytes`` it is SEALED (handles closed, still in the
+    hidden staging directory) and a fresh part starts.  Sidecars are
+    written at ``finish_all``, at task-commit time; a failed task
+    abandons every part, sealed or open.
 
     Why rotate: the IPC *stream* encoding has no footer, so a stream file
     always scans as ONE sequential task — rotation bounds every stream
@@ -1587,8 +1673,9 @@ class ArrowIPCWriter(DataSourceArrowWriter):
         """Single streaming pass: batches go straight into compressed IPC
         files while min/max stats accumulate; stats land in sidecar JSONs
         (the transaction-log pattern — no second pass over data).
-        Temp-name + rename makes each part file's appearance atomic; a
-        failing task abandons its tmp files instead of leaking them.
+        Parts stay in the hidden staging directory until the driver's
+        commit promotes them; a failing task abandons its parts instead
+        of leaking them.
 
         With ``partitionBy``, each batch is split by its partition-column
         values and appended to one open part file per live value combo in
@@ -1687,7 +1774,6 @@ class ArrowIPCWriter(DataSourceArrowWriter):
             new = [p for m in messages
                    for p in _promote(m.final_paths or [], m.staging,
                                      self._path)]
-            os.makedirs(self._path, exist_ok=True)
             _write_manifest(self._path, new, replace=self._overwrite)
         finally:
             # Also drops the parts of task attempts Spark did not commit.
@@ -1701,17 +1787,18 @@ class ArrowIPCWriter(DataSourceArrowWriter):
 
 def _promote(parts: Iterable[str], staging: str, root: str) -> list[str]:
     """Move staged part files, each with its stats sidecar, to the same
-    relative place under ``root``; returns their new paths.  The data file
-    moves first, so a reader between the two renames sees a valid (merely
-    unprunable) part."""
+    relative place under ``root`` in one backend ``move``; returns their
+    new paths.  Each data file moves before its sidecar, so a reader
+    between the two sees a valid (merely unprunable) part."""
     out: list[str] = []
+    moves: list[tuple[str, str]] = []
     for src in parts:
         dst = os.path.join(root, os.path.relpath(src, staging))
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.replace(src, dst)
+        moves.append((src, dst))
         if os.path.exists(stats_path(src)):
-            os.replace(stats_path(src), stats_path(dst))
+            moves.append((stats_path(src), stats_path(dst)))
         out.append(dst)
+    _COMMIT_BACKEND.move(moves)
     return out
 
 
@@ -1788,9 +1875,8 @@ class ArrowIPCStreamReader(DataSourceStreamReader):
     (``{"last": "<name>"}``); a micro-batch covers every ``.arrows`` file
     sorting strictly after the mark, so that tool must use monotonically
     increasing names.  The first engine write converts the directory to
-    a log; a listing-mode query must then restart from a fresh
-    checkpoint (resuming its old one fails, naming the offset-model
-    change).
+    a log; a listing-mode query's next trigger then fails, and it must
+    restart from a fresh checkpoint.
 
     A micro-batch's new files are packed into tasks like a batch read's
     whole files, and read by the batch reader's item loop (record batches
@@ -1825,12 +1911,13 @@ class ArrowIPCStreamReader(DataSourceStreamReader):
                 "arrowipc stream reader: startingVersion and "
                 "startingTimestamp are mutually exclusive — both pin the "
                 "tail's first commit; pick one anchor.")
+        if (sv is not None or st is not None) and not self._manifest_mode:
+            raise ValueError(
+                "arrowipc stream reader: startingVersion and "
+                "startingTimestamp require a snapshotted table (no "
+                f"manifests under {self._path}; an engine write converts "
+                "the directory) — offsets without a log are file names")
         if st is not None:
-            if not self._manifest_mode:
-                raise ValueError(
-                    "arrowipc stream reader: startingTimestamp requires a "
-                    f"snapshotted table (no manifests under {self._path}; "
-                    "an engine write converts the directory)")
             want = _parse_ts_option(str(st))
             # Smallest version whose commit time is at or after the
             # anchor.  Commit times are non-decreasing in the common
@@ -1855,12 +1942,6 @@ class ArrowIPCStreamReader(DataSourceStreamReader):
                     "commits")
         self._starting_version: int | str | None = None
         if sv is not None:
-            if not self._manifest_mode:
-                raise ValueError(
-                    "arrowipc stream reader: startingVersion requires a "
-                    f"snapshotted table (no manifests under {self._path}) "
-                    "— offsets on a directory without a log are file "
-                    "names, not versions")
             if str(sv).lower() == "latest":
                 self._starting_version = "latest"
             else:
@@ -1895,13 +1976,9 @@ class ArrowIPCStreamReader(DataSourceStreamReader):
                 self._starting_version = n
 
     def _names(self) -> list[str]:
-        try:
-            return sorted(
-                os.path.relpath(p, self._path)
-                for p in _list_ipc_files(self._path)
-            )
-        except FileNotFoundError:
-            return []  # nothing arrived yet — empty stream, not an error
+        # Nothing arrived yet is an empty stream, not an error.
+        return [os.path.relpath(p, self._path)
+                for p in _list_ipc_files(self._path, missing_ok=True)]
 
     def initialOffset(self) -> dict:
         if not self._manifest_mode:
@@ -1917,9 +1994,17 @@ class ArrowIPCStreamReader(DataSourceStreamReader):
         return {"v": 0}
 
     def latestOffset(self) -> dict:
+        vs = _manifest_versions(self._path)
         if self._manifest_mode:
-            vs = _manifest_versions(self._path)
             return {"v": vs[-1] if vs else 0}
+        if vs:
+            # File-name offsets cannot follow engine parts, whose random
+            # names may sort below the high-water mark.
+            raise ValueError(
+                f"arrowipc stream over {self._path}: an engine write gave "
+                "the directory a manifest log after the query started, "
+                "and file-name offsets cannot follow its commits — "
+                "restart from a fresh checkpoint")
         names = self._names()
         return {"last": names[-1] if names else ""}
 

@@ -100,9 +100,9 @@ def _append(offsets_dir: str, group: str, position: int, op: str) -> None:
         ConcurrentWriteConflict,
         _manifest_versions,
         _write_manifest,
+        commit_backend,
     )
 
-    os.makedirs(offsets_dir, exist_ok=True)
     while True:
         versions = _manifest_versions(offsets_dir)
         prev = versions[-1] if versions else 0
@@ -113,11 +113,10 @@ def _append(offsets_dir: str, group: str, position: int, op: str) -> None:
              "seq": [int(seq)]}, schema=_OFFSETS_ARROW)
         final = os.path.join(offsets_dir,
                              f"part-{uuid.uuid4().hex}.arrows")
-        tmp = final + ".tmp"
-        with pa.OSFile(tmp, "wb") as f:
-            with pa.ipc.new_file(f, _OFFSETS_ARROW) as w:
-                w.write_table(tbl)
-        os.replace(tmp, final)
+        buf = pa.BufferOutputStream()
+        with pa.ipc.new_file(buf, _OFFSETS_ARROW) as w:
+            w.write_table(tbl)
+        commit_backend().put(final, buf.getvalue().to_pybytes())
         try:
             _write_manifest(offsets_dir, [final], replace=False,
                             expected_prev=prev)

@@ -30,13 +30,16 @@ from pyspark.sql.types import StringType, StructField, StructType
 from bossarrowstorageengine_spark.sources.arrowipc import (
     ConcurrentWriteConflict,
     _ensure_log,
+    _is_file_format,
     _load_manifest_doc,
+    _load_sidecar,
     _manifest_file,
     _manifest_versions,
     _promote,
     _read_manifest,
     _visible_file_set,
     _write_manifest,
+    commit_backend,
     register_arrowipc,
     stats_path,
 )
@@ -272,20 +275,11 @@ def _part_row_count(p: str) -> int:
     only runs for foreign/sidecar-less files and is bounded by the file
     count of the set being measured.  A sidecar missing its ``rows``
     field falls through to the pyarrow read too: defaulting it to 0
-    would silently corrupt row accounting."""
-    import json
-
-    sp = stats_path(p)
-    if os.path.exists(sp):
-        try:
-            with open(sp) as f:
-                rows = json.load(f).get("rows")
-        except (ValueError, OSError):
-            rows = None
-        if rows is not None:
-            return rows
-    from bossarrowstorageengine_spark.sources.arrowipc import _is_file_format
-
+    would silently corrupt row accounting.  So does a corrupt or stale
+    one (``_load_sidecar``)."""
+    rows = (_load_sidecar(p) or {}).get("rows")
+    if rows is not None:
+        return rows
     with pa.OSFile(p, "rb") as f:
         if _is_file_format(p):
             r = pa.ipc.open_file(f)
@@ -740,14 +734,8 @@ def vacuum_arrowipc(path: str, keep_versions: int = 1) -> dict:
             for meta in ("ts", "adds_new_rows"):
                 if meta in doc:
                     full[meta] = doc[meta]
-            # Flush and fsync before the rename: a power loss must not
-            # leave the retained manifest empty.
-            tmp = _manifest_file(path, v) + f".ckpt-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(full, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, _manifest_file(path, v))
+            commit_backend().put(_manifest_file(path, v),
+                                 json.dumps(full).encode())
     removed = 0
     for f in sorted(dropped_refs - retained):
         if os.path.exists(f):

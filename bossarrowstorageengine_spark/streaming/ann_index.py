@@ -32,6 +32,7 @@ maintained rows.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -42,6 +43,21 @@ INDEX_SCHEMA = "vec_id long, bucket int, tombstone boolean, seg long"
 
 #: Row layout of the bucket-grain changefeed the maintainer reads.
 FEED_SCHEMA = "vec_id long, bucket int, change string, commit_seq long"
+
+
+def _put_json(path: str, doc: dict) -> None:
+    """Publish a small metadata JSON through the commit backend."""
+    from bossarrowstorageengine_spark.sources.arrowipc import commit_backend
+
+    commit_backend().put(path, json.dumps(doc).encode())
+
+
+def _get_json(path: str) -> dict | None:
+    """A metadata JSON written by ``_put_json``, or None if absent."""
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
 
 
 def _payload_cols(ddl: str) -> list[str]:
@@ -131,29 +147,18 @@ def seed_index(idx_dir: str, bucketed: DataFrame,
         # writer must split keys identically — inferring it from the
         # __sb= dirs would under-count when high buckets happen to be
         # empty), so the seed records it once.
-        import json
-
-        with open(os.path.join(idx_dir, "_layout.json"), "w") as f:
-            json.dump({"bucket_by": "vec_id",
-                       "buckets": int(layout_buckets)}, f)
+        _put_json(os.path.join(idx_dir, "_layout.json"),
+                  {"bucket_by": "vec_id", "buckets": int(layout_buckets)})
     if payload:
-        import json
-
-        with open(os.path.join(idx_dir, "_payload.json"), "w") as f:
-            json.dump({"ddl": payload}, f)
+        _put_json(os.path.join(idx_dir, "_payload.json"), {"ddl": payload})
 
 
 def _payload_ddl(idx_dir: str) -> str | None:
     """The index table's recorded payload DDL (the seed's
     ``_payload.json``), or None for the plain ``(vec_id, bucket)``
     layout."""
-    import json
-
-    p = os.path.join(idx_dir, "_payload.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return str(json.load(f)["ddl"])
+    doc = _get_json(os.path.join(idx_dir, "_payload.json"))
+    return None if doc is None else str(doc["ddl"])
 
 
 def _index_schema(idx_dir: str) -> tuple[str, list[str]]:
@@ -168,13 +173,8 @@ def _index_schema(idx_dir: str) -> tuple[str, list[str]]:
 def _layout_buckets(idx_dir: str) -> int | None:
     """The index table's recorded physical bucket count (the seed's
     ``_layout.json``), or None for an unbucketed layout."""
-    import json
-
-    p = os.path.join(idx_dir, "_layout.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return int(json.load(f)["buckets"])
+    doc = _get_json(os.path.join(idx_dir, "_layout.json"))
+    return None if doc is None else int(doc["buckets"])
 
 
 def _seg_high_water(idx_dir: str) -> int:
@@ -497,7 +497,8 @@ def apply_index_batch_guarded(batch_df: DataFrame, batch_id: int,
 # searches stay pinned to the generation they opened.
 # ---------------------------------------------------------------------------
 
-#: Pointer file naming the CURRENT generation (atomic os.replace flip).
+#: Pointer file naming the CURRENT generation (flipped by an atomic
+#: commit-backend ``put``).
 GENERATION_POINTER = "_generation.json"
 
 
@@ -510,29 +511,19 @@ def generation_dir(idx_root: str, gen: int) -> str:
 def current_generation(idx_root: str) -> dict:
     """The pointer: ``{"generation": k, "trained_thru": c}`` — generation
     k's base reflects every feed commit ``<= c``."""
-    import json
-
-    p = os.path.join(idx_root, GENERATION_POINTER)
-    if not os.path.exists(p):
+    doc = _get_json(os.path.join(idx_root, GENERATION_POINTER))
+    if doc is None:
         raise ValueError(
             f"generational index {idx_root!r} has no generation pointer "
             "— seed generation 0 with seed_generation() first")
-    with open(p) as f:
-        return json.load(f)
+    return doc
 
 
 def _publish_generation(idx_root: str, gen: int, trained_thru: int) -> None:
-    """Atomically flip the pointer (os.replace — a reader sees the old
-    or the new generation, never a partial write)."""
-    import json
-    import uuid
-
-    p = os.path.join(idx_root, GENERATION_POINTER)
-    tmp = p + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump({"generation": int(gen),
-                   "trained_thru": int(trained_thru)}, f)
-    os.replace(tmp, p)
+    """Atomically flip the pointer (the commit backend's ``put`` — a
+    reader sees the old or the new generation, never a partial write)."""
+    _put_json(os.path.join(idx_root, GENERATION_POINTER),
+              {"generation": int(gen), "trained_thru": int(trained_thru)})
 
 
 def _seeded_rows(idx_dir: str) -> int:
@@ -589,21 +580,12 @@ def _write_gen_meta(gdir: str, base_seg: int, base_rows: int) -> None:
     row count — what the churn monitor divides by, recorded ONCE at
     seed time so the per-batch monitor never re-scans the corpus-sized
     base."""
-    import json
-
-    with open(_gen_meta_path(gdir), "w") as f:
-        json.dump({"base_seg": int(base_seg),
-                   "base_rows": int(base_rows)}, f)
+    _put_json(_gen_meta_path(gdir),
+              {"base_seg": int(base_seg), "base_rows": int(base_rows)})
 
 
 def _read_gen_meta(gdir: str) -> dict | None:
-    import json
-
-    p = _gen_meta_path(gdir)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
+    return _get_json(_gen_meta_path(gdir))
 
 
 def generation_churn(spark: SparkSession, idx_root: str,
@@ -781,14 +763,16 @@ def roll_generation(idx_root: str, new_base) -> dict:
     the generation axis, decided here and nowhere else.
 
     Crash-idempotent: the seed lands in a temp dir committed by ONE
-    atomic os.rename, so the target directory's existence proves a
-    COMPLETE seed.  A replay after a crash between the rename and the
+    atomic backend ``move``, so the target directory's existence proves a
+    COMPLETE seed.  A replay after a crash between the move and the
     pointer flip resumes by publishing — the thunk is never re-invoked
     (a second append-mode seed would stack a duplicate base segment at
     the same seg, and a non-deterministic retrain would mix rows from
     two trainings under last-wins).  A crash MID-seed leaves only a
     ``.tmp`` orphan, swept on the next roll attempt."""
     import shutil
+
+    from bossarrowstorageengine_spark.sources.arrowipc import commit_backend
 
     cur = int(current_generation(idx_root)["generation"])
     gdir = generation_dir(idx_root, cur)
@@ -808,7 +792,7 @@ def roll_generation(idx_root: str, new_base) -> dict:
     seed_index(tmp, new_base(), layout_buckets=_layout_buckets(gdir),
                payload=_payload_ddl(gdir), base_seg=absorbed)
     _write_gen_meta(tmp, absorbed, _seeded_rows(tmp))
-    os.rename(tmp, ndir)
+    commit_backend().move([(tmp, ndir)])
     _publish_generation(idx_root, cur + 1, absorbed)
     return {"generation": cur + 1, "rolled": True}
 
@@ -823,8 +807,8 @@ def vacuum_generations(idx_root: str, keep: int = 2) -> dict:
     "kept": [...]}``.
 
     Also silently sweeps DEAD ``gen=<k>.tmp`` seed orphans (crashed
-    mid-seed before the atomic rename — see :func:`roll_generation`)
-    for ``k <= current``: those can never be renamed into place (the
+    mid-seed before the atomic move — see :func:`roll_generation`)
+    for ``k <= current``: those can never be moved into place (the
     target exists or was rolled past), while ``gen=<current+1>.tmp``
     may be a LIVE in-flight roll and is never touched."""
     import re

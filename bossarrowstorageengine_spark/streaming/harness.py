@@ -13,6 +13,7 @@ from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, Row, SparkSession
 
+from bossarrowstorageengine_spark.sources.arrowipc import commit_backend
 from bossarrowstorageengine_spark.streaming.pipelines import EVENTS_SCHEMA
 
 
@@ -57,10 +58,9 @@ class FileStreamHarness:
 
         pdf = pd.DataFrame(list(rows))
         pdf["ts"] = pd.to_datetime(pdf["ts"]).dt.strftime("%Y-%m-%dT%H:%M:%S.%f")
-        tmp = os.path.join(self.input_dir, f".batch{self._n}.tmp")
-        final = os.path.join(self.input_dir, f"batch{self._n}.json")
-        pdf.to_json(tmp, orient="records", lines=True)
-        os.replace(tmp, final)
+        commit_backend().put(
+            os.path.join(self.input_dir, f"batch{self._n}.json"),
+            pdf.to_json(orient="records", lines=True).encode())
         self._n += 1
 
     def step(self, timeout_sec: float = 60.0) -> DataFrame:

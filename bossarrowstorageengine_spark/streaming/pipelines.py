@@ -18,6 +18,8 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bossarrowstorageengine_spark.sources.arrowipc import commit_backend
+
 _LOG = logging.getLogger(__name__)
 
 EVENTS_SCHEMA = (
@@ -646,7 +648,7 @@ def merge_stream_into_snapshot(events: DataFrame, snapshot_dir: str,
         latest.write.mode("overwrite").parquet(staging)
         if os.path.exists(snapshot_dir):
             shutil.rmtree(snapshot_dir)
-        os.replace(staging, snapshot_dir)
+        commit_backend().move([(staging, snapshot_dir)])
 
     return (
         events.writeStream.foreachBatch(merge_batch)
@@ -690,8 +692,8 @@ def stream_to_partitioned_table(events: DataFrame, path: str,
     table.
 
     Idempotence: a PER-STREAM-IDENTITY high-water-mark file
-    (``_streaming-batch-hwm.<stream_id>.json``, atomic tmp+rename,
-    written after the manifest commit) makes the common restart-replay a
+    (``_streaming-batch-hwm.<stream_id>.json``, an atomic commit-backend
+    ``put`` after the manifest commit) makes the common restart-replay a
     no-op.  The identity is the hash of the checkpoint directory — the
     Delta txnAppId/txnVersion pattern — because Spark batch ids restart
     at 0 under a fresh checkpoint: an unscoped mark would silently skip
@@ -729,10 +731,8 @@ def stream_to_partitioned_table(events: DataFrame, path: str,
         (batch_df.write.format("arrowipc")
          .option("partitionBy", partition_by)
          .mode("append").save(path))
-        tmp = hwm_file + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"stream_id": stream_id, "batch_id": batch_id}, f)
-        os.replace(tmp, hwm_file)
+        commit_backend().put(hwm_file, json.dumps(
+            {"stream_id": stream_id, "batch_id": batch_id}).encode())
 
     return (events.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", checkpoint_dir).start())

@@ -1006,7 +1006,7 @@ def test_conditional_put_falls_back_without_hard_links(tmp_path, monkeypatch):
     # second writer loses the race on the same name
     assert put.put_if_absent(target, b'{"v": "loser"}') is False
     assert open(target, "rb").read() == b'{"v": 1}'
-    assert not glob.glob(str(tmp_path / "*.tmp-*"))
+    assert os.listdir(tmp_path) == ["_manifest-0000000001.json"]
 
 
 def test_merge_pure_insert_without_matches(spark):
