@@ -26,6 +26,19 @@ from bossarrowstorageengine_spark.catalog import load_table
 from bossarrowstorageengine_spark.functions.zorder import morton16 as _morton16
 from bossarrowstorageengine_spark.operators.registry import query
 from bossarrowstorageengine_spark.sources import register_arrowipc
+from bossarrowstorageengine_spark.streaming.mv_maintain import (
+    _append_ledger,
+    _audit_ledger,
+    _commit_deltas,
+    _grain_head,
+    _ledger_versions,
+    _read_ledger,
+    _rollup,
+    _source_aggregate,
+    _version_aggregates,
+    apply_fanout_batch,
+    seed_mv_fanout,
+)
 
 #: This process's scratch root, read at each ``_scratch`` call (a caller
 #: may point it elsewhere).  The default is unique per process, so two
@@ -1136,30 +1149,12 @@ def _read_feed(spark: SparkSession, feed: str,
                seqs: list[int]) -> DataFrame:
     """The consumer-side feed scan: 4 columns, explicit schema, pruned
     to exactly the commit partitions being applied (``seqs`` — the same
-    list the caller hands ``_feed_commit_deltas``, so the filter and the
+    list the caller hands ``_commit_deltas``, so the filter and the
     per-commit aggregation can never drift apart)."""
     return (spark.read.format("arrowipc")
             .option("columns", "lang,change,delta,commit_seq")
             .schema(_CF_FEED_SCHEMA)
             .load(feed).filter(F.col("commit_seq").isin(*seqs)))
-
-
-def _feed_commit_deltas(feed_rows: DataFrame, seqs: list[int]) -> DataFrame:
-    """Per-lang (docs_delta_cN, chars_delta_cN) for every commit in
-    ``seqs`` from ONE feed scan — conditional per-commit sums instead of
-    one pruned scan per commit."""
-    aggs: list = []
-    for seq in seqs:
-        on = F.col("commit_seq") == seq
-        aggs.extend([
-            F.sum(F.when(on, (F.col("change") == "insert").cast("long")
-                         - (F.col("change") == "delete").cast("long"))
-                  .otherwise(F.lit(0)))
-            .cast("long").alias(f"docs_delta_c{seq}"),
-            F.sum(F.when(on, F.col("delta")).otherwise(F.lit(0)))
-            .cast("long").alias(f"chars_delta_c{seq}"),
-        ])
-    return feed_rows.groupBy("lang").agg(*aggs)
 
 
 @query(
@@ -1397,7 +1392,8 @@ def q_changefeed_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = v1.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("docs_base"),
         F.sum("n_chars").cast("long").alias("chars_base"))
-    incs = _feed_commit_deltas(_read_feed(spark, feed, [1, 2]), [1, 2])
+    incs = _commit_deltas(_read_feed(spark, feed, [1, 2]), ["lang"],
+                          [1, 2])
     state = base.join(incs, "lang", "left").na.fill(0)
     direct = v3.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("docs_direct"),
@@ -1490,52 +1486,16 @@ def q_mv_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, feed = _mutation_feed(spark, sf_dir, base_dir)
     mv_path = os.path.join(base_dir, "mv")
 
-    base = _mutation_snap(spark, src, "1").groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("docs_base"),
-        F.sum("n_chars").cast("long").alias("chars_base"))
-    incs = _feed_commit_deltas(_read_feed(spark, feed, [1, 2]), [1, 2])
-    st = base.join(incs, "lang", "left").na.fill(0)
+    base = _source_aggregate(_mutation_snap(spark, src, "1"), ["lang"])
+    incs = _commit_deltas(_read_feed(spark, feed, [1, 2]), ["lang"],
+                          [1, 2])
+    _append_ledger(_ledger_versions(base, incs, ["lang"], [1, 2]), mv_path)
 
-    def _mv_version(k: int, docs, chars) -> DataFrame:
-        return st.select(
-            F.lit(k).cast("long").alias("mv_version"), "lang",
-            docs.cast("long").alias("docs"),
-            chars.cast("long").alias("chars"))
-
-    mv1 = _mv_version(1, F.col("docs_base"), F.col("chars_base"))
-    mv2 = _mv_version(2, F.col("docs_base") + F.col("docs_delta_c1"),
-                      F.col("chars_base") + F.col("chars_delta_c1"))
-    mv3 = _mv_version(
-        3, F.col("docs_base") + F.col("docs_delta_c1")
-        + F.col("docs_delta_c2"),
-        F.col("chars_base") + F.col("chars_delta_c1")
-        + F.col("chars_delta_c2"))
-    (mv1.unionByName(mv2).unionByName(mv3)
-     .write.format("arrowipc").option("partitionBy", "mv_version")
-     .option("compression", "lz4")
-     .mode("append").save(mv_path))
-
-    mv_back = (spark.read.format("arrowipc")
-               .option("columns", "lang,docs,chars,mv_version")
-               .schema("lang string, docs long, chars long, "
-                       "mv_version long")
-               .load(mv_path))
-    direct = None
-    for k, ver in ((1, "1"), (2, "2"), (3, None)):
-        d_k = _mutation_snap(spark, src, ver).groupBy("lang").agg(
-            F.count(F.lit(1)).cast("long").alias("docs_direct"),
-            F.sum("n_chars").cast("long").alias("chars_direct"),
-        ).withColumn("mv_version", F.lit(k).cast("long"))
-        direct = d_k if direct is None else direct.unionByName(d_k)
-    return (
-        mv_back.join(direct, ["mv_version", "lang"], "left")
-        .select(
-            "mv_version", "lang", "docs", "chars",
-            ((F.col("docs") == F.coalesce("docs_direct", F.lit(0)))
-             & (F.col("chars") == F.coalesce("chars_direct", F.lit(0))))
-            .alias("consistent"),
-        )
-    )
+    direct = _version_aggregates(
+        [_mutation_snap(spark, src, v) for v in ("1", "2", None)], ["lang"])
+    return (_audit_ledger(_read_ledger(spark, mv_path, ["lang"]), direct,
+                          ["lang"])
+            .select("mv_version", "lang", "docs", "chars", "consistent"))
 
 
 @query(
@@ -1677,89 +1637,28 @@ def q_mv_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .schema("lang string, source string, change string, "
                          "delta long, commit_seq long")
                  .load(feed).localCheckpoint())   # mutation-sized
-    aggs = []
-    for seq in (1, 2):
-        on = F.col("commit_seq") == seq
-        aggs.extend([
-            F.sum(F.when(on, (F.col("change") == "insert").cast("long")
-                         - (F.col("change") == "delete").cast("long"))
-                  .otherwise(F.lit(0)))
-            .cast("long").alias(f"dd_c{seq}"),
-            F.sum(F.when(on, F.col("delta")).otherwise(F.lit(0)))
-            .cast("long").alias(f"cd_c{seq}"),
-        ])
-    deltas_fine = feed_rows.groupBy("lang", "source").agg(*aggs)
-    # coarse grain = rollup of the FINE deltas — not a second feed pass
-    deltas_coarse = deltas_fine.groupBy("lang").agg(
-        *[F.sum(c).cast("long").alias(c)
-          for c in ("dd_c1", "cd_c1", "dd_c2", "cd_c2")])
-
-    def _ledger(base: DataFrame, deltas: DataFrame,
-                keys: list[str]) -> DataFrame:
-        st = base.join(deltas, keys, "left").na.fill(0)
-        out = None
-        for k, dd, cd in (
-            (1, F.lit(0), F.lit(0)),
-            (2, F.col("dd_c1"), F.col("cd_c1")),
-            (3, F.col("dd_c1") + F.col("dd_c2"),
-             F.col("cd_c1") + F.col("cd_c2")),
-        ):
-            frame = st.select(
-                F.lit(k).cast("long").alias("mv_version"), *keys,
-                (F.col("docs_base") + dd).cast("long").alias("docs"),
-                (F.col("chars_base") + cd).cast("long").alias("chars"))
-            out = frame if out is None else out.unionByName(frame)
-        return out
-
-    base_fine = _snap("1").groupBy("lang", "source").agg(
-        F.count(F.lit(1)).cast("long").alias("docs_base"),
-        F.sum("n_chars").cast("long").alias("chars_base"))
-    base_coarse = _snap("1").groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("docs_base"),
-        F.sum("n_chars").cast("long").alias("chars_base"))
-    (_ledger(base_coarse, deltas_coarse, ["lang"])
-     .write.format("arrowipc").option("partitionBy", "mv_version")
-     .option("compression", "lz4")
-     .mode("append").save(mv_a))
-    (_ledger(base_fine, deltas_fine, ["lang", "source"])
-     .write.format("arrowipc").option("partitionBy", "mv_version")
-     .option("compression", "lz4")
-     .mode("append").save(mv_b))
+    fine = ["lang", "source"]
+    deltas_fine = _commit_deltas(feed_rows, fine, [1, 2])
+    grains = ((mv_a, ["lang"], "lang"), (mv_b, fine, "lang_source"))
+    for mv_path, keys, _grain in grains:
+        # coarse grain = rollup of the FINE deltas — not a second feed pass
+        deltas = deltas_fine if keys == fine else _rollup(deltas_fine, keys)
+        _append_ledger(_ledger_versions(
+            _source_aggregate(_snap("1"), keys), deltas, keys, [1, 2]),
+            mv_path)
 
     # --- read back + per-version audit (fresh load per probe) ----------
-    def _direct(ver: str | None, k: int, keys: list[str]) -> DataFrame:
-        return (_snap(ver).groupBy(*keys).agg(
-            F.count(F.lit(1)).cast("long").alias("docs_direct"),
-            F.sum("n_chars").cast("long").alias("chars_direct"))
-            .withColumn("mv_version", F.lit(k).cast("long")))
-
-    def _verified(mv_path: str, keys: list[str], grain: str) -> DataFrame:
-        cols = ",".join(keys + ["docs", "chars", "mv_version"])
-        ddl = (", ".join(f"{k} string" for k in keys)
-               + ", docs long, chars long, mv_version long")
-        back = (spark.read.format("arrowipc")
-                .option("columns", cols)
-                .schema(ddl).load(mv_path))
-        direct = None
-        for k, ver in ((1, "1"), (2, "2"), (3, None)):
-            d_k = _direct(ver, k, keys)
-            direct = d_k if direct is None else direct.unionByName(d_k)
-        return (back.join(direct, ["mv_version"] + keys, "left")
-                .select(
-                    F.lit(grain).alias("grain"), "mv_version", *keys,
-                    "docs", "chars",
-                    ((F.col("docs")
-                      == F.coalesce("docs_direct", F.lit(0)))
-                     & (F.col("chars")
-                        == F.coalesce("chars_direct", F.lit(0))))
-                    .alias("consistent")))
-
-    out_a = _verified(mv_a, ["lang"], "lang").withColumn(
-        "source", F.lit("*"))
-    out_b = _verified(mv_b, ["lang", "source"], "lang_source")
-    cols = ["grain", "mv_version", "lang", "source", "docs", "chars",
-            "consistent"]
-    return out_a.select(*cols).unionByName(out_b.select(*cols))
+    out = []
+    for mv_path, keys, grain in grains:
+        direct = _version_aggregates([_snap(v) for v in ("1", "2", None)],
+                                     keys)
+        out.append(
+            _audit_ledger(_read_ledger(spark, mv_path, keys), direct, keys)
+            .select(F.lit(grain).alias("grain"), "mv_version", "lang",
+                    F.col("source") if "source" in keys
+                    else F.lit("*").alias("source"),
+                    "docs", "chars", "consistent"))
+    return out[0].unionByName(out[1])
 
 
 @query(
@@ -2293,8 +2192,8 @@ def q_feed_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # against the post-compaction manifest and the equality check below
     # would be vacuous.  Group-cardinality-sized, so the checkpoint is
     # a handful of rows.
-    pre = _feed_commit_deltas(_read_feed(spark, feed, seqs),
-                              seqs).localCheckpoint()
+    pre = _commit_deltas(_read_feed(spark, feed, seqs), ["lang"],
+                         seqs).localCheckpoint()
     # schema=: the fixture's full on-disk feed row layout, so the
     # rewrite's internal read skips schema inference (VERDICT r16 item
     # 3 — same §1.2 mechanism as the mutation-history reads).
@@ -2304,7 +2203,7 @@ def q_feed_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             "feed compaction found nothing in scope — the fixture wrote "
             "commit partitions 1..3, so thru=2 must rewrite commits 1-2")
-    post = _feed_commit_deltas(_read_feed(spark, feed, seqs), seqs)
+    post = _commit_deltas(_read_feed(spark, feed, seqs), ["lang"], seqs)
     unchanged = (pre.exceptAll(post).count() == 0
                  and post.exceptAll(pre).count() == 0)
     return post.select(
@@ -2403,13 +2302,13 @@ def q_feed_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             "commit partitions 1..3, so thru=2 must rewrite commits 1-2")
     # Materialize the pre-vacuum consumer read NOW (lazy would plan
     # against the post-vacuum state and the equality would be vacuous).
-    pre = _feed_commit_deltas(_read_feed(spark, feed, seqs),
-                              seqs).localCheckpoint()
+    pre = _commit_deltas(_read_feed(spark, feed, seqs), ["lang"],
+                         seqs).localCheckpoint()
     pre_versions = _manifest_versions(feed)
 
     info = vacuum_arrowipc(feed, keep_versions=1)
 
-    post = _feed_commit_deltas(_read_feed(spark, feed, seqs), seqs)
+    post = _commit_deltas(_read_feed(spark, feed, seqs), ["lang"], seqs)
     unchanged = (pre.exceptAll(post).count() == 0
                  and post.exceptAll(pre).count() == 0)
     visible = set(_read_manifest(feed, _manifest_versions(feed)[-1]))
@@ -2516,47 +2415,16 @@ def q_mv_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_dir = _scratch(sf_dir, "mv_restore")
     src, feed = _mutation_feed(spark, sf_dir, base_dir)
     mv_path = os.path.join(base_dir, "mv")
-    _MV_SCHEMA = ("lang string, docs long, chars long, mv_version long, "
-                  "src_commit long")
 
     # Maintain the MV through both feed commits (q_mv_maintain's merge
     # discipline), versions stamped with the feed position they absorbed.
-    base = _mutation_snap(spark, src, "1").groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("docs_base"),
-        F.sum("n_chars").cast("long").alias("chars_base"))
-    incs = _feed_commit_deltas(_read_feed(spark, feed, [1, 2]), [1, 2])
-    st = base.join(incs, "lang", "left").na.fill(0)
-
-    def _mv_version(k: int, commit: int, docs, chars) -> DataFrame:
-        return st.select(
-            "lang", docs.cast("long").alias("docs"),
-            chars.cast("long").alias("chars"),
-            F.lit(k).cast("long").alias("mv_version"),
-            F.lit(commit).cast("long").alias("src_commit"))
-
-    mv1 = _mv_version(1, 0, F.col("docs_base"), F.col("chars_base"))
-    mv2 = _mv_version(2, 1, F.col("docs_base") + F.col("docs_delta_c1"),
-                      F.col("chars_base") + F.col("chars_delta_c1"))
-    mv3 = _mv_version(
-        3, 2,
-        F.col("docs_base") + F.col("docs_delta_c1")
-        + F.col("docs_delta_c2"),
-        F.col("chars_base") + F.col("chars_delta_c1")
-        + F.col("chars_delta_c2"))
-    (mv1.unionByName(mv2).unionByName(mv3)
-     .write.format("arrowipc").option("partitionBy", "mv_version")
-     .option("compression", "lz4")
-     .mode("append").save(mv_path))
+    base = _source_aggregate(_mutation_snap(spark, src, "1"), ["lang"])
+    incs = _commit_deltas(_read_feed(spark, feed, [1, 2]), ["lang"],
+                          [1, 2])
+    _append_ledger(_ledger_versions(base, incs, ["lang"], [1, 2]), mv_path)
 
     # The mistake is reverted upstream: source rolls back to v1.
     restore_arrowipc(src, version=1)
-
-    def _mv_read() -> DataFrame:
-        # Fresh load() per use — the Spark ≤4.1 pushdown plan-cache
-        # hazard (arrowipc.pushFilters) forbids mixing filtered and
-        # unfiltered actions on one load result.
-        return (spark.read.format("arrowipc")
-                .schema(_MV_SCHEMA).load(mv_path))
 
     # -- (a) detect the restore (all three arms enforced) ----------------
     head_kind = history_arrowipc(src)[-1]["kind"]
@@ -2581,7 +2449,8 @@ def q_mv_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
           & (F.col("chars") == F.col("chars_cur")))
     stats = {
         int(r["mv_version"]): (int(r["n"]), int(r["n_eq"]), int(r["pos"]))
-        for r in (_mv_read().join(cur, "lang", "left")
+        for r in (_read_ledger(spark, mv_path, ["lang"])
+                  .join(cur, "lang", "left")
                   .groupBy("mv_version")
                   .agg(F.count(F.lit(1)).alias("n"),
                        F.sum(eq.cast("long")).alias("n_eq"),
@@ -2616,31 +2485,22 @@ def q_mv_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # -- (c) roll back: publish the matched content as a NEW version -----
     rollback_pos = stats[target][2]
-    (_mv_read().filter(F.col("mv_version") == target)
-     .select("lang", "docs", "chars",
-             F.lit(head_v + 1).cast("long").alias("mv_version"),
-             F.lit(int(rollback_pos)).cast("long").alias("src_commit"))
-     .write.format("arrowipc").option("partitionBy", "mv_version")
-     .option("compression", "lz4")
-     .mode("append").save(mv_path))
+    _append_ledger(
+        _read_ledger(spark, mv_path, ["lang"])
+        .filter(F.col("mv_version") == target)
+        .select("lang", "docs", "chars",
+                F.lit(head_v + 1).cast("long").alias("mv_version"),
+                F.lit(int(rollback_pos)).cast("long").alias("src_commit")),
+        mv_path)
 
     # -- output: every MV version audited against its own lineage --------
-    direct = None
-    for k, ver in ((1, "1"), (2, "2"), (3, "3"), (4, None)):
-        d_k = _mutation_snap(spark, src, ver).groupBy("lang").agg(
-            F.count(F.lit(1)).cast("long").alias("docs_direct"),
-            F.sum("n_chars").cast("long").alias("chars_direct"),
-        ).withColumn("mv_version", F.lit(k).cast("long"))
-        direct = d_k if direct is None else direct.unionByName(d_k)
-    return (
-        _mv_read().join(direct, ["mv_version", "lang"], "left")
-        .select(
-            "mv_version", "src_commit", "lang", "docs", "chars",
-            ((F.col("docs") == F.coalesce("docs_direct", F.lit(0)))
-             & (F.col("chars") == F.coalesce("chars_direct", F.lit(0))))
-            .alias("consistent"),
-        )
-    )
+    direct = _version_aggregates(
+        [_mutation_snap(spark, src, v) for v in ("1", "2", "3", None)],
+        ["lang"])
+    return (_audit_ledger(_read_ledger(spark, mv_path, ["lang"]), direct,
+                          ["lang"])
+            .select("mv_version", "src_commit", "lang", "docs", "chars",
+                    "consistent"))
 
 
 @query(
@@ -2717,22 +2577,18 @@ def q_feed_consumer_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         consumer_lag,
         seek,
     )
-    from bossarrowstorageengine_spark.streaming.mv_maintain import (
-        _mv_head,
-        apply_feed_batch,
-        seed_mv,
-    )
 
     register_arrowipc(spark)
     base_dir = _scratch(sf_dir, "consumer_groups")
     src, feed = _mutation_feed(spark, sf_dir, base_dir)
     offsets = os.path.join(base_dir, "offsets")
-    mv = {g: os.path.join(base_dir, f"mv_{g}") for g in ("fast", "slow")}
+    # each group's ledger: a one-grain fanout at per-lang grain
+    mv = {g: [(os.path.join(base_dir, f"mv_{g}"), ["lang"])]
+          for g in ("fast", "slow")}
 
-    base_agg = _mutation_snap(spark, src, "1").groupBy("lang").agg(
-        F.count(F.lit(1)).alias("docs"), F.sum("n_chars").alias("chars"))
+    base_agg = _source_aggregate(_mutation_snap(spark, src, "1"), ["lang"])
     for g in ("fast", "slow"):
-        seed_mv(mv[g], base_agg)
+        seed_mv_fanout(mv[g], base_agg)
         seek(spark, offsets, g, 0)   # register both groups at 0
 
     cols = "lang,change,delta,commit_seq"
@@ -2740,14 +2596,14 @@ def q_feed_consumer_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fast: consume everything → apply → commit head
     rows_f, _, head = consume_next(spark, feed, offsets, "fast", cols,
                                    _CF_FEED_SCHEMA)
-    apply_feed_batch(rows_f, 0, mv["fast"])
+    apply_fanout_batch(rows_f, 0, mv["fast"])
     commit_position(spark, offsets, "fast", head)
 
     # slow: a paused consumer — applies commit 1 only, commits position 1
     rows_s, _, _ = consume_next(spark, feed, offsets, "slow", cols,
                                 _CF_FEED_SCHEMA)
-    apply_feed_batch(rows_s.filter(F.col("commit_seq") <= 1), 0,
-                     mv["slow"])
+    apply_fanout_batch(rows_s.filter(F.col("commit_seq") <= 1), 0,
+                       mv["slow"])
     commit_position(spark, offsets, "slow", 1)
 
     lag_mid = {r.group: (r.position, r.head, r.lag)
@@ -2761,11 +2617,11 @@ def q_feed_consumer_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # redelivery into the ledger publishes no new MV version
     redeliver, _, _ = consume_next(spark, feed, offsets, "fast", cols,
                                    _CF_FEED_SCHEMA)
-    _, ver_before, _ = _mv_head(spark, mv["fast"])
+    _, ver_before, _ = _grain_head(spark, *mv["fast"][0])
     full = (spark.read.format("arrowipc")
             .option("columns", cols).schema(_CF_FEED_SCHEMA).load(feed))
-    apply_feed_batch(full, 99, mv["fast"])
-    _, ver_after, _ = _mv_head(spark, mv["fast"])
+    apply_fanout_batch(full, 99, mv["fast"])
+    _, ver_after, _ = _grain_head(spark, *mv["fast"][0])
     exactly_once = (redeliver.count() == 0 and ver_after == ver_before)
 
     # position-regression guard: a stale commit is refused loudly
@@ -2779,11 +2635,11 @@ def q_feed_consumer_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     seek(spark, offsets, "slow", 0)
     rows_r, _, head_r = consume_next(spark, feed, offsets, "slow", cols,
                                      _CF_FEED_SCHEMA)
-    apply_feed_batch(rows_r, 1, mv["slow"])   # commit 1 no-op, 2 advances
+    apply_fanout_batch(rows_r, 1, mv["slow"])  # commit 1 no-op, 2 advances
     commit_position(spark, offsets, "slow", head_r)
 
-    head_fast, _, _ = _mv_head(spark, mv["fast"])
-    head_slow, _, _ = _mv_head(spark, mv["slow"])
+    head_fast, _, _ = _grain_head(spark, *mv["fast"][0])
+    head_slow, _, _ = _grain_head(spark, *mv["slow"][0])
     hf = head_fast.select("lang", "docs", "chars").localCheckpoint()
     hs = head_slow.select("lang", "docs", "chars").localCheckpoint()
     converged = (hf.exceptAll(hs).unionByName(hs.exceptAll(hf))

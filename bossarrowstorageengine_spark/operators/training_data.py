@@ -1070,11 +1070,22 @@ def q_purge_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bossarrowstorageengine_spark.sources import register_arrowipc
     from bossarrowstorageengine_spark.sources.arrowipc import (
         _manifest_versions,
+        _partition_int,
         _read_manifest,
     )
     from bossarrowstorageengine_spark.sources.maintenance import (
         _cow_rewrite,
         delete_arrowipc,
+    )
+    from bossarrowstorageengine_spark.streaming.mv_maintain import (
+        _append_ledger,
+        _audit_ledger,
+        _commit_deltas,
+        _ledger_versions,
+        _read_ledger,
+        _rollup,
+        _source_aggregate,
+        _version_aggregates,
     )
 
     register_arrowipc(spark)
@@ -1124,13 +1135,9 @@ def q_purge_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     pack_v1_paths = _read_manifest(
         pack_path, _manifest_versions(pack_path)[-1])
 
-    base_fine = _snap("1", "lang,source,n_chars").groupBy(
-        "lang", "source").agg(
-        F.count(F.lit(1)).cast("long").alias("docs_base"),
-        F.sum("n_chars").cast("long").alias("chars_base"))
-    base_coarse = _snap("1", "lang,n_chars").groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("docs_base"),
-        F.sum("n_chars").cast("long").alias("chars_base"))
+    fine, coarse = ["lang", "source"], ["lang"]
+    base_fine = _source_aggregate(_snap("1", "lang,source,n_chars"), fine)
+    base_coarse = _source_aggregate(_snap("1", "lang,n_chars"), coarse)
 
     # --- THE PURGE: one RTBF DELETE on the source -----------------------
     delete_arrowipc(spark, src, _PURGE_DERIVED_PRED, compression="lz4",
@@ -1190,36 +1197,11 @@ def q_purge_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     pack_purge_version = res["version"]
 
     # --- fanout purge: ONE feed read rolls BOTH grains forward ----------
-    deltas_fine = feed_rows.groupBy("lang", "source").agg(
-        F.sum((F.col("change") == "insert").cast("long")
-              - (F.col("change") == "delete").cast("long"))
-        .cast("long").alias("dd"),
-        F.sum("delta").cast("long").alias("cd"))
-    deltas_coarse = deltas_fine.groupBy("lang").agg(
-        F.sum("dd").cast("long").alias("dd"),
-        F.sum("cd").cast("long").alias("cd"))
-
-    def _ledger(base: DataFrame, deltas: DataFrame,
-                keys: list[str]) -> DataFrame:
-        st = base.join(deltas, keys, "left").na.fill(0)
-        out = None
-        for k, dd, cd in ((1, F.lit(0), F.lit(0)),
-                          (2, F.col("dd"), F.col("cd"))):
-            frame = st.select(
-                F.lit(k).cast("long").alias("mv_version"), *keys,
-                (F.col("docs_base") + dd).cast("long").alias("docs"),
-                (F.col("chars_base") + cd).cast("long").alias("chars"))
-            out = frame if out is None else out.unionByName(frame)
-        return out
-
-    (_ledger(base_coarse, deltas_coarse, ["lang"])
-     .write.format("arrowipc").option("partitionBy", "mv_version")
-     .option("compression", "lz4")
-     .mode("append").save(mv_a))
-    (_ledger(base_fine, deltas_fine, ["lang", "source"])
-     .write.format("arrowipc").option("partitionBy", "mv_version")
-     .option("compression", "lz4")
-     .mode("append").save(mv_b))
+    deltas_fine = _commit_deltas(feed_rows, fine, [1])
+    _append_ledger(_ledger_versions(
+        base_coarse, _rollup(deltas_fine, coarse), coarse, [1]), mv_a)
+    _append_ledger(_ledger_versions(base_fine, deltas_fine, fine, [1]),
+                   mv_b)
 
     # --- audits (fresh load per probe — FORMAT.md §8) -------------------
     pack_schema = ("bucket int, doc_id long, h60 long, tokens long, "
@@ -1254,62 +1236,29 @@ def q_purge_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     # untouched shards (even into fewer files) fails this, where the old
     # files_rewritten < v1-count proxy did not.  (Row-level content of
     # untouched shards is covered by pack_matches_scratch.)
-    def _bucket_seg(p: str) -> int | None:
-        for seg in p.split(os.sep):
-            if seg.startswith("bucket="):
-                try:
-                    return int(seg.split("=", 1)[1])
-                except ValueError:
-                    return None
-        return None
-
     aff_set = set(affected)
     unaffected_v1 = {p for p in pack_v1_paths
-                     if _bucket_seg(p) not in aff_set}
+                     if _partition_int(pack_path, p, "bucket")
+                     not in aff_set}
     head_paths = set(_read_manifest(pack_path, pack_purge_version))
     untouched_preserved = unaffected_v1 <= head_paths
 
-    def _mv_back(path: str, keys: list[str]) -> DataFrame:
-        cols = ",".join(keys + ["docs", "chars", "mv_version"])
-        ddl = (", ".join(f"{k} string" for k in keys)
-               + ", docs long, chars long, mv_version long")
-        return (spark.read.format("arrowipc")
-                .option("columns", cols)
-                .schema(ddl).load(path))
-
     # ONE read-back per ledger feeds the audit, the rollup check, the
     # version tag and the output rows (ledgers are group-sized).
-    back_a = _mv_back(mv_a, ["lang"]).localCheckpoint()
-    back_b = _mv_back(mv_b, ["lang", "source"]).localCheckpoint()
+    back_a = _read_ledger(spark, mv_a, coarse).localCheckpoint()
+    back_b = _read_ledger(spark, mv_b, fine).localCheckpoint()
 
     # Direct per-version aggregates: ONE snapshot read per version at
     # the fine grain; the coarse direct is its exact sum-decomposition.
-    direct_fine = None
-    for k, ver in ((1, "1"), (2, None)):
-        d_k = (_snap(ver, "lang,source,n_chars")
-               .groupBy("lang", "source").agg(
-                   F.count(F.lit(1)).cast("long").alias("docs_d"),
-                   F.sum("n_chars").cast("long").alias("chars_d"))
-               .withColumn("mv_version", F.lit(k).cast("long")))
-        direct_fine = (d_k if direct_fine is None
-                       else direct_fine.unionByName(d_k))
-    direct_fine = direct_fine.localCheckpoint()
-    direct_coarse = direct_fine.groupBy("mv_version", "lang").agg(
-        F.sum("docs_d").cast("long").alias("docs_d"),
-        F.sum("chars_d").cast("long").alias("chars_d"))
-
-    def _consistent(back: DataFrame, direct: DataFrame,
-                    keys: list[str]) -> bool:
-        return (back.join(direct, ["mv_version"] + keys, "left")
-                .filter((F.col("docs")
-                         != F.coalesce("docs_d", F.lit(0)))
-                        | (F.col("chars")
-                           != F.coalesce("chars_d", F.lit(0))))
-                .count() == 0)
-
-    fanout_consistent = (
-        _consistent(back_a, direct_coarse, ["lang"])
-        and _consistent(back_b, direct_fine, ["lang", "source"]))
+    direct_fine = _version_aggregates(
+        [_snap(v, "lang,source,n_chars") for v in ("1", None)],
+        fine).localCheckpoint()
+    fanout_consistent = all(
+        _audit_ledger(back, direct, keys)
+        .filter(~F.col("consistent")).count() == 0
+        for back, direct, keys in (
+            (back_a, _rollup(direct_fine, ["mv_version", *coarse]), coarse),
+            (back_b, direct_fine, fine)))
     rolled = (back_b.filter(F.col("mv_version") == 2)
               .groupBy("lang").agg(
                   F.sum("docs").cast("long").alias("docs_r"),

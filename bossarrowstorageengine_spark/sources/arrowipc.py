@@ -246,18 +246,6 @@ def _bucket_ids(keys: pa.ChunkedArray, col: str, n_buckets: int) -> pa.Array:
     return pmod.cast(pa.int32()).combine_chunks()
 
 
-def _sbucket_of(root: str, path: str) -> int | None:
-    """The ``__sb=<i>`` value in ``path``'s directory chain, or None."""
-    rel = os.path.relpath(os.path.dirname(path), root)
-    for seg in rel.split(os.sep):
-        if seg.startswith(f"{_SBUCKET_COL}="):
-            try:
-                return int(seg.split("=", 1)[1])
-            except ValueError:
-                return None
-    return None
-
-
 def _commit_ts(path: str, version: int) -> float:
     """Commit wall-clock of a manifest version: the ``ts`` the commit
     recorded (round 13+), else the manifest file's mtime (pre-existing
@@ -827,6 +815,27 @@ def _partition_values(root: str, file_path: str) -> dict[str, str]:
     return out
 
 
+def _partition_int(root: str, file_path: str, col: str) -> int | None:
+    """The integer value of directory column ``col`` on ``file_path``'s
+    chain under ``root``; None when there is none or it is no integer."""
+    try:
+        return int(_partition_values(root, file_path)[col])
+    except (KeyError, ValueError):
+        return None
+
+
+def _head_partition_max(root: str, col: str) -> int | None:
+    """The largest integer ``col`` directory value among the head
+    manifest's files — metadata only, no data file opened.  None for a
+    table without a log or without such directories."""
+    versions = _manifest_versions(root)
+    if not versions:
+        return None
+    return max((v for f in _read_manifest(root, versions[-1])
+                if (v := _partition_int(root, f, col)) is not None),
+               default=None)
+
+
 def _dir_prunable(part_vals: dict[str, str], filters: Sequence[Filter]) -> bool:
     """True iff an EqualTo filter on a partition column definitely excludes
     this directory.  Only exact string/int matches prune (floats and
@@ -1289,7 +1298,7 @@ class ArrowIPCReader(DataSourceReader):
             # still applies the filters post-scan).
             groups: dict[int, list[tuple]] = {}
             for path in files:
-                b = _sbucket_of(self._path, path)
+                b = _partition_int(self._path, path, _SBUCKET_COL)
                 if b is None:
                     raise ValueError(
                         f"arrowipc groupByBucket read over {self._path}: "
@@ -1644,6 +1653,10 @@ class ArrowIPCWriter(DataSourceArrowWriter):
         # here, before any task runs, keeps this write's parts out of the
         # conversion checkpoint.
         self._staging = os.path.join(self._path, f".write-{uuid.uuid4().hex}")
+        if not os.path.isdir(self._path):
+            # A new table: make its directory entry durable now, since the
+            # commit only fsyncs directories inside the table.
+            _fsync(*_make_dirs(self._path))
         _ensure_log(self._path)
         mb = options.get("maxBytesPerFile")
         if mb is not None:

@@ -162,28 +162,45 @@ def seek(spark: SparkSession, offsets_dir: str, group: str,
     _append(offsets_dir, group, position, "seek")
 
 
+def position_advancer(offsets_dir: str | None, group: str | None,
+                      maintainer: str):
+    """The position step of a streaming maintainer registered as a named
+    consumer group: a function that, after the maintainer's apply,
+    advances ``group``'s position to a micro-batch's max ``commit_seq``.
+    ``offsets_dir`` and ``group`` come together (``ValueError``
+    otherwise); without them the step does nothing.  The position is
+    advisory observability — replay safety stays on the maintainer's
+    own ledger — and a batch at or below the committed position is
+    skipped, so a restarted query re-observing an old batch never trips
+    ``commit_position``'s forward-only guard."""
+    if (offsets_dir is None) != (group is None):
+        raise ValueError(
+            f"{maintainer}: offsets_dir and group come together — a "
+            "position needs a group name and a table to land in")
+
+    def advance(batch: DataFrame) -> None:
+        if offsets_dir is None:
+            return
+        spark = batch.sparkSession
+        head = batch.agg(F.max("commit_seq")).collect()[0][0]
+        if head is not None and int(head) > committed_position(
+                spark, offsets_dir, group):
+            commit_position(spark, offsets_dir, group, int(head))
+
+    return advance
+
+
 def feed_head(spark: SparkSession, feed_dir: str) -> int:
     """The feed's newest commit position.  Metadata-only on the standard
     layout (max over the manifest's ``commit_seq=`` partition dirs);
     one mutation-sized Spark aggregate as the fallback."""
     from bossarrowstorageengine_spark.sources.arrowipc import (
-        _manifest_versions,
-        _read_manifest,
+        _head_partition_max,
     )
 
-    versions = _manifest_versions(feed_dir)
-    if versions:
-        seqs = []
-        for f in _read_manifest(feed_dir, versions[-1]):
-            rel = os.path.relpath(os.path.dirname(f), feed_dir)
-            for seg in rel.split(os.sep):
-                if seg.startswith("commit_seq="):
-                    try:
-                        seqs.append(int(seg.split("=", 1)[1]))
-                    except ValueError:
-                        pass
-        if seqs:
-            return max(seqs)
+    head = _head_partition_max(feed_dir, "commit_seq")
+    if head is not None:
+        return head
     feed = (spark.read.format("arrowipc")
             .option("columns", "commit_seq").schema("commit_seq long")
             .load(feed_dir))

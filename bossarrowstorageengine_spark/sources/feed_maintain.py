@@ -33,10 +33,9 @@ maintenance runs.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession
 
+from bossarrowstorageengine_spark.sources.arrowipc import _partition_int
 from bossarrowstorageengine_spark.sources.maintenance import _Rewrite
 
 
@@ -45,16 +44,9 @@ def _scope_key(path: str, part_file: str) -> int | None:
     ``commit_seq=k`` directory, ``n`` for one under ``compacted_thru=n``
     (an earlier checkpoint covers commits 1..n), else ``None`` (not a
     feed-positioned file — never compacted by this routine)."""
-    rel = os.path.relpath(os.path.dirname(part_file), path)
-    if rel in (".", ""):
-        return None
-    for seg in rel.split(os.sep):
-        for col in ("commit_seq", "compacted_thru"):
-            if seg.startswith(col + "="):
-                try:
-                    return int(seg.split("=", 1)[1])
-                except ValueError:
-                    return None
+    for col in ("commit_seq", "compacted_thru"):
+        if (k := _partition_int(path, part_file, col)) is not None:
+            return k
     return None
 
 

@@ -184,26 +184,17 @@ def _seg_high_water(idx_dir: str) -> int:
     ``seg=<thru>`` directory, and commits apply in ascending order, so
     ``k <= high-water`` ⇔ commit k was absorbed."""
     from bossarrowstorageengine_spark.sources.arrowipc import (
+        _head_partition_max,
         _manifest_versions,
-        _read_manifest,
     )
 
-    versions = _manifest_versions(idx_dir)
-    if not versions:
+    hw = _head_partition_max(idx_dir, "seg")
+    if hw is None and not _manifest_versions(idx_dir):
         raise ValueError(
             f"index table {idx_dir!r} is not seeded — write the base "
             "segment with seed_index(idx_dir, bucketed) first (the one "
             "corpus-sized pass)")
-    hw = -1
-    for f in _read_manifest(idx_dir, versions[-1]):
-        rel = os.path.relpath(os.path.dirname(f), idx_dir)
-        for part in rel.split(os.sep):
-            if part.startswith("seg="):
-                try:
-                    hw = max(hw, int(part.split("=", 1)[1]))
-                except ValueError:
-                    pass
-    return hw
+    return -1 if hw is None else hw
 
 
 def apply_index_batch(batch_df: DataFrame, batch_id: int,
@@ -312,6 +303,7 @@ def compact_index(spark: SparkSession, idx_dir: str, thru: int,
     corpus-sized fold (each output file a contiguous ``vec_id`` range,
     so the merged base keeps stats-prunable point lookups).  Returns
     ``{"files_before", "files_after", "rows"}``."""
+    from bossarrowstorageengine_spark.sources.arrowipc import _partition_int
     from bossarrowstorageengine_spark.sources.maintenance import _Rewrite
 
     hw = _seg_high_water(idx_dir)
@@ -325,20 +317,12 @@ def compact_index(spark: SparkSession, idx_dir: str, thru: int,
             f"segment {hw} — compaction may only fold segments that "
             "exist")
 
-    def seg_of(f: str) -> int | None:
-        rel = os.path.relpath(os.path.dirname(f), idx_dir)
-        for part in rel.split(os.sep):
-            if part.startswith("seg="):
-                try:
-                    return int(part.split("=", 1)[1])
-                except ValueError:
-                    return None
-        return None
-
     with _Rewrite(spark, idx_dir, "idxcompact") as tx:
         before = tx.visible
-        in_scope = sorted(f for f in before
-                          if (s := seg_of(f)) is not None and s <= thru)
+        in_scope = sorted(
+            f for f in before
+            if (s := _partition_int(idx_dir, f, "seg")) is not None
+            and s <= thru)
         if not in_scope:
             return {"files_before": len(before), "files_after": len(before),
                     "rows": 0}
@@ -379,35 +363,22 @@ def ann_index_stream(spark: SparkSession, feed_dir: str, idx_dir: str,
     ``StreamingQuery``.
 
     ``offsets_dir``/``group`` (both or neither) register the maintainer
-    as a NAMED CONSUMER GROUP (``sources/feed_consume``), committing
-    its position to the shared offsets table after each micro-batch —
-    the ``mv_fanout_stream`` contract: advisory observability (replay
-    safety stays on the segment high-water), forward-only commits
-    skipped at-or-below the current position, so fresh-checkpoint
-    restarts never trip the regression guard."""
+    as a NAMED CONSUMER GROUP, committing its position to the shared
+    offsets table after each micro-batch
+    (``feed_consume.position_advancer``; replay safety stays on the
+    segment high-water)."""
     from bossarrowstorageengine_spark.sources import register_arrowipc
+    from bossarrowstorageengine_spark.sources.feed_consume import (
+        position_advancer,
+    )
 
-    if (offsets_dir is None) != (group is None):
-        raise ValueError(
-            "ann_index_stream: offsets_dir and group come together — a "
-            "position needs a group name and a table to land in")
-
+    advance = position_advancer(offsets_dir, group, "ann_index_stream")
     register_arrowipc(spark)
     feed = read_feed(spark, feed_dir, stream=True)
 
     def _apply(df: DataFrame, bid: int) -> None:
         apply_index_batch(df, bid, idx_dir)
-        if offsets_dir is None:
-            return
-        from bossarrowstorageengine_spark.sources.feed_consume import (
-            commit_position,
-            committed_position,
-        )
-
-        head = df.agg(F.max("commit_seq")).collect()[0][0]
-        if head is not None and int(head) > committed_position(
-                spark, offsets_dir, group):
-            commit_position(spark, offsets_dir, group, int(head))
+        advance(df)
 
     return (feed.writeStream
             .foreachBatch(_apply)

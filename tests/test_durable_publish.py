@@ -184,6 +184,31 @@ def test_commit_rejects_part_outside_table(tmp_path):
     assert a._manifest_versions(table) == [1]
 
 
+def test_new_table_directory_is_fsynced(tmp_path, monkeypatch):
+    """Setting up a write into a table directory that does not exist yet
+    creates it and fsyncs its parent, so a crash cannot drop the new
+    table's directory entry under its first committed version.  An
+    existing table's writer fsyncs nothing at set-up."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    synced: list[str] = []
+    real_fsync = a._fsync
+
+    def _recording_fsync(*paths):
+        synced.extend(paths)
+        real_fsync(*paths)
+
+    monkeypatch.setattr(a, "_fsync", _recording_fsync)
+    schema = StructType([StructField("id", LongType())])
+    table = str(tmp_path / "new" / "t")
+    a.ArrowIPCWriter(schema, {"path": table}, False)
+    assert os.path.isdir(table)
+    assert str(tmp_path / "new") in synced
+    synced.clear()
+    a.ArrowIPCWriter(schema, {"path": table}, False)
+    assert synced == []
+
+
 def test_listing_stream_fails_once_an_engine_write_converts_it(spark):
     """A stream that started on a pyarrow-written directory (file-name
     offsets) cannot follow engine commits, whose ``part-<uuid>`` names

@@ -728,12 +728,14 @@ def test_feed_compact_consumer_single_exchange_no_python(spark):
 
     from bossarrowstorageengine_spark.operators.scans import (
         _SCRATCH_ROOT,
-        _feed_commit_deltas,
         _read_feed,
     )
     from bossarrowstorageengine_spark.sources import register_arrowipc
     from bossarrowstorageengine_spark.sources.feed_maintain import (
         compact_feed_thru,
+    )
+    from bossarrowstorageengine_spark.streaming.mv_maintain import (
+        _commit_deltas,
     )
 
     register_arrowipc(spark)
@@ -743,8 +745,8 @@ def test_feed_compact_consumer_single_exchange_no_python(spark):
     feed = os.path.join(_SCRATCH_ROOT, os.path.basename(SF),
                         "feed_compact")
     compact_feed_thru(spark, feed, thru=3)  # fully checkpointed layout
-    consumer = _feed_commit_deltas(_read_feed(spark, feed, [1, 2, 3]),
-                                   [1, 2, 3])
+    consumer = _commit_deltas(_read_feed(spark, feed, [1, 2, 3]), ["lang"],
+                              [1, 2, 3])
     plan = _plan(consumer)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert plan.count("Exchange") == 1, plan

@@ -152,7 +152,6 @@ def test_feed_compact_behind_head_then_absorb_and_time_travel(spark):
 
     from bossarrowstorageengine_spark.operators.scans import (
         _SCRATCH_ROOT,
-        _feed_commit_deltas,
         _read_feed,
     )
     from bossarrowstorageengine_spark.sources.arrowipc import (
@@ -160,6 +159,9 @@ def test_feed_compact_behind_head_then_absorb_and_time_travel(spark):
     )
     from bossarrowstorageengine_spark.sources.feed_maintain import (
         compact_feed_thru,
+    )
+    from bossarrowstorageengine_spark.streaming.mv_maintain import (
+        _commit_deltas,
     )
 
     rows = QUERIES["q_feed_compact"](spark, SF).collect()
@@ -185,7 +187,7 @@ def test_feed_compact_behind_head_then_absorb_and_time_travel(spark):
         r = (r.option("version", str(version)) if version
              else r)
         df = r.load(feed).filter("commit_seq IN (1, 2, 3)")
-        return sorted(map(tuple, _feed_commit_deltas(df, [1, 2, 3])
+        return sorted(map(tuple, _commit_deltas(df, ["lang"], [1, 2, 3])
                           .collect()))
 
     head = deltas()

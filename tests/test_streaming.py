@@ -1145,17 +1145,17 @@ def test_stream_mv_maintain_matches_batch_twin(spark):
 
     import __spark_entry__ as entrymod
     from bossarrowstorageengine_spark.operators.scans import (
+        _CF_FEED_SCHEMA,
         _commit_changes,
         _mutation_snap,
         _write_mutation_history,
     )
     from bossarrowstorageengine_spark.sources import register_arrowipc
     from bossarrowstorageengine_spark.streaming.mv_maintain import (
-        FEED_SCHEMA,
-        MV_SCHEMA,
-        apply_feed_batch,
-        mv_maintain_stream,
-        seed_mv,
+        _read_ledger,
+        apply_fanout_batch,
+        mv_fanout_stream,
+        seed_mv_fanout,
     )
 
     register_arrowipc(spark)
@@ -1163,6 +1163,7 @@ def test_stream_mv_maintain_matches_batch_twin(spark):
     base = f"/tmp/spark_graft_stream/{_uuid.uuid4().hex}"
     src, feed, mv, ckpt = (f"{base}/{d}" for d in
                            ("src", "feed", "mv", "ckpt"))
+    grains = [(mv, ["lang"])]   # the per-lang ledger: a one-grain fanout
     _write_mutation_history(spark, sf, src)
     v1, v2, v3 = (_mutation_snap(spark, src, v) for v in ("1", "2", None))
 
@@ -1174,9 +1175,9 @@ def test_stream_mv_maintain_matches_batch_twin(spark):
 
     base_agg = v1.groupBy("lang").agg(
         F.count(F.lit(1)).alias("docs"), F.sum("n_chars").alias("chars"))
-    seed_mv(mv, base_agg)
+    seed_mv_fanout(grains, base_agg)
     _commit(v1, v2, 1)  # lands before the stream starts -> batch 0
-    q = mv_maintain_stream(spark, feed, mv, ckpt)
+    q = mv_fanout_stream(spark, feed, grains, ckpt)
     try:
         q.processAllAvailable()
         _commit(v2, v3, 2)  # arrives live -> batch 1
@@ -1185,8 +1186,7 @@ def test_stream_mv_maintain_matches_batch_twin(spark):
         q.stop()
 
     def _mv_rows(path):
-        return (spark.read.format("arrowipc")
-                .schema(MV_SCHEMA).load(path)).collect()
+        return _read_ledger(spark, path, ["lang"]).collect()
 
     mv_rows = _mv_rows(mv)
     got = {(r.mv_version, r.lang): (r.docs, r.chars) for r in mv_rows}
@@ -1208,13 +1208,14 @@ def test_stream_mv_maintain_matches_batch_twin(spark):
     def _feed_df():
         return (spark.read.format("arrowipc")
                 .option("columns", "lang,change,delta,commit_seq")
-                .schema(FEED_SCHEMA).load(feed))
+                .schema(_CF_FEED_SCHEMA).load(feed))
 
-    apply_feed_batch(_feed_df().filter(F.col("commit_seq") == 2), 99, mv)
+    apply_fanout_batch(_feed_df().filter(F.col("commit_seq") == 2), 99,
+                       grains)
     assert {(r.mv_version, r.lang): (r.docs, r.chars)
             for r in _mv_rows(mv)} == want
     # ...and an empty new batch bumps nothing either
-    apply_feed_batch(_feed_df().filter(F.lit(False)), 100, mv)
+    apply_fanout_batch(_feed_df().filter(F.lit(False)), 100, grains)
     assert len(_mv_rows(mv)) == len(mv_rows)
 
     # fresh-checkpoint backlog: a restarted maintainer's FIRST batch
@@ -1222,8 +1223,8 @@ def test_stream_mv_maintain_matches_batch_twin(spark):
     # version) — one batch, both commits, still one MV version PER
     # COMMIT, identical to the per-commit delivery above
     mv2 = f"{base}/mv2"
-    seed_mv(mv2, base_agg)
-    apply_feed_batch(_feed_df(), 0, mv2)
+    seed_mv_fanout([(mv2, ["lang"])], base_agg)
+    apply_fanout_batch(_feed_df(), 0, [(mv2, ["lang"])])
     assert {(r.mv_version, r.lang): (r.docs, r.chars)
             for r in _mv_rows(mv2)} == want
 
@@ -1371,9 +1372,9 @@ def test_stream_mv_maintain_through_feed_compaction(spark):
         compact_feed_thru,
     )
     from bossarrowstorageengine_spark.streaming.mv_maintain import (
-        MV_SCHEMA,
-        mv_maintain_stream,
-        seed_mv,
+        _read_ledger,
+        mv_fanout_stream,
+        seed_mv_fanout,
     )
 
     register_arrowipc(spark)
@@ -1391,16 +1392,15 @@ def test_stream_mv_maintain_through_feed_compaction(spark):
          .mode("append").save(feed))
 
     def _mv_rows(path):
-        return (spark.read.format("arrowipc")
-                .schema(MV_SCHEMA).load(path)).collect()
+        return _read_ledger(spark, path, ["lang"]).collect()
 
     base_agg = v1.groupBy("lang").agg(
         F.count(F.lit(1)).alias("docs"), F.sum("n_chars").alias("chars"))
-    seed_mv(mv, base_agg)
+    seed_mv_fanout([(mv, ["lang"])], base_agg)
     _commit(v1, v2, 1)
 
     # (a) default consumer dies at the compaction commit, naming it
-    q = mv_maintain_stream(spark, feed, mv, f"{base}/ckpt_a")
+    q = mv_fanout_stream(spark, feed, [(mv, ["lang"])], f"{base}/ckpt_a")
     q.processAllAvailable()  # absorbs commit 1 -> MV version 2
     after_c1 = {(r.mv_version, r.lang): (r.docs, r.chars)
                 for r in _mv_rows(mv)}
@@ -1413,8 +1413,8 @@ def test_stream_mv_maintain_through_feed_compaction(spark):
 
     # (b) the ledgered consumer streams through the rewrite: no spurious
     # MV version from the re-delivered commit-1 rows...
-    q2 = mv_maintain_stream(spark, feed, mv, f"{base}/ckpt_b",
-                            ignore_changes=True)
+    q2 = mv_fanout_stream(spark, feed, [(mv, ["lang"])], f"{base}/ckpt_b",
+                          ignore_changes=True)
     try:
         q2.processAllAvailable()
         assert {(r.mv_version, r.lang): (r.docs, r.chars)
@@ -1432,16 +1432,18 @@ def test_stream_mv_maintain_through_feed_compaction(spark):
     # tail, each commit exactly once), the fresh-checkpoint backlog
     # pattern — identical history, proving compaction changed nothing
     # any correctly-bootstrapped consumer derives
+    from bossarrowstorageengine_spark.operators.scans import (
+        _CF_FEED_SCHEMA,
+    )
     from bossarrowstorageengine_spark.streaming.mv_maintain import (
-        FEED_SCHEMA,
-        apply_feed_batch,
+        apply_fanout_batch,
     )
 
-    seed_mv(mv2, base_agg)
+    seed_mv_fanout([(mv2, ["lang"])], base_agg)
     head = (spark.read.format("arrowipc")
             .option("columns", "lang,change,delta,commit_seq")
-            .schema(FEED_SCHEMA).load(feed))
-    apply_feed_batch(head, 0, mv2)
+            .schema(_CF_FEED_SCHEMA).load(feed))
+    apply_fanout_batch(head, 0, [(mv2, ["lang"])])
     assert {(r.mv_version, r.lang): (r.docs, r.chars)
             for r in _mv_rows(mv2)} == want
 
